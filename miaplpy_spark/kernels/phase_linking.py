@@ -43,7 +43,18 @@ def _cholesky_ok_batch(M: np.ndarray) -> np.ndarray:
     SAME LAPACK potrf np.linalg.cholesky runs (identical pass/fail
     per matrix); failures are detected as NaN fill instead of a
     batch-wide exception. Inputs are finite by construction (gap-fill
-    interpolates), so NaN in the factor <=> LAPACK info > 0."""
+    interpolates), so NaN in the factor <=> LAPACK info > 0.
+    Without ``_umath_linalg`` each matrix is probed by np.linalg.cholesky
+    (potrf in float64, which can flip a float32 matrix at the very edge
+    of positive definiteness)."""
+    if _ul is None:
+        ok = np.ones(M.shape[0], dtype=bool)
+        for b in range(M.shape[0]):
+            try:
+                np.linalg.cholesky(M[b])
+            except np.linalg.LinAlgError:
+                ok[b] = False
+        return ok
     with np.errstate(invalid="ignore", divide="ignore", over="ignore"):
         L = _ul.cholesky_lo(M)
     return ~np.isnan(L).any(axis=(1, 2))
@@ -53,7 +64,18 @@ def inv_batch_status(A: np.ndarray):
     """Batched inverse with PER-MATRIX failure status: (inv, ok).
     Exactly-singular members (where np.linalg.inv would raise) come
     back NaN-filled with ok=False; everything else is bit-identical
-    to np.linalg.inv (same LAPACK getrf/getri per matrix)."""
+    to np.linalg.inv (same LAPACK getrf/getri per matrix). Without
+    ``_umath_linalg`` the same contract comes from a per-matrix
+    np.linalg.inv loop (float64 input: bit-identical)."""
+    if _ul is None:
+        I = np.full(A.shape, np.nan, dtype=np.result_type(A.dtype, np.float32))
+        ok = np.ones(A.shape[0], dtype=bool)
+        for b in range(A.shape[0]):
+            try:
+                I[b] = np.linalg.inv(A[b])
+            except np.linalg.LinAlgError:
+                ok[b] = False
+        return I, ok
     with np.errstate(invalid="ignore", divide="ignore", over="ignore"):
         I = _ul.inv(A)
     return I, ~np.isnan(I).any(axis=(1, 2))
@@ -154,20 +176,48 @@ def emi_phase_batch(coh: np.ndarray, abscoh: np.ndarray) -> np.ndarray:
     return _rotate_to_ref(vecs[..., :, 0])
 
 
+def _eigh_vecs_batch_status(M: np.ndarray):
+    """Batched Hermitian eigenvectors with PER-MATRIX convergence
+    status: (vecs (B, N, N), ok (B,)). M is complex64; members where
+    LAPACK heevd does not converge (np.linalg.eigh would raise for the
+    whole batch) come back NaN-filled with ok=False, everything else
+    is bit-identical to np.linalg.eigh (same gufunc, same complex128
+    signature). Without ``_umath_linalg`` a failed batched eigh is
+    redone per matrix."""
+    if _ul is not None:
+        with np.errstate(invalid="ignore", divide="ignore", over="ignore"):
+            _, vecs = _ul.eigh_lo(M, signature="D->dD")
+        vecs = vecs.astype(C64)
+        return vecs, ~np.isnan(vecs).any(axis=(1, 2))
+    ok = np.ones(M.shape[0], dtype=bool)
+    try:
+        return np.linalg.eigh(M)[1], ok
+    except np.linalg.LinAlgError:
+        vecs = np.full(M.shape, np.nan, dtype=C64)
+        for b in range(M.shape[0]):
+            try:
+                vecs[b] = np.linalg.eigh(M[b])[1]
+            except np.linalg.LinAlgError:
+                ok[b] = False
+        return vecs, ok
+
+
 def emi_phase_batch_status(coh: np.ndarray, abscoh: np.ndarray):
-    """Batched EMI with PER-MATRIX inversion status: (vec (B, N),
-    ok (B,)). Members whose |Γ| is exactly singular (where
-    emi_phase_batch would raise for the WHOLE batch) come back with
-    ok=False and undefined vec — route exactly those through the
-    scalar EMI→EVD fallback chain; everything else is bit-identical
-    to emi_phase_batch (same inv, same eigh per matrix)."""
+    """Batched EMI with PER-MATRIX status: (vec (B, N), ok (B,)).
+    Members whose |Γ| is exactly singular or whose eigh does not
+    converge (where emi_phase_batch would raise for the WHOLE batch)
+    come back with ok=False and undefined vec — route exactly those
+    through the scalar EMI→EVD fallback chain; everything else is
+    bit-identical to emi_phase_batch (same inv, same eigh per
+    matrix)."""
     inv_abs, ok = inv_batch_status(abscoh.astype(np.float64))
     B, N = coh.shape[0], coh.shape[1]
     vec = np.empty((B, N), dtype=C64)
     if ok.any():
         M = (inv_abs[ok] * coh[ok]).astype(C64)
-        _, vecs = np.linalg.eigh(M)
+        vecs, converged = _eigh_vecs_batch_status(M)
         vec[ok] = _rotate_to_ref(vecs[..., :, 0])
+        ok[np.flatnonzero(ok)[~converged]] = False
     return vec, ok
 
 

@@ -374,3 +374,100 @@ def test_est_cov_matches_direct(sim):
     np.testing.assert_allclose(one, batched[0], atol=1e-6)
     np.testing.assert_allclose(pl.cov2corr(one), pl.est_corr(Z[0]),
                                atol=1e-6)
+
+
+def _spd_batch_with_singular(B, N, singular, dtype, seed):
+    X = np.random.default_rng(seed).standard_normal((B, N, 2 * N))
+    A = (X @ X.transpose(0, 2, 1)).astype(dtype)
+    A[singular] = 1.0  # all-ones: exactly singular, not PD
+    return A
+
+
+def test_linalg_status_fallback_without_umath_linalg(monkeypatch):
+    """A NumPy build without the private _umath_linalg module takes a
+    per-matrix np.linalg loop with the same (result, ok) contract,
+    bit-identical to the gufunc path (ADVICE r06)."""
+    A = _spd_batch_with_singular(6, 5, 3, np.float64, seed=7)
+    A32 = _spd_batch_with_singular(6, 5, 3, np.float32, seed=8)
+    coh = pl.est_corr_batch(
+        (np.random.default_rng(9).standard_normal((6, 5, 16))
+         + 1j * np.random.default_rng(10).standard_normal((6, 5, 16))
+         ).astype(np.complex64))
+    gufunc = (pl.inv_batch_status(A), pl._cholesky_ok_batch(A32),
+              pl.emi_phase_batch_status(coh, A))
+    monkeypatch.setattr(pl, "_ul", None)
+    loop = (pl.inv_batch_status(A), pl._cholesky_ok_batch(A32),
+            pl.emi_phase_batch_status(coh, A))
+
+    (I_g, ok_g), chol_g, (v_g, vok_g) = gufunc
+    (I_l, ok_l), chol_l, (v_l, vok_l) = loop
+    expect = [True, True, True, False, True, True]
+    assert ok_g.tolist() == ok_l.tolist() == expect
+    assert chol_g.tolist() == chol_l.tolist() == expect
+    assert vok_g.tolist() == vok_l.tolist() == expect
+    assert I_l.dtype == I_g.dtype and I_l.shape == I_g.shape
+    assert I_l[ok_l].tobytes() == I_g[ok_g].tobytes()
+    assert np.isnan(I_l[3]).all() and np.isnan(I_g[3]).all()
+    assert v_l[vok_l].tobytes() == v_g[vok_g].tobytes()
+
+
+@pytest.mark.parametrize("gufuncs", [True, False])
+def test_emi_eigh_failure_takes_the_scalar_chain(monkeypatch, gufuncs):
+    """One member whose eigh does not converge must not fail the Arrow
+    batch: it alone is marked ok=False and takes the scalar EMI→EVD
+    chain; every other member is unchanged bit for bit. With the raw
+    gufuncs LAPACK non-convergence comes back NaN-filled; without them
+    np.linalg.eigh raises for the batch."""
+    from miaplpy_spark.operators.rollup import _link_batch
+
+    if not gufuncs:
+        monkeypatch.setattr(pl, "_ul", None)
+    rng = np.random.default_rng(21)
+    Z = (rng.standard_normal((5, 8, 24))
+         + 1j * rng.standard_normal((5, 8, 24))).astype(np.complex64)
+    vec0, q0, sq0 = _link_batch(Z, "EMI")
+
+    bad = 2
+    coh = pl.est_corr_batch(Z)
+    status, abscoh = pl.regularize_matrix_batch(np.abs(coh).astype(np.float32))
+    assert (status == 0).all()
+    inv_abs, _ = pl.inv_batch_status(abscoh.astype(np.float64))
+    target = (inv_abs[bad] * coh[bad]).astype(np.complex64)
+
+    def hits(a):
+        a = np.asarray(a)
+        return np.array([np.array_equal(m, target)
+                         for m in a.reshape(-1, *a.shape[-2:])])
+
+    stock_eigh = np.linalg.eigh
+
+    def eigh(a, *args, **kw):
+        if hits(a).any():
+            raise np.linalg.LinAlgError("Eigenvalues did not converge")
+        return stock_eigh(a, *args, **kw)
+
+    monkeypatch.setattr(np.linalg, "eigh", eigh)
+    if gufuncs:
+        stock_ul = pl._ul
+
+        class NonConverging:
+            def __getattr__(self, name):
+                return getattr(stock_ul, name)
+
+            def eigh_lo(self, a, **kw):
+                w, v = stock_ul.eigh_lo(a, **kw)
+                h = hits(a)
+                w[h], v[h] = np.nan, np.nan
+                return w, v
+
+        monkeypatch.setattr(pl, "_ul", NonConverging())
+
+    _, ok = pl.emi_phase_batch_status(coh, abscoh)
+    assert ok.tolist() == [True, True, False, True, True]
+
+    vec, q, sq = _link_batch(Z, "EMI")
+    keep = np.arange(5) != bad
+    assert vec[keep].tobytes() == vec0[keep].tobytes()
+    assert q[keep].tobytes() == q0[keep].tobytes()
+    assert sq[keep].tobytes() == sq0[keep].tobytes()
+    assert vec[bad].tobytes() == pl.evd_phase(coh[bad]).tobytes()
