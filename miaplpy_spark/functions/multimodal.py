@@ -19,11 +19,6 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-MEDIA_SCHEMA = (
-    "doc_id long, mime string, width int, height int, n_bytes long, "
-    "payload binary"
-)
-
 FEATURE_SCHEMA = "doc_id long, mime string, features array<float>"
 
 FRAME_SCHEMA = "doc_id long, frame_idx int, frame binary"

@@ -11,41 +11,6 @@ from __future__ import annotations
 import numpy as np
 
 
-def fill_slots(slot_idx: np.ndarray, values: np.ndarray, n_slots: int,
-               first_slot: int = 0):
-    """Scatter (slot_idx, values) into a dense [first_slot,
-    first_slot+n_slots) grid and linearly interpolate the holes.
-
-    Edge holes are extended with the nearest present value (np.interp
-    semantics). Returns (dense values float64 (n_slots,), filled_mask
-    bool (n_slots,) True where the value was interpolated).
-
-    values may be 1-D (n_obs,) or 2-D (n_obs, k) — interpolation is per
-    column (vectorized across the k channels of a token-stat row).
-    """
-    slots = np.arange(first_slot, first_slot + n_slots)
-    present = np.zeros(n_slots, dtype=bool)
-    present[np.asarray(slot_idx, dtype=np.int64) - first_slot] = True
-    if values.ndim == 1:
-        dense = np.empty(n_slots, dtype=np.float64)
-        dense[present] = values
-        if not present.all():
-            dense[~present] = np.interp(
-                slots[~present], slots[present], values.astype(np.float64)
-            )
-    else:
-        k = values.shape[1]
-        dense = np.empty((n_slots, k), dtype=np.float64)
-        dense[present] = values
-        missing = ~present
-        if missing.any():
-            for c in range(k):  # k is small (fixed stat channels)
-                dense[missing, c] = np.interp(
-                    slots[missing], slots[present], values[:, c].astype(np.float64)
-                )
-    return dense, ~present
-
-
 def fill_dense_batch(dense: np.ndarray, present: np.ndarray) -> np.ndarray:
     """Vectorized linear gap-fill across a whole batch of windows.
 
@@ -79,15 +44,3 @@ def fill_dense_batch(dense: np.ndarray, present: np.ndarray) -> np.ndarray:
     interp = np.where(both, vprev * (1 - w) + vnxt * w,
                       np.where(has_prev, vprev, vnxt))
     return np.where(pres, dense, interp)
-
-
-def fill_complex_slots(slot_idx: np.ndarray, z: np.ndarray, n_slots: int,
-                       first_slot: int = 0):
-    """Gap-fill a complex ensemble (n_obs, S) -> (n_slots, S): linear
-    interp of re/im separately (phasor magnitude shrinks across a gap —
-    acceptable: gap-filled slots are flagged and down-weighted by the
-    quality metric, which mirrors the reference's tempCoh=0.1 masked
-    passthrough, lib/utils.pyx:1178-1184)."""
-    re, mask = fill_slots(slot_idx, z.real.astype(np.float64), n_slots, first_slot)
-    im, _ = fill_slots(slot_idx, z.imag.astype(np.float64), n_slots, first_slot)
-    return (re + 1j * im).astype(np.complex64), mask

@@ -43,12 +43,6 @@ def ecdf_distance(data1: np.ndarray, data2: np.ndarray) -> float:
     return float(np.max(np.abs(cdf1 - cdf2)) / nx)
 
 
-def ks2_sample_test(ref_sorted: np.ndarray, test_sorted: np.ndarray,
-                    threshold: float) -> bool:
-    """1 = same distribution (distance <= critical threshold)."""
-    return ecdf_distance(ref_sorted, test_sorted) <= threshold
-
-
 def _betacf(a, b, x, maxit: int = 300, eps: float = 3e-12):
     """Continued fraction for the incomplete beta (modified Lentz),
     vectorized over x. Standard public-domain numerics."""
@@ -126,12 +120,6 @@ def welch_pvalue(s1: np.ndarray, s2: np.ndarray) -> np.ndarray:
                       1.0)
     p = betainc_reg(df / 2.0, 0.5, df / (df + t2))
     return np.where(np.isinf(t2), 0.0, p)
-
-
-def ttest_ind_test(s1: np.ndarray, s2: np.ndarray, alpha: float) -> bool:
-    """1 = same distribution: Welch p-value >= alpha (the reference
-    keeps a neighbor when the test CANNOT reject equality)."""
-    return bool(welch_pvalue(s1, s2) >= alpha)
 
 
 # --- Anderson-Darling k=2 sample test (N4) ---------------------------------

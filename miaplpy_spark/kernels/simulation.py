@@ -60,11 +60,6 @@ def simulate_neighborhood_stack(
     return (CM @ Zr).astype(np.complex64)
 
 
-def est_rms(x: np.ndarray) -> np.ndarray:
-    """Per-date RMSE over trials: sqrt(Σ x² / (ntrials − 1))."""
-    return np.sqrt(np.sum(x**2, axis=1) / (x.shape[1] - 1))
-
-
 def wrap_phase(x: np.ndarray) -> np.ndarray:
     """Rewrap to (−π, π]: angle(exp(i·x))."""
     return np.angle(np.exp(1j * x))

@@ -404,10 +404,10 @@ def incremental_raw_filter(raw_obs: DataFrame, boundary_h: int,
                            cfg: EngineConfig) -> DataFrame:
     """Rows at/after the watermark hour, expressed so the scan prunes.
 
-    The ts >= predicate comes FIRST: the sequences table is partitioned
-    by (bucket, days(ts)) (sources/sequences.py DDL) and ts is monotone
-    in slot (ts = epoch0 + slot*slot_seconds), so a plain comparison on
-    ts reaches the scan as a partition-pruning / parquet min-max
+    The ts >= predicate comes FIRST: the production sequences table is
+    partitioned by (bucket, days(ts)) and ts is monotone in slot (ts =
+    epoch0 + slot*slot_seconds), so a plain comparison on ts reaches
+    the scan as a partition-pruning / parquet min-max
     predicate — the previous (slot/H).cast(int) expression full-scanned
     raw at 100 TB. The slot predicate stays as the exact window
     boundary; both select identical rows by construction."""

@@ -7,8 +7,9 @@ only blobs: a day of hourly points shrinks from 24 rows to one ~100-
 byte row, and the blob layout preserves mergeability (blobs are
 per-partition, so tier MERGE jobs never rewrite neighbors).
 
-Same mapInPandas-with-carry execution shape as the rollup kernels —
-encode is pure NumPy bit packing per segment.
+Same execution shape as the rollup kernels: ``mapInArrow`` over the
+few columns it reads, one ``carry_groups`` region of complete (doc,
+day) segments at a time, then pure NumPy bit packing per segment.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..config import EngineConfig
@@ -26,36 +28,9 @@ from ..kernels.codecs import (
     encode_dod,
     encode_gorilla,
 )
+from .rollup import (_emit, _group_change, _pa_schema, _strings,
+                     _window_change, carry_groups)
 
-
-def _group_starts(doc: np.ndarray, win: np.ndarray) -> np.ndarray:
-    chg = np.empty(doc.shape[0], dtype=bool)
-    chg[0] = True
-    chg[1:] = (doc[1:] != doc[:-1]) | (win[1:] != win[:-1])
-    return np.flatnonzero(chg)
-
-
-def _carry_iter(batches, win_of, process):
-    """Hold back the last (possibly incomplete) group of each pandas
-    batch; flush at partition end. The 1h tier is ~2 orders smaller
-    than raw, so pandas batches are fine here."""
-    carry = None
-    for pdf in batches:
-        if carry is not None and len(carry):
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-            carry = None
-        if not len(pdf):
-            continue
-        doc = pdf["doc_id"].to_numpy()
-        starts = _group_starts(doc, win_of(pdf))
-        last = starts[-1]
-        if last == 0:
-            carry = pdf
-            continue
-        carry = pdf.iloc[last:].reset_index(drop=True)
-        yield process(pdf.iloc[:last])
-    if carry is not None and len(carry):
-        yield process(carry)
 
 COMPRESSED_SCHEMA = (
     "doc_id string, source string, bucket int, day_idx int, n_points int, "
@@ -72,39 +47,50 @@ DECOMPRESSED_SCHEMA = (
 def compress_1h(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
                 num_partitions: int | None = None) -> DataFrame:
     H = cfg.hours_per_day
+    out_schema = _pa_schema(COMPRESSED_SCHEMA)
 
-    def process(pdf: pd.DataFrame) -> pd.DataFrame:
-        doc = pdf["doc_id"].to_numpy()
-        hour_idx = pdf["hour_idx"].to_numpy()
-        day = hour_idx // H
-        starts = _group_starts(doc, day)
-        ends = np.append(starts[1:], len(pdf))
-        ts = (pdf["hour_ts"].astype("int64") // 10**9).to_numpy()
-        q = pdf["quality"].to_numpy().astype(np.float64)
-        mn = pdf["mean_ntok"].to_numpy().astype(np.float64)
-        rows = []
-        for s, e in zip(starts, ends):
-            tb = encode_dod(ts[s:e])
-            qb = encode_gorilla(q[s:e])
-            mb = encode_gorilla(mn[s:e])
-            rows.append((
-                doc[s], pdf["source"].iloc[s], int(pdf["bucket"].iloc[s]),
-                int(day[s]), int(e - s), tb, qb, mb,
-                int((e - s) * (8 + 8 + 8)), len(tb) + len(qb) + len(mb),
-            ))
-        return pd.DataFrame(rows, columns=[
-            "doc_id", "source", "bucket", "day_idx", "n_points",
-            "ts_blob", "quality_blob", "mean_ntok_blob",
-            "raw_bytes", "blob_bytes"])
+    def process(region: pa.RecordBatch) -> pa.RecordBatch:
+        day = region.column("hour_idx").to_numpy() // H
+        starts = np.flatnonzero(_group_change(
+            region.column("doc_id").to_numpy(zero_copy_only=False), day))
+        ends = np.append(starts[1:], region.num_rows)
+        # Arrow hands timestamps over as epoch microseconds (UTC: the
+        # engine session pins spark.sql.session.timeZone)
+        ts = region.column("hour_ts").cast(pa.int64()).to_numpy() // 10**6
+        q = region.column("quality").to_numpy(zero_copy_only=False) \
+            .astype(np.float64)
+        mn = region.column("mean_ntok").to_numpy(zero_copy_only=False) \
+            .astype(np.float64)
+        tb, qb, mb = zip(*[
+            (encode_dod(ts[s:e]), encode_gorilla(q[s:e]),
+             encode_gorilla(mn[s:e])) for s, e in zip(starts, ends)])
+        n_points = ends - starts
+        return _emit({
+            **_strings(region, starts),
+            "bucket": region.column("bucket").to_numpy()[starts],
+            "day_idx": day[starts],
+            "n_points": n_points,
+            "ts_blob": pa.array(tb, pa.binary()),
+            "quality_blob": pa.array(qb, pa.binary()),
+            "mean_ntok_blob": pa.array(mb, pa.binary()),
+            "raw_bytes": n_points * (8 + 8 + 8),
+            "blob_bytes": np.array([len(x) + len(y) + len(z)
+                                    for x, y, z in zip(tb, qb, mb)]),
+        }, out_schema)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield from _carry_iter(
-            batches, lambda pdf: pdf["hour_idx"].to_numpy() // H, process)
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for region in carry_groups(
+                batches, _window_change(["doc_id"], "hour_idx", H)):
+            yield process(region)
 
     p = num_partitions or cfg.n_buckets
-    return (df_1h.repartition(p, "bucket")
+    # project before the exchange: mapInArrow ships whole rows, and the
+    # 1h tier's linked_phase/squeezed lists are never read here
+    return (df_1h.select("doc_id", "source", "bucket", "hour_idx",
+                         "hour_ts", "quality", "mean_ntok")
+                 .repartition(p, "bucket")
                  .sortWithinPartitions("doc_id", "hour_idx")
-                 .mapInPandas(kernel, COMPRESSED_SCHEMA))
+                 .mapInArrow(kernel, COMPRESSED_SCHEMA))
 
 
 COLD_TIER = "rollup_1h_cold"

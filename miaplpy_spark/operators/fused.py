@@ -8,8 +8,11 @@ hourly intermediates as in-process NumPy and emits BOTH tiers through
 a single superset-schema stream with a ``tier`` discriminator column;
 callers split with two filters (after a persist, for dual writes).
 
-Carry is held at DAY boundaries (a (doc, day) block = up to 240 raw
-rows), so every emitted region contains only complete days.
+The window math is rollup's ``hour_windows`` and ``day_windows``, the
+same functions the tiered cascade runs; here the day pass reads the
+in-process hour arrays instead of a second worker channel. Carry
+(``carry_groups``) is held at DAY boundaries (a (doc, day) block = up
+to 240 raw rows), so every emitted region contains only complete days.
 """
 
 from __future__ import annotations
@@ -22,19 +25,15 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..config import EngineConfig
-from ..kernels.gapfill import fill_dense_batch
 from .rollup import (
-    _Carry,
-    _concat,
-    _ensemble_phases,
+    _emit,
     _extract,
-    _group_starts,
-    _link_batch,
-    _list_col,
     _pa_schema,
-    _shp_present,
-    _slice_tail,
-    _take_strs,
+    _strings,
+    _window_change,
+    carry_groups,
+    day_windows,
+    hour_windows,
 )
 
 FUSED_SCHEMA = (
@@ -48,175 +47,27 @@ FUSED_SCHEMA = (
 
 
 def make_fused_kernel(cfg: EngineConfig, tok_col: str = "zphi"):
-    T, S, H = cfg.slots_per_hour, cfg.n_samples, cfg.hours_per_day
-    spd = cfg.slots_per_day
-    V = cfg.vocab_size
-    method, lag, ps_test = cfg.method, cfg.sbw_lag, cfg.ps_test
-    shp_filter, shp_test, shp_alpha = (cfg.shp_filter, cfg.shp_test,
-                                       cfg.shp_alpha)
     out_schema = _pa_schema(FUSED_SCHEMA)
     num_cols = ["doc_key", "slot", "bucket", "n_tok", "sum_tok",
                 "min_tok", "max_tok"]
-    list_cols = {tok_col: (S, np.int16 if tok_col == "ztok" else np.float32)}
-
-    nulls = lambda typ, n: pa.nulls(n, _pa_type(typ))
-
-    def _pa_type(t):
-        return {"int": pa.int32(), "float": pa.float32(),
-                "double": pa.float64(),
-                "list": pa.list_(pa.float32())}[t]
-
-    def process(num: dict, lookup) -> Iterator[pa.RecordBatch]:
-        n = num["doc_key"].shape[0]
-        doc_key = num["doc_key"]
-        slot = num["slot"]
-        hour = slot // T
-        sih = slot % T
-
-        # ---- stage A: hourly windows (identical math to rollup_1h) --
-        starts = _group_starts(doc_key, hour)
-        G = starts.shape[0]
-        gid = np.cumsum(np.concatenate(
-            [[True], (doc_key[1:] != doc_key[:-1]) | (hour[1:] != hour[:-1])])) - 1
-        phi = _ensemble_phases(num, V)
-        z = np.empty(phi.shape, dtype=np.complex64)
-        np.cos(phi, out=z.real)
-        np.sin(phi, out=z.imag)
-        dense = np.zeros((G, T, S), dtype=np.complex64)
-        present = np.zeros((G, T), dtype=bool)
-        dense[gid, sih] = z
-        present[gid, sih] = True
-        # SHP membership gate — identical to the tiered rollup_1h path
-        # (the fused cascade previously ignored cfg.shp_filter, so the
-        # two execution shapes produced different ensembles)
-        ens_present = present
-        if shp_filter:
-            phi_dense = np.zeros((G, T, S), dtype=np.float32)
-            phi_dense[gid, sih] = phi
-            ens_present = _shp_present(phi_dense, present, shp_test,
-                                       shp_alpha)
-        Z = np.empty(dense.shape, dtype=np.complex64)
-        Z.real = fill_dense_batch(dense.real, ens_present)
-        Z.imag = fill_dense_batch(dense.imag, ens_present)
-        vec, quality, squeezed = _link_batch(Z, method, lag, ps_test=ps_test)
-
-        ends = np.append(starts[1:], n)
-        n_obs = (ends - starts).astype(np.int32)
-        sum_tok = np.add.reduceat(num["sum_tok"], starts)
-        min_tok = np.minimum.reduceat(num["min_tok"], starts)
-        max_tok = np.maximum.reduceat(num["max_tok"], starts)
-        mean_ntok = np.add.reduceat(num["n_tok"].astype(np.float64), starts) / n_obs
-        hour_g = hour[starts].astype(np.int32)
-        doc_key_g = doc_key[starts]
-        bucket_g = num["bucket"][starts].astype(np.int32)
-        lp = np.angle(vec).astype(np.float32)
-        n_filled = (T - n_obs).astype(np.int32)
-        doc_id_g = _take_strs(lookup, starts, "doc_id")
-        source_g = _take_strs(lookup, starts, "source")
-
-        yield pa.RecordBatch.from_arrays([
-            pa.array(["1h"] * G, pa.string()),
-            pa.array(doc_id_g, pa.string()),
-            pa.array(doc_key_g, pa.int64()),
-            pa.array(source_g, pa.string()),
-            pa.array(bucket_g),
-            pa.array(hour_g),
-            pa.array((hour_g // H).astype(np.int32)),
-            pa.array(n_obs),
-            pa.array(n_filled),
-            pa.array(sum_tok.astype(np.int64)),
-            pa.array(min_tok.astype(np.int32)),
-            pa.array(max_tok.astype(np.int32)),
-            pa.array(mean_ntok),
-            _list_col(lp),
-            _list_col(np.concatenate([squeezed.real, squeezed.imag],
-                                     axis=1).astype(np.float32)),
-            pa.array(quality.astype(np.float32)),
-            nulls("int", G), nulls("double", G), nulls("float", G),
-            nulls("list", G), nulls("list", G),
-        ], schema=out_schema)
-
-        # ---- stage B: daily tier from the in-process hourly arrays --
-        day_h = hour_g // H
-        hid = hour_g % H
-        starts_d = _group_starts(doc_key_g, day_h)
-        Gd = starts_d.shape[0]
-        gid_d = np.cumsum(np.concatenate(
-            [[True], (doc_key_g[1:] != doc_key_g[:-1])
-             | (day_h[1:] != day_h[:-1])])) - 1
-        dsq = np.zeros((Gd, H, S), dtype=np.complex64)
-        dpres = np.zeros((Gd, H), dtype=bool)
-        dsq[gid_d, hid] = squeezed
-        dpres[gid_d, hid] = True
-        SQ = np.empty(dsq.shape, dtype=np.complex64)
-        SQ.real = fill_dense_batch(dsq.real, dpres)
-        SQ.imag = fill_dense_batch(dsq.imag, dpres)
-        vec_d, quality_1d, day_squeezed = _link_batch(SQ, method)
-        datum = np.angle(vec_d).astype(np.float32)
-        lp_dense = np.zeros((Gd, H, T), dtype=np.float32)
-        lp_dense[gid_d, hid] = lp
-        adj = np.angle(np.exp(1j * (lp_dense + datum[:, :, None]))) \
-            .astype(np.float32).reshape(Gd, H * T)
-
-        ends_d = np.append(starts_d[1:], G)
-        n_hours = (ends_d - starts_d).astype(np.int32)
-        n_obs_d = np.add.reduceat(n_obs, starts_d).astype(np.int32)
-        n_filled_d = np.add.reduceat(n_filled, starts_d).astype(np.int32)
-        sum_tok_d = np.add.reduceat(sum_tok, starts_d)
-        min_tok_d = np.minimum.reduceat(min_tok, starts_d)
-        max_tok_d = np.maximum.reduceat(max_tok, starts_d)
-        w_mean = (np.add.reduceat(mean_ntok * n_obs, starts_d)
-                  / np.maximum(n_obs_d, 1))
-        mean_q = (np.add.reduceat(quality.astype(np.float64), starts_d)
-                  / n_hours)
-
-        yield pa.RecordBatch.from_arrays([
-            pa.array(["1d"] * Gd, pa.string()),
-            pa.array([doc_id_g[i] for i in starts_d], pa.string()),
-            pa.array(doc_key_g[starts_d], pa.int64()),
-            pa.array([source_g[i] for i in starts_d], pa.string()),
-            pa.array(bucket_g[starts_d]),
-            nulls("int", Gd),
-            pa.array(day_h[starts_d].astype(np.int32)),
-            pa.array(n_obs_d),
-            pa.array(n_filled_d),
-            pa.array(sum_tok_d.astype(np.int64)),
-            pa.array(min_tok_d.astype(np.int32)),
-            pa.array(max_tok_d.astype(np.int32)),
-            pa.array(w_mean),
-            nulls("list", Gd),
-            _list_col(np.concatenate([day_squeezed.real, day_squeezed.imag],
-                                     axis=1).astype(np.float32)),
-            nulls("float", Gd),
-            pa.array(n_hours),
-            pa.array(mean_q),
-            pa.array(quality_1d.astype(np.float32)),
-            _list_col(datum),
-            _list_col(adj),
-        ], schema=out_schema)
+    list_cols = {tok_col: (cfg.n_samples,
+                           np.int16 if tok_col == "ztok" else np.float32)}
+    change = _window_change(["doc_key"], "slot", cfg.slots_per_day)
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        carry = None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            num, strs = _extract(batch, num_cols, list_cols)
-            num, lookup = _concat(carry, num, strs)
-            carry = None
-            doc_key = num["doc_key"]
-            day = num["slot"] // spd
-            starts = _group_starts(doc_key, day)
-            last = starts[-1]
-            n = doc_key.shape[0]
-            if last == 0:
-                carry = _slice_tail(num, lookup, 0, n)
-                continue
-            carry = _slice_tail(num, lookup, last, n)
-            yield from process({k: v[:last] for k, v in num.items()}, lookup)
-        if carry is not None:
-            num = carry.num
-            lookup = [(len(next(iter(num.values()))), carry.strs)]
-            yield from process(num, lookup)
+        for region in carry_groups(batches, change):
+            starts, hr = hour_windows(_extract(region, num_cols, list_cols),
+                                      cfg)
+            strs = _strings(region, starts)
+            yield _emit({"tier": pa.repeat("1h", len(starts)), **hr, **strs,
+                         "day_idx": hr["hour_idx"] // cfg.hours_per_day},
+                        out_schema)
+            # daily tier from the in-process hourly arrays
+            starts_d, dy = day_windows(hr, cfg)
+            idx = pa.array(starts_d)
+            yield _emit({"tier": pa.repeat("1d", len(starts_d)), **dy,
+                         **{c: a.take(idx) for c, a in strs.items()}},
+                        out_schema)
 
     return kernel
 

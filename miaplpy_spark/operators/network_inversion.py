@@ -30,7 +30,8 @@ from ..kernels.lstsq import (
     invert_l1_batch,
     network_temporal_coherence,
 )
-from .rollup import _concat, _extract, _group_starts, _pa_schema, _slice_tail, _take_strs
+from .rollup import (_emit, _extract, _group_change, _key_cols, _pa_schema,
+                     _strings, _window_change, carry_groups, with_doc_keys)
 
 INVERSION_SCHEMA = (
     "doc_id string, source string, bucket int, n_hours int, "
@@ -72,10 +73,8 @@ def invert_network(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
                     F.lit(0.0), lambda a, x: a + x))
     q_col = (F.col("quality") if "quality" in df_1h.columns
              else F.lit(1.0))  # unweighted when the tier carries no quality
-    wide = getattr(cfg, "wide_doc_key", False)
-    from .rollup import with_doc_keys
     keyed = with_doc_keys(df_1h, cfg)
-    key_cols = ["doc_key"] + (["doc_key2"] if wide else [])
+    key_cols = _key_cols(cfg)
     # the OUTPUT bucket is re-derived doc-pure (hash of doc_id, the
     # un-salted bucketing) rather than passed through from the input:
     # under salt_by_day a doc's hourly rows span (doc, day) buckets,
@@ -92,15 +91,15 @@ def invert_network(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
         q_col.cast("double").alias("q"))
 
     out_schema = _pa_schema(INVERSION_SCHEMA)
-    num_cols = ["doc_key", "hour_idx", "bucket", "theta", "q"] + (
-        ["doc_key2"] if wide else [])
+    num_cols = key_cols + ["hour_idx", "bucket", "theta", "q"]
 
-    def process(num: dict, lookup) -> pa.RecordBatch | None:
+    def process(region: pa.RecordBatch) -> pa.RecordBatch | None:
+        num = _extract(region, num_cols, {})
         dk = num["doc_key"]
         hr = num["hour_idx"]
         t = num["theta"]
         q = num["q"]
-        starts = _group_starts(dk, dk, num.get("doc_key2"))
+        starts = np.flatnonzero(_group_change(dk, num.get("doc_key2")))
         ends = np.append(starts[1:], dk.shape[0])
 
         by_n: dict[int, list[int]] = {}
@@ -145,47 +144,26 @@ def invert_network(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
         flat = np.concatenate([m.reshape(-1) for m in out_ts])
         flat_h = np.concatenate([m.reshape(-1) for m in out_h])
         g_starts = starts[gsel]
-        arrays = [
-            pa.array(_take_strs(lookup, g_starts, "doc_id"), pa.string()),
-            pa.array(_take_strs(lookup, g_starts, "source"), pa.string()),
-            pa.array(num["bucket"][g_starts].astype(np.int32)),
-            pa.array(n_hours),
-            pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat_h)),
-            pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat)),
-            pa.array(np.concatenate(out_q)),
-        ]
-        return pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+        return _emit({
+            **_strings(region, g_starts),
+            "bucket": num["bucket"][g_starts],
+            "n_hours": n_hours,
+            "hours": pa.ListArray.from_arrays(pa.array(offsets),
+                                              pa.array(flat_h)),
+            "ts_series": pa.ListArray.from_arrays(pa.array(offsets),
+                                                  pa.array(flat)),
+            "inv_quality": np.concatenate(out_q),
+        }, out_schema)
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # batch-carry protocol (same as the rollup kernels): input is
-        # shuffle-sorted by (doc_key, hour_idx), so only the trailing
-        # — possibly incomplete — doc group is held between Arrow
-        # batches. Per-worker memory is O(one Arrow batch + one doc
-        # series), NOT O(partition): with few buckets and many docs
-        # the old accumulate-the-partition shape was the one kernel
-        # that could OOM a worker at 100x scale.
-        carry = None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            num, strs = _extract(batch, num_cols, {}, True)
-            num, lookup = _concat(carry, num, strs)
-            carry = None
-            dk = num["doc_key"]
-            starts = _group_starts(dk, dk, num.get("doc_key2"))
-            last = starts[-1]
-            n = dk.shape[0]
-            if last == 0:
-                carry = _slice_tail(num, lookup, 0, n)
-                continue
-            carry = _slice_tail(num, lookup, last, n)
-            out = process({k: v[:last] for k, v in num.items()}, lookup)
-            if out is not None:
-                yield out
-        if carry is not None:
-            num = carry.num
-            lookup = [(len(next(iter(num.values()))), carry.strs)]
-            out = process(num, lookup)
+        # input is shuffle-sorted by (doc_key, hour_idx), so carry_groups
+        # holds only the trailing — possibly incomplete — doc group
+        # between Arrow batches. Per-worker memory is O(one Arrow batch
+        # + one doc series), NOT O(partition): with few buckets and
+        # many docs the old accumulate-the-partition shape was the one
+        # kernel that could OOM a worker at 100x scale.
+        for region in carry_groups(batches, _window_change(key_cols)):
+            out = process(region)
             if out is not None:
                 yield out
 

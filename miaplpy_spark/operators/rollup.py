@@ -28,11 +28,20 @@ Three deliberate choices, each measured in this sandbox:
    (tests/test_wide_doc_key.py proves narrow-equality and planted-
    collision separation).
 
+Every kernel (both tiers here, operators/fused.py, the network
+inversion and compress_1h) streams its sorted partition through ONE
+batch-carry generator, ``carry_groups``: the trailing incomplete group
+of each Arrow batch is held back as an Arrow slice, so the NumPy code
+only ever sees complete groups and doc_id/source ride along as plain
+Arrow columns. Output batches are built by one emitter, ``_emit``.
+
 Window semantics: each 1h window (= 10 raw slots = one mini-stack,
 defaults/miaplpyApp_auto.cfg:19) is phase-linked independently and
 emits its squeezed carry (squeeze_images, lib/utils.pyx:470-487); the
 1d tier re-links the 24 carries and applies the datum adjustment
-(datum_connect, lib/utils.pyx:732-796). Independent windows + datum is
+(datum_connect, lib/utils.pyx:732-796). That math is written once, as
+the pure-NumPy ``hour_windows`` and ``day_windows``; the 1h, 1d and
+fused kernels are thin emitters around them. Independent windows + datum is
 the reference's own 'mini_stacks' composition and is what makes the
 cascade embarrassingly parallel; the strict prepend-the-carry
 sequential mode (lib/utils.pyx:641-660) is available in
@@ -50,7 +59,8 @@ shuffle (measured ~1.7x cheaper).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -78,26 +88,26 @@ ROLLUP_1D_SCHEMA = (
 )
 
 
-def _strip_strings(ddl: str) -> str:
-    """Core (string-free) variant of a tier DDL: the kernels emit
-    doc_key only; doc_id/source come back via attach_doc_dim."""
-    return ", ".join(p for p in ddl.split(", ")
-                     if not p.startswith(("doc_id ", "source ")))
-
-
-ROLLUP_1H_CORE_SCHEMA = _strip_strings(ROLLUP_1H_SCHEMA)
-ROLLUP_1D_CORE_SCHEMA = _strip_strings(ROLLUP_1D_SCHEMA)
-
 # xxhash64 over (salt, doc_id) is an independent hash family member,
 # so P(joint collision) ~ 2^-128 — negligible at 10^12 docs
 _KEY2_SALT = DOC_KEY2_SALT
 
 
-def _widen_key(ddl: str, wide: bool) -> str:
-    """Insert doc_key2 after doc_key in a tier DDL when wide mode on."""
-    if not wide:
-        return ddl
-    return ddl.replace("doc_key long", "doc_key long, doc_key2 long", 1)
+def _tier_ddl(ddl: str, cfg: EngineConfig, with_strings: bool) -> str:
+    """A tier DDL as the kernel emits it: string-free inputs get the
+    core variant (doc_key only; doc_id/source come back via
+    attach_doc_dim), and wide mode inserts doc_key2 after doc_key."""
+    if not with_strings:
+        ddl = ", ".join(p for p in ddl.split(", ")
+                        if not p.startswith(("doc_id ", "source ")))
+    if getattr(cfg, "wide_doc_key", False):
+        ddl = ddl.replace("doc_key long", "doc_key long, doc_key2 long", 1)
+    return ddl
+
+
+def _key_cols(cfg: EngineConfig) -> list[str]:
+    return ["doc_key"] + (["doc_key2"]
+                          if getattr(cfg, "wide_doc_key", False) else [])
 
 
 def with_doc_keys(df: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -121,7 +131,7 @@ _PA_TYPES = {
     "smallint": pa.int16(), "double": pa.float64(), "float": pa.float32(),
     "array<float>": pa.list_(pa.float32()),
     "array<smallint>": pa.list_(pa.int16()),
-    "array<int>": pa.list_(pa.int32()),
+    "array<int>": pa.list_(pa.int32()), "binary": pa.binary(),
 }
 
 
@@ -146,12 +156,10 @@ def _list_col(mat: np.ndarray) -> pa.Array:
     )
 
 
-def _flat_lists(col: pa.ChunkedArray | pa.Array, width: int, n: int,
+def _flat_lists(col: pa.Array, width: int, n: int,
                 dtype=np.float32) -> np.ndarray:
     """Fixed-width list column -> (n, width) view of the flat value
     buffer (zero copy when possible)."""
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
     flat = col.flatten().to_numpy(zero_copy_only=False)
     return np.ascontiguousarray(flat, dtype=dtype).reshape(n, width)
 
@@ -167,24 +175,19 @@ def _ensemble_phases(num: dict, vocab_size: int) -> np.ndarray:
     return num["zphi"]
 
 
-def _group_change(key: np.ndarray, win: np.ndarray,
-                  key2: np.ndarray | None = None) -> np.ndarray:
-    """Boolean new-group markers over sorted rows. ``key2`` is the
-    optional second 64-bit key of wide (128-bit) doc-key mode
-    (EngineConfig.wide_doc_key): a 10^12-doc corpus expects ~3e4
-    birthday collisions in a single 64-bit space, so group identity
-    there is (doc_key, doc_key2) — two xxhash64 salts."""
-    chg = np.empty(key.shape[0], dtype=bool)
+def _group_change(*cols: np.ndarray | None) -> np.ndarray:
+    """Boolean new-group markers over sorted rows: a group is a run of
+    equal values in every column (None entries are skipped). Wide
+    (128-bit) doc-key mode (EngineConfig.wide_doc_key) passes doc_key2
+    too: a 10^12-doc corpus expects ~3e4 birthday collisions in a
+    single 64-bit space, so group identity there is (doc_key,
+    doc_key2) — two xxhash64 salts."""
+    chg = np.zeros(cols[0].shape[0], dtype=bool)
     chg[0] = True
-    chg[1:] = (key[1:] != key[:-1]) | (win[1:] != win[:-1])
-    if key2 is not None:
-        chg[1:] |= key2[1:] != key2[:-1]
+    for c in cols:
+        if c is not None:
+            chg[1:] |= c[1:] != c[:-1]
     return chg
-
-
-def _group_starts(key: np.ndarray, win: np.ndarray,
-                  key2: np.ndarray | None = None) -> np.ndarray:
-    return np.flatnonzero(_group_change(key, win, key2))
 
 
 def _link_batch(Z: np.ndarray, method: str, lag: int = 0,
@@ -278,73 +281,84 @@ def _link_batch(Z: np.ndarray, method: str, lag: int = 0,
     return vec, quality, squeezed.astype(np.complex64)
 
 
-class _Carry:
-    """Holds the (possibly incomplete) trailing group between Arrow
-    batches of one partition. Numeric columns are numpy; the tiny
-    per-row string columns (doc_id, source) are Python lists —
-    strings are only ever materialized for group-start rows and
-    carried rows, never for the bulk."""
+def carry_groups(batches: Iterable[pa.RecordBatch], group_change
+                 ) -> Iterator[pa.RecordBatch]:
+    """The batch-carry protocol every tier kernel streams through.
 
-    __slots__ = ("num", "strs")
+    The input is sorted so each group's rows are contiguous, but Arrow
+    batches cut it at arbitrary rows. The trailing (possibly
+    incomplete) group of each batch is held back as a zero-copy slice
+    and prepended to the next batch, so every yielded region holds only
+    complete groups; the last group is flushed at partition end. Worker
+    memory stays O(one Arrow batch + one group), and every column —
+    doc_id/source strings included — is carried as Arrow data, so the
+    carry does not care which key transport is in use.
 
-    def __init__(self, num: dict, strs: dict):
-        self.num = num
-        self.strs = strs
+    ``group_change(batch)`` returns the boolean new-group markers of a
+    batch (``_group_change`` over its key and window columns). Empty
+    batches are skipped."""
+    carry = None
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        if carry is not None:
+            # pyarrow 16 has no concat_batches
+            batch = pa.Table.from_batches([carry, batch]) \
+                .combine_chunks().to_batches()[0]
+        last = int(np.flatnonzero(group_change(batch))[-1])
+        carry = batch.slice(last)
+        if last:
+            yield batch.slice(0, last)
+    if carry is not None:
+        yield carry
+
+
+def _window_change(key_cols: list[str], win_col: str | None = None,
+                   width: int = 1):
+    """``group_change`` for carry_groups: a group is (key_cols...,
+    win_col // width)."""
+    def change(batch: pa.RecordBatch) -> np.ndarray:
+        cols = [batch.column(c).to_numpy(zero_copy_only=False)
+                for c in key_cols]
+        if win_col is not None:
+            cols.append(batch.column(win_col).to_numpy() // width)
+        return _group_change(*cols)
+    return change
 
 
 def _extract(batch: pa.RecordBatch, num_cols: list[str],
-             list_cols: dict[str, tuple], with_strings: bool = True
-             ) -> tuple[dict, dict | None]:
+             list_cols: dict[str, tuple]) -> dict:
     n = batch.num_rows
-    num = {}
-    for c in num_cols:
-        num[c] = batch.column(c).to_numpy(zero_copy_only=False)
+    num = {c: batch.column(c).to_numpy(zero_copy_only=False)
+           for c in num_cols}
     for c, (width, dtype) in list_cols.items():
         num[c] = _flat_lists(batch.column(c), width, n, dtype)
-    if not with_strings:
-        return num, None
-    strs = {c: batch.column(c) for c in ("doc_id", "source")}
-    return num, strs
+    return num
 
 
-def _concat(carry: _Carry | None, num: dict, strs: dict | None
-            ) -> tuple[dict, list | None]:
-    """Merge carried rows in front of the current batch. Returns the
-    merged numeric dict and a string lookup: an ordered list of
-    (segment_length, strs_dict) used to materialize doc_id/source at
-    arbitrary indices (carry segments hold Python lists, batch
-    segments hold Arrow arrays). Lookup is None in string-free mode."""
-    n = len(next(iter(num.values())))
-    if carry is None:
-        return num, None if strs is None else [(n, strs)]
-    merged = {k: np.concatenate([carry.num[k], num[k]]) for k in num}
-    if strs is None:
-        return merged, None
-    carry_n = len(next(iter(carry.num.values())))
-    return merged, [(carry_n, carry.strs), (n, strs)]
+def _strings(region: pa.RecordBatch, idx: np.ndarray) -> dict:
+    """doc_id/source at ``idx`` as Arrow columns, when the region
+    carries them (string transport); empty when string-free."""
+    idx = pa.array(idx)
+    return {c: region.column(c).take(idx) for c in ("doc_id", "source")
+            if c in region.schema.names}
 
 
-def _take_strs(lookup, idx: np.ndarray, col: str) -> list:
-    """Materialize string values at ``idx`` across lookup segments."""
-    out = []
-    for i in idx:
-        i = int(i)
-        for seg_len, strs in lookup:
-            if i < seg_len:
-                v = strs[col][i]
-                out.append(v.as_py() if hasattr(v, "as_py") else v)
-                break
-            i -= seg_len
-    return out
-
-
-def _slice_tail(num: dict, lookup, start: int, n: int) -> _Carry:
-    tail_num = {k: v[start:] for k, v in num.items()}
-    if lookup is None:
-        return _Carry(tail_num, None)
-    idx = np.arange(start, n)
-    tail_strs = {c: _take_strs(lookup, idx, c) for c in ("doc_id", "source")}
-    return _Carry(tail_num, tail_strs)
+def _emit(cols: dict, schema: pa.Schema) -> pa.RecordBatch:
+    """One output batch in ``schema`` order. NumPy vectors are cast to
+    the field type, (G, K) matrices become list<float32> columns, Arrow
+    arrays pass through, and fields absent from ``cols`` are null."""
+    n = len(next(iter(cols.values())))
+    arrays = []
+    for f in schema:
+        v = cols.get(f.name)
+        if v is None:
+            v = pa.nulls(n, f.type)
+        elif isinstance(v, np.ndarray):
+            v = (_list_col(v) if v.ndim == 2 else
+                 pa.array(v.astype(f.type.to_pandas_dtype(), copy=False)))
+        arrays.append(v)
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
 def _acc_bucket_counts(acc, buckets: np.ndarray) -> None:
@@ -395,134 +409,181 @@ def _shp_present(phi_dense: np.ndarray, present: np.ndarray,
 # 1h; float64 at 1d, where every packed int is far below 2^53 and
 # float32 round-trips exactly), so kernels unpack bit-identical
 # arrays and outputs are unchanged.
-_ZSTAT_1H = ("bucket", "n_tok", "sum_tok", "min_tok", "max_tok")
-_ZSTAT_1D = ("bucket", "n_obs", "n_filled", "sum_tok", "min_tok",
-             "max_tok", "mean_ntok", "quality")
+class _Lanes(NamedTuple):
+    type: str          # Spark lane type, declared with its lanes
+    names: tuple
 
 
-def _pack_zstat(names) -> F.Column:
-    lane_t = "long" if names is _ZSTAT_1H else "double"
-    return F.array(*[F.col(c).cast(lane_t) for c in names]).alias("zstat")
+_ZSTAT_1H = _Lanes("long", ("bucket", "n_tok", "sum_tok", "min_tok",
+                            "max_tok"))
+_ZSTAT_1D = _Lanes("double", ("bucket", "n_obs", "n_filled", "sum_tok",
+                              "min_tok", "max_tok", "mean_ntok",
+                              "quality"))
 
 
-def _unpack_zstat(num: dict, names) -> None:
+def _pack_zstat(lanes: _Lanes) -> F.Column:
+    return F.array(*[F.col(c).cast(lanes.type)
+                     for c in lanes.names]).alias("zstat")
+
+
+def _zstat_list(lanes: _Lanes) -> tuple:
+    """``_extract`` list-column spec of the packed lane."""
+    return len(lanes.names), _PA_TYPES[lanes.type].to_pandas_dtype()
+
+
+def _unpack_zstat(num: dict, lanes: _Lanes) -> None:
     zs = num.pop("zstat")
-    for i, name in enumerate(names):
+    for i, name in enumerate(lanes.names):
         num[name] = zs[:, i]
+
+
+def hour_windows(num: dict, cfg: EngineConfig) -> tuple[np.ndarray, dict]:
+    """Raw slot rows of complete (doc, hour) groups -> one 1h row per
+    group: the mini-stack is phase-linked on its own and emits its
+    squeezed carry (squeeze_images, lib/utils.pyx:470-487).
+
+    ``num`` holds per-row NumPy columns (doc_key[, doc_key2], slot,
+    bucket, n_tok, sum_tok, min_tok, max_tok, and the ztok|zphi
+    ensemble as (n, S)). Returns the group start rows and the
+    per-group columns, named as in ROLLUP_1H_SCHEMA — exactly what
+    ``day_windows`` consumes."""
+    T, S = cfg.slots_per_hour, cfg.n_samples
+    doc_key, key2, slot = num["doc_key"], num.get("doc_key2"), num["slot"]
+    hour = slot // T
+    sih = slot % T
+    chg = _group_change(doc_key, hour, key2)
+    starts = np.flatnonzero(chg)
+    G = starts.shape[0]
+    gid = np.cumsum(chg) - 1
+
+    # reconstitute unit phasors from the compact transport —
+    # float32 cos/sin into a preallocated complex64 (np.exp(1j*x)
+    # would silently run in complex128)
+    phi = _ensemble_phases(num, cfg.vocab_size)
+    z = np.empty(phi.shape, dtype=np.complex64)
+    np.cos(phi, out=z.real)
+    np.sin(phi, out=z.imag)
+
+    dense = np.zeros((G, T, S), dtype=np.complex64)
+    present = np.zeros((G, T), dtype=bool)
+    dense[gid, sih] = z
+    present[gid, sih] = True
+    ens_present = present
+    if cfg.shp_filter:
+        phi_dense = np.zeros((G, T, S), dtype=np.float32)
+        phi_dense[gid, sih] = phi
+        ens_present = _shp_present(phi_dense, present, cfg.shp_test,
+                                   cfg.shp_alpha)
+    # float32 fill + preallocated complex64 assembly: the f64
+    # round-trip and the complex128 intermediate of (re + 1j*im)
+    # were ~25% of the fill cost at zero accuracy benefit (interp
+    # weights stay f64 inside fill_dense_batch)
+    Z = np.empty(dense.shape, dtype=np.complex64)
+    Z.real = fill_dense_batch(dense.real, ens_present)
+    Z.imag = fill_dense_batch(dense.imag, ens_present)
+
+    vec, quality, squeezed = _link_batch(Z, cfg.method, cfg.sbw_lag,
+                                         ps_test=cfg.ps_test)
+
+    n_obs = np.diff(starts, append=slot.shape[0]).astype(np.int32)
+    hr = {
+        "doc_key": doc_key[starts],
+        "bucket": num["bucket"][starts],
+        "hour_idx": hour[starts],
+        "n_obs": n_obs,
+        "n_filled": T - n_obs,
+        "sum_tok": np.add.reduceat(num["sum_tok"], starts),
+        "min_tok": np.minimum.reduceat(num["min_tok"], starts),
+        "max_tok": np.maximum.reduceat(num["max_tok"], starts),
+        "mean_ntok": (np.add.reduceat(num["n_tok"].astype(np.float64),
+                                      starts) / n_obs),
+        "linked_phase": np.angle(vec).astype(np.float32),
+        "squeezed": np.concatenate([squeezed.real, squeezed.imag], axis=1),
+        "quality": quality,
+    }
+    if key2 is not None:
+        hr["doc_key2"] = key2[starts]
+    return starts, hr
+
+
+def day_windows(hr: dict, cfg: EngineConfig) -> tuple[np.ndarray, dict]:
+    """1h rows of complete (doc, day) groups -> one 1d row per group:
+    re-link the squeezed carries and apply the datum shift to every
+    hour's linked phase (datum_connect, lib/utils.pyx:732-796).
+
+    ``hr`` holds the 1h columns as ``hour_windows`` returns them (or as
+    read back from the 1h tier; the scalar stats may arrive as float64
+    lanes, which hold them exactly). Returns the group start rows and
+    the per-group columns, named as in ROLLUP_1D_SCHEMA."""
+    H, S, T = cfg.hours_per_day, cfg.n_samples, cfg.slots_per_hour
+    doc_key, key2, hour_idx = hr["doc_key"], hr.get("doc_key2"), hr["hour_idx"]
+    day = hour_idx // H
+    hid = hour_idx % H
+    chg = _group_change(doc_key, day, key2)
+    starts = np.flatnonzero(chg)
+    G = starts.shape[0]
+    gid = np.cumsum(chg) - 1
+
+    sq_in = hr["squeezed"]
+    dense = np.zeros((G, H, S), dtype=np.complex64)
+    present = np.zeros((G, H), dtype=bool)
+    dense[gid, hid] = sq_in[:, :S] + 1j * sq_in[:, S:]
+    present[gid, hid] = True
+    SQ = np.empty(dense.shape, dtype=np.complex64)
+    SQ.real = fill_dense_batch(dense.real, present)
+    SQ.imag = fill_dense_batch(dense.imag, present)
+
+    # datum pass: re-link the squeezed carries (datum_connect A11)
+    vec, quality_1d, day_squeezed = _link_batch(SQ, cfg.method)
+    datum = np.angle(vec).astype(np.float32)  # (G, H)
+
+    lp_dense = np.zeros((G, H, T), dtype=np.float32)
+    lp_dense[gid, hid] = hr["linked_phase"]
+    adj = np.angle(np.exp(1j * (lp_dense + datum[:, :, None]))).astype(np.float32)
+
+    n_hours = np.diff(starts, append=hour_idx.shape[0]).astype(np.int32)
+    n_obs = np.add.reduceat(hr["n_obs"], starts).astype(np.int32)
+    dy = {
+        "doc_key": doc_key[starts],
+        "bucket": hr["bucket"][starts],
+        "day_idx": day[starts],
+        "n_hours": n_hours,
+        "n_obs": n_obs,
+        "n_filled": np.add.reduceat(hr["n_filled"], starts),
+        "sum_tok": np.add.reduceat(hr["sum_tok"], starts),
+        "min_tok": np.minimum.reduceat(hr["min_tok"], starts),
+        "max_tok": np.maximum.reduceat(hr["max_tok"], starts),
+        "mean_ntok": (np.add.reduceat(hr["mean_ntok"] * hr["n_obs"], starts)
+                      / np.maximum(n_obs, 1)),
+        "mean_quality_1h": (np.add.reduceat(
+            hr["quality"].astype(np.float64), starts) / n_hours),
+        "quality_1d": quality_1d,
+        "datum_shift": datum,
+        "adjusted_phase": adj.reshape(G, H * T),
+        "squeezed": np.concatenate([day_squeezed.real, day_squeezed.imag],
+                                   axis=1),
+    }
+    if key2 is not None:
+        dy["doc_key2"] = key2[starts]
+    return starts, dy
 
 
 def make_rollup_1h_kernel(cfg: EngineConfig, counts_acc=None,
                           tok_col: str = "zphi", with_strings: bool = True):
-    T, S, V = cfg.slots_per_hour, cfg.n_samples, cfg.vocab_size
-    method, lag, ps_test = cfg.method, cfg.sbw_lag, cfg.ps_test
-    shp_filter, shp_test, shp_alpha = (cfg.shp_filter, cfg.shp_test,
-                                       cfg.shp_alpha)
-    wide = getattr(cfg, "wide_doc_key", False)
-    out_schema = _pa_schema(_widen_key(
-        ROLLUP_1H_SCHEMA if with_strings else ROLLUP_1H_CORE_SCHEMA, wide))
-    num_cols = ["doc_key", "slot"] + (["doc_key2"] if wide else [])
-    list_cols = {tok_col: (S, np.int16 if tok_col == "ztok" else np.float32),
-                 "zstat": (len(_ZSTAT_1H), np.int64)}
-
-    def process(num: dict, lookup) -> pa.RecordBatch:
-        n = num["doc_key"].shape[0]
-        doc_key = num["doc_key"]
-        slot = num["slot"]
-        hour = slot // T
-        sih = slot % T
-        key2 = num.get("doc_key2")
-        chg = _group_change(doc_key, hour, key2)
-        starts = np.flatnonzero(chg)
-        G = starts.shape[0]
-        gid = np.cumsum(chg) - 1
-
-        # reconstitute unit phasors from the compact transport —
-        # float32 cos/sin into a preallocated complex64 (np.exp(1j*x)
-        # would silently run in complex128)
-        phi = _ensemble_phases(num, V)
-        z = np.empty(phi.shape, dtype=np.complex64)
-        np.cos(phi, out=z.real)
-        np.sin(phi, out=z.imag)
-
-        dense = np.zeros((G, T, S), dtype=np.complex64)
-        present = np.zeros((G, T), dtype=bool)
-        dense[gid, sih] = z
-        present[gid, sih] = True
-        ens_present = present
-        if shp_filter:
-            phi_dense = np.zeros((G, T, S), dtype=np.float32)
-            phi_dense[gid, sih] = phi
-            ens_present = _shp_present(phi_dense, present, shp_test,
-                                       shp_alpha)
-        # float32 fill + preallocated complex64 assembly: the f64
-        # round-trip and the complex128 intermediate of (re + 1j*im)
-        # were ~25% of the fill cost at zero accuracy benefit (interp
-        # weights stay f64 inside fill_dense_batch)
-        Z = np.empty(dense.shape, dtype=np.complex64)
-        Z.real = fill_dense_batch(dense.real, ens_present)
-        Z.imag = fill_dense_batch(dense.imag, ens_present)
-
-        vec, quality, squeezed = _link_batch(Z, method, lag, ps_test=ps_test)
-
-        ends = np.append(starts[1:], n)
-        n_obs = (ends - starts).astype(np.int32)
-        sum_tok = np.add.reduceat(num["sum_tok"], starts)
-        min_tok = np.minimum.reduceat(num["min_tok"], starts)
-        max_tok = np.maximum.reduceat(num["max_tok"], starts)
-        mean_ntok = np.add.reduceat(num["n_tok"].astype(np.float64), starts) / n_obs
-
-        sq_packed = np.concatenate([squeezed.real, squeezed.imag], axis=1)
-        _acc_bucket_counts(counts_acc, num["bucket"][starts])
-        arrays = []
-        if with_strings:
-            arrays.append(pa.array(_take_strs(lookup, starts, "doc_id"),
-                                   pa.string()))
-        arrays.append(pa.array(doc_key[starts], pa.int64()))
-        if wide:
-            arrays.append(pa.array(key2[starts], pa.int64()))
-        if with_strings:
-            arrays.append(pa.array(_take_strs(lookup, starts, "source"),
-                                   pa.string()))
-        arrays += [
-            pa.array(num["bucket"][starts].astype(np.int32)),
-            pa.array(hour[starts].astype(np.int32)),
-            pa.array(n_obs),
-            pa.array((T - n_obs).astype(np.int32)),
-            pa.array(sum_tok.astype(np.int64)),
-            pa.array(min_tok.astype(np.int32)),
-            pa.array(max_tok.astype(np.int32)),
-            pa.array(mean_ntok),
-            _list_col(np.angle(vec).astype(np.float32)),
-            _list_col(sq_packed.astype(np.float32)),
-            pa.array(quality.astype(np.float32)),
-        ]
-        return pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+    out_schema = _pa_schema(_tier_ddl(ROLLUP_1H_SCHEMA, cfg, with_strings))
+    key_cols = _key_cols(cfg)
+    list_cols = {tok_col: (cfg.n_samples,
+                           np.int16 if tok_col == "ztok" else np.float32),
+                 "zstat": _zstat_list(_ZSTAT_1H)}
+    change = _window_change(key_cols, "slot", cfg.slots_per_hour)
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        carry = None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            num, strs = _extract(batch, num_cols, list_cols, with_strings)
+        for region in carry_groups(batches, change):
+            num = _extract(region, key_cols + ["slot"], list_cols)
             _unpack_zstat(num, _ZSTAT_1H)
-            num, lookup = _concat(carry, num, strs)
-            carry = None
-            doc_key = num["doc_key"]
-            hour = num["slot"] // T
-            starts = _group_starts(doc_key, hour, num.get("doc_key2"))
-            last = starts[-1]
-            n = doc_key.shape[0]
-            if last == 0:
-                carry = _slice_tail(num, lookup, 0, n)
-                continue
-            carry = _slice_tail(num, lookup, last, n)
-            num_head = {k: v[:last] for k, v in num.items()}
-            yield process(num_head, lookup)
-        if carry is not None:
-            num = carry.num
-            lookup = (None if carry.strs is None else
-                      [(len(next(iter(num.values()))), carry.strs)])
-            yield process(num, lookup)
+            starts, hr = hour_windows(num, cfg)
+            _acc_bucket_counts(counts_acc, hr["bucket"])
+            yield _emit({**hr, **_strings(region, starts)}, out_schema)
 
     return kernel
 
@@ -577,18 +638,17 @@ def rollup_1h(obs: DataFrame, cfg: EngineConfig = EngineConfig(),
     output instead of streaming them per raw row.
 
     ``assume_partitioned=True`` elides even the first exchange for
-    inputs written by sources.sequences.write_sequences under its
-    bucketed-read contract (one sorted unsplit file per bucket)."""
+    inputs the caller has already bucket-partitioned and sorted by
+    (doc_key[, doc_key2], slot) — e.g. one sorted, unsplit file per
+    bucket."""
     p = num_partitions or cfg.n_buckets
-    wide = getattr(cfg, "wide_doc_key", False)
     with_strings = "doc_id" in obs.columns
+    strs = ["doc_id", "source"] if with_strings else []
     obs = with_doc_keys(obs, cfg)
     tok_col = "ztok" if "ztok" in obs.columns else "zphi"
-    key_cols = ["doc_key"] + (["doc_key2"] if wide else [])
-    cols = ((["doc_id", "source"] if with_strings else [])
-            + key_cols + ["slot", "bucket", "n_tok", "sum_tok",
-                          "min_tok", "max_tok", tok_col])
-    obs = obs.select(*cols)
+    key_cols = _key_cols(cfg)
+    obs = obs.select(*strs, *key_cols, "slot", "bucket", "n_tok", "sum_tok",
+                     "min_tok", "max_tok", tok_col)
     part = obs if assume_partitioned else (
         obs.repartition(p, "bucket")
            .sortWithinPartitions(*key_cols, "slot"))
@@ -596,13 +656,11 @@ def rollup_1h(obs: DataFrame, cfg: EngineConfig = EngineConfig(),
     # still keys on the plain bucket column); the packing projection
     # is narrow, so partitioning and sort order are preserved and the
     # worker channel sees 4 columns instead of 8
-    part = part.select(
-        *((["doc_id", "source"] if with_strings else []) + key_cols
-          + ["slot", tok_col]), _pack_zstat(_ZSTAT_1H))
+    part = part.select(*strs, *key_cols, "slot", tok_col,
+                       _pack_zstat(_ZSTAT_1H))
     out = part.mapInArrow(
         make_rollup_1h_kernel(cfg, counts_acc, tok_col, with_strings),
-        _widen_key(ROLLUP_1H_SCHEMA if with_strings
-                   else ROLLUP_1H_CORE_SCHEMA, wide))
+        _tier_ddl(ROLLUP_1H_SCHEMA, cfg, with_strings))
     return out.withColumn(
         "hour_ts",
         F.timestamp_seconds(F.lit(cfg.epoch0)
@@ -611,115 +669,20 @@ def rollup_1h(obs: DataFrame, cfg: EngineConfig = EngineConfig(),
 
 def make_rollup_1d_kernel(cfg: EngineConfig, counts_acc=None,
                           with_strings: bool = True):
-    H, S, T = cfg.hours_per_day, cfg.n_samples, cfg.slots_per_hour
-    method = cfg.method
-    wide = getattr(cfg, "wide_doc_key", False)
-    out_schema = _pa_schema(_widen_key(
-        ROLLUP_1D_SCHEMA if with_strings else ROLLUP_1D_CORE_SCHEMA, wide))
-    num_cols = ["doc_key", "hour_idx"] + (["doc_key2"] if wide else [])
-    list_cols = {"linked_phase": (T, np.float32),
-                 "squeezed": (2 * S, np.float32),
-                 "zstat": (len(_ZSTAT_1D), np.float64)}
-
-    def process(num: dict, lookup) -> pa.RecordBatch:
-        n = num["doc_key"].shape[0]
-        doc_key = num["doc_key"]
-        hour_idx = num["hour_idx"]
-        day = hour_idx // H
-        hid = hour_idx % H
-        key2 = num.get("doc_key2")
-        chg = _group_change(doc_key, day, key2)
-        starts = np.flatnonzero(chg)
-        G = starts.shape[0]
-        gid = np.cumsum(chg) - 1
-
-        sq_in = num["squeezed"]
-        sq = sq_in[:, :S] + 1j * sq_in[:, S:]
-
-        dense = np.zeros((G, H, S), dtype=np.complex64)
-        present = np.zeros((G, H), dtype=bool)
-        dense[gid, hid] = sq
-        present[gid, hid] = True
-        SQ = np.empty(dense.shape, dtype=np.complex64)
-        SQ.real = fill_dense_batch(dense.real, present)
-        SQ.imag = fill_dense_batch(dense.imag, present)
-
-        # datum pass: re-link the squeezed carries (datum_connect A11)
-        vec, quality_1d, day_squeezed = _link_batch(SQ, method)
-        datum = np.angle(vec).astype(np.float32)  # (G, H)
-
-        lp_dense = np.zeros((G, H, T), dtype=np.float32)
-        lp_dense[gid, hid] = num["linked_phase"]
-        adj = np.angle(np.exp(1j * (lp_dense + datum[:, :, None]))).astype(np.float32)
-        adj = adj.reshape(G, H * T)
-
-        ends = np.append(starts[1:], n)
-        n_hours = (ends - starts).astype(np.int32)
-        n_obs = np.add.reduceat(num["n_obs"], starts).astype(np.int32)
-        n_filled = np.add.reduceat(num["n_filled"], starts).astype(np.int32)
-        sum_tok = np.add.reduceat(num["sum_tok"], starts)
-        min_tok = np.minimum.reduceat(num["min_tok"], starts)
-        max_tok = np.maximum.reduceat(num["max_tok"], starts)
-        w_mean = (np.add.reduceat(num["mean_ntok"] * num["n_obs"], starts)
-                  / np.maximum(n_obs, 1))
-        mean_q = (np.add.reduceat(num["quality"].astype(np.float64), starts)
-                  / n_hours)
-
-        day_packed = np.concatenate([day_squeezed.real, day_squeezed.imag], axis=1)
-        _acc_bucket_counts(counts_acc, num["bucket"][starts])
-        arrays = []
-        if with_strings:
-            arrays.append(pa.array(_take_strs(lookup, starts, "doc_id"),
-                                   pa.string()))
-        arrays.append(pa.array(doc_key[starts], pa.int64()))
-        if wide:
-            arrays.append(pa.array(key2[starts], pa.int64()))
-        if with_strings:
-            arrays.append(pa.array(_take_strs(lookup, starts, "source"),
-                                   pa.string()))
-        arrays += [
-            pa.array(num["bucket"][starts].astype(np.int32)),
-            pa.array(day[starts].astype(np.int32)),
-            pa.array(n_hours),
-            pa.array(n_obs),
-            pa.array(n_filled),
-            pa.array(sum_tok.astype(np.int64)),
-            pa.array(min_tok.astype(np.int32)),
-            pa.array(max_tok.astype(np.int32)),
-            pa.array(w_mean),
-            pa.array(mean_q),
-            pa.array(quality_1d.astype(np.float32)),
-            _list_col(datum),
-            _list_col(adj),
-            _list_col(day_packed.astype(np.float32)),
-        ]
-        return pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+    out_schema = _pa_schema(_tier_ddl(ROLLUP_1D_SCHEMA, cfg, with_strings))
+    key_cols = _key_cols(cfg)
+    list_cols = {"linked_phase": (cfg.slots_per_hour, np.float32),
+                 "squeezed": (2 * cfg.n_samples, np.float32),
+                 "zstat": _zstat_list(_ZSTAT_1D)}
+    change = _window_change(key_cols, "hour_idx", cfg.hours_per_day)
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        carry = None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            num, strs = _extract(batch, num_cols, list_cols, with_strings)
+        for region in carry_groups(batches, change):
+            num = _extract(region, key_cols + ["hour_idx"], list_cols)
             _unpack_zstat(num, _ZSTAT_1D)
-            num, lookup = _concat(carry, num, strs)
-            carry = None
-            doc_key = num["doc_key"]
-            day = num["hour_idx"] // H
-            starts = _group_starts(doc_key, day, num.get("doc_key2"))
-            last = starts[-1]
-            n = doc_key.shape[0]
-            if last == 0:
-                carry = _slice_tail(num, lookup, 0, n)
-                continue
-            carry = _slice_tail(num, lookup, last, n)
-            num_head = {k: v[:last] for k, v in num.items()}
-            yield process(num_head, lookup)
-        if carry is not None:
-            num = carry.num
-            lookup = (None if carry.strs is None else
-                      [(len(next(iter(num.values()))), carry.strs)])
-            yield process(num, lookup)
+            starts, dy = day_windows(num, cfg)
+            _acc_bucket_counts(counts_acc, dy["bucket"])
+            yield _emit({**dy, **_strings(region, starts)}, out_schema)
 
     return kernel
 
@@ -742,29 +705,24 @@ def rollup_1d(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
     kernels then never see a doc_id/source byte — attach_doc_dim joins
     the strings onto the G-row outputs."""
     p = num_partitions or cfg.n_buckets
-    wide = getattr(cfg, "wide_doc_key", False)
     with_strings = "doc_id" in df_1h.columns
+    strs = ["doc_id", "source"] if with_strings else []
     df_1h = with_doc_keys(df_1h, cfg)
-    key_cols = ["doc_key"] + (["doc_key2"] if wide else [])
-    cols = ((["doc_id", "source"] if with_strings else [])
-            + key_cols + ["bucket", "hour_idx", "n_obs", "n_filled",
-                          "sum_tok", "min_tok", "max_tok", "mean_ntok",
-                          "linked_phase", "squeezed", "quality"])
-    part = df_1h.select(*cols)
+    key_cols = _key_cols(cfg)
+    part = df_1h.select(*strs, *key_cols, "bucket", "hour_idx", "n_obs",
+                        "n_filled", "sum_tok", "min_tok", "max_tok",
+                        "mean_ntok", "linked_phase", "squeezed", "quality")
     if not assume_partitioned:
         part = (part.repartition(p, "bucket")
                     .sortWithinPartitions(*key_cols, "hour_idx"))
     # pack scalar stats after the exchange — same narrow projection
     # trade as rollup_1h (5 columns through the worker channel
     # instead of 12)
-    part = part.select(
-        *((["doc_id", "source"] if with_strings else []) + key_cols
-          + ["hour_idx", "linked_phase", "squeezed"]),
-        _pack_zstat(_ZSTAT_1D))
+    part = part.select(*strs, *key_cols, "hour_idx", "linked_phase",
+                       "squeezed", _pack_zstat(_ZSTAT_1D))
     out = part.mapInArrow(
         make_rollup_1d_kernel(cfg, counts_acc, with_strings),
-        _widen_key(ROLLUP_1D_SCHEMA if with_strings
-                   else ROLLUP_1D_CORE_SCHEMA, wide))
+        _tier_ddl(ROLLUP_1D_SCHEMA, cfg, with_strings))
     return out.withColumn(
         "day_ts",
         F.timestamp_seconds(F.lit(cfg.epoch0)

@@ -99,31 +99,3 @@ def test_l1_method_recovers_truth(spark):
     with _pytest.raises(ValueError):
         invert_network(df, CFG, method="L3")
 
-
-def test_carry_across_arrow_batches(spark):
-    """The kernel's memory bound is O(one Arrow batch + one doc
-    series): force multi-batch partitions with a tiny Arrow batch size
-    and assert doc groups split across batch boundaries still solve
-    identically to the single-batch run."""
-    rng = np.random.default_rng(3)
-    rows = []
-    for d in range(5):
-        truth = np.concatenate([[0.0], np.cumsum(rng.normal(0, 0.2, 23))])
-        for h in range(24):
-            rows.append((f"doc{d}", "web", 0, h, [float(truth[h])] * 10))
-    df = spark.createDataFrame(
-        rows, "doc_id string, source string, bucket int, hour_idx int, "
-              "linked_phase array<float>")
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
-    baseline = invert_network(df, CFG, num_partitions=1).toPandas() \
-        .sort_values("doc_id").reset_index(drop=True)
-    try:
-        spark.conf.set(key, "7")   # 24-row docs span >3 batches
-        tiny = invert_network(df, CFG, num_partitions=1).toPandas() \
-            .sort_values("doc_id").reset_index(drop=True)
-    finally:
-        spark.conf.set(key, old)
-    assert list(tiny["doc_id"]) == list(baseline["doc_id"])
-    for a, b in zip(tiny["ts_series"], baseline["ts_series"]):
-        np.testing.assert_allclose(np.asarray(a), np.asarray(b), atol=1e-6)
