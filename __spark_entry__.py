@@ -391,7 +391,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # subset of q33_gapfill_interp's oracle, whose grid/was_missing
         # columns certify the same gap detection — the freed slot
         # driver-certifies the end-to-end curation composition (q52).
-        # relational.gap_count itself remains a library operator.
+        # relational.gap_count went with it.
         "q04_cumsum_daily": relational.cumsum_daily,
         "q05_asof_next_event": relational.asof_next_event,
         "q12_sliding_mean": relational.sliding_mean,
@@ -607,8 +607,8 @@ def _q42_sql(n_queries: int = 20, k: int = 5, n_cells: int = 16,
     embedded in both plans; assignment replicates the rounded
     squared-L2 with smallest-cell tiebreak.
 
-    Directory coupling: BOTH the Spark query (via ivf_train_centroids)
-    and this SQL resolve the fit corpus through the single
+    Directory coupling: BOTH the Spark query (q42 passes
+    ``fit_dir=codebook_fit_dir()``) and this SQL resolve the fit corpus through the single
     similarity.codebook_fit_dir() helper ($SPARK_GRAFT_SF_DIR_T2,
     default sf0.01 — the directory the driver registers the DuckDB
     views from), so the two fits cannot diverge whatever sf_dir the
@@ -661,10 +661,10 @@ def _q52_sql(min_words: int = 5, max_stop: float = 0.9,
     the q21 exact-fingerprint keep-first-by-id, the q26 MinHash-LSH
     pairs collapsed to connected components by a recursive CTE
     (min-label closure over the symmetric edge list — the same
-    fixpoint dedup.connected_components iterates), the Gopher-style
-    repetition signals (word counts + 2-gram assembly via list
-    lambdas, same rounding as text.repetition_signals), and the
-    identical priority CASE. Reuses _q26_sql verbatim for the pair
+    component-minimum labeling dedup.connected_components returns),
+    the Gopher-style repetition signals (word counts + 2-gram assembly
+    via list lambdas, same rounding as text.repetition_signals), and
+    the identical priority CASE. Reuses _q26_sql verbatim for the pair
     leg so the two certifications can never diverge."""
     case = f"""CASE WHEN ex.doc_id IS NOT NULL THEN 'exact_dup'
                     WHEN nl.doc_id IS NOT NULL THEN 'near_dup'

@@ -11,7 +11,7 @@ sequences:
   (Iceberg ``MERGE INTO`` on a real cluster; partitioned-parquet
   dynamic-overwrite in this sandbox — see ``sources/catalog.py``)
 - batched NumPy eigen kernels (EVD/EMI phase linking, squeeze carry,
-  datum connect) inside Arrow-vectorized ``applyInPandas`` UDFs
+  datum connect) inside Arrow-batch ``mapInArrow`` UDFs
 - gap-fill linear interpolation, Gorilla XOR + delta-of-delta codecs,
 - checkpoint/lineage table for exact resume (the reference's
   ``flag.npy`` protocol, ``phase_linking.py:74-84``).

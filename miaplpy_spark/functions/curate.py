@@ -126,15 +126,7 @@ def curate_corpus(spark: SparkSession, sf_dir: str,
                               verify_threshold=near_dup_threshold)
     near = _with_keys(
         dedup_keep_list(pairs,
-                        doc_spine=_docs(spark, sf_dir).select("doc_id"),
-                        # auto: curation runs over arbitrary corpora,
-                        # where near-dup chain diameter is unbounded —
-                        # driver union-find below the edge threshold
-                        # (the verified pair graph is orders smaller
-                        # than the corpus), star rounds (O(log n) at
-                        # any diameter) above it; min-label's 25-sweep
-                        # bound blows up on the sf0.1 graph's chains
-                        algorithm="auto")
+                        doc_spine=_docs(spark, sf_dir).select("doc_id"))
         .select("doc_id", F.col("keep").alias("near_keep")), cfg)
 
     return _assemble_decision(
@@ -213,9 +205,7 @@ def curate_batch(spark: SparkSession, batch_dir: str, index_dir: str,
     the batch's fingerprint set broadcast into the scan (matched
     fingerprints come out at batch cardinality; the store is never
     shuffled); the near leg inherits incremental_minhash_pairs' cost
-    model. After the decision, pass ``.where("keep")`` to
-    ``extend_minhash_index`` so the next batch dedups against this
-    one."""
+    model."""
     from pyspark.sql import Window
 
     d = _docs(spark, batch_dir)
@@ -255,7 +245,7 @@ def curate_batch(spark: SparkSession, batch_dir: str, index_dir: str,
     # corpus), so these joins are all small-side.
     pairs = incremental_minhash_pairs(spark, batch_dir, index_dir,
                                       verify_threshold=near_dup_threshold)
-    comps = connected_components(pairs, algorithm="auto")
+    comps = connected_components(pairs)
     batch_ids = d.select(F.col("doc_id").alias("node"),
                          F.lit(True).alias("in_batch"))
     flagged = comps.join(batch_ids, "node", "left")

@@ -186,9 +186,9 @@ def build_minhash_index(spark, sf_dir: str, index_dir: str,
                     stored doc?" from 16 bytes/doc, never stored text
       params/       one-row JSON (n_perm, bands, k)    text
 
-    Params ride THROUGH Spark (the ivf_build_index pattern) so the
-    index works on any filesystem the session can write. Returns the
-    number of docs indexed."""
+    Params ride THROUGH Spark (a one-row text dataset, not a driver-
+    side file) so the index works on any filesystem the session can
+    write. Returns the number of docs indexed."""
     import json
 
     from .text import exact_fingerprint
@@ -292,59 +292,6 @@ def incremental_minhash_pairs(spark, new_docs_dir: str, index_dir: str,
     return _verify_pairs(cand, sig_needed, n_perm, verify_threshold)
 
 
-def extend_minhash_index(spark, new_docs_dir: str, index_dir: str,
-                         keep: DataFrame | None = None,
-                         if_absent: bool = False) -> int:
-    """Append a new batch's signatures, band rows, and fingerprints to
-    an existing index (call AFTER the keep/drop decision, so only
-    retained docs are indexed — pass the kept ids as ``keep``, any
-    DataFrame with a doc_id column, e.g. ``curate_batch(...)
-    .where("keep")``). Same params record; appends are per-batch
-    dynamic adds, never a rewrite of the stored tables. Returns the
-    number of docs appended.
-
-    ``if_absent=True`` skips docs already in the index — the replay
-    guard a streaming caller needs (a micro-batch replayed after a
-    failed commit would otherwise double-append, and duplicate index
-    rows surface as duplicate pair rows downstream). Costs one slim
-    doc_id-column scan of the stored signatures with the batch ids
-    broadcast into it (the already-present set comes out at batch
-    cardinality; the store is never shuffled)."""
-    from .text import exact_fingerprint
-
-    p = _minhash_index_params(spark, index_dir)
-    docs = _docs(spark, new_docs_dir)
-    if keep is not None:
-        # materialize the kept-id set once: it gates three writes, and
-        # callers pass live decision plans (curate_batch(...).where)
-        keep_ids = keep.select("doc_id").localCheckpoint(eager=True)
-        docs = docs.join(keep_ids, "doc_id", "left_semi")
-    if if_absent:
-        present = (spark.read.parquet(f"{index_dir}/signatures")
-                   .select("doc_id")
-                   .join(F.broadcast(docs.select("doc_id")),
-                         "doc_id", "left_semi")
-                   .localCheckpoint(eager=True))
-        docs = docs.join(F.broadcast(present), "doc_id", "left_anti")
-    # materialize the batch signatures ONCE (eager checkpoint): the
-    # signature write, the banding write, and the returned count all
-    # read the checkpoint, so appends never re-scan the stored
-    # signatures table (the old select-what-was-appended semi-join
-    # was a full store scan per batch — O(store), not O(batch), at
-    # 10^12 stored docs) and the signature aggregation runs once.
-    # Parquet round-trips the int64 sig arrays losslessly, so banding
-    # from the checkpoint matches banding from a re-read exactly.
-    new_sig = (minhash_signatures(docs, p["n_perm"], p["k"])
-               .localCheckpoint(eager=True))
-    new_sig.write.mode("append").parquet(f"{index_dir}/signatures")
-    (_banded(new_sig, p["bands"], p["n_perm"] // p["bands"])
-     .write.mode("append").partitionBy("band")
-     .parquet(f"{index_dir}/bands"))
-    (docs.select("doc_id", exact_fingerprint().alias("fp"))
-     .write.mode("append").parquet(f"{index_dir}/fingerprints"))
-    return new_sig.count()
-
-
 def simhash(df: DataFrame, nbits: int = SIMHASH_BITS) -> DataFrame:
     """nbits-wide SimHash per doc from word hashes: per bit, sign of
     the ±1 vote sum over words.
@@ -436,17 +383,15 @@ def _canonical_edges(pairs: DataFrame, id1: str, id2: str) -> DataFrame:
             .distinct())
 
 
-def _driver_components(e: DataFrame, rows=None) -> DataFrame:
+def _driver_components(e: DataFrame, rows) -> DataFrame:
     """Exact union-find on a DRIVER-COLLECTED edge list — the small-
-    graph fast path the ``auto`` mode picks below its edge threshold
+    graph path connected_components picks at or below DRIVER_MAX_EDGES
     (the same adaptivity as a broadcast-join threshold: when the
     deduplicated pair graph fits comfortably on the driver, one
     union-find beats 6-10 distributed rounds of fixed job latency).
-    Input must be the canonical distinct edge set; ``rows`` passes an
-    already-collected edge list so auto mode's size probe and the
-    collect are ONE job."""
-    if rows is None:
-        rows = e.collect()
+    ``e`` is the canonical distinct edge set and ``rows`` its
+    already-collected edges, so the size probe and the collect are
+    ONE job."""
     parent: dict = {}
 
     def find(x):
@@ -473,25 +418,23 @@ def _driver_components(e: DataFrame, rows=None) -> DataFrame:
         out, f"node {t}, comp {t}")
 
 
-def _star_components(pairs: DataFrame, id1: str, id2: str,
-                     max_iter: int) -> DataFrame:
+def _star_components(e: DataFrame, max_iter: int) -> DataFrame:
     """Alternating large-star/small-star connected components (the
     two-phase MapReduce CC algorithm of Kiveris et al., "Connected
-    Components in MapReduce and Beyond"): O(log n) rounds on ANY graph
-    — the opt-in for high-diameter pair graphs where min-label
-    propagation needs O(diameter) sweeps (a 40-node chain: 40 sweeps
-    vs ~5 rounds here).
+    Components in MapReduce and Beyond") over the canonical edge set
+    ``e``: O(log n) rounds on ANY graph, where label propagation to
+    the minimum would need O(diameter) sweeps (a 40-node chain: 40
+    sweeps vs ~5 rounds here).
 
     Each round is two (aggregate + join) stages, both shuffling on the
-    node key with map-side partial min — the same per-round cost shape
-    as one min-label sweep. Edges are kept in canonical child>parent
-    orientation; at the fixpoint every component is a star centered on
-    its minimum node, read off directly as the labeling.
+    node key with map-side partial min. Edges are kept in canonical
+    child>parent orientation; at the fixpoint every component is a
+    star centered on its minimum node, read off directly as the
+    labeling.
 
     large-star(u): m = min(N(u) ∪ {u}); relink every neighbor v > u
     to m. small-star(u): over parent set P(u) (all < u): m = min(P);
     relink u and every other parent to m."""
-    e = _canonical_edges(pairs, id1, id2).localCheckpoint(eager=True)
     for _ in range(max_iter):
         # large-star over the symmetric neighborhoods
         sym = e.unionByName(
@@ -529,104 +472,53 @@ def _star_components(pairs: DataFrame, id1: str, id2: str,
         "rounds; raise max_iter")
 
 
+# Deduplicated edge count at or below which connected_components runs
+# the driver union-find instead of the star rounds — a broadcast-
+# threshold-style cut: 2M edges are tens of MB on the driver.
+DRIVER_MAX_EDGES = 2_000_000
+
+
 def connected_components(pairs: DataFrame, id1: str = "doc1",
-                         id2: str = "doc2", max_iter: int = 25,
-                         algorithm: str = "minlabel",
-                         driver_max_edges: int = 2_000_000) -> DataFrame:
+                         id2: str = "doc2",
+                         max_iter: int = 25) -> DataFrame:
     """(node, component) labeling over a near-dup pair graph — the
     step a dedup pipeline needs AFTER pair generation: A~B and B~C
     must collapse into ONE keep-group even when A~C was never
-    surfaced. Label propagation to the component minimum:
+    surfaced. The label is the component's minimum node.
 
-        comp(v) <- min(comp(v), min over neighbors u of comp(u))
-
-    iterated to a fixpoint. Per iteration: one join of the (symmetric)
-    edge list against the current labels + one groupBy min — both
-    shuffle on the same node-id key, so AQE coalesces them; there is
-    one driver-side action per iteration (the convergence check),
-    which is the standard price of iterative graph algorithms on
-    DataFrames (GraphX/GraphFrames does the same under the hood).
-    Iterations needed = graph diameter; dedup clusters are shallow
-    (near-clique blobs around a template), so this converges in 2-4
-    sweeps in practice — max_iter is a safety bound, and the operator
-    raises rather than silently returning a half-propagated labeling.
+    The deduplicated edge set is materialized once and probed: at or
+    below DRIVER_MAX_EDGES it is labeled by one exact driver-side
+    union-find — for the common case where LSH verification leaves a
+    pair graph orders of magnitude smaller than the corpus, this
+    replaces 6-10 distributed rounds of fixed job latency with
+    microseconds — and above it by the star rounds
+    (_star_components), O(log n) rounds at any diameter: curation runs
+    over arbitrary corpora, where near-dup chain diameter is
+    unbounded. ``max_iter`` bounds the star rounds; the operator
+    raises rather than returning a half-propagated labeling.
 
     At 100 TB: the edge list is the (bounded) output of the LSH/
     SimHash candidate generators, orders of magnitude smaller than
     the corpus; nodes absent from any pair are singletons by
-    definition and never enter the loop (dedup_keep_list's
+    definition and never enter the labeling (dedup_keep_list's
     ``doc_spine`` joins them back as their own component when a total
-    labeling is needed). checkpoint-per-iteration (localCheckpoint)
-    truncates the lineage so the plan does not grow exponentially
-    with iterations.
-
-    ``algorithm='star'`` switches to the alternating large-star/
-    small-star variant (_star_components): O(log n) rounds regardless
-    of diameter — use it when the pair graph may contain long chains
-    (e.g. threshold-free candidate edges). Min-label stays the
-    default: dedup clusters are shallow near-cliques, where 2-4
-    sweeps beat the star rounds' extra join.
-
-    ``algorithm='auto'`` counts the deduplicated edge set first: at or
-    below ``driver_max_edges`` (a broadcast-threshold-style knob;
-    2M edges ~ tens of MB) it runs one exact driver-side union-find —
-    for the common case where LSH verification leaves a pair graph
-    orders of magnitude smaller than the corpus, this replaces 6-10
-    distributed rounds of fixed job latency with microseconds — and
-    above it, the star rounds (diameter-safe at any scale)."""
-    if algorithm == "auto":
-        e = _canonical_edges(pairs, id1, id2).localCheckpoint(eager=True)
-        # size probe and edge fetch fused into ONE job: limit(max+1)
-        # returns every edge when the graph is under the threshold
-        # (the common LSH-verified case), so the driver path pays a
-        # single action instead of count-then-collect
-        rows = e.limit(driver_max_edges + 1).collect()
-        if len(rows) <= driver_max_edges:
-            return _driver_components(e, rows)
-        return _star_components(e.select(F.col("c").alias(id1),
-                                         F.col("p").alias(id2)),
-                                id1, id2, max_iter)
-    if algorithm == "star":
-        return _star_components(pairs, id1, id2, max_iter)
-    if algorithm != "minlabel":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    e = (pairs.select(F.col(id1).alias("src"), F.col(id2).alias("dst"))
-         .unionByName(pairs.select(F.col(id2).alias("src"),
-                                   F.col(id1).alias("dst")))
-         .distinct()
-         # materialize ONCE: every sweep joins e, and without this the
-         # whole upstream pair-generation pipeline (MinHash signatures,
-         # the banded self-join) would re-execute per sweep
-         .localCheckpoint(eager=True))
-    labels = (e.select(F.col("src").alias("node"))
-              .distinct()
-              .withColumn("comp", F.col("node"))
-              .localCheckpoint(eager=True))
-    for _ in range(max_iter):
-        nbr_min = (e.join(labels, e["dst"] == labels["node"])
-                   .groupBy("src").agg(F.min("comp").alias("nbr_comp")))
-        new = (labels.join(nbr_min, labels["node"] == nbr_min["src"],
-                           "left")
-               .select("node",
-                       F.least("comp", F.coalesce("nbr_comp", "comp"))
-                        .alias("comp")))
-        new = new.localCheckpoint(eager=True)
-        changed = (new.alias("n")
-                   .join(labels.alias("o"), "node")
-                   .where(F.col("n.comp") != F.col("o.comp")).count())
-        labels = new
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} sweeps "
-        "(diameter > max_iter); raise max_iter")
+    labeling is needed). The per-round localCheckpoint truncates the
+    lineage so the plan does not grow with the rounds."""
+    e = _canonical_edges(pairs, id1, id2).localCheckpoint(eager=True)
+    # size probe and edge fetch fused into ONE job: limit(max+1)
+    # returns every edge when the graph is under the threshold
+    # (the common LSH-verified case), so the driver path pays a
+    # single action instead of count-then-collect
+    rows = e.limit(DRIVER_MAX_EDGES + 1).collect()
+    if len(rows) <= DRIVER_MAX_EDGES:
+        return _driver_components(e, rows)
+    return _star_components(e, max_iter)
 
 
 def dedup_keep_list(pairs: DataFrame, id1: str = "doc1",
                     id2: str = "doc2",
                     doc_spine: DataFrame | None = None,
-                    spine_col: str = "doc_id",
-                    algorithm: str = "minlabel") -> DataFrame:
+                    spine_col: str = "doc_id") -> DataFrame:
     """Canonical keep/drop decision per near-dup component: the
     lexicographically-smallest doc id in each connected component is
     kept, every other member is dropped (deterministic — reruns and
@@ -642,20 +534,13 @@ def dedup_keep_list(pairs: DataFrame, id1: str = "doc1",
     so downstream consumers get exactly one row per doc without
     re-deriving the complement themselves.
 
-    ``algorithm`` passes through to connected_components — pick
-    'star' when the pair graph's diameter is unbounded (near-dup
-    chains over a large corpus routinely exceed any fixed sweep
-    budget; measured: the sf0.1 MinHash graph blows the 25-sweep
-    min-label bound while star converges in a handful of rounds).
-
-    The component label returned by every connected_components
-    algorithm IS the component's minimum node (driver union-find
-    labels with comp_min; the star fixpoint's centers are below every
-    member; min-label converges to the component minimum), so the
+    The component label connected_components returns IS the
+    component's minimum node (driver union-find labels with comp_min;
+    the star fixpoint's centers are below every member), so the
     canonical doc falls out as ``node == comp`` directly — no extra
     per-component min aggregation + join-back (one exchange fewer on
     the labeling path)."""
-    comps = connected_components(pairs, id1, id2, algorithm=algorithm)
+    comps = connected_components(pairs, id1, id2)
     labeled = comps.select(
         F.col("node").alias("doc_id"), "comp",
         (F.col("node") == F.col("comp")).alias("keep"))

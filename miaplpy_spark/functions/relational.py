@@ -51,20 +51,6 @@ def tier_rollup_1d(spark, sf_dir) -> DataFrame:
                   F.count("*").alias("n_hours")))
 
 
-def gap_count(spark, sf_dir) -> DataFrame:
-    """Missing-window detection per series (T5 gap semantics): present
-    hours vs hour span -> gap count."""
-    ev = _t(spark, sf_dir, "events")
-    hourly = ev.select(
-        "event_type",
-        F.floor(F.unix_timestamp("ts") / 3600).cast("long").alias("h"))
-    return (hourly.groupBy("event_type")
-            .agg(F.count_distinct("h").alias("hours_present"),
-                 (F.max("h") - F.min("h") + 1).cast("long").alias("hours_span"))
-            .withColumn("hours_missing",
-                        (F.col("hours_span") - F.col("hours_present")).cast("long")))
-
-
 def cumsum_daily(spark, sf_dir) -> DataFrame:
     """Running total over ordered windows (W5: ts = cumsum(X·Δt),
     dev/ifgram_inversion_L1L2.py:550-551)."""

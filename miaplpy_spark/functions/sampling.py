@@ -192,7 +192,7 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str,
     spine = _docs(spark, sf_dir).select("doc_id")
     pairs = minhash_lsh_pairs(spark, sf_dir,
                               verify_threshold=near_dup_threshold)
-    labeled = dedup_keep_list(pairs, doc_spine=spine, algorithm="auto")
+    labeled = dedup_keep_list(pairs, doc_spine=spine)
     # `comp` IS the component's canonical (minimum) doc id — both
     # label-propagation modes converge to the component minimum, and
     # spine singletons come back as comp = own doc_id

@@ -21,41 +21,25 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _norm(a):
+def vnorm(col: str) -> F.Column:
+    """The L2 norm of an array<float> column, as a double fold —
+    evaluated ONCE per VECTOR (on the pre-join per-row side) instead of
+    once per candidate PAIR: cos = dot / (na * nb) with hoisted norms
+    leaves the pair stage only the dot product's higher-order-function
+    work (candidate pairs outnumber vectors by orders at any scale)."""
+    a = F.transform(F.col(col), lambda x: x.cast("double"))
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
                               F.lit(0.0), lambda acc, x: acc + x))
 
 
-def with_cosine(df: DataFrame, col_a: str, col_b: str, out: str = "cos") -> DataFrame:
-    a = F.transform(F.col(col_a), lambda x: x.cast("double"))
-    b = F.transform(F.col(col_b), lambda x: x.cast("double"))
-    return df.withColumn(out, _dot(a, b) / (_norm(a) * _norm(b)))
-
-
-def vnorm(col) -> F.Column:
-    """The L2-norm expression with_cosine evaluates — exposed so call
-    sites can hoist it to ONE evaluation per VECTOR (on the pre-join
-    per-row side) instead of one per candidate PAIR: the fold over the
-    same array yields the same double, so cos = dot / (na * nb) with
-    hoisted norms is bit-identical to with_cosine while cutting the
-    pair-stage higher-order-function work to the dot product alone
-    (candidate pairs outnumber vectors by orders at any scale)."""
-    return _norm(F.transform(col if not isinstance(col, str) else F.col(col),
-                             lambda x: x.cast("double")))
-
-
 def cos_prenormed(va: str, vb: str, na: str, nb: str) -> F.Column:
-    """cos of two vectors whose norms were hoisted with ``vnorm`` —
-    same dot fold, same (na * nb) product, same division as
-    with_cosine (bit-identical)."""
+    """cos of two vectors whose norms were hoisted with ``vnorm``: the
+    dot fold over both arrays cast to double, divided by (na * nb)."""
     a = F.transform(F.col(va), lambda x: x.cast("double"))
     b = F.transform(F.col(vb), lambda x: x.cast("double"))
-    return _dot(a, b) / (F.col(na) * F.col(nb))
+    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
+                      F.lit(0.0), lambda acc, x: acc + x)
+    return dot / (F.col(na) * F.col(nb))
 
 
 def brute_force_topk(spark, sf_dir, n_queries: int = 20, k: int = 5) -> DataFrame:
@@ -252,8 +236,8 @@ def _d2_array(vec_col, cents: list[list[float]]):
 
 
 def fit_ivf_codebook(sf_dir: str, n_cells: int = 16, dim: int = 64,
-                     n_iters: int = 1, sample: int = 4096,
-                     seeding: str = "first") -> list[list[float]]:
+                     n_iters: int = 1,
+                     sample: int = 4096) -> list[list[float]]:
     """IVF codebook fit — a driver-side MODEL like ``plane_signs``:
     deterministic seeding + ``n_iters`` Lloyd sweeps over a bounded
     deterministic sample (the ``sample`` lowest vec_ids), centroids
@@ -265,14 +249,13 @@ def fit_ivf_codebook(sf_dir: str, n_cells: int = 16, dim: int = 64,
     no Spark job and no engine-specific arithmetic, so the DuckDB
     oracle embeds the identical literals.
 
-    ``seeding``: 'first' (sample-order seeds) or 'farthest'
-    (farthest-first traversal, the deterministic k-means++ analog).
-    Measured on the sandbox embeddings (label-clustered, recall@5 vs
-    brute force at a 25% probe fraction): first-16 + 1 Lloyd = 0.85,
-    farthest-first variants 0.33-0.65 — farthest-first seeds on
-    outliers, and extra Lloyd sweeps over-balance cells away from the
-    natural clusters (first-16 + 5 Lloyd drops to 0.83). Hence the
-    defaults; both paths stay available and deterministic."""
+    Seeds are the first ``n_cells`` sample vectors. Measured on the
+    sf0.001 embeddings (label-clustered, recall@5 vs brute force at a
+    25% probe fraction): first-16 + 1 Lloyd = 0.85, farthest-first
+    (the deterministic k-means++ analog) variants 0.33-0.65 —
+    farthest-first seeds on outliers, and extra Lloyd sweeps
+    over-balance cells away from the natural clusters (first-16 + 5
+    Lloyd drops to 0.83). Hence the seeding and the defaults."""
     import numpy as np
     import pyarrow.parquet as pq
 
@@ -302,15 +285,7 @@ def fit_ivf_codebook(sf_dir: str, n_cells: int = 16, dim: int = 64,
     X = np.asarray(flat, dtype=np.float64).reshape(len(vid), dim)
     X = X[np.argsort(vid, kind="stable")][:sample]
 
-    if seeding == "farthest":
-        C = np.empty((n_cells, dim))
-        C[0] = X[0]
-        d2 = ((X - C[0]) ** 2).sum(axis=1)
-        for k in range(1, n_cells):
-            C[k] = X[int(np.argmax(d2))]
-            d2 = np.minimum(d2, ((X - C[k]) ** 2).sum(axis=1))
-    else:
-        C = X[:n_cells].copy()
+    C = X[:n_cells].copy()
     for _ in range(n_iters):
         d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
         assign = np.argmin(d, axis=1)       # ties -> lowest cell
@@ -325,9 +300,9 @@ def codebook_fit_dir(sf_dir: str | None = None) -> str:
     """Single resolution point for the IVF codebook's fit corpus
     (round-3 ADVICE): the caller's EXPLICIT directory wins, then
     $SPARK_GRAFT_SF_DIR_T2, then the driver-gate default (round-4
-    ADVICE: env-over-argument made ``ivf_train_centroids(spark,
-    my_dir)`` silently fit on a different corpus than the one it
-    assigns whenever the env var was exported). The gate/oracle call
+    ADVICE: env-over-argument made ``ivf_ann_topk(..., fit_dir=my_dir)``
+    silently fit on a different corpus than the one it assigns
+    whenever the env var was exported). The gate/oracle call
     sites pass NO directory, so they both land on the env var or the
     sf0.01 default — the directory the driver registers its DuckDB
     views from — and the two fits cannot diverge on centroid
@@ -336,14 +311,6 @@ def codebook_fit_dir(sf_dir: str | None = None) -> str:
     import os
     return sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR_T2",
                                     "/root/testdata/sf0.01")
-
-
-def ivf_train_centroids(spark, sf_dir, n_cells: int = 16,
-                        dim: int = 64) -> list[list[float]]:
-    """Back-compat wrapper for the codebook fit (spark unused — the
-    fit is a driver-side sample model over codebook_fit_dir(sf_dir),
-    see fit_ivf_codebook)."""
-    return fit_ivf_codebook(codebook_fit_dir(sf_dir), n_cells, dim)
 
 
 def ivf_ann_topk(spark, sf_dir, n_queries: int = 20, k: int = 5,
@@ -396,109 +363,6 @@ def ivf_ann_topk(spark, sf_dir, n_queries: int = 20, k: int = 5,
     return (cand.withColumn("rk", F.row_number().over(w))
             .where(F.col("rk") <= k)
             .select("qid", "nid", "sim", F.col("rk").cast("long").alias("rk")))
-
-
-def ivf_build_index(spark, sf_dir, index_dir: str, n_cells: int = 16,
-                    dim: int = 64, fit_dir: str | None = None) -> int:
-    """Materialize the IVF index as a CELL-PARTITIONED table — the
-    disk layout the ivf_ann_topk docstring promises at 100 TB, made
-    real: every vector is assigned to its nearest centroid (the same
-    shuffle-free literal-codebook argmin) and written
-    ``partitionBy("cell")``, with the 6-dp centroid literals saved
-    alongside as JSON. A probe then reads ONLY its n_probe cell
-    directories — partition pruning at the parquet source, not a
-    post-scan filter (tests pin ``PartitionFilters`` in the plan).
-    Returns the number of cells written."""
-    import json
-
-    cents = fit_ivf_codebook(fit_dir or codebook_fit_dir(sf_dir),
-                             n_cells, dim)
-    e = _emb(spark, sf_dir)
-    # d2s stays ONE array expression materialized by its own select
-    # (ivf_ann_topk's shape): referencing _d2_array twice in one
-    # projection lets CollapseProject inline the big fold tree
-    # quadratically (measured OOM in round 2)
-    dists = e.select("vec_id", "embedding",
-                     _d2_array(F.col("embedding"), cents).alias("d2s"))
-    assigned = dists.select(
-        "vec_id", "embedding",
-        (F.array_position(F.col("d2s"), F.array_min("d2s")) - 1)
-        .cast("long").alias("cell"))
-    (assigned.write.mode("overwrite").partitionBy("cell")
-     .parquet(f"{index_dir}/vectors"))
-    # centroids ride as a one-row text dataset THROUGH Spark, so the
-    # index works on any filesystem the session can write (posix,
-    # file:, hdfs://, s3a://) — a driver-side open() would be
-    # posix-only, the portability gap TierStore just closed
-    (spark.createDataFrame([(json.dumps(cents),)], "c string")
-     .coalesce(1).write.mode("overwrite").text(f"{index_dir}/centroids"))
-    return n_cells
-
-
-def ivf_query_index(spark, index_dir: str, queries: DataFrame,
-                    k: int = 5, n_probe: int = 4) -> DataFrame:
-    """Query a materialized IVF index (ivf_build_index): rank the
-    saved centroids per query (tiny: queries x cells), collect the
-    UNION of probed cell ids driver-side (n_queries x n_probe longs),
-    and scan the index with ``cell IN (...)`` so the parquet source
-    prunes to exactly those cell directories — the I/O path where IVF
-    beats any full-scan ANN at scale: a batch probing p of C cells
-    reads p/C of the bytes, before any row is decoded.
-
-    ``queries``: DataFrame with (qid long, qv array<float>)."""
-    import json
-
-    from pyspark.sql import Window
-
-    cents = json.loads(
-        spark.read.text(f"{index_dir}/centroids").collect()[0][0])
-    # n_probe nearest cells per query via array_sort over (d2, cell)
-    # structs — same shuffle-free replacement for the posexplode +
-    # Window shape as ivf_ann_topk (lexicographic struct order ==
-    # ORDER BY d2, cell)
-    probes = (queries.select(
-        "qid", "qv",
-        F.explode(F.slice(F.array_sort(F.arrays_zip(
-            _d2_array(F.col("qv"), cents).alias("d2"),
-            F.sequence(F.lit(0), F.lit(len(cents) - 1)).alias("cell"))),
-            1, n_probe)).alias("pc"))
-        .select("qid", "qv", F.col("pc.cell").cast("long").alias("cell"))
-        .localCheckpoint(eager=True))
-    cells = sorted({int(r["cell"]) for r in
-                    probes.select("cell").distinct().collect()})
-    idx = (spark.read.parquet(f"{index_dir}/vectors")
-           .where(F.col("cell").isin(cells))    # partition-pruned scan
-           .withColumn("nn", vnorm("embedding")))
-    cand = (F.broadcast(probes.withColumn("qn", vnorm("qv"))).join(
-                idx, "cell")
-            .where(F.col("qid") != F.col("vec_id")))
-    cand = cand.withColumn(
-        "sim", F.round(cos_prenormed("qv", "embedding", "qn", "nn"), 4))
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (cand.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= k)
-            .select("qid", F.col("vec_id").alias("nid"), "sim",
-                    F.col("rk").cast("long").alias("rk")))
-
-
-def embedding_dedup_keep_list(spark, sf_dir, threshold: float = 0.95,
-                              use_lsh: bool = True) -> DataFrame:
-    """Embedding-space dedup decision: cosine near-dup pairs (LSH-
-    bucketed scale path by default, label-blocked exact baseline
-    otherwise) collapsed to connected components with a TOTAL
-    keep/drop labeling over the vector spine — the same
-    pairs -> components -> canonical-keep composition the text
-    families end in (dedup.dedup_keep_list), closing the loop for the
-    embedding family. Returns (doc_id=vec_id, comp, keep)."""
-    from .dedup import dedup_keep_list
-
-    pairs = (lsh_near_dup_pairs(spark, sf_dir, threshold=threshold)
-             if use_lsh else
-             cosine_near_dup_pairs(spark, sf_dir, threshold=threshold))
-    spine = _emb(spark, sf_dir).select("vec_id")
-    return dedup_keep_list(pairs, id1="id1", id2="id2",
-                           doc_spine=spine, spine_col="vec_id",
-                           algorithm="auto")
 
 
 def label_centroids(spark, sf_dir) -> DataFrame:

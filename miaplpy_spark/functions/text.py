@@ -219,44 +219,29 @@ def repetition_signals(spark, sf_dir, top_ngram: int = 2) -> DataFrame:
                  .alias("top_ngram_frac")))
 
 
-def word_gate_stats(spark, sf_dir, top_ngram: int = 2) -> DataFrame:
-    """Fused single-pass twin of ``text_quality`` +
-    ``repetition_signals``, producing exactly the columns the
-    curation gates consume: n_words, ttr, stopword_ratio,
-    dup_word_frac, top_word_frac, top_ngram_frac.
+def word_gate_exprs(ws, top_ngram: int = 2) -> list:
+    """The curation gate scalars over an in-row word-array column:
+    n_words, ttr, stopword_ratio, dup_word_frac, top_word_frac,
+    top_ngram_frac — a fused single-pass twin of ``text_quality`` +
+    ``repetition_signals``, which curate_corpus/curate_batch compute
+    INLINE on their doc spine (no separate leg, no assembly join).
 
-    Why it exists: ``curate_corpus`` needs BOTH the quality scalars
-    and the repetition signals, and run as separate legs they scan
-    the full text column twice and explode it to word rows twice —
-    at 100 TB the text column is the corpus, so that second scan is
-    a second pass over ~everything. All numerators and denominators
-    are exact integers computed before a single rounded division, so
-    the outputs are bit-identical to the standalone certified
-    operators (pinned by
+    Run as separate legs the two operators would scan the full text
+    column twice and explode it to word rows twice — at 100 TB the
+    text column is the corpus. All numerators and denominators are
+    exact integers computed before a single rounded division, so the
+    outputs are bit-identical to the standalone certified operators
+    (pinned by
     tests/test_curate.py::test_fused_gate_stats_match_components).
 
     Shuffle-free (round-6): every count is an array expression over
     the in-row word list (n_words = size, n_distinct = size of
     array_distinct, n_stop = size of a stopword filter; the two
     top-frequency counts are longest-equal-run folds over the SORTED
-    word/gram arrays, _max_run), so the whole leg is ONE narrow
-    projection. The explode + two-level groupBy shape it replaces
+    word/gram arrays, _max_run), so the gates are ONE narrow
+    projection. The explode + two-level groupBy shape they replace
     shuffled four word/gram-cardinality exchanges per corpus pass
-    (measured 0.80 -> 0.33 s at sf0.1; at scale this removes the
-    word-table shuffle outright, guide §2.4). Counts are the same
-    integers, divisions and rounding unchanged, so outputs stay
-    bit-identical.
-    """
-    d = _docs(spark, sf_dir)
-    return d.select("doc_id", *word_gate_exprs(F.split("text", " "),
-                                               top_ngram))
-
-
-def word_gate_exprs(ws, top_ngram: int = 2) -> list:
-    """The gate-scalar expressions of ``word_gate_stats`` over an
-    in-row word-array column — exposed so curate_corpus/curate_batch
-    compute the gates INLINE on their doc spine (no separate leg, no
-    assembly join) while the standalone operator keeps its API."""
+    (measured 0.80 -> 0.33 s at sf0.1)."""
     n = F.size(ws).cast("long")
     n_distinct = F.size(F.array_distinct(ws)).cast("long")
     n_stop = F.size(F.filter(ws, lambda x: x.isin(*STOPWORDS))).cast("long")
@@ -276,46 +261,6 @@ def word_gate_exprs(ws, top_ngram: int = 2) -> list:
         F.round(F.coalesce(top_gram_c, F.lit(0)) * top_ngram / n, 6)
          .alias("top_ngram_frac"),
     ]
-
-
-def self_information_score(spark, sf_dir) -> DataFrame:
-    """Corpus-model quality score — the unigram reduction of CCNet's
-    LM-perplexity filter (Wenzek et al. 2020): per document, the mean
-    self-information of its tokens under the corpus's own unigram
-    distribution, in bits/token:
-
-        score(d) = -(1/|d|) * sum over tokens t of log2(c_t / N)
-
-    Low scores = common-word/boilerplate-heavy docs, high scores =
-    rare-token noise; a pretraining pipeline drops both tails. Using
-    the corpus itself as the model keeps the operator self-contained
-    (no external LM), which is exactly how CCNet buckets head/middle/
-    tail quality per snapshot.
-
-    Plan at 100 TB: per-(doc, word) counts first (map-side partials),
-    so the model join touches each doc's DISTINCT words rather than
-    every occurrence; the unigram model is one further groupBy on the
-    word key (vocab-sized — orders smaller than the corpus); the
-    corpus total rides a broadcast one-row cross join (no driver
-    action); the scoring join shuffles wc and the model on the same
-    word key, so the exchange is reused. Returns
-    (doc_id, n_words, bits_per_token)."""
-    d = _docs(spark, sf_dir)
-    wc = (d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
-          .groupBy("doc_id", "w").agg(F.count("*").alias("c")))
-    model = wc.groupBy("w").agg(F.sum("c").alias("cw"))
-    total = model.agg(F.sum("cw").alias("n_total"))
-    scored = (wc.join(model, "w")
-              .crossJoin(F.broadcast(total))
-              .groupBy("doc_id")
-              .agg(F.sum("c").cast("long").alias("n_words"),
-                   F.sum(F.col("c") * -F.log2(F.col("cw")
-                                              / F.col("n_total")))
-                    .alias("bits")))
-    return scored.select(
-        "doc_id", "n_words",
-        F.round(F.col("bits") / F.col("n_words"), 6)
-         .alias("bits_per_token"))
 
 
 def winnow_fingerprints(spark, sf_dir, k: int = 3, w: int = 4) -> DataFrame:

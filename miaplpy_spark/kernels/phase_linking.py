@@ -294,11 +294,14 @@ def regularize_matrix(M: np.ndarray, max_tries: int = 100):
 def regularize_matrix_batch(M: np.ndarray, max_tries: int = 100):
     """Batched regularization over (B, N, N).
 
-    Fully batched loading loop: one per-matrix Cholesky-status probe
+    Fully batched loading loop with the scalar regularize_matrix's
+    schedule: at most ``max_tries`` rounds, each one per-matrix
+    Cholesky-status probe of the still-pending subset
     (_cholesky_ok_batch — the same LAPACK potrf, so the pass/fail
-    criterion and the 1e-6, 2e-6, 4e-6... cumulative loading sequence
-    are identical to the scalar regularize_matrix), then each round
-    loads only the still-failing subset and re-probes it batched.
+    criterion is identical) followed by one load of the members that
+    failed it (1e-6, 2e-6, 4e-6... cumulative). A member still failing
+    its ``max_tries``-th probe gets status 1 with ``max_tries`` loads
+    applied, exactly as the scalar routine returns it.
     Real batches routinely need 1-3 loads for MOST members, so the
     old one-collective-probe-then-scalar-loop shape degenerated to
     per-matrix Python calls for nearly every group (~40% of the 1h
@@ -312,21 +315,18 @@ def regularize_matrix_batch(M: np.ndarray, max_tries: int = 100):
         for b in range(B):
             status[b], out[b] = regularize_matrix(out[b], max_tries)
         return status, out
-    ok = _cholesky_ok_batch(out)
-    if ok.all():
-        return status, out
-    pend = np.flatnonzero(~ok)
-    N = M.shape[1]
-    diag = np.arange(N)
-    en = np.full(pend.shape[0], 1e-6, dtype=np.float64)
+    pend = np.arange(B)
+    diag = np.arange(M.shape[1])
+    en = np.full(B, 1e-6, dtype=np.float64)
     for _ in range(max_tries):
-        out[pend[:, None], diag[None, :], diag[None, :]] += \
-            en[:, None].astype(F32)
-        en *= 2
-        ok_p = _cholesky_ok_batch(out[pend])
+        # the first round probes the whole batch in place (no copy)
+        ok_p = _cholesky_ok_batch(out if pend.size == B else out[pend])
         pend, en = pend[~ok_p], en[~ok_p]
         if pend.size == 0:
             return status, out
+        out[pend[:, None], diag[None, :], diag[None, :]] += \
+            en[:, None].astype(F32)
+        en *= 2
     status[pend] = 1
     return status, out
 

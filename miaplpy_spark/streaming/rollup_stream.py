@@ -43,48 +43,6 @@ def stream_slot_counts(stream_df: DataFrame, cfg: EngineConfig = EngineConfig(),
                     "n_obs", "sum_ntok", "mean_ntok"))
 
 
-RUNNING_OUT_SCHEMA = "source string, n long, mean double, var double"
-RUNNING_STATE_SCHEMA = "n long, mean double, m2 double"
-
-
-def stream_running_stats(stream_df: DataFrame):
-    """Custom stateful operator via ``applyInPandasWithState``: a
-    per-source running (count, mean, variance) carry that each
-    micro-batch extends with a Chan/Welford merge — the streaming twin
-    of the cascade's T4 carry extension (state = the sufficient
-    statistic, micro-batch = the new acquisitions; nothing is
-    recomputed). State is O(1) per key and the merge is exact, so
-    after any arrival order the emitted row equals the batch-global
-    statistics."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: GroupState):
-        n, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
-        for pdf in pdfs:
-            x = pdf["n_tok"].to_numpy(dtype=np.float64)
-            cb = x.shape[0]
-            if cb == 0:
-                continue
-            mb = float(x.mean())
-            m2b = float(((x - mb) ** 2).sum())
-            tot = n + cb
-            delta = mb - mean
-            mean = mean + delta * cb / tot
-            m2 = m2 + m2b + delta * delta * n * cb / tot
-            n = tot
-        state.update((n, mean, m2))
-        var = m2 / (n - 1) if n > 1 else 0.0
-        yield pd.DataFrame([{"source": key[0], "n": n,
-                             "mean": mean, "var": var}])
-
-    return (stream_df.groupBy("source")
-            .applyInPandasWithState(update, RUNNING_OUT_SCHEMA,
-                                    RUNNING_STATE_SCHEMA, "update",
-                                    GroupStateTimeout.NoTimeout))
-
-
 STAGING_TABLE = "stream_staging"
 STREAM_TIER = "rollup_1h_stream"
 STREAM_TIER_1D = "rollup_1d_stream"

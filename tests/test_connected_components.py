@@ -1,10 +1,13 @@
 """connected_components / dedup_keep_list: transitive closure of the
 near-dup pair graph into canonical keep-groups, checked against a
-pure-NumPy union-find oracle."""
+pure-Python union-find oracle on both labeling paths — the driver
+union-find at or below dedup.DRIVER_MAX_EDGES and the star rounds
+above it (forced by the ``star`` fixture)."""
 
 import numpy as np
 import pytest
 
+from miaplpy_spark.functions import dedup
 from miaplpy_spark.functions.dedup import (connected_components,
                                            dedup_keep_list,
                                            minhash_lsh_pairs)
@@ -12,8 +15,14 @@ from miaplpy_spark.functions.dedup import (connected_components,
 SF_DIR = "/root/testdata/sf0.001"
 
 
+@pytest.fixture()
+def star(monkeypatch):
+    """Every non-empty pair graph takes the star rounds."""
+    monkeypatch.setattr(dedup, "DRIVER_MAX_EDGES", 0)
+
+
 def _uf_components(edges):
-    """Union-find oracle: {node: min-label component id}."""
+    """Union-find oracle: {node: minimum member of its component}."""
     parent = {}
 
     def find(x):
@@ -61,60 +70,58 @@ def test_matches_union_find_on_random_graph(spark):
 
 
 def test_long_path_converges(spark):
-    """A 40-node path is the adversarial diameter case for min-label
-    propagation (pointer-halving via the checkpointedly reused labels
-    still walks it); the safety bound must not trip."""
+    """A 40-node path is the adversarial diameter case for label
+    propagation; under the edge threshold it is one driver union-find
+    and collapses to its minimum."""
     edges = [(f"p{i:02d}", f"p{i + 1:02d}") for i in range(40)]
     pairs = spark.createDataFrame(edges, "doc1 string, doc2 string")
     got = {r["node"]: r["comp"]
-           for r in connected_components(pairs, max_iter=50).collect()}
-    assert set(got.values()) == {"p00"}
-
-
-def test_max_iter_raises_instead_of_partial(spark):
-    edges = [(f"q{i:02d}", f"q{i + 1:02d}") for i in range(20)]
-    pairs = spark.createDataFrame(edges, "doc1 string, doc2 string")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iter=2)
-
-
-def test_star_converges_logarithmically_on_path(spark):
-    """Round-4 VERDICT item 5: the large-star/small-star mode must
-    label the 40-node path in <= 6 rounds (O(log n)) where min-label
-    needs 40 sweeps — same labels."""
-    edges = [(f"p{i:02d}", f"p{i + 1:02d}") for i in range(40)]
-    pairs = spark.createDataFrame(edges, "doc1 string, doc2 string")
-    got = {r["node"]: r["comp"]
-           for r in connected_components(pairs, max_iter=6,
-                                         algorithm="star").collect()}
+           for r in connected_components(pairs).collect()}
     assert len(got) == 41 and set(got.values()) == {"p00"}
 
 
-def test_star_matches_minlabel_on_random_graph(spark):
+def test_max_iter_raises_instead_of_partial(spark, star):
+    """Star rounds that have not reached the fixpoint after max_iter
+    rounds raise instead of returning a partial labeling."""
+    edges = [(f"q{i:02d}", f"q{i + 1:02d}") for i in range(20)]
+    pairs = spark.createDataFrame(edges, "doc1 string, doc2 string")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(pairs, max_iter=1)
+
+
+def test_star_converges_logarithmically_on_path(spark, star):
+    """Round-4 VERDICT item 5: the large-star/small-star rounds must
+    label the 40-node path in <= 6 rounds (O(log n)) where label
+    propagation needs 40 sweeps — same labels."""
+    edges = [(f"p{i:02d}", f"p{i + 1:02d}") for i in range(40)]
+    pairs = spark.createDataFrame(edges, "doc1 string, doc2 string")
+    got = {r["node"]: r["comp"]
+           for r in connected_components(pairs, max_iter=6).collect()}
+    assert len(got) == 41 and set(got.values()) == {"p00"}
+
+
+def test_star_matches_union_find_on_random_graph(spark, star):
     rng = np.random.RandomState(11)
     n = 200
     edges = [(f"s{min(a, b):04d}", f"s{max(a, b):04d}")
              for a, b in rng.randint(0, n, size=(180, 2)) if a != b]
     pairs = spark.createDataFrame(edges, "doc1 string, doc2 string")
-    star = {r["node"]: r["comp"]
-            for r in connected_components(pairs,
-                                          algorithm="star").collect()}
-    assert star == _uf_components(edges)
+    got = {r["node"]: r["comp"]
+           for r in connected_components(pairs).collect()}
+    assert got == _uf_components(edges)
 
 
-def test_star_on_real_minhash_pairs(spark):
+def test_star_on_real_minhash_pairs(spark, star):
     pairs = minhash_lsh_pairs(spark, SF_DIR).localCheckpoint(eager=True)
-    a = {r["node"]: r["comp"]
-         for r in connected_components(pairs).collect()}
-    b = {r["node"]: r["comp"]
-         for r in connected_components(pairs,
-                                       algorithm="star").collect()}
-    assert a == b
+    edges = [(r["doc1"], r["doc2"]) for r in pairs.collect()]
+    got = {r["node"]: r["comp"]
+           for r in connected_components(pairs).collect()}
+    assert edges and got == _uf_components(edges)
 
 
-def test_auto_small_graph_uses_driver_union_find(spark):
-    """auto below the edge threshold = exact driver union-find; above
-    it (threshold forced to 0) = the star rounds; identical labels."""
+def test_auto_small_graph_uses_driver_union_find(spark, monkeypatch):
+    """Below the edge threshold = exact driver union-find; above it
+    (threshold forced to 0) = the star rounds; identical labels."""
     rng = np.random.RandomState(23)
     n = 150
     edges = [(f"a{min(a, b):04d}", f"a{max(a, b):04d}")
@@ -122,29 +129,20 @@ def test_auto_small_graph_uses_driver_union_find(spark):
     pairs = spark.createDataFrame(edges, "doc1 string, doc2 string")
     exp = _uf_components(edges)
     small = {r["node"]: r["comp"]
-             for r in connected_components(pairs,
-                                           algorithm="auto").collect()}
+             for r in connected_components(pairs).collect()}
+    monkeypatch.setattr(dedup, "DRIVER_MAX_EDGES", 0)
     big = {r["node"]: r["comp"]
-           for r in connected_components(pairs, algorithm="auto",
-                                         driver_max_edges=0).collect()}
+           for r in connected_components(pairs).collect()}
     assert small == exp and big == exp
 
 
-def test_auto_long_path_converges(spark):
-    """auto must stay diameter-safe in both regimes."""
+def test_auto_long_path_converges(spark, star):
+    """Above the edge threshold the labeling stays diameter-safe."""
     edges = [(f"z{i:02d}", f"z{i + 1:02d}") for i in range(40)]
     pairs = spark.createDataFrame(edges, "doc1 string, doc2 string")
     got = {r["node"]: r["comp"]
-           for r in connected_components(pairs, max_iter=8,
-                                         algorithm="auto",
-                                         driver_max_edges=0).collect()}
+           for r in connected_components(pairs, max_iter=8).collect()}
     assert len(got) == 41 and set(got.values()) == {"z00"}
-
-
-def test_unknown_algorithm_raises(spark):
-    pairs = spark.createDataFrame([("a", "b")], "doc1 string, doc2 string")
-    with pytest.raises(ValueError, match="unknown algorithm"):
-        connected_components(pairs, algorithm="frobnicate")
 
 
 def test_keep_list_on_real_minhash_pairs(spark):

@@ -5,7 +5,8 @@ import pyspark.sql.functions as F
 
 from miaplpy_spark.functions.curate import curate_corpus, exact_dup_losers
 from miaplpy_spark.functions.dedup import dedup_keep_list, minhash_lsh_pairs
-from miaplpy_spark.functions.text import repetition_signals, text_quality
+from miaplpy_spark.functions.text import (repetition_signals, text_quality,
+                                          word_gate_exprs)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -86,13 +87,12 @@ def test_assembly_shuffles_on_doc_key(spark):
 
 
 def test_fused_gate_stats_match_components(spark):
-    """word_gate_stats must be bit-identical to the standalone
-    certified operators it fuses (text_quality q19 +
-    repetition_signals) on every shared column."""
-    from miaplpy_spark.functions.text import word_gate_stats
-
-    fused = {r["doc_id"]: r
-             for r in word_gate_stats(spark, SF_DIR).collect()}
+    """The inline curation gates (word_gate_exprs) must be
+    bit-identical to the standalone certified operators they fuse
+    (text_quality q19 + repetition_signals) on every shared column."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    gates = docs.select("doc_id", *word_gate_exprs(F.split("text", " ")))
+    fused = {r["doc_id"]: r for r in gates.collect()}
     q = {r["doc_id"]: r for r in text_quality(spark, SF_DIR).collect()}
     rep = {r["doc_id"]: r for r in
            repetition_signals(spark, SF_DIR).collect()}

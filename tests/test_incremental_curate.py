@@ -13,10 +13,7 @@ import pytest
 from miaplpy_spark.config import EngineConfig
 from miaplpy_spark.datagen import generate_documents
 from miaplpy_spark.functions.curate import curate_batch, curate_corpus
-from miaplpy_spark.functions.dedup import (
-    build_minhash_index,
-    extend_minhash_index,
-)
+from miaplpy_spark.functions.dedup import build_minhash_index
 
 N = 2000
 A_END, B_END = 1400, 1700
@@ -28,8 +25,7 @@ def dirs(spark):
     root = tempfile.mkdtemp(prefix="incr_curate_")
     out = {}
     for name, lo, hi in (("a", 0, A_END), ("b", A_END, B_END),
-                         ("c", B_END, N), ("ab", 0, B_END),
-                         ("all", 0, N)):
+                         ("ab", 0, B_END)):
         d = f"{root}/{name}"
         (docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
          .write.parquet(f"{d}/documents.parquet"))
@@ -88,32 +84,6 @@ def test_batch_internal_twins_keep_first(spark, dirs):
            for r in curate_batch(spark, batch, dirs["index"]).collect()}
     assert got[900001]["reason"] == "kept" and got[900001]["keep"]
     assert got[900002]["reason"] == "exact_dup" and not got[900002]["keep"]
-
-
-def test_extend_with_keep_then_next_batch(spark, dirs):
-    """The full incremental loop: extend the index with ONLY batch B's
-    kept docs, then curate batch C against it. Oracle: full-corpus
-    curation over A + kept(B) + C, restricted to C."""
-    decision_b = curate_batch(spark, dirs["b"], dirs["index"])
-    n = extend_minhash_index(spark, dirs["b"], dirs["index"],
-                             keep=decision_b.where("keep"))
-    kept_b = decision_b.where("keep").count()
-    assert n == kept_b and 0 < kept_b < B_END - A_END
-
-    got = curate_batch(spark, dirs["c"], dirs["index"])
-
-    # materialize the A + kept(B) + C corpus for the full-run oracle
-    oracle_dir = tempfile.mkdtemp(prefix="incr_abc_")
-    a = spark.read.parquet(f"{dirs['a']}/documents.parquet")
-    b = (spark.read.parquet(f"{dirs['b']}/documents.parquet")
-         .join(decision_b.where("keep").select("doc_id"),
-               "doc_id", "left_semi"))
-    c = spark.read.parquet(f"{dirs['c']}/documents.parquet")
-    (a.unionByName(b).unionByName(c)
-     .write.parquet(f"{oracle_dir}/documents.parquet"))
-    want = (curate_corpus(spark, oracle_dir)
-            .where(F.col("doc_id") >= B_END))
-    assert _rows(got) == _rows(want)
 
 
 def test_wide_doc_key_same_decision(spark, dirs):

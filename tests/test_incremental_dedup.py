@@ -1,8 +1,7 @@
 """Incremental MinHash dedup against a materialized index
-(build_minhash_index / incremental_minhash_pairs /
-extend_minhash_index): each arriving batch must find exactly the
-pairs the full-corpus run would emit for it, without re-hashing the
-stored corpus."""
+(build_minhash_index / incremental_minhash_pairs): an arriving batch
+must find exactly the pairs the full-corpus run would emit for it,
+without re-hashing the stored corpus."""
 
 import tempfile
 
@@ -12,24 +11,22 @@ import pytest
 from miaplpy_spark.datagen import generate_documents
 from miaplpy_spark.functions.dedup import (
     build_minhash_index,
-    extend_minhash_index,
     incremental_minhash_pairs,
     minhash_lsh_pairs,
 )
 
 N = 2000
-A_END, B_END = 1400, 1700  # A = [0,1400) B = [1400,1700) C = [1700,2000)
+A_END, B_END = 1400, 1700  # A = [0,1400) B = [1400,1700)
 
 
 @pytest.fixture(scope="module")
 def dirs(spark):
-    """One generated corpus split into base A + arriving batches B, C,
-    materialized as four documents.parquet dirs (A, B, C, full)."""
+    """One generated corpus; base A and arriving batch B materialized
+    as two documents.parquet dirs."""
     docs = generate_documents(spark, N)
     root = tempfile.mkdtemp(prefix="incr_dedup_")
     out = {}
-    for name, lo, hi in (("a", 0, A_END), ("b", A_END, B_END),
-                         ("c", B_END, N), ("all", 0, N)):
+    for name, lo, hi in (("a", 0, A_END), ("b", A_END, B_END)):
         d = f"{root}/{name}"
         (docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
          .write.parquet(f"{d}/documents.parquet"))
@@ -82,64 +79,8 @@ def test_batch_internal_pair_found(spark, dirs):
         [(900001, 900002, 1.0)]
 
 
-def test_extend_then_next_batch(spark, dirs):
-    """After extend(B), batch C finds its pairs against A AND B —
-    oracle: full run over the whole corpus restricted to C."""
-    n_b = extend_minhash_index(spark, dirs["b"], dirs["index"])
-    assert n_b > 0
-    got = incremental_minhash_pairs(spark, dirs["c"], dirs["index"])
-    full = minhash_lsh_pairs(spark, dirs["all"])
-    want = full.where((F.col("doc1") >= B_END) | (F.col("doc2") >= B_END))
-    want_rows = _rows(want)
-    assert _rows(got) == want_rows
-    # C finds pairs against the EXTENDED part of the store (B) or the
-    # original store (A) — either proves the append is visible; the
-    # planted dup targets all live in A, so A-C pairs must exist
-    assert any(r[0] < A_END for r in want_rows)
-
-
 def test_params_travel_with_index(spark, dirs):
     from miaplpy_spark.functions.dedup import _minhash_index_params
 
     p = _minhash_index_params(spark, dirs["index"])
     assert p == {"n_perm": 32, "bands": 8, "k": 3}
-
-
-def test_extend_appends_without_store_scan(spark, dirs, monkeypatch):
-    """Round-6 O(batch) append contract: the default extend path
-    (no if_absent) must never READ the stored signatures table —
-    banding comes from the batch's own checkpointed signatures, so a
-    10^12-doc store costs an append nothing. (if_absent=True is the
-    documented exception: it scans the slim doc_id column once.)"""
-    import tempfile as _tf
-
-    import pyspark.sql.readwriter as rw
-
-    root = _tf.mkdtemp(prefix="extend_scan_")
-    idx = f"{root}/index"
-    build_minhash_index(spark, dirs["a"], idx)
-    read_paths = []
-    orig = rw.DataFrameReader.parquet
-
-    def recording(self, *paths):
-        read_paths.extend(paths)
-        return orig(self, *paths)
-
-    monkeypatch.setattr(rw.DataFrameReader, "parquet", recording)
-    n = extend_minhash_index(spark, dirs["b"], idx)
-    monkeypatch.undo()
-    # count contract: one row per batch doc long enough to shingle
-    from miaplpy_spark.functions.dedup import minhash_signatures
-    batch0 = spark.read.parquet(f"{dirs['b']}/documents.parquet")
-    assert n == minhash_signatures(batch0, 32, 3).count()
-    assert not any("/signatures" in p for p in read_paths), read_paths
-    # the appended band rows must equal banding the batch directly
-    from miaplpy_spark.functions.dedup import (_banded,
-                                               minhash_signatures)
-    batch = spark.read.parquet(f"{dirs['b']}/documents.parquet")
-    want = _rows(_banded(minhash_signatures(batch, 32, 3), 8, 4)
-                 .select("doc_id", "band", "bucket"))
-    got = _rows(spark.read.parquet(f"{idx}/bands")
-                .where(F.col("doc_id") >= A_END)
-                .select("doc_id", "band", "bucket"))
-    assert got == want

@@ -85,6 +85,41 @@ def test_regularize_fixes_non_pd():
     np.linalg.cholesky(N)  # must not raise
 
 
+@pytest.mark.parametrize("max_tries", [1, 3])
+def test_regularize_batch_matches_scalar_schedule(max_tries):
+    """The batched loading loop follows the scalar probe schedule:
+    ``max_tries`` probes, one load after each failed probe. Matrices
+    needing exactly k loads (k in 0, 1, max_tries-1, max_tries,
+    max_tries+1) get the scalar status and bit-identical output; a
+    member needing max_tries loads is status 1 with all of them
+    applied, not a success found by one extra probe."""
+    def loads_after(k):     # float32 diagonal loading after k loads
+        d, en = np.float32(0), 1e-6
+        for _ in range(k):
+            d, en = d + np.float32(en), en * 2
+        return float(d)
+
+    ks = [0, 1, max_tries - 1, max_tries, max_tries + 1]
+    mats = []
+    for k in ks:
+        M = np.eye(4, dtype=np.float32)
+        # the one non-positive pivot turns positive at the k-th load
+        M[0, 0] = 1.0 if k == 0 else -(loads_after(k - 1)
+                                        + loads_after(k)) / 2
+        assert pl.regularize_matrix(M, k + 1)[0] == 0
+        assert k == 0 or pl.regularize_matrix(M, k)[0] == 1
+        mats.append(M)
+    rng = np.random.default_rng(5)
+    A = rng.standard_normal((4, 4)).astype(np.float32)
+    mats.append(A @ A.T)                       # plain PD member
+    status, out = pl.regularize_matrix_batch(np.stack(mats), max_tries)
+    for b, M in enumerate(mats):
+        s_ref, n_ref = pl.regularize_matrix(M, max_tries)
+        assert status[b] == s_ref, b
+        np.testing.assert_array_equal(out[b], n_ref)
+    assert list(status[:len(ks)]) == [int(k >= max_tries) for k in ks]
+
+
 def test_sequential_plus_datum_matches_full(sim):
     """Mini-stack cascade + datum connect ~= full-stack estimate (the
     reference's sequential path, lib/utils.pyx:603-796)."""

@@ -1,6 +1,6 @@
 """Multimodal plumbing tests: schema, Arrow batch shape, deterministic
-stub features, frame sampling (decode itself is stubbed — no media
-libs in this container)."""
+stub features (decode itself is stubbed — no media libs in this
+container)."""
 
 import numpy as np
 import pytest
@@ -35,24 +35,3 @@ def test_features_deterministic(media):
         assert len(a) == 16 and np.isfinite(a).all()
         assert (0 <= np.asarray(a)).all() and (np.asarray(a) <= 1).all()
 
-
-def test_resize_images_only(spark, media):
-    """Resize touches only the image modality (metadata predicate
-    prunes before Python), rewrites the size metadata, and emits a
-    fixed byte budget per row."""
-    out = multimodal.resize_images(media, 224, 224).toPandas()
-    n_img = media.where("mime = 'image/png'").count()
-    budget = 224 * 224 * 3 // 64
-    assert len(out) == n_img
-    assert (out["width"] == 224).all() and (out["height"] == 224).all()
-    assert (out["n_bytes"] == budget).all()
-    assert all(len(bytes(p)) == budget for p in out["payload"])
-    assert set(out["mime"]) == {"image/png"}
-
-
-def test_frame_sample_video_only(spark, media):
-    frames = multimodal.frame_sample(media, n_frames=4).toPandas()
-    n_video = media.where("mime = 'video/mp4'").count()
-    assert len(frames) == 4 * n_video
-    assert set(frames["frame_idx"]) == {0, 1, 2, 3}
-    assert all(len(bytes(b)) > 0 for b in frames["frame"])

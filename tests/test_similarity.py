@@ -35,7 +35,7 @@ def test_ivf_recall_beats_lsh(spark, truth, monkeypatch):
 
 def test_codebook_fit_dir_explicit_wins(monkeypatch):
     """Round-4 ADVICE: an explicit caller directory must beat the env
-    override — ivf_train_centroids(spark, my_dir) with the var exported
+    override — ivf_ann_topk(..., fit_dir=my_dir) with the var exported
     previously fit the quantizer on a DIFFERENT corpus than the one it
     assigns. Env applies only when the caller passes nothing (the
     gate/oracle call sites)."""
@@ -46,41 +46,12 @@ def test_codebook_fit_dir_explicit_wins(monkeypatch):
     assert sim.codebook_fit_dir() == "/root/testdata/sf0.01"
 
 
-def test_ivf_materialized_index_prunes_and_matches(spark, tmp_path):
-    """The cell-partitioned IVF index: (a) querying it returns exactly
-    the inline ivf_ann_topk results (same fit, same probe ranking);
-    (b) the probe scan is PARTITION-PRUNED — the cell predicate shows
-    up as a PartitionFilter at the parquet source, so a probe reads
-    n_probe/n_cells of the bytes before decoding a single row."""
-    import pyspark.sql.functions as F
-
-    from miaplpy_spark.plans.explain import plan_string
-
-    idx_dir = str(tmp_path / "ivf_idx")
-    sim.ivf_build_index(spark, SF_DIR, idx_dir, fit_dir=SF_DIR)
-    queries = (spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-               .where(F.col("vec_id") < 20)
-               .select(F.col("vec_id").alias("qid"),
-                       F.col("embedding").alias("qv")))
-    out = sim.ivf_query_index(spark, idx_dir, queries)
-    got = {tuple(r) for r in out.collect()}
-    exp = {tuple(r) for r in
-           sim.ivf_ann_topk(spark, SF_DIR, fit_dir=SF_DIR).collect()}
-    assert got == exp and len(got) == 100
-
-    plan = plan_string(out, "formatted")
-    pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert any("cell" in l for l in pf), pf
-
-
-def test_ivf_codebook_shape(spark):
-    cents = sim.ivf_train_centroids(spark, SF_DIR, n_cells=4)
+def test_ivf_codebook_shape():
+    cents = sim.fit_ivf_codebook(SF_DIR, n_cells=4)
     assert len(cents) == 4 and all(len(c) == 64 for c in cents)
     # refined centroids are 6-dp rounded (engine-parity contract)
     for c in cents:
         for x in c:
             assert abs(x - round(x, 6)) < 1e-12
-    # both seeding modes are deterministic and distinct
-    a = sim.fit_ivf_codebook(SF_DIR, n_cells=4, seeding="farthest")
-    assert a == sim.fit_ivf_codebook(SF_DIR, n_cells=4, seeding="farthest")
-    assert a != cents
+    # the fit is deterministic
+    assert sim.fit_ivf_codebook(SF_DIR, n_cells=4) == cents

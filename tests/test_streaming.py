@@ -12,7 +12,6 @@ from miaplpy_spark.datagen import generate_sequences, prepare_observations
 from miaplpy_spark.sources.catalog import TierStore
 from miaplpy_spark.streaming.rollup_stream import (
     stream_rollup_1h,
-    stream_running_stats,
     stream_slot_counts,
 )
 
@@ -55,40 +54,6 @@ def test_stream_slot_counts(spark, slices, workdir):
         assert n2 == n1 + second.count()
     finally:
         q.stop()
-
-
-def test_stream_running_stats_stateful(spark, slices, workdir):
-    """applyInPandasWithState carry: after both arrival slices drain
-    (one file per trigger), the last emitted row per source equals the
-    batch-global Welford statistics over the full table — state
-    extension is exact, independent of micro-batch boundaries."""
-    import numpy as np
-
-    src, first, second, schema = slices
-    second.write.parquet(os.path.join(src, "slice=1"))
-    stream = (spark.readStream.schema(schema)
-              .option("pathGlobFilter", "*.parquet")
-              .option("maxFilesPerTrigger", "1")
-              .parquet(src + "/slice=*"))
-    q = (stream_running_stats(stream)
-         .writeStream.format("memory").queryName("running_stats")
-         .outputMode("update").start())
-    try:
-        q.processAllAvailable()
-        got = {r["source"]: r for r in spark.sql(
-            "select * from (select *, row_number() over "
-            "(partition by source order by n desc) as rk "
-            "from running_stats) where rk = 1"
-        ).collect()}
-    finally:
-        q.stop()
-    full = first.unionByName(second).select("source", "n_tok").toPandas()
-    for source, grp in full.groupby("source"):
-        x = grp["n_tok"].to_numpy(dtype=np.float64)
-        r = got[source]
-        assert r["n"] == len(x)
-        assert abs(r["mean"] - x.mean()) < 1e-9
-        assert abs(r["var"] - x.var(ddof=1)) < 1e-6
 
 
 def test_stream_rollup_foreachbatch(spark, slices, workdir):

@@ -1,5 +1,5 @@
 """Gopher-style within-document repetition signals vs a pure-pandas
-oracle, and the embedding dedup keep-list composition."""
+oracle."""
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -47,25 +47,3 @@ def test_repetition_flags_planted_boilerplate(spark, tmp_path):
     assert all(r["top_ngram_frac"] < planted["top_ngram_frac"]
                for r in rest)
 
-
-def test_embedding_dedup_keep_list_total(spark):
-    from miaplpy_spark.functions.similarity import (
-        embedding_dedup_keep_list, lsh_near_dup_pairs)
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    out = embedding_dedup_keep_list(spark, SF_DIR, threshold=0.35)
-    rows = out.collect()
-    assert len(rows) == emb.count()            # total labeling
-    pairs = {(r["id1"], r["id2"]) for r in
-             lsh_near_dup_pairs(spark, SF_DIR, threshold=0.35).collect()}
-    keep = {r["doc_id"]: r for r in rows}
-    # every pair collapses into one component; exactly one keeper per
-    # component, and it is the component minimum
-    for a, b in pairs:
-        assert keep[a]["comp"] == keep[b]["comp"]
-    by_comp = {}
-    for r in rows:
-        by_comp.setdefault(r["comp"], []).append(r)
-    for comp, members in by_comp.items():
-        keepers = [m["doc_id"] for m in members if m["keep"]]
-        assert keepers == [min(m["doc_id"] for m in members)]
