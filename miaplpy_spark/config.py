@@ -13,13 +13,7 @@ ONE 1d window = 24 hourly windows re-linked by the datum pass.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
-
-# second xxhash64 salt for wide (128-bit) doc-key mode — shared by the
-# kernels (rollup.with_doc_keys) and the dimension generator so the
-# join keys always agree
-DOC_KEY2_SALT = 0x61C8864680B583EB  # fits signed int64 (F.lit)
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -35,7 +29,6 @@ class EngineConfig:
     vocab_size: int = 50257
     method: str = "sequential_EMI"     # EVD | EMI | sequential_EMI | SBW
     sbw_lag: int = 10
-    ps_shp: int = 10                   # min ensemble for PS shortcut
     shp_alpha: float = 0.05
     shp_test: str = "KS"               # KS | TTEST | AD (N2/N4/N5 dispatch)
     shp_filter: bool = False           # apply the SHP membership test
@@ -61,7 +54,6 @@ class EngineConfig:
     # silently merging two docs' windows); the joint key makes that
     # ~2^-64. Off by default — the second long costs ~8 B/row through
     # the shuffle and sandbox scales sit at ~1e-11 collision odds.
-    arrow_batch: int = 2048
 
     # datagen (FIXTURES.md F1)
     seed: int = 42

@@ -16,7 +16,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from .config import DOC_KEY2_SALT, SCALES, EngineConfig, ScaleSpec
+from .config import SCALES, EngineConfig, ScaleSpec
+from .operators.rollup import _key_cols, doc_bucket, with_doc_keys
 
 
 def _u(seed_tag: str, *cols):
@@ -102,14 +103,13 @@ def generate_sequences(
     # split across partitions (north_rule skew defusal; every window's
     # rows still share a bucket because windows never cross days)
     if cfg.salt_by_day:
-        bucket_expr = F.xxhash64(
+        bucket = F.pmod(F.xxhash64(
             F.col("doc_id"),
-            (F.col("slot") / F.lit(cfg.slots_per_day)).cast("long"))
+            (F.col("slot") / F.lit(cfg.slots_per_day)).cast("long")),
+            F.lit(cfg.n_buckets)).cast("int")
     else:
-        bucket_expr = F.xxhash64(F.col("doc_id"))
-    df = df.withColumn(
-        "bucket", F.pmod(bucket_expr, F.lit(cfg.n_buckets)).cast("int")
-    )
+        bucket = doc_bucket(cfg)
+    df = df.withColumn("bucket", bucket)
     return df
 
 
@@ -183,8 +183,7 @@ def generate_doc_dim(spark: SparkSession, scale: str | ScaleSpec = "tiny",
     one row per doc, same deterministic formulas as generate_sequences.
     The rollup kernels never need the strings row-by-row: the cascade
     runs string-free (doc_key only) and joins this dimension back onto
-    the G-row tier outputs (attach_doc_dim). At sandbox scale the join
-    broadcasts; a 10^12-doc deployment bucket-joins it co-located."""
+    the G-row tier outputs (attach_doc_dim), a broadcast join."""
     spec = SCALES[scale] if isinstance(scale, str) else scale
     seed = str(cfg.seed)
     df = spark.range(0, spec.n_docs).select(
@@ -194,11 +193,8 @@ def generate_doc_dim(spark: SparkSession, scale: str | ScaleSpec = "tiny",
     src = F.lit(cfg.sources[-1])
     for name, thr in reversed(list(zip(cfg.sources[:-1], thresholds[:-1]))):
         src = F.when(u < thr, F.lit(name)).otherwise(src)
-    keys = [F.xxhash64("doc_id").alias("doc_key")]
-    if getattr(cfg, "wide_doc_key", False):
-        keys.append(F.xxhash64(F.lit(DOC_KEY2_SALT), F.col("doc_id"))
-                     .alias("doc_key2"))
-    return df.select(*keys, "doc_id", src.alias("source"))
+    dim = with_doc_keys(df.select("doc_id", src.alias("source")), cfg)
+    return dim.select(*_key_cols(cfg), "doc_id", "source")
 
 
 def generate_documents(spark: SparkSession, n_docs: int,

@@ -24,27 +24,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..config import DOC_KEY2_SALT, EngineConfig
+from ..config import EngineConfig
+from ..operators.rollup import _key_cols, with_doc_keys
 from .dedup import (connected_components, dedup_keep_list,
                     incremental_minhash_pairs, minhash_lsh_pairs)
 from .text import _docs, exact_fingerprint, word_gate_exprs
-
-
-def _key_cols(cfg: EngineConfig) -> list[str]:
-    return ["doc_key"] + (["doc_key2"]
-                          if getattr(cfg, "wide_doc_key", False) else [])
-
-
-def _with_keys(df: DataFrame, cfg: EngineConfig,
-               id_col: str = "doc_id") -> DataFrame:
-    """Attach the hashed join key(s) and DROP the string id — side
-    outputs join back onto the spine by key alone, so doc_id never
-    rides through the assembly shuffles."""
-    out = df.withColumn("doc_key", F.xxhash64(id_col))
-    if getattr(cfg, "wide_doc_key", False):
-        out = out.withColumn(
-            "doc_key2", F.xxhash64(F.lit(DOC_KEY2_SALT), F.col(id_col)))
-    return out.drop(id_col)
 
 
 def exact_dup_losers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,24 +94,22 @@ def curate_corpus(spark: SparkSession, sf_dir: str,
     # the text the spine row already holds, so the whole gate family
     # is now one narrow projection of the same scan — no gates leg, no
     # assembly join for it, zero extra exchanges at any corpus size.
-    spine = _docs(spark, sf_dir).select(
-        "doc_id", "lang", *word_gate_exprs(F.split("text", " ")))
-    spine = spine.withColumn("doc_key", F.xxhash64("doc_id"))
-    if getattr(cfg, "wide_doc_key", False):
-        spine = spine.withColumn(
-            "doc_key2", F.xxhash64(F.lit(DOC_KEY2_SALT), F.col("doc_id")))
+    spine = with_doc_keys(_docs(spark, sf_dir).select(
+        "doc_id", "lang", *word_gate_exprs(F.split("text", " "))), cfg)
     keys = _key_cols(cfg)
 
-    exact = _with_keys(
-        exact_dup_losers(spark, sf_dir)
-        .withColumn("is_exact", F.lit(True))
-        .select("doc_id", "is_exact"), cfg)
+    losers = (exact_dup_losers(spark, sf_dir)
+              .withColumn("is_exact", F.lit(True))
+              .select("doc_id", "is_exact"))
     pairs = minhash_lsh_pairs(spark, sf_dir,
                               verify_threshold=near_dup_threshold)
-    near = _with_keys(
-        dedup_keep_list(pairs,
-                        doc_spine=_docs(spark, sf_dir).select("doc_id"))
-        .select("doc_id", F.col("keep").alias("near_keep")), cfg)
+    near_rows = (dedup_keep_list(
+        pairs, doc_spine=_docs(spark, sf_dir).select("doc_id"))
+        .select("doc_id", F.col("keep").alias("near_keep")))
+    # side outputs join back onto the spine by key alone, so doc_id
+    # never rides through the assembly shuffles
+    exact = with_doc_keys(losers, cfg).drop("doc_id")
+    near = with_doc_keys(near_rows, cfg).drop("doc_id")
 
     return _assemble_decision(
         spine, exact, near, keys, min_words, max_stopword_ratio,
@@ -211,12 +193,8 @@ def curate_batch(spark: SparkSession, batch_dir: str, index_dir: str,
     d = _docs(spark, batch_dir)
     # gate scalars inline on the spine (word_gate_exprs) — same
     # no-leg, no-join shape as curate_corpus
-    spine = d.select("doc_id", "lang",
-                     *word_gate_exprs(F.split("text", " ")))
-    spine = spine.withColumn("doc_key", F.xxhash64("doc_id"))
-    if getattr(cfg, "wide_doc_key", False):
-        spine = spine.withColumn(
-            "doc_key2", F.xxhash64(F.lit(DOC_KEY2_SALT), F.col("doc_id")))
+    spine = with_doc_keys(d.select(
+        "doc_id", "lang", *word_gate_exprs(F.split("text", " "))), cfg)
     keys = _key_cols(cfg)
 
     # exact leg: batch fingerprints vs the stored sidecar + in-batch
@@ -237,7 +215,7 @@ def curate_batch(spark: SparkSession, batch_dir: str, index_dir: str,
               .where(F.col("in_store").isNotNull()
                      | (F.col("doc_id") != F.col("keeper")))
               .select("doc_id", F.lit(True).alias("is_exact")))
-    exact = _with_keys(losers, cfg)
+    exact = with_doc_keys(losers, cfg).drop("doc_id")
 
     # near leg: components over the pairs touching this batch; a
     # component is store-tainted iff any member is NOT a batch doc.
@@ -261,7 +239,7 @@ def curate_batch(spark: SparkSession, batch_dir: str, index_dir: str,
                          .alias("near_keep")))
     # batch docs in no pair never appear here: the CASE's null
     # fallthrough keeps them, matching the spine-total singleton rule
-    near = _with_keys(near_rows, cfg)
+    near = with_doc_keys(near_rows, cfg).drop("doc_id")
 
     return _assemble_decision(
         spine, exact, near, keys, min_words, max_stopword_ratio,

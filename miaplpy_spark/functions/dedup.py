@@ -374,10 +374,11 @@ def simhash_near_pairs(spark, sf_dir, max_hamming: int = 12,
             .where(F.col("hamming") <= max_hamming))
 
 
-def _canonical_edges(pairs: DataFrame, id1: str, id2: str) -> DataFrame:
-    """Distinct undirected edges in child>parent orientation."""
-    return (pairs.select(F.col(id1).alias("c"), F.col(id2).alias("p"))
-            .where(F.col(id1) != F.col(id2))
+def _canonical_edges(pairs: DataFrame) -> DataFrame:
+    """Distinct undirected (doc1, doc2) edges in child>parent
+    orientation."""
+    return (pairs.select(F.col("doc1").alias("c"), F.col("doc2").alias("p"))
+            .where(F.col("doc1") != F.col("doc2"))
             .select(F.greatest("c", "p").alias("c"),
                     F.least("c", "p").alias("p"))
             .distinct())
@@ -478,12 +479,11 @@ def _star_components(e: DataFrame, max_iter: int) -> DataFrame:
 DRIVER_MAX_EDGES = 2_000_000
 
 
-def connected_components(pairs: DataFrame, id1: str = "doc1",
-                         id2: str = "doc2",
+def connected_components(pairs: DataFrame,
                          max_iter: int = 25) -> DataFrame:
-    """(node, component) labeling over a near-dup pair graph — the
-    step a dedup pipeline needs AFTER pair generation: A~B and B~C
-    must collapse into ONE keep-group even when A~C was never
+    """(node, component) labeling over a near-dup (doc1, doc2) pair
+    graph — the step a dedup pipeline needs AFTER pair generation: A~B
+    and B~C must collapse into ONE keep-group even when A~C was never
     surfaced. The label is the component's minimum node.
 
     The deduplicated edge set is materialized once and probed: at or
@@ -504,7 +504,7 @@ def connected_components(pairs: DataFrame, id1: str = "doc1",
     ``doc_spine`` joins them back as their own component when a total
     labeling is needed). The per-round localCheckpoint truncates the
     lineage so the plan does not grow with the rounds."""
-    e = _canonical_edges(pairs, id1, id2).localCheckpoint(eager=True)
+    e = _canonical_edges(pairs).localCheckpoint(eager=True)
     # size probe and edge fetch fused into ONE job: limit(max+1)
     # returns every edge when the graph is under the threshold
     # (the common LSH-verified case), so the driver path pays a
@@ -515,10 +515,8 @@ def connected_components(pairs: DataFrame, id1: str = "doc1",
     return _star_components(e, max_iter)
 
 
-def dedup_keep_list(pairs: DataFrame, id1: str = "doc1",
-                    id2: str = "doc2",
-                    doc_spine: DataFrame | None = None,
-                    spine_col: str = "doc_id") -> DataFrame:
+def dedup_keep_list(pairs: DataFrame,
+                    doc_spine: DataFrame | None = None) -> DataFrame:
     """Canonical keep/drop decision per near-dup component: the
     lexicographically-smallest doc id in each connected component is
     kept, every other member is dropped (deterministic — reruns and
@@ -528,7 +526,7 @@ def dedup_keep_list(pairs: DataFrame, id1: str = "doc1",
     Without ``doc_spine``, docs in no pair are untouched by
     construction (they never appear), so the drop set is exactly
     `where(~keep)`. With ``doc_spine`` (any DataFrame carrying
-    ``spine_col``) the labeling is TOTAL: docs absent from every pair
+    ``doc_id``) the labeling is TOTAL: docs absent from every pair
     come back as their own singleton component with keep=true — one
     left-anti join of the spine against the (tiny) paired-node set,
     so downstream consumers get exactly one row per doc without
@@ -540,13 +538,13 @@ def dedup_keep_list(pairs: DataFrame, id1: str = "doc1",
     canonical doc falls out as ``node == comp`` directly — no extra
     per-component min aggregation + join-back (one exchange fewer on
     the labeling path)."""
-    comps = connected_components(pairs, id1, id2)
+    comps = connected_components(pairs)
     labeled = comps.select(
         F.col("node").alias("doc_id"), "comp",
         (F.col("node") == F.col("comp")).alias("keep"))
     if doc_spine is None:
         return labeled
-    singles = (doc_spine.select(F.col(spine_col).alias("doc_id"))
+    singles = (doc_spine.select("doc_id")
                .join(F.broadcast(labeled.select("doc_id")),
                      "doc_id", "left_anti")
                .select("doc_id", F.col("doc_id").alias("comp"),

@@ -61,7 +61,7 @@ def mix_mod_salted(col: F.Column, seed: int) -> F.Column:
     overflow either: both operands are reduced mod 2^20 first
     (congruence mod 2^20 is preserved, so the result equals the
     naive form wherever that form doesn't overflow) — ANSI-safe at
-    ANY id magnitude (ADVICE r05 on shards._mix)."""
+    ANY id magnitude."""
     return mix_mod(F.pmod(col.cast("long"), F.lit(_MIX_MOD))
                    + F.lit(int(seed) % _MIX_MOD))
 

@@ -27,8 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from ..config import EngineConfig
 from ..sources.catalog import TierStore
 from .checkpoint import CheckpointLog
-from .rollup import (attach_doc_dim, rollup_1d, rollup_1h,
-                     with_doc_keys)
+from .rollup import (_key_cols, attach_doc_dim, doc_bucket, rollup_1d,
+                     rollup_1h, with_doc_keys)
 
 TIER_1H, TIER_1D = "rollup_1h", "rollup_1d"
 
@@ -174,7 +174,7 @@ TIER_TS = "timeseries"
 
 
 def merge_timeseries_history(old: DataFrame, new: DataFrame,
-                             cfg: EngineConfig | None = None) -> DataFrame:
+                             cfg: EngineConfig = EngineConfig()) -> DataFrame:
     """Splice a hot-window inversion re-solve onto checkpointed
     full-history series (round-4 ADVICE, medium): in the steady-state
     lifecycle (retention ages days away, then new data arrives and
@@ -203,28 +203,19 @@ def merge_timeseries_history(old: DataFrame, new: DataFrame,
     join of two doc-cardinality tables, keyed on xxhash64 doc_key
     (doc_key2 under ``cfg.wide_doc_key`` — the engine's join-key
     doctrine), never the doc_id string."""
-    wide = cfg is not None and getattr(cfg, "wide_doc_key", False)
-    from ..config import DOC_KEY2_SALT
+    join_keys = _key_cols(cfg)
+    cols = ["doc_id", "source", "bucket", "hours", "ts_series",
+            "inv_quality"]
 
-    def keyed(df, doc, src, bkt, hrs, ts, q):
-        out = df.select(
-            F.col("doc_id").alias(doc),
-            F.xxhash64("doc_id").alias("doc_key"),
-            F.col("source").alias(src),
-            F.col("bucket").alias(bkt),
-            F.col("hours").alias(hrs),
-            F.col("ts_series").alias(ts),
-            F.col("inv_quality").alias(q))
-        if wide:
-            out = out.withColumn(
-                "doc_key2", F.xxhash64(F.lit(DOC_KEY2_SALT), F.col(doc)))
-        return out
+    def keyed(df, *names):
+        out = with_doc_keys(df.select(*cols), cfg)
+        return out.select(*join_keys, *(F.col(c).alias(n)
+                                        for c, n in zip(cols, names)))
 
     o = keyed(old, "o_doc", "o_source", "o_bucket", "o_hours", "o_ts",
               "o_q")
     n = keyed(new, "n_doc", "n_source", "n_bucket", "n_hours_arr",
               "n_ts", "n_q")
-    join_keys = ["doc_key"] + (["doc_key2"] if wide else [])
     j = (o.join(n, join_keys, "full_outer")
          .withColumn("doc_id", F.coalesce("n_doc", "o_doc")))
     anchor = F.array_min(F.array_intersect("n_hours_arr", "o_hours"))
@@ -320,9 +311,7 @@ def run_inversion_step(
             # a per-input-bucket skip would feed partial docs to the
             # solver. This is what makes per-bucket resume safe under
             # salting (it was force-disabled before round 5).
-            doc_bucket = (F.pmod(F.xxhash64("doc_id"),
-                                 F.lit(cfg.n_buckets)).cast("int"))
-            df_1h = (df_1h.withColumn("_doc_bucket", doc_bucket)
+            df_1h = (df_1h.withColumn("_doc_bucket", doc_bucket(cfg))
                      .join(F.broadcast(done),
                            F.col("_doc_bucket") == done["partition_key"],
                            "left_anti")

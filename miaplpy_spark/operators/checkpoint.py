@@ -73,12 +73,11 @@ class CheckpointLog:
                                 .collect())
 
     def log_completion(self, spark: SparkSession, tier: str, lineage: str,
-                       bucket_counts: list[tuple[int, int]],
-                       snapshot_id: int | None = None) -> None:
+                       bucket_counts: list[tuple[int, int]]) -> None:
         """Append completion rows — call strictly AFTER the tier write."""
         if not bucket_counts:
             return
-        snap = snapshot_id if snapshot_id is not None else time.time_ns()
+        snap = time.time_ns()
         now = time.time()
         rows = [
             Row(tier=tier, partition_key=int(b), snapshot_id=snap,

@@ -29,7 +29,7 @@ from ..kernels.codecs import (
     encode_gorilla,
 )
 from .rollup import (_emit, _group_change, _pa_schema, _strings,
-                     _window_change, carry_groups)
+                     _window_change, carry_groups, doc_bucket)
 
 
 COMPRESSED_SCHEMA = (
@@ -194,9 +194,7 @@ def codec_roundtrip_events(spark, sf_dir: str,
         .agg(F.round(F.sum("value"), 4).alias("quality"),
              F.count("*").cast("double").alias("mean_ntok"))
         .withColumn("source", F.lit("events"))
-        .withColumn("bucket",
-                    F.pmod(F.xxhash64("doc_id"), F.lit(cfg.n_buckets))
-                     .cast("int"))
+        .withColumn("bucket", doc_bucket(cfg))
         .withColumn("hour_ts",
                     F.timestamp_seconds(F.col("hour_idx").cast("long") * 3600))
     )

@@ -34,6 +34,7 @@ from .rollup import (
     carry_groups,
     day_windows,
     hour_windows,
+    with_doc_keys,
 )
 
 FUSED_SCHEMA = (
@@ -78,7 +79,7 @@ def rollup_cascade_fused(obs: DataFrame, cfg: EngineConfig = EngineConfig(),
     ``fused.filter("tier = '1h'")`` / ``filter("tier = '1d'")`` (persist
     first when writing both)."""
     p = num_partitions or cfg.n_buckets
-    if getattr(cfg, "wide_doc_key", False):
+    if cfg.wide_doc_key:
         # the fused single-pass variant is the measured-slower
         # experiment (BENCH r3: 997k vs 1.05M pts/s) kept for study;
         # 128-bit keys are wired through the default tiered path +
@@ -86,8 +87,7 @@ def rollup_cascade_fused(obs: DataFrame, cfg: EngineConfig = EngineConfig(),
         # on the narrow key.
         raise ValueError("wide_doc_key is not supported by the fused "
                          "cascade; use the default tiered path")
-    if "doc_key" not in obs.columns:
-        obs = obs.withColumn("doc_key", F.xxhash64("doc_id"))
+    obs = with_doc_keys(obs, cfg)
     tok_col = "ztok" if "ztok" in obs.columns else "zphi"
     obs = obs.select("doc_id", "source", "doc_key", "slot", "bucket",
                      "n_tok", "sum_tok", "min_tok", "max_tok", tok_col)

@@ -31,7 +31,8 @@ from ..kernels.lstsq import (
     network_temporal_coherence,
 )
 from .rollup import (_emit, _extract, _group_change, _key_cols, _pa_schema,
-                     _strings, _window_change, carry_groups, with_doc_keys)
+                     _strings, _window_change, carry_groups, doc_bucket,
+                     with_doc_keys)
 
 INVERSION_SCHEMA = (
     "doc_id string, source string, bucket int, n_hours int, "
@@ -82,11 +83,9 @@ def invert_network(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
     # timeseries partitions doc-impure — breaking per-bucket
     # checkpoint resume. With salting off this is identical to the
     # input bucket by construction.
-    doc_bucket = (F.pmod(F.xxhash64("doc_id"), F.lit(cfg.n_buckets))
-                  .cast("int"))
     slim = keyed.select(
         "doc_id", *key_cols,
-        "source", doc_bucket.alias("bucket"), "hour_idx",
+        "source", doc_bucket(cfg).alias("bucket"), "hour_idx",
         theta.cast("double").alias("theta"),
         q_col.cast("double").alias("q"))
 

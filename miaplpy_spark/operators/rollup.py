@@ -67,7 +67,7 @@ import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..config import DOC_KEY2_SALT, EngineConfig
+from ..config import EngineConfig
 from ..kernels import phase_linking as pl
 from ..kernels import shp as shp_kernels
 from ..kernels.gapfill import fill_dense_batch
@@ -88,9 +88,10 @@ ROLLUP_1D_SCHEMA = (
 )
 
 
-# xxhash64 over (salt, doc_id) is an independent hash family member,
-# so P(joint collision) ~ 2^-128 — negligible at 10^12 docs
-_KEY2_SALT = DOC_KEY2_SALT
+# second xxhash64 salt for wide (128-bit) doc-key mode: xxhash64 over
+# (salt, doc_id) is an independent hash family member, so P(joint
+# collision) ~ 2^-128 — negligible at 10^12 docs
+_KEY2_SALT = 0x61C8864680B583EB  # fits signed int64 (F.lit)
 
 
 def _tier_ddl(ddl: str, cfg: EngineConfig, with_strings: bool) -> str:
@@ -100,31 +101,39 @@ def _tier_ddl(ddl: str, cfg: EngineConfig, with_strings: bool) -> str:
     if not with_strings:
         ddl = ", ".join(p for p in ddl.split(", ")
                         if not p.startswith(("doc_id ", "source ")))
-    if getattr(cfg, "wide_doc_key", False):
+    if cfg.wide_doc_key:
         ddl = ddl.replace("doc_key long", "doc_key long, doc_key2 long", 1)
     return ddl
 
 
 def _key_cols(cfg: EngineConfig) -> list[str]:
-    return ["doc_key"] + (["doc_key2"]
-                          if getattr(cfg, "wide_doc_key", False) else [])
+    return ["doc_key"] + (["doc_key2"] if cfg.wide_doc_key else [])
 
 
 def with_doc_keys(df: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Attach the hashed doc key column(s) the kernels sort/group on:
-    doc_key = xxhash64(doc_id), plus doc_key2 = xxhash64(salt, doc_id)
-    in wide mode. String-free inputs must already carry them."""
+    """Attach the hashed doc key column(s) every doc-keyed shuffle,
+    sort and join in the package uses: doc_key = xxhash64(doc_id),
+    plus doc_key2 = xxhash64(salt, doc_id) in wide mode, appended in
+    that order. String-free inputs must already carry them."""
     if "doc_key" not in df.columns:
         if "doc_id" not in df.columns:
             raise ValueError("string-free input must carry doc_key")
         df = df.withColumn("doc_key", F.xxhash64("doc_id"))
-    if getattr(cfg, "wide_doc_key", False) and "doc_key2" not in df.columns:
+    if cfg.wide_doc_key and "doc_key2" not in df.columns:
         if "doc_id" not in df.columns:
             raise ValueError("wide_doc_key string-free input must carry "
                              "doc_key2")
         df = df.withColumn(
             "doc_key2", F.xxhash64(F.lit(_KEY2_SALT), F.col("doc_id")))
     return df
+
+
+def doc_bucket(cfg: EngineConfig) -> F.Column:
+    """The un-salted doc bucket pmod(xxhash64(doc_id), n_buckets): the
+    partition key of doc-pure tables (the timeseries table, datagen's
+    default bucketing)."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(cfg.n_buckets)).cast("int")
+
 
 _PA_TYPES = {
     "string": pa.string(), "long": pa.int64(), "int": pa.int32(),
@@ -588,13 +597,11 @@ def make_rollup_1h_kernel(cfg: EngineConfig, counts_acc=None,
     return kernel
 
 
-def attach_doc_dim(df_core: DataFrame, doc_dim: DataFrame,
-                   hint_broadcast: bool = True) -> DataFrame:
+def attach_doc_dim(df_core: DataFrame, doc_dim: DataFrame) -> DataFrame:
     """Join doc_id/source back onto a string-free tier output. The
     tier output has G rows (orders of magnitude below raw), so this is
-    a cheap post-kernel hash join that never touches the raw->Python
-    stream; broadcast by default (a 10^12-doc deployment disables the
-    hint and bucket-joins the dimension co-located instead).
+    a cheap post-kernel broadcast join that never touches the
+    raw->Python stream.
 
     LEFT join: a tier row whose doc_key is missing from the supplied
     dimension surfaces with null doc_id/source instead of silently
@@ -612,9 +619,7 @@ def attach_doc_dim(df_core: DataFrame, doc_dim: DataFrame,
                          "with_doc_keys so join keys match")
     keys = ["doc_key"] + (["doc_key2"]
                           if "doc_key2" in df_core.columns else [])
-    dim = doc_dim.select(*keys, "doc_id", "source")
-    if hint_broadcast:
-        dim = F.broadcast(dim)
+    dim = F.broadcast(doc_dim.select(*keys, "doc_id", "source"))
     rest = [c for c in df_core.columns if c not in keys]
     return (df_core.join(dim, keys, "left")
             .select("doc_id", *keys, "source", *rest))
@@ -622,7 +627,6 @@ def attach_doc_dim(df_core: DataFrame, doc_dim: DataFrame,
 
 def rollup_1h(obs: DataFrame, cfg: EngineConfig = EngineConfig(),
               num_partitions: int | None = None,
-              assume_partitioned: bool = False,
               counts_acc=None) -> DataFrame:
     """raw observations -> 1h tier. One shuffle (by bucket), then the
     kernel runs map-side; output stays partitioned by bucket for the
@@ -635,12 +639,7 @@ def rollup_1h(obs: DataFrame, cfg: EngineConfig = EngineConfig(),
     cannot prune through it). If ``obs`` carries no doc_id/source
     (string-free mode), the kernel emits the CORE schema (doc_key
     only) — use attach_doc_dim to restore the strings on the G-row
-    output instead of streaming them per raw row.
-
-    ``assume_partitioned=True`` elides even the first exchange for
-    inputs the caller has already bucket-partitioned and sorted by
-    (doc_key[, doc_key2], slot) — e.g. one sorted, unsplit file per
-    bucket."""
+    output instead of streaming them per raw row."""
     p = num_partitions or cfg.n_buckets
     with_strings = "doc_id" in obs.columns
     strs = ["doc_id", "source"] if with_strings else []
@@ -649,9 +648,8 @@ def rollup_1h(obs: DataFrame, cfg: EngineConfig = EngineConfig(),
     key_cols = _key_cols(cfg)
     obs = obs.select(*strs, *key_cols, "slot", "bucket", "n_tok", "sum_tok",
                      "min_tok", "max_tok", tok_col)
-    part = obs if assume_partitioned else (
-        obs.repartition(p, "bucket")
-           .sortWithinPartitions(*key_cols, "slot"))
+    part = (obs.repartition(p, "bucket")
+            .sortWithinPartitions(*key_cols, "slot"))
     # pack the scalar stats AFTER the bucket exchange (the shuffle
     # still keys on the plain bucket column); the packing projection
     # is narrow, so partitioning and sort order are preserved and the

@@ -1,21 +1,18 @@
-"""Streaming ingestion of the raw tier: Structured Streaming with
-watermarked tumbling windows feeding the same MERGE protocol as the
-batch cascade.
+"""Streaming ingestion of the raw tier: Structured Streaming
+micro-batches feeding the same MERGE protocol as the batch cascade.
 
 The reference's streaming-shaped mechanisms (SURVEY.md §2.10): its
 update-mode incremental extension (T3/T4 — new acquisitions extend the
 series without recomputing old mini-stacks) maps to a file/rate stream
-of new slots; the mini-stack tumbling window (W2) maps to
-``window(ts, '1 hour')``; late slots are bounded by the watermark and
-closed windows become immutable 1h-tier rows.
+of new slots; the mini-stack tumbling window (W2) maps to the hour
+(slot // slots_per_hour) each micro-batch recomputes; late slots are
+bounded by the staging keep window and closed windows become immutable
+1h-tier rows.
 
-Two levels:
-- ``stream_slot_counts``: pure built-in windowed aggregation (counts /
-  sums per (source, window)) — fully incremental, no Python.
-- ``stream_rollup_1h``: ``foreachBatch`` driving the SAME batch rollup
-  kernel per micro-batch over closed windows, MERGEd into the tier
-  store. Closed-window replay is idempotent because the MERGE replaces
-  per (bucket) partitions (the batch cascade's semantics).
+``stream_rollup_1h`` is ``foreachBatch`` driving the SAME batch rollup
+kernel per micro-batch over closed windows, MERGEd into the tier
+store. Closed-window replay is idempotent because the MERGE replaces
+per (bucket) partitions (the batch cascade's semantics).
 """
 
 from __future__ import annotations
@@ -26,21 +23,6 @@ from pyspark.sql import DataFrame
 from ..config import EngineConfig
 from ..operators.rollup import rollup_1d, rollup_1h
 from ..sources.catalog import TierStore
-
-
-def stream_slot_counts(stream_df: DataFrame, cfg: EngineConfig = EngineConfig(),
-                       watermark: str = "2 hours") -> DataFrame:
-    """Incremental windowed aggregates over a streaming sequences
-    source. Late rows beyond the watermark are dropped (T5 gap
-    semantics: the batch gap-fill interpolates them later)."""
-    return (stream_df
-            .withWatermark("ts", watermark)
-            .groupBy(F.window("ts", "1 hour").alias("w"), F.col("source"))
-            .agg(F.count("*").alias("n_obs"),
-                 F.sum("n_tok").alias("sum_ntok"),
-                 F.avg("n_tok").alias("mean_ntok"))
-            .select(F.col("w.start").alias("hour_ts"), "source",
-                    "n_obs", "sum_ntok", "mean_ntok"))
 
 
 STAGING_TABLE = "stream_staging"

@@ -26,13 +26,11 @@ ALLOWED_UNREACHED = {
     # Monte-Carlo ground truth (known phase series, coherence matrices)
     # that tests/test_kernels.py checks the estimators recover
     "miaplpy_spark.kernels.simulation",
-    # Unreached training-data stages still kept with their tests:
-    # mixture sampling -> sequence packing -> shard export (the
-    # test_epoch_pipeline chain) and PII redaction. ROADMAP.md lists
-    # them as the remaining deletions of its "delete what the system
-    # does not use" item; drop each entry when its module goes.
-    "miaplpy_spark.functions.sampling", "miaplpy_spark.functions.packing",
-    "miaplpy_spark.functions.shards", "miaplpy_spark.functions.pii",
+    # Unreached mixture sampling / leakage-safe split, still kept with
+    # its tests. ROADMAP.md lists it as the last deletion of its
+    # "delete what the system does not use" item; drop the entry when
+    # the module goes.
+    "miaplpy_spark.functions.sampling",
 }
 
 
@@ -102,3 +100,29 @@ def test_every_package_module_is_reached():
         f"or wire them into an entry point): {sorted(unreached)}")
     stale = ALLOWED_UNREACHED & reached
     assert not stale, f"allow-listed but reached, drop them: {stale}"
+
+
+def _engine_config_fields() -> list:
+    path = os.path.join(REPO, PACKAGE, "config.py")
+    tree = ast.parse(open(path).read(), path)
+    cls = next(n for n in tree.body
+               if isinstance(n, ast.ClassDef) and n.name == "EngineConfig")
+    return [n.target.id for n in cls.body if isinstance(n, ast.AnnAssign)]
+
+
+def test_every_engine_config_field_is_read():
+    """A config field no package code reads is a knob that changes
+    nothing but the lineage hash. Read = an attribute load of that
+    name in any package module other than config.py; the lineage
+    hash's ``asdict(cfg)`` does not count, since it hashes every field
+    whether or not anything uses it."""
+    read = set()
+    for module, path in _package_modules().items():
+        if module == f"{PACKAGE}.config":
+            continue
+        for node in ast.walk(ast.parse(open(path).read(), path)):
+            if isinstance(node, ast.Attribute) and isinstance(
+                    node.ctx, ast.Load):
+                read.add(node.attr)
+    unread = [f for f in _engine_config_fields() if f not in read]
+    assert not unread, f"EngineConfig fields nothing reads: {unread}"

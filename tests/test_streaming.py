@@ -1,8 +1,7 @@
-"""Structured Streaming tier tests: watermarked windowed aggregation
-and the foreachBatch MERGE path (SURVEY.md §2.10 T3/T4 semantics)."""
+"""Structured Streaming tier tests: the foreachBatch MERGE path
+(SURVEY.md §2.10 T3/T4 semantics)."""
 
 import os
-import time
 
 import pyspark.sql.functions as F
 import pytest
@@ -10,10 +9,7 @@ import pytest
 from miaplpy_spark.config import EngineConfig, ScaleSpec
 from miaplpy_spark.datagen import generate_sequences, prepare_observations
 from miaplpy_spark.sources.catalog import TierStore
-from miaplpy_spark.streaming.rollup_stream import (
-    stream_rollup_1h,
-    stream_slot_counts,
-)
+from miaplpy_spark.streaming.rollup_stream import stream_rollup_1h
 
 CFG = EngineConfig(n_buckets=2, n_samples=8)
 SPEC = ScaleSpec(n_docs=3, n_slots=40, tok_lo=8, tok_hi=16,
@@ -33,27 +29,6 @@ def slices(spark, workdir):
     schema = raw.schema
     raw.unpersist()
     return src, first, second, schema
-
-
-def test_stream_slot_counts(spark, slices, workdir):
-    src, first, second, schema = slices
-    stream = (spark.readStream.schema(schema)
-              .option("pathGlobFilter", "*.parquet")
-              .parquet(src + "/slice=*"))
-    agg = stream_slot_counts(stream, CFG, watermark="10 hours")
-    q = (agg.writeStream.format("memory").queryName("slot_counts")
-         .outputMode("complete").start())
-    try:
-        q.processAllAvailable()
-        n1 = spark.sql("select sum(n_obs) from slot_counts").collect()[0][0]
-        assert n1 == first.count()
-        # second arrival slice extends the same windows incrementally
-        second.write.parquet(os.path.join(src, "slice=1"))
-        q.processAllAvailable()
-        n2 = spark.sql("select sum(n_obs) from slot_counts").collect()[0][0]
-        assert n2 == n1 + second.count()
-    finally:
-        q.stop()
 
 
 def test_stream_rollup_foreachbatch(spark, slices, workdir):
