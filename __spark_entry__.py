@@ -3,7 +3,7 @@
 ``entry(spark)`` — flagship retention-cascade query on sf0.001.
 ``queries()`` — one entry per implemented operator (SURVEY.md §2 +
 training-pipeline operators); each callable (spark, sf_dir) -> DataFrame.
-``oracle_sql()`` — matching DuckDB ANSI SQL for EVERY query (46/46):
+``oracle_sql()`` — matching DuckDB ANSI SQL for EVERY query (50/50):
 the engine-native paths (cascade, compressed tier, network inversion,
 Delaunay, incremental extension, retention) are certified through
 deterministic integer-arithmetic fixtures that Spark and DuckDB
@@ -98,23 +98,27 @@ def _engine_cascade(spark: SparkSession, sf_dir: str,
     return project_cascade_scalars(tiered)
 
 
-def _fused_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-certified FUSED cascade (operators/fused.py): both tiers
-    from one Arrow pass — the worker-boundary-minimizing execution
-    shape of the same math as q30's two-stage pipeline. The 1d rows'
-    scalar aggregates must match the one-shot DuckDB aggregation of
-    the fixture, proving the in-process hourly handoff (no second
-    exchange, no second Python crossing) loses nothing."""
-    from miaplpy_spark.config import EngineConfig
-    from miaplpy_spark.operators.fused import rollup_cascade_fused
-    from miaplpy_spark.oracle_fixtures import (fixture_obs,
-                                               project_cascade_scalars)
+def _curate_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Driver-certified incremental curation (curate.curate_batch): the
+    documents table splits at 70% of its doc_id range — every stored id
+    precedes every batch id, the growing corpus's append-only
+    discipline. The store side becomes a build_minhash_index store;
+    the batch side is curated against it without rescanning stored
+    text. Under that discipline store-wins equals q52's min-id
+    canonical rule, so the oracle is q52's full-corpus decision
+    restricted to the batch ids."""
+    import tempfile
 
-    cfg = EngineConfig(n_buckets=4, n_samples=8)
-    obs = fixture_obs(spark, n_docs=9, n_slots=720, n_samples=8,
-                      n_buckets=4)
-    fused = rollup_cascade_fused(obs, cfg).where(F.col("tier") == "1d")
-    return project_cascade_scalars(fused)
+    wh = tempfile.mkdtemp(prefix="q50_wh_")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
+    cut = lo + (hi - lo + 1) * 7 // 10   # the oracle's split, same ints
+    for side, rows in (("store", F.col("doc_id") < cut),
+                       ("batch", F.col("doc_id") >= cut)):
+        docs.where(rows).write.parquet(f"{wh}/{side}/documents.parquet")
+    dedup.build_minhash_index(spark, f"{wh}/store", f"{wh}/index")
+    return _materialize_and_clean(
+        curate.curate_batch(spark, f"{wh}/batch", f"{wh}/index"), wh)
 
 
 def _compressed_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -449,15 +453,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q45_incremental_cascade": _incremental_cascade,
         "q46_retention_tiered_read": _retention_tiered_read,
         "q49_streaming_cascade": _streaming_cascade,
-        "q50_fused_cascade": _fused_cascade,
         "q51_checkpointed_cascade": _checkpointed_cascade,
         "q39_codec_roundtrip": _codec_roundtrip,
         "q32_network_inversion": _network_inversion,
         "q36_weighted_inversion": _robust_inversion,
         # the end-to-end pretraining-curation decision (quality gate +
         # exact dedup + MinHash-LSH near-dup components + priority
-        # reasons), driver-certified as ONE composition
+        # reasons), driver-certified as ONE composition, and its
+        # incremental twin over an arriving batch
         "q52_curate_corpus": curate.curate_corpus,
+        "q50_curate_batch": _curate_batch,
     }
 
 
@@ -863,7 +868,6 @@ def oracle_sql() -> dict[str, str]:
         "q31_compressed_tier": compress_oracle_sql(n_docs=12, n_slots=960),
         "q45_incremental_cascade": hourly_oracle_sql(n_docs=8, n_slots=720),
         "q49_streaming_cascade": hourly_oracle_sql(n_docs=6, n_slots=480),
-        "q50_fused_cascade": cascade_oracle_sql(n_docs=9, n_slots=720),
         "q51_checkpointed_cascade": cascade_oracle_sql(n_docs=7, n_slots=720),
         "q46_retention_tiered_read": hourly_oracle_sql(
             n_docs=8, n_slots=960, mean_only=True),
@@ -891,6 +895,13 @@ def oracle_sql() -> dict[str, str]:
         """,
         "q42_ivf_ann": _q42_sql(),
         "q52_curate_corpus": _q52_sql(),
+        # q52 restricted to the batch side of _curate_batch's split
+        "q50_curate_batch": f"""
+            SELECT * FROM ({_q52_sql()})
+            WHERE doc_id >= (SELECT min(doc_id)
+                                    + (max(doc_id) - min(doc_id) + 1) * 7 // 10
+                             FROM documents)
+        """,
         "q29_multimodal_features": _q29_sql(),
         "q39_codec_roundtrip": """
             SELECT event_type,

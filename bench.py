@@ -81,7 +81,6 @@ def run_cascade_timed(spark, input_dir: str, shp_filter: bool = False) -> dict:
     tier counts. Host steal% is sampled around the run."""
     import pyspark.sql.functions as F
 
-    from miaplpy_spark.operators.fused import rollup_cascade_fused
     from miaplpy_spark.operators.rollup import (attach_doc_dim, rollup_1d,
                                                 rollup_1h)
 
@@ -92,24 +91,13 @@ def run_cascade_timed(spark, input_dir: str, shp_filter: bool = False) -> dict:
     obs = spark.read.parquet(input_dir)
     dim = spark.read.parquet(input_dir + "_dim")
     n_obs = obs.count()
-    fused = os.environ.get("BENCH_FUSED", "0") == "1"
-    if fused:
-        # single Python pass emitting both tiers (operators/fused.py);
-        # the fused kernel keeps the strings-through-kernel shape
-        df = rollup_cascade_fused(
-            obs.join(F.broadcast(dim), "doc_key"), cfg)
-        agg = (df.where(F.col("tier") == "1d")
-                 .agg(F.count("*").alias("n_1d"),
-                      F.sum("n_hours").alias("n_1h"),
-                      F.sum("n_obs").alias("n_obs")))
-    else:
-        # string-free core cascade; the doc-dim join back onto the
-        # G-row 1d output is INSIDE the measured plan
-        df1d = rollup_1d(rollup_1h(obs, cfg), cfg, assume_partitioned=True)
-        agg = attach_doc_dim(df1d, dim).agg(
-            F.count("*").alias("n_1d"),
-            F.sum("n_hours").alias("n_1h"),
-            F.sum("n_obs").alias("n_obs"))
+    # string-free core cascade; the doc-dim join back onto the
+    # G-row 1d output is INSIDE the measured plan
+    df1d = rollup_1d(rollup_1h(obs, cfg), cfg, assume_partitioned=True)
+    agg = attach_doc_dim(df1d, dim).agg(
+        F.count("*").alias("n_1d"),
+        F.sum("n_hours").alias("n_1h"),
+        F.sum("n_obs").alias("n_obs"))
     s0, t0_total = _steal_pct()
     t0 = time.time()
     row = agg.collect()[0]

@@ -338,8 +338,7 @@ def shingles(df: DataFrame, k: int = 3) -> DataFrame:
 
 def shingle_jaccard_pairs(spark, sf_dir, k: int = 2, threshold: float = 0.04,
                           lang: str | None = "zh",
-                          df_cap: int | None = None,
-                          n_docs_hint: int | None = None) -> DataFrame:
+                          df_cap: int | None = None) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs within a language.
 
     Scale path: the shingle->doc inverted index IS the join key, so
@@ -357,13 +356,10 @@ def shingle_jaccard_pairs(spark, sf_dir, k: int = 2, threshold: float = 0.04,
     candidate set instead."""
     d = _docs(spark, sf_dir)
     if df_cap is None:
-        # size the cap from the UNFILTERED corpus count: a caller that
-        # already knows the corpus size passes n_docs_hint so query
-        # CONSTRUCTION triggers no Spark action; otherwise a bare
-        # count(*) over parquet is served from row-group footers
-        # (no column scan), unlike a count under the lang filter
-        n_docs = n_docs_hint if n_docs_hint is not None else d.count()
-        df_cap = max(100, int(0.001 * n_docs))
+        # size the cap from the UNFILTERED corpus count: a bare
+        # count(*) over parquet is served from row-group footers (no
+        # column scan), unlike a count under the lang filter
+        df_cap = max(100, int(0.001 * d.count()))
     if lang is not None:
         d = d.where(F.col("lang") == lang)
     return shingle_jaccard_pairs_df(d, k, threshold, df_cap)

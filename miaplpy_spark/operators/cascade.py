@@ -27,8 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..config import EngineConfig
 from ..sources.catalog import TierStore
 from .checkpoint import CheckpointLog
-from .rollup import (_key_cols, attach_doc_dim, doc_bucket, rollup_1d,
-                     rollup_1h, with_doc_keys)
+from .rollup import _key_cols, doc_bucket, rollup_1d, rollup_1h, with_doc_keys
 
 TIER_1H, TIER_1D = "rollup_1h", "rollup_1d"
 
@@ -122,33 +121,13 @@ def run_cascade(
     cfg: EngineConfig = EngineConfig(),
     input_id: str = "sequences",
     resume: bool = True,
-    doc_dim: DataFrame | None = None,
 ) -> dict:
     """Run both tier jobs; returns per-tier metrics. ``raw_obs`` is the
     output of datagen.prepare_observations (already JVM-side compact).
     Resumable: a rerun after partial failure recomputes only buckets
-    missing from the checkpoint log.
-
-    ``doc_dim`` (doc_key, doc_id, source — datagen.generate_doc_dim or
-    a distinct over the source table) switches the tier kernels to the
-    string-free scaling path: doc_id/source never cross the Python
-    worker channel per raw row; they join onto the G-row tier outputs
-    just before each MERGE, so tier-table schemas are unchanged."""
+    missing from the checkpoint log."""
     ckpt = CheckpointLog(store)
-    if doc_dim is not None:
-        raw_obs = with_doc_keys(raw_obs, cfg).drop("doc_id", "source")
-
-        def fn_1h(inp, cfg, counts_acc=None):
-            return attach_doc_dim(
-                rollup_1h(inp, cfg, counts_acc=counts_acc), doc_dim)
-
-        def fn_1d(inp, cfg, counts_acc=None):
-            return attach_doc_dim(
-                rollup_1d(inp.drop("doc_id", "source"), cfg,
-                          counts_acc=counts_acc), doc_dim)
-    else:
-        fn_1h, fn_1d = rollup_1h, rollup_1d
-    m1 = _run_tier(spark, TIER_1H, raw_obs, fn_1h, store, ckpt, cfg,
+    m1 = _run_tier(spark, TIER_1H, raw_obs, rollup_1h, store, ckpt, cfg,
                    input_id, resume)
     df_1h = store.read(spark, TIER_1H)
     # lineage contract (round-4 ADVICE, resolved by SCOPING): both
@@ -165,7 +144,7 @@ def run_cascade(
     # restamp contract. Out-of-band edits to the 1h tier are outside
     # run_cascade's input_id contract by design — route them through a
     # new input_id or the incremental path.
-    m2 = _run_tier(spark, TIER_1D, df_1h, fn_1d, store, ckpt, cfg,
+    m2 = _run_tier(spark, TIER_1D, df_1h, rollup_1d, store, ckpt, cfg,
                    input_id + ">" + m1["lineage"], resume)
     return {"raw->1h": m1, "1h->1d": m2}
 
@@ -430,7 +409,6 @@ def run_cascade_incremental(
     raw_obs: DataFrame,
     store: TierStore,
     cfg: EngineConfig = EngineConfig(),
-    doc_dim: DataFrame | None = None,
 ) -> dict:
     """Update-mode incremental extension (the reference's T3/T4:
     update_or_skip_inversion + persisted squeezed carry,
@@ -445,21 +423,12 @@ def run_cascade_incremental(
     hour_idx >= boundary`; the parquet fallback composes the union and
     overwrites partitions."""
     out = {}
-    if doc_dim is not None:
-        # string-free scaling path (same contract as run_cascade):
-        # kernels run on doc_key; strings join onto tier-sized output
-        raw_obs = with_doc_keys(raw_obs, cfg).drop("doc_id", "source")
-        _1h = lambda inp, cfg: attach_doc_dim(rollup_1h(inp, cfg), doc_dim)
-        _1d = lambda inp, cfg: attach_doc_dim(
-            rollup_1d(inp.drop("doc_id", "source"), cfg), doc_dim)
-    else:
-        _1h, _1d = rollup_1h, rollup_1d
 
     # raw -> 1h
     wm_h = _read_watermark(spark, store, TIER_1H)
     boundary_h = max(wm_h, 0)
     new_obs = incremental_raw_filter(raw_obs, boundary_h, cfg)
-    fresh_1h = _1h(new_obs, cfg)
+    fresh_1h = rollup_1h(new_obs, cfg)
     if wm_h >= 0 and store.exists(spark, TIER_1H):
         # localCheckpoint materializes the old rows BEFORE the
         # overwrite touches their files (parquet fallback reads lazily;
@@ -482,7 +451,7 @@ def run_cascade_incremental(
     boundary_d = max(wm_d, 0)
     src = tier_1h.where((F.col("hour_idx") / cfg.hours_per_day).cast("int")
                         >= boundary_d)
-    fresh_1d = _1d(src, cfg)
+    fresh_1d = rollup_1d(src, cfg)
     if wm_d >= 0 and store.exists(spark, TIER_1D):
         old_d = (store.read(spark, TIER_1D)
                  .where(F.col("day_idx") < boundary_d)

@@ -28,8 +28,8 @@ Three deliberate choices, each measured in this sandbox:
    (tests/test_wide_doc_key.py proves narrow-equality and planted-
    collision separation).
 
-Every kernel (both tiers here, operators/fused.py, the network
-inversion and compress_1h) streams its sorted partition through ONE
+Every kernel (both tiers here, the network inversion and
+compress_1h) streams its sorted partition through ONE
 batch-carry generator, ``carry_groups``: the trailing incomplete group
 of each Arrow batch is held back as an Arrow slice, so the NumPy code
 only ever sees complete groups and doc_id/source ride along as plain
@@ -40,8 +40,8 @@ defaults/miaplpyApp_auto.cfg:19) is phase-linked independently and
 emits its squeezed carry (squeeze_images, lib/utils.pyx:470-487); the
 1d tier re-links the 24 carries and applies the datum adjustment
 (datum_connect, lib/utils.pyx:732-796). That math is written once, as
-the pure-NumPy ``hour_windows`` and ``day_windows``; the 1h, 1d and
-fused kernels are thin emitters around them. Independent windows + datum is
+the pure-NumPy ``hour_windows`` and ``day_windows``; the 1h and 1d
+kernels are thin emitters around them. Independent windows + datum is
 the reference's own 'mini_stacks' composition and is what makes the
 cascade embarrassingly parallel; the strict prepend-the-carry
 sequential mode (lib/utils.pyx:641-660) is available in
@@ -355,15 +355,12 @@ def _strings(region: pa.RecordBatch, idx: np.ndarray) -> dict:
 
 def _emit(cols: dict, schema: pa.Schema) -> pa.RecordBatch:
     """One output batch in ``schema`` order. NumPy vectors are cast to
-    the field type, (G, K) matrices become list<float32> columns, Arrow
-    arrays pass through, and fields absent from ``cols`` are null."""
-    n = len(next(iter(cols.values())))
+    the field type, (G, K) matrices become list<float32> columns and
+    Arrow arrays pass through; every schema field must be in ``cols``."""
     arrays = []
     for f in schema:
-        v = cols.get(f.name)
-        if v is None:
-            v = pa.nulls(n, f.type)
-        elif isinstance(v, np.ndarray):
+        v = cols[f.name]
+        if isinstance(v, np.ndarray):
             v = (_list_col(v) if v.ndim == 2 else
                  pa.array(v.astype(f.type.to_pandas_dtype(), copy=False)))
         arrays.append(v)
@@ -611,8 +608,7 @@ def attach_doc_dim(df_core: DataFrame, doc_dim: DataFrame) -> DataFrame:
             and "doc_key2" not in doc_dim.columns):
         # a narrow dim under a wide tier would quietly degrade the
         # join to doc_key alone — the collision fan-out wide mode
-        # exists to prevent. Fail loudly (fused.py does the same for
-        # its unsupported combination); widen the dim with
+        # exists to prevent. Fail loudly; widen the dim with
         # with_doc_keys(dim, cfg) instead.
         raise ValueError("tier output is wide (doc_key2) but doc_dim "
                          "is narrow; build the dimension with "

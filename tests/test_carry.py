@@ -16,11 +16,10 @@ import pytest
 from miaplpy_spark.config import EngineConfig, ScaleSpec
 from miaplpy_spark.datagen import generate_sequences, prepare_observations
 from miaplpy_spark.operators.compress import compress_1h
-from miaplpy_spark.operators.fused import rollup_cascade_fused
 from miaplpy_spark.operators.network_inversion import invert_network
-from miaplpy_spark.operators.rollup import (_group_change, _window_change,
-                                            carry_groups, rollup_1d,
-                                            rollup_1h)
+from miaplpy_spark.operators.rollup import (_emit, _group_change,
+                                            _window_change, carry_groups,
+                                            rollup_1d, rollup_1h)
 
 W = 10  # window width in slots
 
@@ -92,6 +91,23 @@ def test_carry_groups_single_group_and_empty_input():
     assert list(carry_groups(iter([]), change)) == []
 
 
+def test_emit_requires_every_schema_field():
+    """``_emit`` builds a batch in schema order from the columns given;
+    a schema field missing from them is an error, not a null column."""
+    schema = pa.schema([("doc_key", pa.int64()), ("n_obs", pa.int32()),
+                        ("squeezed", pa.list_(pa.float32()))])
+    cols = {"doc_key": np.array([7, 9]),
+            "n_obs": np.array([3.0, 10.0]),
+            "squeezed": np.array([[1, 2], [3, 4]], dtype=np.float32)}
+    batch = _emit(cols, schema)
+    assert batch.schema == schema
+    assert batch.column("n_obs").to_pylist() == [3, 10]
+    assert batch.column("squeezed").to_pylist() == [[1, 2], [3, 4]]
+    del cols["n_obs"]
+    with pytest.raises(KeyError, match="n_obs"):
+        _emit(cols, schema)
+
+
 CFG = EngineConfig(n_buckets=1, n_samples=8)
 # complete days, so no day matrix is degenerate (see
 # test_cascade_resume.py) and batch shape only moves float32 rounding
@@ -103,8 +119,6 @@ OPS = {
     "rollup_1h": lambda obs, hourly: rollup_1h(obs, CFG, num_partitions=1),
     "rollup_1d": lambda obs, hourly: rollup_1d(hourly, CFG,
                                                num_partitions=1),
-    "rollup_cascade_fused": lambda obs, hourly: rollup_cascade_fused(
-        obs, CFG, num_partitions=1),
     "compress_1h": lambda obs, hourly: compress_1h(hourly, CFG,
                                                    num_partitions=1),
     "invert_network": lambda obs, hourly: invert_network(
@@ -127,15 +141,14 @@ def inputs(spark):
               .distinct().count()
               for w in (CFG.slots_per_hour, CFG.slots_per_day)}
     n_h, n_d = groups[CFG.slots_per_hour], groups[CFG.slots_per_day]
-    expected = {"rollup_1h": n_h, "rollup_1d": n_d,
-                "rollup_cascade_fused": n_h + n_d, "compress_1h": n_d,
+    expected = {"rollup_1h": n_h, "rollup_1d": n_d, "compress_1h": n_d,
                 "invert_network": SPEC.n_docs}
     return obs, hourly, expected
 
 
 def _sorted(df) -> pd.DataFrame:
     pdf = df.toPandas()
-    keys = [c for c in ("tier", "doc_id", "hour_idx", "day_idx")
+    keys = [c for c in ("doc_id", "hour_idx", "day_idx")
             if c in pdf.columns]
     return pdf.sort_values(keys).reset_index(drop=True)
 

@@ -121,23 +121,6 @@ def test_metrics_view(spark, obs, workdir):
     assert met["lineage"].notna().all()
 
 
-def test_cascade_string_free_matches_default(spark, obs, workdir):
-    """run_cascade(doc_dim=...) — the string-free scaling path — writes
-    tier tables identical to the strings-through-kernel default."""
-    from miaplpy_spark.datagen import generate_doc_dim
-
-    dim = generate_doc_dim(spark, SPEC, CFG)
-    s_a = TierStore(os.path.join(workdir, "default_store"))
-    s_b = TierStore(os.path.join(workdir, "corepath_store"))
-    run_cascade(spark, obs, s_a, CFG, resume=False)
-    run_cascade(spark, obs, s_b, CFG, resume=False, doc_dim=dim)
-    for tier in ("rollup_1h", "rollup_1d"):
-        a = _snapshot(spark, s_a, tier)
-        b = _snapshot(spark, s_b, tier)
-        assert list(a.columns) == list(b.columns)
-        _assert_snapshots_match(b, a)
-
-
 def test_checkpoint_compaction_preserves_resume(spark, obs, workdir):
     """compact() collapses the append-only log to one row per (tier,
     bucket) without changing what completed_keys / latest_completions

@@ -111,17 +111,3 @@ def test_winnowing_density_and_robustness(spark):
     # perturbs at most ~k+w windows of selections
     assert abs(out["base"]["n_fp"] - out["edit"]["n_fp"]) <= 8
     assert out["base"]["fp_digest"] != out["edit"]["fp_digest"]
-
-
-def test_shingle_hint_skips_count_and_matches(spark):
-    """shingle_jaccard_pairs(n_docs_hint=...) must build the same
-    query as the self-counting path (the hint exists so query
-    CONSTRUCTION triggers no Spark action)."""
-    from miaplpy_spark.functions.text import shingle_jaccard_pairs
-
-    sf = "/root/testdata/sf0.001"
-    n = spark.read.parquet(f"{sf}/documents.parquet").count()
-    base = sorted(map(str, shingle_jaccard_pairs(spark, sf).collect()))
-    hinted = sorted(map(str, shingle_jaccard_pairs(
-        spark, sf, n_docs_hint=n).collect()))
-    assert base == hinted

@@ -40,6 +40,13 @@ def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
 
 
+def test_every_query_has_an_oracle():
+    """The driver certifies at most 50 queries; each must carry its
+    oracle, or it would silently fall into the rows-only check."""
+    assert set(QUERIES) == set(ORACLES)
+    assert len(QUERIES) == len(ORACLES) == 50
+
+
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(spark, ddb, name):
     got = _normalize(QUERIES[name](spark, SF_DIR).toPandas())

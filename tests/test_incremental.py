@@ -54,27 +54,3 @@ def test_incremental_equals_full(spark, workdir):
     q_full = {(r["doc_id"], r["hour_idx"]): round(r["quality"], 5)
               for r in full_1h.select("doc_id", "hour_idx", "quality").collect()}
     assert q_inc == q_full
-
-
-def test_incremental_string_free_matches(spark, workdir):
-    """Incremental extension on the string-free doc-dim path equals the
-    default strings-through-kernel incremental run."""
-    from miaplpy_spark.datagen import generate_doc_dim
-
-    raw = prepare_observations(generate_sequences(spark, SPEC, CFG), CFG)
-    first = raw.where(F.col("slot") < 250)
-    dim = generate_doc_dim(spark, SPEC, CFG)
-
-    s_a = TierStore(os.path.join(workdir, "inc_default"))
-    s_b = TierStore(os.path.join(workdir, "inc_core"))
-    run_cascade_incremental(spark, first, s_a, CFG)
-    run_cascade_incremental(spark, raw, s_a, CFG)
-    run_cascade_incremental(spark, first, s_b, CFG, doc_dim=dim)
-    run_cascade_incremental(spark, raw, s_b, CFG, doc_dim=dim)
-
-    key_h = ["doc_id", "source", "hour_idx", "n_obs", "n_filled", "sum_tok"]
-    key_d = ["doc_id", "source", "day_idx", "n_hours", "n_obs", "sum_tok"]
-    assert _fp(s_a.read(spark, "rollup_1h"), key_h) == \
-        _fp(s_b.read(spark, "rollup_1h"), key_h)
-    assert _fp(s_a.read(spark, "rollup_1d"), key_d) == \
-        _fp(s_b.read(spark, "rollup_1d"), key_d)

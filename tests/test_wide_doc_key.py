@@ -7,7 +7,6 @@ narrow mode, and (b) the second key actually separates a planted
 first-key collision."""
 
 import pyspark.sql.functions as F
-import pytest
 
 from miaplpy_spark.config import EngineConfig
 from miaplpy_spark.operators.network_inversion import invert_network
@@ -85,12 +84,3 @@ def test_wide_doc_dim_join_disambiguates(spark):
     out = attach_doc_dim(core, dim)
     assert out.count() == core.count()          # no join fan-out
     assert out.where(F.col("doc_id").isNull()).count() == 0
-
-
-def test_fused_rejects_wide_mode(spark):
-    from miaplpy_spark.operators.fused import rollup_cascade_fused
-
-    obs = fixture_obs(spark, n_docs=2, n_slots=40, n_samples=8,
-                      n_buckets=1)
-    with pytest.raises(ValueError, match="wide_doc_key"):
-        rollup_cascade_fused(obs, WIDE)
