@@ -233,27 +233,6 @@ def invert_l1_batch(R: np.ndarray, Y: np.ndarray, alpha: float = 0.01,
     return X.T
 
 
-def estimate_timeseries_gappy(A: np.ndarray, Y: np.ndarray,
-                              mask: np.ndarray) -> np.ndarray:
-    """Gappy path: per-pixel row drop of NaN observations (F3
-    skip_invalid_obs, :653-674). mask True = valid. Redundancy check:
-    a pixel is solvable only if every date index still appears."""
-    n_date = A.shape[1] + 1
-    n_px = Y.shape[1]
-    ts = np.full((n_date, n_px), np.nan)
-    for p in range(n_px):
-        m = mask[:, p]
-        if m.sum() < A.shape[1]:
-            continue
-        Am = A[m]
-        if np.min(np.sum(Am != 0, axis=0)) < 1:
-            continue  # disconnected network for this pixel
-        X, *_ = np.linalg.lstsq(Am, Y[m, p], rcond=None)
-        ts[0, p] = 0.0
-        ts[1:, p] = X
-    return ts
-
-
 def invert_l1(R: np.ndarray, y: np.ndarray, alpha: float = 0.01,
               max_iter: int = 100, tol: float = 1e-3) -> np.ndarray:
     """IRLS-L1 with Tikhonov smoothing: G = [R; α·D2], W from inverse
@@ -291,15 +270,6 @@ def estimate_timeseries_cov(G: np.ndarray, y_std: np.ndarray,
     Gp = np.linalg.pinv(G)
     std = np.asarray(y_std, dtype=np.float64).reshape(-1)
     return ((Gp * (std ** 2)[None, :]) @ Gp.T).astype(np.float32)
-
-
-def estimate_timeseries_var_batch(G: np.ndarray,
-                                  Y_std: np.ndarray) -> np.ndarray:
-    """Batched diagonal of the propagated covariance — the per-date
-    variances for every pixel in one matmul: var = (G⁺∘G⁺) · y_std².
-    G (n_pair, n_date-1); Y_std (n_pair, n_px) -> (n_date-1, n_px)."""
-    Gp = np.linalg.pinv(np.asarray(G, dtype=np.float64))
-    return (Gp ** 2) @ (np.asarray(Y_std, dtype=np.float64) ** 2)
 
 
 def network_temporal_coherence(A: np.ndarray, ts_incr: np.ndarray,

@@ -218,7 +218,10 @@ def shp_keep_pairs(test: str, ref_sorted: np.ndarray,
                    tests_sorted: np.ndarray, alpha: float = 0.05) -> np.ndarray:
     """Row-wise SHP membership for (B, N) sorted sample pairs: True
     where ``tests_sorted[b]`` is statistically homogeneous with
-    ``ref_sorted[b]`` under the configured test (N2 KS / N5 Welch)."""
+    ``ref_sorted[b]`` under the configured test (the reference's
+    shp_test enum, get_shp_row_col_c lib/utils.pyx:903-998): KS
+    distance against the ks_lut critical value, Welch t-test or
+    Anderson-Darling, keeping p >= alpha for the last two."""
     N = ref_sorted.shape[-1]
     if test == "KS":
         thr = ks_lut(N, N, alpha)
@@ -227,30 +230,6 @@ def shp_keep_pairs(test: str, ref_sorted: np.ndarray,
         return welch_pvalue(ref_sorted, tests_sorted) >= alpha
     if test == "AD":
         return ad_2samp_pvalue(ref_sorted, tests_sorted) >= alpha
-    raise ValueError(f"unknown shp test {test!r}")
-
-
-def shp_gate(test: str, n1: int, n2: int, alpha: float = 0.05):
-    """SHP-membership dispatcher (the reference's shp_test enum,
-    get_shp_row_col_c lib/utils.pyx:903-998): returns
-    ``gate(ref_sorted (N,), tests_sorted (B, N)) -> bool (B,)``.
-
-    KS    — two-sample KS distance against the ks_lut critical value.
-    TTEST — Welch t-test, keep when p >= alpha.
-    AD    — Anderson-Darling two-sample test via the pure-NumPy
-            Scholz-Stephens midrank statistic + asymptotic p-value
-            (ad_2samp_pvalue below); keep when p >= alpha.
-    """
-    if test == "KS":
-        thr = ks_lut(n1, n2, alpha)
-        return lambda ref, tests: ecdf_distance_batch(ref, tests) <= thr
-    if test == "TTEST":
-        return lambda ref, tests: welch_pvalue(
-            np.broadcast_to(ref, tests.shape), tests) >= alpha
-    if test == "AD":
-        return lambda ref, tests: ad_2samp_pvalue(
-            np.ascontiguousarray(np.broadcast_to(ref, tests.shape)),
-            tests) >= alpha
     raise ValueError(f"unknown shp test {test!r}")
 
 

@@ -54,24 +54,22 @@ def lineage_hash(cfg: EngineConfig, tier: str, input_id: str) -> str:
     return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
 
-def _run_tier(
-    spark: SparkSession,
-    tier: str,
-    inp: DataFrame,
-    rollup_fn,
-    store: TierStore,
-    ckpt: CheckpointLog,
-    cfg: EngineConfig,
-    input_id: str,
-    resume: bool,
-) -> dict:
-    lineage = lineage_hash(cfg, tier, input_id)
+def _checkpointed_step(spark: SparkSession, store: TierStore,
+                       cfg: EngineConfig, tier: str, lineage: str,
+                       resume: bool, inp: DataFrame, bucket: F.Column,
+                       write, **extra) -> dict:
+    """The one resume protocol of every checkpointed step: cull the
+    input's rows whose ``bucket`` is already completed for (tier,
+    lineage), run ``write(remaining, done_buckets) -> {bucket: rows}``
+    and only then log every attempted bucket. ``extra`` items ride in
+    the returned metrics after the lineage."""
+    ckpt = CheckpointLog(store)
+    done_set = set()
     if resume:
         done = ckpt.completed_keys(spark, tier, lineage)
-        done_rows = done.collect()   # one job: count + set from one pass
-        done_set = {int(r["partition_key"]) for r in done_rows}
-        n_done = len(done_set)
-        if n_done >= cfg.n_buckets:
+        # one job: count + set from one pass
+        done_set = {int(r["partition_key"]) for r in done.collect()}
+        if len(done_set) >= cfg.n_buckets:
             # every possible bucket (partition keys are pmod(hash,
             # n_buckets) by construction) is already checkpointed for
             # this lineage: short-circuit BEFORE building the write
@@ -80,38 +78,42 @@ def _run_tier(
             # would still pay one full input scan to write zero rows
             # (measured: the 10x-scale no-op rerun spent minutes
             # regenerating 91M rows into an empty merge).
-            return {"tier": tier, "lineage": lineage,
-                    "buckets_skipped": n_done, "buckets_processed": 0,
-                    "rows_written": 0}
-        if n_done:
-            inp = inp.join(F.broadcast(done),
-                           inp["bucket"] == done["partition_key"], "left_anti")
-    else:
-        n_done = 0
-        done_set = set()
-
-    acc = spark.sparkContext.accumulator({}, _BucketCountParam())
-    out = rollup_fn(inp, cfg, counts_acc=acc)
-    store.merge_partitions(out, tier, partition_col="bucket")
-
-    # rows-processed metrics per bucket come from the accumulator the
-    # write job itself populated — no second scan of the committed
-    # tier. EVERY attempted bucket is checkpointed, including buckets
-    # the input left empty (rows=0): a permanently-empty bucket would
+            return {"tier": tier, "lineage": lineage, **extra,
+                    "buckets_skipped": len(done_set),
+                    "buckets_processed": 0, "rows_written": 0}
+        if done_set:
+            inp = inp.join(F.broadcast(done), bucket == done["partition_key"],
+                           "left_anti")
+    rows = write(inp, done_set)
+    # EVERY attempted bucket is checkpointed, including buckets the
+    # input left empty (rows=0): a permanently-empty bucket would
     # otherwise never reach the full-skip short-circuit, and on
     # Iceberg each rerun's empty overwritePartitions commit would
     # rotate the content token and cascade-invalidate the inversion.
-    counts_map = dict(acc.value)
-    counts = [(b, counts_map.get(b, 0))
+    counts = [(b, rows.get(b, 0))
               for b in range(cfg.n_buckets) if b not in done_set]
     ckpt.log_completion(spark, tier, lineage, counts)
-    return {
-        "tier": tier,
-        "lineage": lineage,
-        "buckets_skipped": n_done,
-        "buckets_processed": len(counts),
-        "rows_written": int(sum(c for _, c in counts)),
-    }
+    return {"tier": tier, "lineage": lineage, **extra,
+            "buckets_skipped": len(done_set),
+            "buckets_processed": len(counts),
+            "rows_written": int(sum(c for _, c in counts))}
+
+
+def _run_tier(spark: SparkSession, tier: str, inp: DataFrame, rollup_fn,
+              store: TierStore, cfg: EngineConfig, input_id: str,
+              resume: bool) -> dict:
+    def write(rest, done_set):
+        # rows-processed metrics per bucket come from the accumulator
+        # the write job itself populates — no second scan of the
+        # committed tier
+        acc = spark.sparkContext.accumulator({}, _BucketCountParam())
+        store.merge_partitions(rollup_fn(rest, cfg, counts_acc=acc), tier,
+                               partition_col="bucket")
+        return acc.value
+
+    return _checkpointed_step(spark, store, cfg, tier,
+                              lineage_hash(cfg, tier, input_id), resume,
+                              inp, F.col("bucket"), write)
 
 
 def run_cascade(
@@ -126,8 +128,7 @@ def run_cascade(
     output of datagen.prepare_observations (already JVM-side compact).
     Resumable: a rerun after partial failure recomputes only buckets
     missing from the checkpoint log."""
-    ckpt = CheckpointLog(store)
-    m1 = _run_tier(spark, TIER_1H, raw_obs, rollup_1h, store, ckpt, cfg,
+    m1 = _run_tier(spark, TIER_1H, raw_obs, rollup_1h, store, cfg,
                    input_id, resume)
     df_1h = store.read(spark, TIER_1H)
     # lineage contract (round-4 ADVICE, resolved by SCOPING): both
@@ -144,7 +145,7 @@ def run_cascade(
     # restamp contract. Out-of-band edits to the 1h tier are outside
     # run_cascade's input_id contract by design — route them through a
     # new input_id or the incremental path.
-    m2 = _run_tier(spark, TIER_1D, df_1h, rollup_1d, store, ckpt, cfg,
+    m2 = _run_tier(spark, TIER_1D, df_1h, rollup_1d, store, cfg,
                    input_id + ">" + m1["lineage"], resume)
     return {"raw->1h": m1, "1h->1d": m2}
 
@@ -252,8 +253,6 @@ def run_inversion_step(
     config change that redefines the series semantics)."""
     from .network_inversion import invert_network
 
-    ckpt = CheckpointLog(store)
-    df_1h = store.read(spark, TIER_1H)
     # the lineage must hash the 1h tier's CONTENT IDENTITY, not just
     # the config: after ANY change to the tier — incremental extension,
     # a late-arriving recompute of the open boundary hour (same row
@@ -270,63 +269,36 @@ def run_inversion_step(
     # restamp_inversion_checkpoints; any invalidation here without a
     # restamp is conservative, never stale.
     lineage = inversion_lineage(spark, store, cfg, method, input_id)
-    if resume:
-        done = ckpt.completed_keys(spark, TIER_TS, lineage)
-        done_rows = done.collect()   # one job: count + set from one pass
-        done_set = {int(r["partition_key"]) for r in done_rows}
-        n_done = len(done_set)
-        if n_done >= cfg.n_buckets:
-            # same full-skip short-circuit as _run_tier: all buckets
-            # checkpointed for this (lineage, content token) — do not
-            # build a plan that scans the tier to write nothing
-            return {"tier": TIER_TS, "lineage": lineage,
-                    "method": method, "buckets_skipped": n_done,
-                    "buckets_processed": 0, "rows_written": 0}
-        if n_done:
-            # cull on the DOC-PURE derived bucket (the timeseries
-            # table's partition key — invert_network re-derives it
-            # from the doc hash), NOT the input's bucket column: under
-            # salt_by_day the input buckets are (doc, day)-salted and
-            # a per-input-bucket skip would feed partial docs to the
-            # solver. This is what makes per-bucket resume safe under
-            # salting (it was force-disabled before round 5).
-            df_1h = (df_1h.withColumn("_doc_bucket", doc_bucket(cfg))
-                     .join(F.broadcast(done),
-                           F.col("_doc_bucket") == done["partition_key"],
-                           "left_anti")
-                     .drop("_doc_bucket"))
-    else:
-        n_done = 0
-        done_set = set()
-    inv = invert_network(df_1h, cfg, method=method)
-    if preserve_history and store.exists(spark, TIER_TS):
-        old = store.read(spark, TIER_TS)
-        if "hours" in old.columns:   # pre-coverage tables can't splice
-            if done_set:
-                # only the buckets being re-solved participate; done
-                # buckets' partitions are untouched by the MERGE
-                old = old.where(
-                    ~F.col("bucket").isin([int(b) for b in done_set]))
-            inv = merge_timeseries_history(old, inv, cfg)
-    # localCheckpoint (not persist): the spliced plan READS the
-    # timeseries table the MERGE below overwrites — the parquet
-    # fallback must never lazily re-read replaced files (same
-    # materialize-then-overwrite protocol as the incremental path)
-    inv = inv.localCheckpoint(eager=True)
-    rows_map = dict((int(r["bucket"]), int(r["n"])) for r in
-                    inv.groupBy("bucket").agg(F.count("*").alias("n"))
-                       .collect())
-    if rows_map:
-        store.merge_partitions(inv, TIER_TS, partition_col="bucket")
-    # checkpoint every attempted bucket, rows=0 for empty ones (see
-    # _run_tier) — and never commit an empty merge snapshot
-    counts = [(b, rows_map.get(b, 0))
-              for b in range(cfg.n_buckets) if b not in done_set]
-    ckpt.log_completion(spark, TIER_TS, lineage, counts)
-    return {"tier": TIER_TS, "lineage": lineage, "method": method,
-            "buckets_skipped": n_done,
-            "buckets_processed": len(counts),
-            "rows_written": int(sum(rows_map.values()))}
+
+    def write(df_1h, done_set):
+        inv = invert_network(df_1h, cfg, method=method)
+        if preserve_history and store.exists(spark, TIER_TS):
+            old = store.read(spark, TIER_TS)
+            if "hours" in old.columns:   # pre-coverage tables can't splice
+                if done_set:
+                    # only the buckets being re-solved participate; done
+                    # buckets' partitions are untouched by the MERGE
+                    old = old.where(
+                        ~F.col("bucket").isin([int(b) for b in done_set]))
+                inv = merge_timeseries_history(old, inv, cfg)
+        # materialized once: the per-bucket count and the MERGE below
+        # both read it
+        inv = inv.localCheckpoint(eager=True)
+        rows = {int(r["bucket"]): int(r["n"]) for r in
+                inv.groupBy("bucket").agg(F.count("*").alias("n")).collect()}
+        if rows:   # never commit an empty merge snapshot
+            store.merge_partitions(inv, TIER_TS, partition_col="bucket")
+        return rows
+
+    # cull on the DOC-PURE derived bucket (the timeseries table's
+    # partition key — invert_network re-derives it from the doc hash),
+    # NOT the input's bucket column: under salt_by_day the input
+    # buckets are (doc, day)-salted and a per-input-bucket skip would
+    # feed partial docs to the solver. This is what makes per-bucket
+    # resume safe under salting (it was force-disabled before round 5).
+    return _checkpointed_step(spark, store, cfg, TIER_TS, lineage, resume,
+                              store.read(spark, TIER_1H), doc_bucket(cfg),
+                              write, method=method)
 
 
 def inversion_lineage(spark: SparkSession, store: TierStore,
@@ -430,12 +402,7 @@ def run_cascade_incremental(
     new_obs = incremental_raw_filter(raw_obs, boundary_h, cfg)
     fresh_1h = rollup_1h(new_obs, cfg)
     if wm_h >= 0 and store.exists(spark, TIER_1H):
-        # localCheckpoint materializes the old rows BEFORE the
-        # overwrite touches their files (parquet fallback reads lazily;
-        # Iceberg's snapshot isolation makes this a no-op concern)
-        old = (store.read(spark, TIER_1H)
-               .where(F.col("hour_idx") < boundary_h)
-               .localCheckpoint(eager=True))
+        old = store.read(spark, TIER_1H).where(F.col("hour_idx") < boundary_h)
         merged = old.unionByName(fresh_1h, allowMissingColumns=True)
     else:
         merged = fresh_1h
@@ -453,9 +420,7 @@ def run_cascade_incremental(
                         >= boundary_d)
     fresh_1d = rollup_1d(src, cfg)
     if wm_d >= 0 and store.exists(spark, TIER_1D):
-        old_d = (store.read(spark, TIER_1D)
-                 .where(F.col("day_idx") < boundary_d)
-                 .localCheckpoint(eager=True))
+        old_d = store.read(spark, TIER_1D).where(F.col("day_idx") < boundary_d)
         merged_d = old_d.unionByName(fresh_1d, allowMissingColumns=True)
     else:
         merged_d = fresh_1d

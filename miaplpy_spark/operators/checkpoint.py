@@ -108,10 +108,9 @@ class CheckpointLog:
         latest = (df.groupBy("tier", "partition_key")
                   .agg(F.max_by(F.struct(*rest), "updated_at")
                        .alias("last"))
-                  .select("tier", "partition_key", "last.*")
-                  .localCheckpoint(eager=True))   # reads the table we replace
+                  .select("tier", "partition_key", "last.*"))
         self.store.overwrite(latest, CHECKPOINT_TABLE, partition_col=None)
-        after = latest.count()
+        after = self.store.read(spark, CHECKPOINT_TABLE).count()
         return {"rows_before": int(before), "rows_after": int(after)}
 
     def metrics(self, spark: SparkSession) -> DataFrame:

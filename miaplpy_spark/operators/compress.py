@@ -113,9 +113,9 @@ def apply_retention_1h(spark, store, day_boundary: int,
     Cold-tier MERGE is per (bucket, day_idx), so re-running retention
     only rewrites newly-aged days (idempotent), and a rerun with
     nothing left to age is a full no-op (no writes at all). The
-    hot-table delete follows the incremental path's
-    materialize-then-overwrite composition for the parquet fallback;
-    an Iceberg deployment issues ``DELETE FROM rollup_1h WHERE
+    hot-table delete overwrites the 1h tier with its own survivors
+    (``TierStore.overwrite`` materializes them first); an Iceberg
+    deployment issues ``DELETE FROM rollup_1h WHERE
     hour_idx < boundary`` instead — a metadata-level partition drop
     when the table is partitioned by (bucket, days(hour_ts)).
 
@@ -145,9 +145,6 @@ def apply_retention_1h(spark, store, day_boundary: int,
     if agg["n_blobs"]:
         store.merge_partitions(blobs, COLD_TIER,
                                partition_col=["bucket", "day_idx"])
-        # materialize the survivors BEFORE overwriting the files they
-        # are lazily read from (same protocol as run_cascade_incremental)
-        fresh = fresh.localCheckpoint(eager=True)
         store.overwrite(fresh, TIER_1H, partition_col="bucket")
     return {"n_aged": int(agg["n_aged"] or 0),
             "n_blobs": int(agg["n_blobs"]),

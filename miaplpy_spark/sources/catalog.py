@@ -13,11 +13,24 @@ to partitioned parquet + Spark's *dynamic partition overwrite*
 the same per-partition replace semantics single-writer. The Iceberg
 path is kept behind ``use_iceberg`` and is what a cluster deployment
 uses verbatim.
+
+Every warehouse path, plain or URI (``file:``, ``hdfs://``,
+``s3a://``), goes through the Hadoop FileSystem API resolved against
+the session's ``fs.defaultFS`` — the same resolution Spark's own
+``read.parquet`` / ``write.parquet`` apply to the same string, so a
+metadata call never looks at a different filesystem than the data
+it describes.
+
+Writes that read the table they replace: a dynamic-mode merge stages
+its output and commits after every read, so ``merge_partitions``
+takes such a frame as is; a static-mode overwrite deletes the table
+before its tasks read it, so ``overwrite`` materializes its input
+first.
 """
 
 from __future__ import annotations
 
-import os
+import hashlib
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -33,15 +46,6 @@ class TierStore:
         return self.base_dir.rstrip("/") + "/" + table
 
     @staticmethod
-    def _has_scheme(p: str) -> bool:
-        """URI-style paths (file:, hdfs://, s3a://, ...) route through
-        the Hadoop FileSystem API; plain paths keep the cheaper posix
-        calls (round-4 VERDICT item 2: os.listdir/os.walk silently
-        broke on any non-posix warehouse while the docstring claimed
-        HDFS worked)."""
-        return "://" in p or p.startswith("file:")
-
-    @staticmethod
     def _hadoop_fs(spark: SparkSession, p: str):
         jvm = spark._jvm
         hpath = jvm.org.apache.hadoop.fs.Path(p)
@@ -51,17 +55,12 @@ class TierStore:
     def exists(self, spark: SparkSession, table: str) -> bool:
         if self.use_iceberg:
             return spark.catalog.tableExists(f"{self.namespace}.{table}")
-        # cheap driver-side metadata check (one LIST call either way)
-        p = self.path(table)
-        if self._has_scheme(p):
-            fs, hpath = self._hadoop_fs(spark, p)
-            if not fs.exists(hpath) or not fs.getFileStatus(hpath).isDirectory():
-                return False
-            return any(not st.getPath().getName().startswith((".", "_"))
-                       for st in fs.listStatus(hpath))
-        return os.path.isdir(p) and any(
-            not f.startswith((".", "_")) for f in os.listdir(p)
-        )
+        # cheap driver-side metadata check (one LIST call)
+        fs, hpath = self._hadoop_fs(spark, self.path(table))
+        if not fs.exists(hpath) or not fs.getFileStatus(hpath).isDirectory():
+            return False
+        return any(not st.getPath().getName().startswith((".", "_"))
+                   for st in fs.listStatus(hpath))
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         if self.use_iceberg:
@@ -78,6 +77,9 @@ class TierStore:
         overwrite mode is set PER WRITE so MERGE semantics never depend
         on how the session was constructed (a static-mode session
         default would silently turn this into drop-whole-table).
+        ``df`` may read this table: the dynamic overwrite stages its
+        output and replaces the partitions only after every task has
+        read its input.
         """
         cols = ([partition_col] if isinstance(partition_col, str)
                 else list(partition_col))
@@ -99,15 +101,17 @@ class TierStore:
         absent from ``df`` are dropped too — retention deletes need
         this). Iceberg: createOrReplace snapshot commit; parquet
         fallback: static-mode overwrite. ``partition_col=None`` keeps
-        the table unpartitioned (append-log tables). Callers must
-        materialize ``df`` first (localCheckpoint) if it reads from
-        this table."""
+        the table unpartitioned (append-log tables). ``df`` may read
+        this table: Iceberg reads a snapshot, but a static overwrite
+        deletes the old files before its tasks read them, so the
+        parquet fallback materializes the input first."""
         cols = ([partition_col] if isinstance(partition_col, str)
                 else list(partition_col or []))
         if self.use_iceberg:
             w = df.writeTo(f"{self.namespace}.{table}")
             (w.partitionedBy(*cols) if cols else w).createOrReplace()
             return
+        df = df.localCheckpoint(eager=True)
         if not cols:
             df.write.mode("overwrite").parquet(self.path(table))
             return
@@ -130,7 +134,7 @@ class TierStore:
         ADVICE). Iceberg: the current snapshot's data totals, a
         metadata-only read (NOT the snapshot id — see below). Parquet
         fallback: hash of the sorted data-file listing
-        (relpath, size, mtime_ns) — every committed write creates or
+        (relpath, size, mtime ms) — every committed write creates or
         rewrites files, so any content change moves the token; the
         listing costs the same O(files) metadata pass that planning a
         scan of the table does (on object stores this is the one
@@ -163,41 +167,20 @@ class TierStore:
             return "|".join(str(sm.get(k, "")) for k in
                             ("total-records", "total-data-files",
                              "total-files-size"))
-        import hashlib
-        base = self.path(table)
-        h = hashlib.sha256()
-        if self._has_scheme(base):
-            # Hadoop FileSystem recursive listing: works for file:,
-            # hdfs://, s3a://, ... — the same one LIST pass planning a
-            # scan of the table performs. Modification time is ms
-            # granularity here (vs ns posix) — still rotates on every
-            # committed rewrite, which is the contract.
-            fs, hpath = self._hadoop_fs(spark, base)
-            entries = []
-            it = fs.listFiles(hpath, True)
-            prefix = str(fs.getFileStatus(hpath).getPath())
-            while it.hasNext():
-                st = it.next()
-                p = str(st.getPath())
-                name = p.rsplit("/", 1)[-1]
-                if name.startswith((".", "_")):
-                    continue
-                rel = p[len(prefix):].lstrip("/")
-                entries.append(
-                    f"{rel}|{st.getLen()}|{st.getModificationTime()}\n")
-            for line in sorted(entries):
-                h.update(line.encode())
-            return h.hexdigest()[:16]
-        for root, dirs, files in sorted(os.walk(base)):
-            dirs.sort()
-            for fn in sorted(files):
-                if fn.startswith((".", "_")):
-                    continue
-                p = os.path.join(root, fn)
-                st = os.stat(p)
-                h.update(f"{os.path.relpath(p, base)}|{st.st_size}|"
-                         f"{st.st_mtime_ns}\n".encode())
-        return h.hexdigest()[:16]
+        # one recursive LIST, the same pass planning a scan of the
+        # table performs
+        fs, hpath = self._hadoop_fs(spark, self.path(table))
+        prefix = str(fs.getFileStatus(hpath).getPath())
+        entries = []
+        it = fs.listFiles(hpath, True)
+        while it.hasNext():
+            st = it.next()
+            p = str(st.getPath())
+            if p.rsplit("/", 1)[-1].startswith((".", "_")):
+                continue
+            entries.append(f"{p[len(prefix):].lstrip('/')}|{st.getLen()}|"
+                           f"{st.getModificationTime()}\n")
+        return hashlib.sha256("".join(sorted(entries)).encode()).hexdigest()[:16]
 
     def append(self, df: DataFrame, table: str,
                partition_col: str | list[str] | None = None) -> None:
@@ -221,7 +204,7 @@ class TierStore:
         """Drop whole partitions with ``partition_col < below`` — a
         metadata/directory-level delete, never a rewrite: Iceberg
         issues a partition-aligned DELETE; the parquet fallback removes
-        the ``col=value`` directories (posix or Hadoop FS). Returns the
+        the ``col=value`` directories. Returns the
         number of partitions dropped."""
         if self.use_iceberg:
             spark.sql(f"DELETE FROM {self.namespace}.{table} "
@@ -229,26 +212,14 @@ class TierStore:
             return -1   # Iceberg reports via snapshot summary
         if not self.exists(spark, table):
             return 0
-        base = self.path(table)
+        fs, hpath = self._hadoop_fs(spark, self.path(table))
         dropped = 0
-        if self._has_scheme(base):
-            fs, hpath = self._hadoop_fs(spark, base)
-            for st in fs.listStatus(hpath):
-                name = st.getPath().getName()
-                if name.startswith(f"{partition_col}="):
-                    try:
-                        if int(name.split("=", 1)[1]) < below:
-                            fs.delete(st.getPath(), True)
-                            dropped += 1
-                    except ValueError:
-                        continue
-            return dropped
-        import shutil
-        for name in os.listdir(base):
+        for st in fs.listStatus(hpath):
+            name = st.getPath().getName()
             if name.startswith(f"{partition_col}="):
                 try:
                     if int(name.split("=", 1)[1]) < below:
-                        shutil.rmtree(os.path.join(base, name))
+                        fs.delete(st.getPath(), True)
                         dropped += 1
                 except ValueError:
                     continue

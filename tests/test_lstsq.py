@@ -8,7 +8,6 @@ from miaplpy_spark.kernels.lstsq import (
     design_matrices,
     estimate_timeseries,
     estimate_timeseries_batch,
-    estimate_timeseries_gappy,
     invert_l1,
     network_temporal_coherence,
 )
@@ -55,15 +54,6 @@ def test_weighted_solve_downweights_bad_rows():
     w[0] = 1e-6
     ts = estimate_timeseries(A, Yn, weight_sqrt=np.sqrt(w))
     np.testing.assert_allclose(ts, TRUTH - TRUTH[0], atol=1e-3)
-
-
-def test_gappy_path_row_drop():
-    Yb = np.tile(Y[:, None], (1, 3))
-    mask = np.ones_like(Yb, dtype=bool)
-    mask[::7, 1] = False  # drop some obs for pixel 1
-    ts = estimate_timeseries_gappy(A, Yb, mask)
-    np.testing.assert_allclose(ts[:, 0], TRUTH - TRUTH[0], atol=1e-10)
-    np.testing.assert_allclose(ts[:, 1], TRUTH - TRUTH[0], atol=1e-8)
 
 
 def test_l1_robust_to_outliers():

@@ -26,11 +26,6 @@ ALLOWED_UNREACHED = {
     # Monte-Carlo ground truth (known phase series, coherence matrices)
     # that tests/test_kernels.py checks the estimators recover
     "miaplpy_spark.kernels.simulation",
-    # Unreached mixture sampling / leakage-safe split, still kept with
-    # its tests. ROADMAP.md lists it as the last deletion of its
-    # "delete what the system does not use" item; drop the entry when
-    # the module goes.
-    "miaplpy_spark.functions.sampling",
 }
 
 
@@ -126,3 +121,65 @@ def test_every_engine_config_field_is_read():
                 read.add(node.attr)
     unread = [f for f in _engine_config_fields() if f not in read]
     assert not unread, f"EngineConfig fields nothing reads: {unread}"
+
+
+# Every eager materialization in the package, one per function, with
+# the reason it exists. A localCheckpoint pins executor-local blocks
+# that cannot be recomputed if the executor is lost, so a new one
+# needs its own entry here.
+MATERIALIZATIONS = {
+    "sources.catalog::TierStore.overwrite":
+        "a static parquet overwrite deletes the table before its input, "
+        "which may read that table, is read",
+    "operators.cascade::run_inversion_step":
+        "the per-bucket row count and the timeseries MERGE both read "
+        "the inversion output",
+    "operators.compress::apply_retention_1h":
+        "the blob metrics and the cold-tier MERGE both read the "
+        "compressed blobs",
+    "functions.dedup::minhash_lsh_pairs":
+        "four consumers read the signatures (q26 reuse)",
+    "functions.dedup::_incremental_candidates":
+        "three joins read the batch band rows, the broadcast side of each",
+    "functions.dedup::incremental_minhash_pairs":
+        "the id-set broadcast and the verify join both read the "
+        "candidates (q52 reuse)",
+    "functions.dedup::connected_components":
+        "the size probe and both component paths read the edge set",
+    "functions.dedup::_star_components":
+        "truncates the lineage each star round",
+    "functions.text::shingle_jaccard_pairs_df":
+        "three consumers read the shingle index (q22 reuse)",
+}
+
+
+def _checkpoint_scopes(node, scope, in_class, out) -> None:
+    for child in ast.iter_child_nodes(node):
+        if (isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
+                               ast.ClassDef))
+                and (scope is None or in_class)):
+            _checkpoint_scopes(
+                child, f"{scope}.{child.name}" if scope else child.name,
+                isinstance(child, ast.ClassDef), out)
+            continue
+        if (isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "localCheckpoint"):
+            out.append(scope or "<module>")
+        _checkpoint_scopes(child, scope, in_class, out)
+
+
+def _materialization_sites() -> list:
+    """``module::function`` of every ``localCheckpoint`` call; a call in
+    a nested function counts for the top-level function (or method)."""
+    sites = []
+    for module, path in _package_modules().items():
+        scopes = []
+        _checkpoint_scopes(ast.parse(open(path).read(), path), None, False,
+                           scopes)
+        sites += [f"{module[len(PACKAGE) + 1:]}::{s}" for s in scopes]
+    return sorted(sites)
+
+
+def test_materializations_match_the_ledger():
+    assert _materialization_sites() == sorted(MATERIALIZATIONS)
