@@ -27,13 +27,14 @@ from pyspark.sql import DataFrame, SparkSession
 from ..config import EngineConfig
 from ..operators.rollup import _key_cols, with_doc_keys
 from .dedup import (connected_components, dedup_keep_list,
-                    incremental_minhash_pairs, minhash_lsh_pairs)
+                    incremental_minhash_pairs, minhash_lsh_pairs_df)
 from .text import _docs, exact_fingerprint, word_gate_exprs
 
 
-def exact_dup_losers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Docs whose full-text md5 matches an earlier (smaller doc_id)
-    doc — the exact-dedup drop set: deterministic keep-first-by-id.
+def exact_dup_losers(d: DataFrame) -> DataFrame:
+    """Docs of the documents frame ``d`` whose full-text md5 matches an
+    earlier (smaller doc_id) doc — the exact-dedup drop set:
+    deterministic keep-first-by-id.
 
     One fingerprint-keyed exchange: min(doc_id) OVER (PARTITION BY fp)
     — the oracle's own formulation — instead of the old groupBy +
@@ -43,7 +44,6 @@ def exact_dup_losers(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale)."""
     from pyspark.sql import Window
 
-    d = _docs(spark, sf_dir)
     fp = d.select("doc_id", exact_fingerprint().alias("fp"))
     keeper = F.min("doc_id").over(Window.partitionBy("fp"))
     return (fp.withColumn("keeper", keeper)
@@ -94,18 +94,20 @@ def curate_corpus(spark: SparkSession, sf_dir: str,
     # the text the spine row already holds, so the whole gate family
     # is now one narrow projection of the same scan — no gates leg, no
     # assembly join for it, zero extra exchanges at any corpus size.
-    spine = with_doc_keys(_docs(spark, sf_dir).select(
+    # The documents table is read ONCE and the frame feeds every leg:
+    # each read.parquet would otherwise pay its own schema-inference
+    # job.
+    d = _docs(spark, sf_dir)
+    spine = with_doc_keys(d.select(
         "doc_id", "lang", *word_gate_exprs(F.split("text", " "))), cfg)
     keys = _key_cols(cfg)
 
-    losers = (exact_dup_losers(spark, sf_dir)
+    losers = (exact_dup_losers(d)
               .withColumn("is_exact", F.lit(True))
               .select("doc_id", "is_exact"))
-    pairs = minhash_lsh_pairs(spark, sf_dir,
-                              verify_threshold=near_dup_threshold)
-    near_rows = (dedup_keep_list(
-        pairs, doc_spine=_docs(spark, sf_dir).select("doc_id"))
-        .select("doc_id", F.col("keep").alias("near_keep")))
+    pairs = minhash_lsh_pairs_df(d, verify_threshold=near_dup_threshold)
+    near_rows = (dedup_keep_list(pairs, doc_spine=d.select("doc_id"))
+                 .select("doc_id", F.col("keep").alias("near_keep")))
     # side outputs join back onto the spine by key alone, so doc_id
     # never rides through the assembly shuffles
     exact = with_doc_keys(losers, cfg).drop("doc_id")

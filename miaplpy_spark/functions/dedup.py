@@ -22,9 +22,9 @@ Design notes for 100 TB:
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-from .text import shingles
+from .text import _docs, shingles
 
 SIMHASH_BITS = 48  # one 12-hex-char md5 chunk = an exact 48-bit integer
 
@@ -33,10 +33,6 @@ SIMHASH_BITS = 48  # one 12-hex-char md5 chunk = an exact 48-bit integer
 # identically on positive operands, and h1 + 32*h2 < 2^62 stays inside
 # ANSI int64 BEFORE the reduction.
 MINHASH_PRIME = 2251799813685119
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def _h60(col) -> F.Column:
@@ -132,7 +128,14 @@ def minhash_lsh_pairs(spark, sf_dir, n_perm: int = 32, bands: int = 8,
     band become candidates; candidates are verified against the
     signature Jaccard (an unbiased estimator of the true shingle
     Jaccard)."""
-    d = _docs(spark, sf_dir)
+    return minhash_lsh_pairs_df(_docs(spark, sf_dir), n_perm, bands, k,
+                                verify_threshold)
+
+
+def minhash_lsh_pairs_df(d: DataFrame, n_perm: int = 32, bands: int = 8,
+                         k: int = 3,
+                         verify_threshold: float = 0.35) -> DataFrame:
+    """``minhash_lsh_pairs`` over an already-read documents frame."""
     # The plan references sig four times (both band-join sides + the
     # two candidate verify joins). Materialize it ONCE: under AQE
     # (Spark 4.1.2) the four copies of the aggregation do NOT collapse

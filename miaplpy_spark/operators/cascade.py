@@ -5,8 +5,8 @@ retention tiers').
 
 Per tier:
 1. lineage = hash(kernel config + input identity)
-2. anti-join the input's buckets against completed checkpoints
-   (broadcast — the completed-keys side is tiny)
+2. drop the input's rows whose bucket is in the completed set
+   (collected on the driver — at most n_buckets keys)
 3. run the rollup kernel on the remaining buckets only
 4. MERGE the output per bucket (dynamic partition overwrite /
    Iceberg overwritePartitions)
@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..config import EngineConfig
 from ..sources.catalog import TierStore
-from .checkpoint import CheckpointLog
+from .checkpoint import CheckpointLog, utc_now_us
 from .rollup import _key_cols, doc_bucket, rollup_1d, rollup_1h, with_doc_keys
 
 TIER_1H, TIER_1D = "rollup_1h", "rollup_1d"
@@ -66,9 +66,7 @@ def _checkpointed_step(spark: SparkSession, store: TierStore,
     ckpt = CheckpointLog(store)
     done_set = set()
     if resume:
-        done = ckpt.completed_keys(spark, tier, lineage)
-        # one job: count + set from one pass
-        done_set = {int(r["partition_key"]) for r in done.collect()}
+        done_set = ckpt.completed_keys(spark, tier, lineage)
         if len(done_set) >= cfg.n_buckets:
             # every possible bucket (partition keys are pmod(hash,
             # n_buckets) by construction) is already checkpointed for
@@ -82,8 +80,9 @@ def _checkpointed_step(spark: SparkSession, store: TierStore,
                     "buckets_skipped": len(done_set),
                     "buckets_processed": 0, "rows_written": 0}
         if done_set:
-            inp = inp.join(F.broadcast(done), bucket == done["partition_key"],
-                           "left_anti")
+            # the set is already on the driver: cull with it rather
+            # than aggregating the log a second time for a join
+            inp = inp.where(~bucket.isin(sorted(done_set)))
     rows = write(inp, done_set)
     # EVERY attempted bucket is checkpointed, including buckets the
     # input left empty (rows=0): a permanently-empty bucket would
@@ -370,9 +369,11 @@ def _read_watermark(spark: SparkSession, store: TierStore, tier: str) -> int:
 
 def _write_watermark(spark: SparkSession, store: TierStore, tier: str,
                      max_idx: int) -> None:
+    # updated_at rides in the row: current_timestamp() folds to a
+    # per-call literal that recompiles the append's generated code
     df = spark.createDataFrame(
-        [(tier, int(max_idx))], "tier string, max_idx long"
-    ).withColumn("updated_at", F.current_timestamp())
+        [(tier, int(max_idx), utc_now_us()[1])],
+        "tier string, max_idx long, updated_at timestamp")
     store.append(df, WATERMARK_TABLE)
 
 

@@ -2,8 +2,9 @@
 markers (/root/reference/src/miaplpy/phase_linking.py:74-84,
 lib/utils.pyx:1098-1099,1195) re-expressed as a table:
 
-- a tier job anti-joins its input's partition keys against the
-  checkpoint rows for (tier, lineage) and processes only the remainder;
+- a tier job drops its input's partition keys that the checkpoint
+  rows mark completed for (tier, lineage) and processes only the
+  remainder;
 - the checkpoint row for a bucket is appended ONLY AFTER the tier
   output for that bucket has committed (flag-written-last ordering),
   carrying rows_processed + lineage so a config or input change
@@ -17,6 +18,7 @@ long, rows_processed long, lineage string, updated_at timestamp.
 from __future__ import annotations
 
 import time
+from datetime import datetime, timedelta, timezone
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -28,6 +30,17 @@ CHECKPOINT_TABLE = "checkpoints"
 _SCHEMA = ("tier string, partition_key int, snapshot_id long, "
            "rows_processed long, lineage string, updated_at timestamp")
 
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+
+def utc_now_us() -> tuple[int, datetime]:
+    """(epoch nanoseconds, the same instant as a UTC-aware datetime at
+    microsecond precision). The datetime goes into row DATA: a per-call
+    timestamp literal is inlined into the generated Java, so every
+    append would compile (and JIT) a fresh class."""
+    ns = time.time_ns()
+    return ns, _EPOCH + timedelta(microseconds=ns // 1000)
+
 
 class CheckpointLog:
     def __init__(self, store: TierStore):
@@ -36,22 +49,26 @@ class CheckpointLog:
     def _read(self, spark: SparkSession) -> DataFrame | None:
         if not self.store.exists(spark, CHECKPOINT_TABLE):
             return None
-        return self.store.read(spark, CHECKPOINT_TABLE)
+        # the log's schema is fixed: no footer-inference job per read
+        return self.store.read(spark, CHECKPOINT_TABLE, schema=_SCHEMA)
 
-    def completed_keys(self, spark: SparkSession, tier: str, lineage: str) -> DataFrame:
-        """Distinct partition_key values already finished for this
-        (tier, lineage). Latest row per key wins, so a later run with a
-        new lineage supersedes old completions."""
+    def completed_keys(self, spark: SparkSession, tier: str,
+                       lineage: str) -> set[int]:
+        """partition_key values already finished for this (tier,
+        lineage), collected. Latest row per key wins, so a later run
+        with a new lineage supersedes old completions. No log yet: the
+        empty set, without a Spark job."""
         df = self._read(spark)
         if df is None:
-            return spark.createDataFrame([], "partition_key int")
+            return set()
         w_latest = (
             df.where(F.col("tier") == tier)
             .groupBy("partition_key")
             .agg(F.max_by("lineage", "updated_at").alias("last_lineage"))
         )
-        return (w_latest.where(F.col("last_lineage") == lineage)
-                .select("partition_key"))
+        return {int(r["partition_key"]) for r in
+                w_latest.where(F.col("last_lineage") == lineage)
+                        .select("partition_key").collect()}
 
     def latest_completions(self, spark: SparkSession, tier: str,
                            lineage: str) -> list[tuple[int, int]]:
@@ -77,17 +94,14 @@ class CheckpointLog:
         """Append completion rows — call strictly AFTER the tier write."""
         if not bucket_counts:
             return
-        snap = time.time_ns()
-        now = time.time()
+        snap, now = utc_now_us()
         rows = [
             Row(tier=tier, partition_key=int(b), snapshot_id=snap,
-                rows_processed=int(c), lineage=lineage,
-                updated_at=None)
+                rows_processed=int(c), lineage=lineage, updated_at=now)
             for b, c in bucket_counts
         ]
-        df = (spark.createDataFrame(rows, _SCHEMA)
-              .withColumn("updated_at", F.timestamp_seconds(F.lit(now))))
-        self.store.append(df, CHECKPOINT_TABLE)
+        self.store.append(spark.createDataFrame(rows, _SCHEMA),
+                          CHECKPOINT_TABLE)
 
     def compact(self, spark: SparkSession) -> dict:
         """Rewrite the append-only checkpoint log to its LATEST row per
@@ -110,7 +124,7 @@ class CheckpointLog:
                        .alias("last"))
                   .select("tier", "partition_key", "last.*"))
         self.store.overwrite(latest, CHECKPOINT_TABLE, partition_col=None)
-        after = self.store.read(spark, CHECKPOINT_TABLE).count()
+        after = self._read(spark).count()
         return {"rows_before": int(before), "rows_after": int(after)}
 
     def metrics(self, spark: SparkSession) -> DataFrame:

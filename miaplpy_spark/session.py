@@ -17,6 +17,23 @@ Tuning rationale (SURVEY.md §4):
   Python task otherwise repeats for each package imported from
   pyspark.zip — about 0.2 CPU-s per task on a 4-core host, close to
   half of a small cascade's CPU.
+- Codegen cache = CODEGEN_CACHE_MAX_ENTRIES (256) generated classes;
+  Spark's default is 100. One lifecycle round (cold cascade -> invert
+  -> retention -> restamp, then its resumed rerun) plus the q52
+  curation query uses 170 distinct classes, up to about 190 with the
+  input build and the AQE re-plans q52 meets later. At 100 each op
+  evicted the next op's classes, so every round recompiled (and
+  re-JITted) about 170 of them. Keeping them, with the per-run
+  literals below, took the perfbench lifecycle round from 27.4 to
+  20.3 CPU-s (4 cores, 20 interleaved pairs).
+  Spark's cache is split into 4 LRU segments of maxEntries/4 each, so
+  it must hold more than the class count: 180 still evicted 15-41
+  classes a round, 200 none; 256 leaves headroom for segment
+  imbalance. The cache is JVM-wide and sized once, when the first
+  class compiles. Per-run values stay out of generated code for the
+  same reason: Spark inlines a numeric literal into the Java source,
+  so a fresh timestamp is a fresh class (operators/checkpoint.py:
+  utc_now_us).
 """
 
 from __future__ import annotations
@@ -28,6 +45,9 @@ from pyspark.sql import SparkSession
 # Must happen before worker NumPy imports; harmless if already set.
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
+
+# spark.sql.codegen.cache.maxEntries (a static conf; see the tuning list)
+CODEGEN_CACHE_MAX_ENTRIES = 256
 
 
 def get_spark(
@@ -67,6 +87,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "miaplpy_spark.worker_daemon")
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_MAX_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

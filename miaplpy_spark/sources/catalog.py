@@ -62,10 +62,15 @@ class TierStore:
         return any(not st.getPath().getName().startswith((".", "_"))
                    for st in fs.listStatus(hpath))
 
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
+    def read(self, spark: SparkSession, table: str,
+             schema: str | None = None) -> DataFrame:
+        """``schema`` (DDL) skips the parquet fallback's footer-inference
+        job for tables whose layout is fixed; Iceberg tables carry
+        their own schema."""
         if self.use_iceberg:
             return spark.read.format("iceberg").load(f"{self.namespace}.{table}")
-        return spark.read.parquet(self.path(table))
+        reader = spark.read.schema(schema) if schema else spark.read
+        return reader.parquet(self.path(table))
 
     def merge_partitions(self, df: DataFrame, table: str,
                          partition_col: str | list[str] = "bucket") -> None:

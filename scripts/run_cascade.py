@@ -32,10 +32,17 @@ Cluster launch (north_rule):
         --conf spark.sql.adaptive.enabled=true \
         --conf spark.sql.shuffle.partitions=<2-3x total cores> \
         --conf spark.executorEnv.OMP_NUM_THREADS=1 \
+        --conf spark.sql.codegen.cache.maxEntries=<CODEGEN_CACHE_MAX_ENTRIES> \
         scripts/run_cascade.py \
         --input <sequences table/path> --warehouse <tier warehouse> \
         --steps cascade,retention,invert [--incremental] \
         [--scale tiny|small|bench] [--buckets N]
+
+This script applies the codegen cache size itself, from
+``miaplpy_spark.session.CODEGEN_CACHE_MAX_ENTRIES`` (see that module's
+tuning list); the ``--conf`` line names it for launches that build the
+session elsewhere. The printed JSON's ``codegen_compiles`` is the
+number of classes Spark compiled during the run.
 
 With no --input, a deterministic synthetic sequences table at --scale
 is generated (sandbox mode). On a cluster, --warehouse is an Iceberg
@@ -63,6 +70,7 @@ from miaplpy_spark.operators.cascade import (
     run_inversion_step,
 )
 from miaplpy_spark.operators.compress import apply_retention_1h
+from miaplpy_spark.session import CODEGEN_CACHE_MAX_ENTRIES
 from miaplpy_spark.sources.catalog import TierStore
 
 STEP_LIST = ["cascade", "invert", "retention"]
@@ -133,7 +141,12 @@ def main(argv=None) -> int:
     args = ap.parse_args(argv)
 
     steps = select_steps(args.steps, args.start, args.dostep)
-    spark = SparkSession.builder.appName("miaplpy_spark.cascade").getOrCreate()
+    spark = (SparkSession.builder.appName("miaplpy_spark.cascade")
+             .config("spark.sql.codegen.cache.maxEntries",
+                     str(CODEGEN_CACHE_MAX_ENTRIES))
+             .getOrCreate())
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
     kw = {"salt_by_day": args.salt_by_day}
     if args.buckets:
         kw["n_buckets"] = args.buckets
@@ -219,6 +232,8 @@ def main(argv=None) -> int:
         metrics["compact"] = CheckpointLog(store).compact(spark)
 
     metrics["wall_s"] = round(time.time() - t0, 2)
+    metrics["codegen_compiles"] = int(
+        codegen.METRIC_COMPILATION_TIME().getCount() - compiles0)
     print(json.dumps(metrics))
     return 0
 

@@ -131,8 +131,7 @@ def test_checkpoint_compaction_preserves_resume(spark, obs, workdir):
     ckpt = CheckpointLog(store)
     from miaplpy_spark.operators.cascade import lineage_hash
     lin = lineage_hash(CFG, "rollup_1h", "v2")
-    pre_keys = sorted(r["partition_key"] for r in
-                      ckpt.completed_keys(spark, "rollup_1h", lin).collect())
+    pre_keys = sorted(ckpt.completed_keys(spark, "rollup_1h", lin))
     pre_latest = ckpt.latest_completions(spark, "rollup_1h", lin)
     assert pre_keys == [0, 1, 2, 3]
 
@@ -140,8 +139,7 @@ def test_checkpoint_compaction_preserves_resume(spark, obs, workdir):
     assert m["rows_after"] < m["rows_before"]
     assert m["rows_after"] == 8   # 2 tiers x 4 buckets, latest only
 
-    post_keys = sorted(r["partition_key"] for r in
-                       ckpt.completed_keys(spark, "rollup_1h", lin).collect())
+    post_keys = sorted(ckpt.completed_keys(spark, "rollup_1h", lin))
     assert post_keys == pre_keys
     assert ckpt.latest_completions(spark, "rollup_1h", lin) == pre_latest
     m2 = run_cascade(spark, obs, store, CFG, input_id="v2")

@@ -23,7 +23,8 @@ def test_total_and_disjoint(spark):
 def test_reasons_match_component_operators(spark):
     out = {r["doc_id"]: r["reason"]
            for r in curate_corpus(spark, SF_DIR).collect()}
-    exact = {r["doc_id"] for r in exact_dup_losers(spark, SF_DIR).collect()}
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    exact = {r["doc_id"] for r in exact_dup_losers(docs).collect()}
     near = {r["doc_id"] for r in
             dedup_keep_list(minhash_lsh_pairs(spark, SF_DIR))
             .where(~F.col("keep")).collect()}
@@ -144,8 +145,8 @@ def test_priority_exact_over_near(spark, tmp_path):
     docs.unionByName(plant).coalesce(1).write.parquet(
         f"{corpus_dir}/documents.parquet")
 
-    exact = {r["doc_id"]
-             for r in exact_dup_losers(spark, corpus_dir).collect()}
+    corpus = spark.read.parquet(f"{corpus_dir}/documents.parquet")
+    exact = {r["doc_id"] for r in exact_dup_losers(corpus).collect()}
     near = {r["doc_id"] for r in
             dedup_keep_list(minhash_lsh_pairs(spark, corpus_dir))
             .where(~F.col("keep")).collect()}

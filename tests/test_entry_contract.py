@@ -42,7 +42,7 @@ def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def test_every_query_has_an_oracle():
     """The driver certifies at most 50 queries; each must carry its
-    oracle, or it would silently fall into the rows-only check."""
+    oracle, or only its row count would be checked."""
     assert set(QUERIES) == set(ORACLES)
     assert len(QUERIES) == len(ORACLES) == 50
 
@@ -56,17 +56,6 @@ def test_query_matches_oracle(spark, ddb, name):
     assert len(got) == len(exp), f"{name}: {len(got)} rows != {len(exp)}"
     pd.testing.assert_frame_equal(got, exp, check_dtype=False,
                                   rtol=0, atol=1e-9)
-
-
-@pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
-def test_rows_only_queries_run(spark, name):
-    df = QUERIES[name](spark, SF_DIR)
-    # mirror the driver's canonicalizer: the result must survive a
-    # pandas all-columns sort (list-typed cells crash factorize)
-    pdf = df.toPandas()
-    pdf[sorted(pdf.columns)].sort_values(sorted(pdf.columns))
-    assert len(pdf) >= 0
-    assert len(df.schema.fields) > 0
 
 
 def test_entry_runs(spark):

@@ -49,6 +49,9 @@ def test_full_lifecycle_then_noop_rerun(spark, workdir, capsys):
     # checkpointed FULL-HISTORY ts_series valid — it covers a superset
     # of the post-retention hot window), so run 2 is a TRUE no-op
     assert m1["retention"]["inversion_restamped"] > 0
+    # the run report counts the classes Spark compiled during the run
+    assert isinstance(m1["codegen_compiles"], int)
+    assert m1["codegen_compiles"] >= 0
 
     m2 = _run(capsys, args)
     assert m2["cascade"]["raw->1h"]["buckets_processed"] == 0

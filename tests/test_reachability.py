@@ -137,7 +137,7 @@ MATERIALIZATIONS = {
     "operators.compress::apply_retention_1h":
         "the blob metrics and the cold-tier MERGE both read the "
         "compressed blobs",
-    "functions.dedup::minhash_lsh_pairs":
+    "functions.dedup::minhash_lsh_pairs_df":
         "four consumers read the signatures (q26 reuse)",
     "functions.dedup::_incremental_candidates":
         "three joins read the batch band rows, the broadcast side of each",
