@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..config import EngineConfig
 from ..sources.catalog import TierStore
-from .checkpoint import CheckpointLog, utc_now_us
+from .checkpoint import CheckpointLog
 from .rollup import _key_cols, doc_bucket, rollup_1d, rollup_1h, with_doc_keys
 
 TIER_1H, TIER_1D = "rollup_1h", "rollup_1d"
@@ -56,13 +56,14 @@ def lineage_hash(cfg: EngineConfig, tier: str, input_id: str) -> str:
 
 def _checkpointed_step(spark: SparkSession, store: TierStore,
                        cfg: EngineConfig, tier: str, lineage: str,
-                       resume: bool, inp: DataFrame, bucket: F.Column,
+                       resume: bool, inp, bucket: F.Column,
                        write, **extra) -> dict:
-    """The one resume protocol of every checkpointed step: cull the
-    input's rows whose ``bucket`` is already completed for (tier,
-    lineage), run ``write(remaining, done_buckets) -> {bucket: rows}``
-    and only then log every attempted bucket. ``extra`` items ride in
-    the returned metrics after the lineage."""
+    """The one resume protocol of every checkpointed step: build the
+    input with ``inp()`` (only when some bucket remains, so a no-op
+    rerun reads nothing), cull its rows whose ``bucket`` is already
+    completed for (tier, lineage), run ``write(remaining, done_buckets)
+    -> {bucket: rows}`` and only then log every attempted bucket.
+    ``extra`` items ride in the returned metrics after the lineage."""
     ckpt = CheckpointLog(store)
     done_set = set()
     if resume:
@@ -79,11 +80,12 @@ def _checkpointed_step(spark: SparkSession, store: TierStore,
             return {"tier": tier, "lineage": lineage, **extra,
                     "buckets_skipped": len(done_set),
                     "buckets_processed": 0, "rows_written": 0}
-        if done_set:
-            # the set is already on the driver: cull with it rather
-            # than aggregating the log a second time for a join
-            inp = inp.where(~bucket.isin(sorted(done_set)))
-    rows = write(inp, done_set)
+    rest = inp()
+    if done_set:
+        # the set is already on the driver: cull with it rather than
+        # aggregating the log a second time for a join
+        rest = rest.where(~bucket.isin(sorted(done_set)))
+    rows = write(rest, done_set)
     # EVERY attempted bucket is checkpointed, including buckets the
     # input left empty (rows=0): a permanently-empty bucket would
     # otherwise never reach the full-skip short-circuit, and on
@@ -98,7 +100,7 @@ def _checkpointed_step(spark: SparkSession, store: TierStore,
             "rows_written": int(sum(c for _, c in counts))}
 
 
-def _run_tier(spark: SparkSession, tier: str, inp: DataFrame, rollup_fn,
+def _run_tier(spark: SparkSession, tier: str, inp, rollup_fn,
               store: TierStore, cfg: EngineConfig, input_id: str,
               resume: bool) -> dict:
     def write(rest, done_set):
@@ -127,9 +129,8 @@ def run_cascade(
     output of datagen.prepare_observations (already JVM-side compact).
     Resumable: a rerun after partial failure recomputes only buckets
     missing from the checkpoint log."""
-    m1 = _run_tier(spark, TIER_1H, raw_obs, rollup_1h, store, cfg,
+    m1 = _run_tier(spark, TIER_1H, lambda: raw_obs, rollup_1h, store, cfg,
                    input_id, resume)
-    df_1h = store.read(spark, TIER_1H)
     # lineage contract (round-4 ADVICE, resolved by SCOPING): both
     # tier lineages key on the caller's input_id, NOT the store's
     # content token. Within run_cascade the 1h content is a pure
@@ -144,8 +145,9 @@ def run_cascade(
     # restamp contract. Out-of-band edits to the 1h tier are outside
     # run_cascade's input_id contract by design — route them through a
     # new input_id or the incremental path.
-    m2 = _run_tier(spark, TIER_1D, df_1h, rollup_1d, store, cfg,
-                   input_id + ">" + m1["lineage"], resume)
+    m2 = _run_tier(spark, TIER_1D, lambda: store.read(spark, TIER_1H),
+                   rollup_1d, store, cfg, input_id + ">" + m1["lineage"],
+                   resume)
     return {"raw->1h": m1, "1h->1d": m2}
 
 
@@ -296,8 +298,8 @@ def run_inversion_step(
     # feed partial docs to the solver. This is what makes per-bucket
     # resume safe under salting (it was force-disabled before round 5).
     return _checkpointed_step(spark, store, cfg, TIER_TS, lineage, resume,
-                              store.read(spark, TIER_1H), doc_bucket(cfg),
-                              write, method=method)
+                              lambda: store.read(spark, TIER_1H),
+                              doc_bucket(cfg), write, method=method)
 
 
 def inversion_lineage(spark: SparkSession, store: TierStore,
@@ -336,9 +338,6 @@ def restamp_inversion_checkpoints(spark: SparkSession, store: TierStore,
     return len(counts)
 
 
-WATERMARK_TABLE = "tier_watermarks"
-
-
 def incremental_raw_filter(raw_obs: DataFrame, boundary_h: int,
                            cfg: EngineConfig) -> DataFrame:
     """Rows at/after the watermark hour, expressed so the scan prunes.
@@ -359,22 +358,18 @@ def incremental_raw_filter(raw_obs: DataFrame, boundary_h: int,
         (F.col("slot") / cfg.slots_per_hour).cast("int") >= boundary_h)
 
 
-def _read_watermark(spark: SparkSession, store: TierStore, tier: str) -> int:
-    if not store.exists(spark, WATERMARK_TABLE):
-        return -1
-    df = store.read(spark, WATERMARK_TABLE).where(F.col("tier") == tier)
-    row = df.agg(F.max_by("max_idx", "updated_at").alias("w")).collect()[0]
-    return int(row["w"]) if row["w"] is not None else -1
-
-
-def _write_watermark(spark: SparkSession, store: TierStore, tier: str,
-                     max_idx: int) -> None:
-    # updated_at rides in the row: current_timestamp() folds to a
-    # per-call literal that recompiles the append's generated code
-    df = spark.createDataFrame(
-        [(tier, int(max_idx), utc_now_us()[1])],
-        "tier string, max_idx long, updated_at timestamp")
-    store.append(df, WATERMARK_TABLE)
+def rollup_touched_days(tier_1h: DataFrame, touched,
+                        cfg: EngineConfig) -> DataFrame:
+    """The 1h -> 1d leg of both incremental paths: ``rollup_1d`` over
+    the FULL stored 1h rows of the days ``touched(day_idx)`` selects.
+    Re-rolling a day from all of its stored hours, not only the hours
+    just recomputed, is what makes a day whose hours arrive across
+    rounds or micro-batches converge to the batch rollup_1d result;
+    the stored 1h tier is the one sub-aggregate every 1d window
+    reuses. Each caller keeps its own merge, because the batch and
+    streamed 1d tiers are partitioned differently."""
+    day = (F.col("hour_idx") / cfg.hours_per_day).cast("int")
+    return rollup_1d(tier_1h.where(touched(day)), cfg)
 
 
 def run_cascade_incremental(
@@ -388,47 +383,36 @@ def run_cascade_incremental(
     objects/utils.py:1220-1241, objects/inversion_utils.py:149-217):
     new arrivals extend the tiers WITHOUT recomputing closed windows.
 
-    Semantics: windows strictly below the stored watermark are
-    immutable; the watermark window itself (possibly open at last run)
-    is recomputed from raw; tier rows = old rows below the boundary ∪
-    freshly-computed rows at/after it, MERGEd per bucket. On Iceberg
+    Semantics: windows strictly below the tier's watermark (stored in
+    the checkpoint log) are immutable; the watermark window itself
+    (possibly open at last run) is recomputed from raw; tier rows =
+    old rows below the boundary ∪ freshly-computed rows at/after it,
+    MERGEd per bucket. On Iceberg
     this is literally `MERGE INTO tier ... WHEN MATCHED ... ON
     hour_idx >= boundary`; the parquet fallback composes the union and
     overwrites partitions."""
-    out = {}
+    ckpt = CheckpointLog(store)
 
-    # raw -> 1h
-    wm_h = _read_watermark(spark, store, TIER_1H)
-    boundary_h = max(wm_h, 0)
-    new_obs = incremental_raw_filter(raw_obs, boundary_h, cfg)
-    fresh_1h = rollup_1h(new_obs, cfg)
-    if wm_h >= 0 and store.exists(spark, TIER_1H):
-        old = store.read(spark, TIER_1H).where(F.col("hour_idx") < boundary_h)
-        merged = old.unionByName(fresh_1h, allowMissingColumns=True)
-    else:
-        merged = fresh_1h
-    store.merge_partitions(merged, TIER_1H)
-    tier_1h = store.read(spark, TIER_1H)
-    max_h = tier_1h.agg(F.max("hour_idx")).collect()[0][0] or 0
-    _write_watermark(spark, store, TIER_1H, max_h)
-    out["raw->1h"] = {"recomputed_from_hour": boundary_h,
-                      "new_watermark": int(max_h)}
+    def extend(tier: str, unit: str, fresh) -> tuple[DataFrame, dict]:
+        """Splice ``fresh(boundary)`` onto the stored rows below the
+        tier's watermark, MERGE, then store the new watermark."""
+        idx = unit + "_idx"
+        wm = ckpt.watermark(spark, tier)
+        boundary = max(wm, 0)
+        merged = fresh(boundary)
+        if wm >= 0 and store.exists(spark, tier):
+            old = store.read(spark, tier).where(F.col(idx) < boundary)
+            merged = old.unionByName(merged, allowMissingColumns=True)
+        store.merge_partitions(merged, tier)
+        stored = store.read(spark, tier)
+        new_wm = stored.agg(F.max(idx)).collect()[0][0] or 0
+        ckpt.set_watermark(spark, tier, new_wm)   # after the MERGE commits
+        return stored, {f"recomputed_from_{unit}": boundary,
+                        "new_watermark": int(new_wm)}
 
-    # 1h -> 1d: only days touched by recomputed hours change
-    wm_d = _read_watermark(spark, store, TIER_1D)
-    boundary_d = max(wm_d, 0)
-    src = tier_1h.where((F.col("hour_idx") / cfg.hours_per_day).cast("int")
-                        >= boundary_d)
-    fresh_1d = rollup_1d(src, cfg)
-    if wm_d >= 0 and store.exists(spark, TIER_1D):
-        old_d = store.read(spark, TIER_1D).where(F.col("day_idx") < boundary_d)
-        merged_d = old_d.unionByName(fresh_1d, allowMissingColumns=True)
-    else:
-        merged_d = fresh_1d
-    store.merge_partitions(merged_d, TIER_1D)
-    max_d = (store.read(spark, TIER_1D).agg(F.max("day_idx")).collect()[0][0]
-             or 0)
-    _write_watermark(spark, store, TIER_1D, max_d)
-    out["1h->1d"] = {"recomputed_from_day": boundary_d,
-                     "new_watermark": int(max_d)}
-    return out
+    tier_1h, m1 = extend(TIER_1H, "hour", lambda b: rollup_1h(
+        incremental_raw_filter(raw_obs, b, cfg), cfg))
+    # only days touched by recomputed hours change
+    _, m2 = extend(TIER_1D, "day", lambda b: rollup_touched_days(
+        tier_1h, lambda day: day >= b, cfg))
+    return {"raw->1h": m1, "1h->1d": m2}

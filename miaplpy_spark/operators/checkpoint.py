@@ -11,6 +11,14 @@ lib/utils.pyx:1098-1099,1195) re-expressed as a table:
   invalidates completions automatically (the reference's update-mode
   mtime/config comparison, objects/utils.py:1220-1241).
 
+The same log holds the incremental paths' named watermarks (the 1h
+and 1d extension marks, the stream's staging prune boundary), so there
+is one bookkeeping table, one latest-row reduction and one compaction.
+A watermark is written, like a completion, strictly after the write
+it describes commits: a parquet dynamic overwrite is not atomic across
+buckets, so a mark derived from the tier itself would skip the
+buckets a crash mid-commit left behind.
+
 Schema (FIXTURES.md F4): tier string, partition_key int, snapshot_id
 long, rows_processed long, lineage string, updated_at timestamp.
 """
@@ -26,6 +34,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from ..sources.catalog import TierStore
 
 CHECKPOINT_TABLE = "checkpoints"
+_WATERMARK = "watermark:"
 
 _SCHEMA = ("tier string, partition_key int, snapshot_id long, "
            "rows_processed long, lineage string, updated_at timestamp")
@@ -33,13 +42,10 @@ _SCHEMA = ("tier string, partition_key int, snapshot_id long, "
 _EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 
-def utc_now_us() -> tuple[int, datetime]:
-    """(epoch nanoseconds, the same instant as a UTC-aware datetime at
-    microsecond precision). The datetime goes into row DATA: a per-call
-    timestamp literal is inlined into the generated Java, so every
-    append would compile (and JIT) a fresh class."""
-    ns = time.time_ns()
-    return ns, _EPOCH + timedelta(microseconds=ns // 1000)
+def _mark(name: str, value: int) -> tuple[str, int, int, str]:
+    """The log row of a watermark: (tier, partition_key, rows_processed,
+    lineage) = ("watermark:<name>", 0, value, "watermark")."""
+    return _WATERMARK + name, 0, value, "watermark"
 
 
 class CheckpointLog:
@@ -52,56 +58,103 @@ class CheckpointLog:
         # the log's schema is fixed: no footer-inference job per read
         return self.store.read(spark, CHECKPOINT_TABLE, schema=_SCHEMA)
 
+    def _latest(self, spark: SparkSession,
+                where: F.Column | None = None) -> DataFrame | None:
+        """The log's LATEST row per (tier, partition_key), after
+        ``where``; None without a log. Every reader reduces through
+        here: ONE max_by over the full struct, so all fields of a
+        surviving row come from the same appended row even when
+        updated_at ties (two independent max_by calls could pair
+        lineage and rows_processed from different rows)."""
+        df = self._read(spark)
+        if df is None:
+            return None
+        if where is not None:
+            df = df.where(where)
+        rest = [c for c in df.columns if c not in ("tier", "partition_key")]
+        return (df.groupBy("tier", "partition_key")
+                  .agg(F.max_by(F.struct(*rest), "updated_at").alias("last"))
+                  .select("tier", "partition_key", "last.*"))
+
     def completed_keys(self, spark: SparkSession, tier: str,
                        lineage: str) -> set[int]:
         """partition_key values already finished for this (tier,
         lineage), collected. Latest row per key wins, so a later run
         with a new lineage supersedes old completions. No log yet: the
         empty set, without a Spark job."""
-        df = self._read(spark)
-        if df is None:
-            return set()
-        w_latest = (
-            df.where(F.col("tier") == tier)
-            .groupBy("partition_key")
-            .agg(F.max_by("lineage", "updated_at").alias("last_lineage"))
-        )
-        return {int(r["partition_key"]) for r in
-                w_latest.where(F.col("last_lineage") == lineage)
-                        .select("partition_key").collect()}
+        return {k for k, _ in self.latest_completions(spark, tier, lineage)}
 
     def latest_completions(self, spark: SparkSession, tier: str,
                            lineage: str) -> list[tuple[int, int]]:
         """(partition_key, rows_processed) of buckets whose LATEST
         checkpoint row carries ``lineage`` — the set a restamp may
         safely re-validate under a new lineage."""
-        df = self._read(spark)
+        df = self._latest(spark, F.col("tier") == tier)
         if df is None:
             return []
-        # ONE max_by over a struct: two independent max_by calls could
-        # pair lineage and rows_processed from DIFFERENT rows when
-        # updated_at ties (same-second appends)
-        w = (df.where(F.col("tier") == tier)
-             .groupBy("partition_key")
-             .agg(F.max_by(F.struct("lineage", "rows_processed"),
-                           "updated_at").alias("last")))
-        return sorted((int(r["partition_key"]), int(r["last"]["rows_processed"]))
-                      for r in w.where(F.col("last")["lineage"] == lineage)
-                                .collect())
+        return sorted((int(r["partition_key"]), int(r["rows_processed"]))
+                      for r in df.where(F.col("lineage") == lineage)
+                                 .collect())
+
+    def _append(self, spark: SparkSession,
+                rows: list[tuple[str, int, int, str]]) -> None:
+        """Append (tier, partition_key, rows_processed, lineage) rows
+        under one snapshot id (epoch ns) and the same instant as a UTC
+        timestamp. The timestamp goes into row DATA: a per-call
+        timestamp literal is inlined into the generated Java, so every
+        append would compile (and JIT) a fresh class."""
+        snap = time.time_ns()
+        now = _EPOCH + timedelta(microseconds=snap // 1000)
+        self.store.append(spark.createDataFrame(
+            [Row(tier=t, partition_key=int(k), snapshot_id=snap,
+                 rows_processed=int(c), lineage=lin, updated_at=now)
+             for t, k, c, lin in rows], _SCHEMA), CHECKPOINT_TABLE)
 
     def log_completion(self, spark: SparkSession, tier: str, lineage: str,
                        bucket_counts: list[tuple[int, int]]) -> None:
         """Append completion rows — call strictly AFTER the tier write."""
-        if not bucket_counts:
-            return
-        snap, now = utc_now_us()
-        rows = [
-            Row(tier=tier, partition_key=int(b), snapshot_id=snap,
-                rows_processed=int(c), lineage=lineage, updated_at=now)
-            for b, c in bucket_counts
-        ]
-        self.store.append(spark.createDataFrame(rows, _SCHEMA),
-                          CHECKPOINT_TABLE)
+        if bucket_counts:
+            self._append(spark, [(tier, b, c, lineage)
+                                 for b, c in bucket_counts])
+
+    def watermark(self, spark: SparkSession, name: str) -> int:
+        """The latest value stored for watermark ``name``; -1 when it
+        was never set."""
+        df = self._latest(spark, F.col("tier").startswith(_WATERMARK))
+        marks = {} if df is None else {
+            r["tier"][len(_WATERMARK):]: int(r["rows_processed"])
+            for r in df.collect()}
+        if not marks:
+            marks = self._migrate_legacy_watermarks(spark)
+        return marks.get(name, -1)
+
+    def set_watermark(self, spark: SparkSession, name: str,
+                      value: int) -> None:
+        """Store watermark ``name`` — call strictly AFTER the write it
+        describes has committed."""
+        self._append(spark, [_mark(name, value)])
+
+    def _migrate_legacy_watermarks(self, spark: SparkSession) -> dict:
+        """Warehouses written before the watermarks moved into this log
+        kept them in their own ``tier_watermarks`` table (tier string,
+        max_idx long, updated_at timestamp). Copy each name's latest
+        value into the log in one append, then delete the old table.
+        The marks are carried, not recomputed: the stream's prune
+        boundary is what keeps a late replay from overwriting a
+        complete hour with partial rows, and nothing else records it.
+        A crash between the append and the delete leaves a stale table
+        that no read consults again."""
+        legacy = "tier_watermarks"
+        if not self.store.exists(spark, legacy):
+            return {}
+        marks = {r["tier"]: int(r["v"]) for r in
+                 self.store.read(spark, legacy).groupBy("tier")
+                     .agg(F.max_by("max_idx", "updated_at").alias("v"))
+                     .collect() if r["v"] is not None}
+        if marks:
+            self._append(spark, [_mark(n, v) for n, v in marks.items()])
+        self.store.drop(spark, legacy)
+        return marks
 
     def compact(self, spark: SparkSession) -> dict:
         """Rewrite the append-only checkpoint log to its LATEST row per
@@ -109,21 +162,15 @@ class CheckpointLog:
         bucket forever; completed_keys / latest_completions aggregate
         the full history each run, so a long-lived lifecycle pays an
         O(runs) metadata scan — compaction resets it to O(tiers x
-        buckets). Resume semantics are untouched: both readers already
-        reduce to the max_by(updated_at) row, which is exactly what
-        survives (ONE max_by over the full struct, so all surviving
-        fields come from the same row even under same-second ties)."""
+        buckets). Resume semantics are untouched: every reader already
+        reduces to the latest row (``_latest``), which is exactly what
+        survives."""
         df = self._read(spark)
         if df is None:
             return {"rows_before": 0, "rows_after": 0}
         before = df.count()
-        rest = [c for c in df.columns
-                if c not in ("tier", "partition_key")]
-        latest = (df.groupBy("tier", "partition_key")
-                  .agg(F.max_by(F.struct(*rest), "updated_at")
-                       .alias("last"))
-                  .select("tier", "partition_key", "last.*"))
-        self.store.overwrite(latest, CHECKPOINT_TABLE, partition_col=None)
+        self.store.overwrite(self._latest(spark), CHECKPOINT_TABLE,
+                             partition_col=None)
         after = self._read(spark).count()
         return {"rows_before": int(before), "rows_after": int(after)}
 

@@ -33,7 +33,7 @@ Tuning rationale (SURVEY.md §4):
   class compiles. Per-run values stay out of generated code for the
   same reason: Spark inlines a numeric literal into the Java source,
   so a fresh timestamp is a fresh class (operators/checkpoint.py:
-  utc_now_us).
+  CheckpointLog._append).
 """
 
 from __future__ import annotations

@@ -204,6 +204,14 @@ class TierStore:
             w = w.partitionBy(*cols)
         w.parquet(self.path(table))
 
+    def drop(self, spark: SparkSession, table: str) -> None:
+        """Delete the whole table."""
+        if self.use_iceberg:
+            spark.sql(f"DROP TABLE IF EXISTS {self.namespace}.{table}")
+            return
+        fs, hpath = self._hadoop_fs(spark, self.path(table))
+        fs.delete(hpath, True)
+
     def drop_partitions(self, spark: SparkSession, table: str,
                         partition_col: str, below: int) -> int:
         """Drop whole partitions with ``partition_col < below`` — a

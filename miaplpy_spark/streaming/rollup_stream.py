@@ -21,7 +21,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..config import EngineConfig
-from ..operators.rollup import rollup_1d, rollup_1h
+from ..operators.cascade import rollup_touched_days
+from ..operators.checkpoint import CheckpointLog
+from ..operators.rollup import rollup_1h
 from ..sources.catalog import TierStore
 
 
@@ -32,24 +34,30 @@ PRUNE_MARK = "stream_staging_pruned_below"
 
 
 def stream_rollup_1h(stream_df: DataFrame, store: TierStore,
-                     cfg: EngineConfig = EngineConfig(),
-                     checkpoint_dir: str | None = None,
-                     trigger_seconds: int = 10,
-                     available_now: bool = False,
-                     cascade_1d: bool = False,
+                     cfg: EngineConfig = EngineConfig(), *,
+                     checkpoint_dir: str,
                      staging_keep_hours: int | None = None):
-    """Drive the batch 1h kernel per micro-batch via foreachBatch,
-    with continuous-aggregate invalidation semantics:
+    """Drain the stream's backlog (an ``availableNow`` trigger: bounded
+    micro-batches, then stop; restart on the same ``checkpoint_dir`` to
+    pick up later arrivals), driving the batch 1h kernel per
+    micro-batch via foreachBatch with continuous-aggregate
+    invalidation semantics:
 
-    1. append the micro-batch's raw rows (tagged with batch_id) to a
-       staging table;
+    1. append the micro-batch's raw rows to a staging table;
     2. recompute ONLY the hours touched by this micro-batch, from the
        FULL staged rows of those hours (so an hour whose slots span
        micro-batches converges to the complete rollup — a per-batch
        overwrite would erase the earlier slots' contribution);
     3. MERGE the recomputed hours at (bucket, hour_idx) granularity —
        overwrite granularity matches the window, so untouched hours
-       from prior micro-batches are never rewritten.
+       from prior micro-batches are never rewritten;
+    4. re-roll the DAYS touched by this micro-batch from the full 1h
+       tier rows of those days (``rollup_touched_days``, the batch
+       incremental path's 1d leg) and MERGE them into
+       ``rollup_1d_stream`` at (bucket, day_idx) granularity. The
+       streamed 1d tier therefore equals the batch 1d tier row-for-row
+       once the backlog drains (tests/test_streaming.py pins this
+       against the batch kernel).
 
     Replayed micro-batches (restart after a failed commit) double-
     append to staging; the recompute dedups on (doc_id, slot), so the
@@ -61,22 +69,10 @@ def stream_rollup_1h(stream_df: DataFrame, store: TierStore,
     partitions (directory-level delete) once the stream has moved
     ``keep`` hours past them — without it staging grows with stream
     lifetime. Set it ABOVE the source's late-arrival horizon: a
-    micro-batch touching an hour below the recorded prune boundary
-    raises rather than overwriting a complete tier window with
-    partial replay rows.
-
-    ``cascade_1d`` extends each micro-batch with the 1h->1d leg
-    (round-4 VERDICT item 7): after the 1h MERGE commits, the DAYS
-    touched by this micro-batch are re-rolled from the FULL 1h tier
-    rows of those days (same recompute-from-complete-window
-    convergence argument as the hourly leg — a day whose hours span
-    micro-batches converges to the batch rollup_1d result) and MERGEd
-    into ``rollup_1d_stream`` at (bucket, day_idx) granularity. The
-    streamed 1d tier therefore equals the batch 1d tier row-for-row
-    once the backlog drains (tests/test_streaming.py pins this
-    against the batch kernel)."""
-
-    from ..operators.cascade import _read_watermark, _write_watermark
+    micro-batch touching an hour below the prune boundary (the
+    ``PRUNE_MARK`` watermark in the checkpoint log) raises rather than
+    overwriting a complete tier window with partial replay rows."""
+    ckpt = CheckpointLog(store)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -87,13 +83,11 @@ def stream_rollup_1h(stream_df: DataFrame, store: TierStore,
         # only the touched hours' directories (partition pruning) —
         # without this, every micro-batch rescanned the FULL staged
         # history, an O(stream lifetime) cost per trigger at 100 TB
-        store.append(
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-                    .withColumn("stage_hour", hour_of(F.col("slot"))),
-            STAGING_TABLE, partition_col="stage_hour")
+        store.append(batch_df.withColumn("stage_hour", hour_of(F.col("slot"))),
+                     STAGING_TABLE, partition_col="stage_hour")
         hours = sorted(int(r[0]) for r in batch_df
                        .select(hour_of(F.col("slot"))).distinct().collect())
-        boundary = _read_watermark(spark, store, PRUNE_MARK)
+        boundary = ckpt.watermark(spark, PRUNE_MARK)
         if boundary >= 0 and hours[0] < boundary:
             # the staged history for this hour was already aged away:
             # recomputing it from the partial replay rows would
@@ -106,21 +100,14 @@ def stream_rollup_1h(stream_df: DataFrame, store: TierStore,
                 "staging_keep_hours above the late-arrival horizon")
         staged = (store.read(spark, STAGING_TABLE)
                   .where(F.col("stage_hour").isin(hours)))
-        rows = (staged.drop("stage_hour", "batch_id")
-                .dropDuplicates(["doc_id", "slot"]))
-        out = rollup_1h(rows, cfg)
-        store.merge_partitions(out, STREAM_TIER,
+        rows = staged.drop("stage_hour").dropDuplicates(["doc_id", "slot"])
+        store.merge_partitions(rollup_1h(rows, cfg), STREAM_TIER,
                                partition_col=["bucket", "hour_idx"])
-        if cascade_1d:
-            day_of = lambda h: h // cfg.hours_per_day
-            t_days = sorted({day_of(h) for h in hours})
-            tier_1h = store.read(spark, STREAM_TIER)
-            day_rows = tier_1h.where(
-                (F.col("hour_idx") / cfg.hours_per_day).cast("int")
-                .isin(t_days))
-            store.merge_partitions(rollup_1d(day_rows, cfg),
-                                   STREAM_TIER_1D,
-                                   partition_col=["bucket", "day_idx"])
+        days = sorted({h // cfg.hours_per_day for h in hours})
+        store.merge_partitions(
+            rollup_touched_days(store.read(spark, STREAM_TIER),
+                                lambda day: day.isin(days), cfg),
+            STREAM_TIER_1D, partition_col=["bucket", "day_idx"])
         if staging_keep_hours is not None:
             # staged rows for hours long closed are dead weight: the
             # watermark bounds how late a slot may arrive, so dropping
@@ -132,15 +119,11 @@ def stream_rollup_1h(stream_df: DataFrame, store: TierStore,
             if below > max(boundary, 0):
                 if store.drop_partitions(spark, STAGING_TABLE,
                                          "stage_hour", below):
-                    _write_watermark(spark, store, PRUNE_MARK, below)
+                    ckpt.set_watermark(spark, PRUNE_MARK, below)
 
-    writer = (stream_df.writeStream
-              .foreachBatch(process_batch)
-              .outputMode("update"))
-    # availableNow drains the backlog in bounded micro-batches then
-    # stops — the batch-drive mode the driver gate (q49) uses
-    writer = (writer.trigger(availableNow=True) if available_now else
-              writer.trigger(processingTime=f"{trigger_seconds} seconds"))
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return (stream_df.writeStream
+            .foreachBatch(process_batch)
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .option("checkpointLocation", checkpoint_dir)
+            .start())

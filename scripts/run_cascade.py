@@ -4,9 +4,14 @@
 Step list (the reference's miaplpyApp.py:30-59 ``STEP_LIST`` +
 ``--start``/``--dostep`` contract, grafted to the tier lifecycle):
 
-    cascade    raw -> 1h -> 1d checkpointed tier jobs
-               (or the watermark-incremental extension with
-               --incremental)
+    cascade    raw -> 1h -> 1d checkpointed tier jobs; with
+               --incremental, the watermark extension instead (closed
+               windows kept, the watermark hour and the days it
+               touches recomputed; the marks live in the checkpoint
+               log); with --stream, a Structured Streaming drain of
+               --input into the *_stream tiers (availableNow, one file
+               per micro-batch, each re-rolling its touched hours and
+               days)
     invert     hot 1h tier -> per-doc least-squares timeseries table
                (checkpointed per bucket; --invert-method L2|WLS|L1)
     retention  hot 1h rows older than --retention-day move into the
@@ -175,7 +180,6 @@ def main(argv=None) -> int:
         q = stream_rollup_1h(
             prepare_observations(stream, cfg), store, cfg,
             checkpoint_dir=args.warehouse.rstrip("/") + "/_stream_ckpt",
-            available_now=True, cascade_1d=True,
             staging_keep_hours=args.staging_keep_hours)
         if not q.awaitTermination(3600):
             q.stop()

@@ -145,3 +145,27 @@ def test_checkpoint_compaction_preserves_resume(spark, obs, workdir):
     m2 = run_cascade(spark, obs, store, CFG, input_id="v2")
     assert m2["raw->1h"]["buckets_processed"] == 0
     assert m2["1h->1d"]["buckets_processed"] == 0
+
+
+def test_noop_resume_reads_no_step_input(spark, obs, workdir, monkeypatch):
+    """A step builds its input only when some bucket remains: a fully
+    checkpointed rerun of the 1d step and of the inversion must not
+    read the 1h tier they would consume (each read of a tier table
+    costs a footer-inference job)."""
+    from miaplpy_spark.operators.cascade import run_inversion_step
+
+    store = TierStore(os.path.join(workdir, "lazy_wh"))
+    run_cascade(spark, obs, store, CFG)
+    run_inversion_step(spark, store, CFG)
+    real_read = TierStore.read
+
+    def read(self, spark, table, schema=None):
+        if table == "rollup_1h":
+            raise AssertionError("rollup_1h read on a no-op rerun")
+        return real_read(self, spark, table, schema)
+
+    monkeypatch.setattr(TierStore, "read", read)
+    m = run_cascade(spark, obs, store, CFG, resume=True)
+    assert m["1h->1d"]["buckets_processed"] == 0
+    inv = run_inversion_step(spark, store, CFG, resume=True)
+    assert inv["buckets_processed"] == 0

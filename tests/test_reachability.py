@@ -183,3 +183,101 @@ def _materialization_sites() -> list:
 
 def test_materializations_match_the_ledger():
     assert _materialization_sites() == sorted(MATERIALIZATIONS)
+
+
+# Every warehouse table the package writes through TierStore. The
+# checkpoint log is the one bookkeeping table: bucket completions and
+# the incremental watermarks both live in it, so a new bookkeeping
+# table needs its own entry here.
+WAREHOUSE_TABLES = {
+    "rollup_1h": "hot 1h tier",
+    "rollup_1d": "1d tier",
+    "rollup_1h_cold": "compressed cold tier (retention)",
+    "timeseries": "per-doc inversion output",
+    "checkpoints": "bucket completions and named watermarks",
+    "stream_staging": "the stream's hour-partitioned raw rows",
+    "rollup_1h_stream": "streamed 1h tier",
+    "rollup_1d_stream": "streamed 1d tier",
+}
+_STORE_WRITES = {"merge_partitions", "overwrite", "append"}
+
+
+def _string_constants() -> dict:
+    """Module-level ``NAME = "str"`` (or tuple-unpacked) assignments
+    across the package."""
+    consts = {}
+    for path in _package_modules().values():
+        for node in ast.parse(open(path).read(), path).body:
+            if not isinstance(node, ast.Assign):
+                continue
+            for target in node.targets:
+                pairs = ([(target, node.value)] if isinstance(target, ast.Name)
+                         else zip(getattr(target, "elts", []),
+                                  getattr(node.value, "elts", [])))
+                for name, value in pairs:
+                    if (isinstance(name, ast.Name)
+                            and isinstance(value, ast.Constant)
+                            and isinstance(value.value, str)):
+                        consts[name.id] = value.value
+    return consts
+
+
+def _resolve(expr, scopes, tree, consts) -> set:
+    """The table names ``expr`` can take: a string constant, a package
+    constant, or a parameter of an enclosing function, resolved through
+    that function's calls in the same module."""
+    if isinstance(expr, ast.Constant) and isinstance(expr.value, str):
+        return {expr.value}
+    if isinstance(expr, ast.Name) and expr.id in consts:
+        return {consts[expr.id]}
+    for fn in reversed(scopes):
+        params = [a.arg for a in fn.args.args + fn.args.kwonlyargs]
+        if isinstance(expr, ast.Name) and expr.id in params:
+            i = params.index(expr.id)
+            out = set()
+            for call in ast.walk(tree):
+                if (isinstance(call, ast.Call)
+                        and isinstance(call.func, ast.Name)
+                        and call.func.id == fn.name):
+                    arg = next((k.value for k in call.keywords
+                                if k.arg == expr.id),
+                               call.args[i] if i < len(call.args) else None)
+                    out |= _resolve(arg, [], tree, consts)
+            return out
+    return {f"<unresolved {ast.unparse(expr) if expr else None}>"}
+
+
+def _written_tables() -> set:
+    consts = _string_constants()
+    tables = set()
+
+    def visit(node, scopes, tree):
+        for child in ast.iter_child_nodes(node):
+            inner = (scopes + [child] if isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)) else scopes)
+            if (isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr in _STORE_WRITES
+                    and len(child.args) + len(child.keywords) >= 2):
+                receiver = ast.unparse(child.func.value)
+                if child.func.attr != "append":
+                    # the only receivers of these names are TierStores
+                    assert receiver.split(".")[-1] == "store", receiver
+                if receiver.split(".")[-1] == "store":
+                    arg = next((k.value for k in child.keywords
+                                if k.arg == "table"),
+                               child.args[1] if len(child.args) > 1
+                               else None)
+                    tables.update(_resolve(arg, scopes, tree, consts))
+            visit(child, inner, tree)
+
+    for path in _package_modules().values():
+        tree = ast.parse(open(path).read(), path)
+        visit(tree, [], tree)
+    return tables
+
+
+def test_warehouse_tables_match_the_ledger():
+    tables = _written_tables()
+    assert "tier_watermarks" not in tables
+    assert tables == set(WAREHOUSE_TABLES)

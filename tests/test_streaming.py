@@ -1,5 +1,7 @@
 """Structured Streaming tier tests: the foreachBatch MERGE path
-(SURVEY.md §2.10 T3/T4 semantics)."""
+(SURVEY.md §2.10 T3/T4 semantics). Each arrival is picked up by a new
+availableNow drain on the same checkpoint dir, the restart path the
+lifecycle CLI takes."""
 
 import os
 
@@ -14,6 +16,20 @@ from miaplpy_spark.streaming.rollup_stream import stream_rollup_1h
 CFG = EngineConfig(n_buckets=2, n_samples=8)
 SPEC = ScaleSpec(n_docs=3, n_slots=40, tok_lo=8, tok_hi=16,
                  tok_heavy_lo=24, tok_heavy_hi=32)
+
+
+def _drain(spark, glob, schema, store, ckpt, max_files=None, **kw):
+    """One availableNow drain of the parquet files under ``glob``."""
+    reader = spark.readStream.schema(schema).option("pathGlobFilter",
+                                                     "*.parquet")
+    if max_files:
+        reader = reader.option("maxFilesPerTrigger", str(max_files))
+    q = stream_rollup_1h(prepare_observations(reader.parquet(glob), CFG),
+                         store, CFG, checkpoint_dir=ckpt, **kw)
+    try:
+        assert q.awaitTermination(300), "drain did not finish"
+    finally:
+        q.stop()
 
 
 @pytest.fixture()
@@ -34,29 +50,20 @@ def slices(spark, workdir):
 def test_stream_rollup_foreachbatch(spark, slices, workdir):
     src, first, second, schema = slices
     store = TierStore(os.path.join(workdir, "tiers"))
-    stream = (spark.readStream.schema(schema)
-              .option("pathGlobFilter", "*.parquet")
-              .parquet(src + "/slice=*"))
-    obs_stream = prepare_observations(stream, CFG)
-    q = stream_rollup_1h(obs_stream, store, CFG,
-                         checkpoint_dir=os.path.join(workdir, "ckpt"),
-                         trigger_seconds=1)
-    try:
-        q.processAllAvailable()
-        out = store.read(spark, "rollup_1h_stream")
-        # slots 0..19 -> hours 0,1 per doc
-        assert out.count() == 3 * 2
-        assert set(r["hour_idx"] for r in out.select("hour_idx").collect()) == {0, 1}
-        # second micro-batch (slots 20-39) must EXTEND the tier, not
-        # erase the first micro-batch's hours in the same buckets
-        second.write.parquet(os.path.join(src, "slice=1"))
-        q.processAllAvailable()
-        out = store.read(spark, "rollup_1h_stream")
-        assert out.count() == 3 * 4
-        assert (set(r["hour_idx"] for r in out.select("hour_idx").collect())
-                == {0, 1, 2, 3})
-    finally:
-        q.stop()
+    ckpt = os.path.join(workdir, "ckpt")
+    _drain(spark, src + "/slice=*", schema, store, ckpt)
+    out = store.read(spark, "rollup_1h_stream")
+    # slots 0..19 -> hours 0,1 per doc
+    assert out.count() == 3 * 2
+    assert set(r["hour_idx"] for r in out.select("hour_idx").collect()) == {0, 1}
+    # second micro-batch (slots 20-39) must EXTEND the tier, not
+    # erase the first micro-batch's hours in the same buckets
+    second.write.parquet(os.path.join(src, "slice=1"))
+    _drain(spark, src + "/slice=*", schema, store, ckpt)
+    out = store.read(spark, "rollup_1h_stream")
+    assert out.count() == 3 * 4
+    assert (set(r["hour_idx"] for r in out.select("hour_idx").collect())
+            == {0, 1, 2, 3})
 
 
 def test_stream_cascade_1d_equals_batch_tier(spark, workdir):
@@ -71,23 +78,14 @@ def test_stream_cascade_1d_equals_batch_tier(spark, workdir):
     raw.where(F.col("slot") < 15).write.parquet(os.path.join(src, "s=0"))
     schema = raw.schema
     store = TierStore(os.path.join(workdir, "tiers3"))
-    stream = (spark.readStream.schema(schema)
-              .option("pathGlobFilter", "*.parquet")
-              .option("maxFilesPerTrigger", "1")
-              .parquet(src + "/s=*"))
-    q = stream_rollup_1h(prepare_observations(stream, CFG), store, CFG,
-                         checkpoint_dir=os.path.join(workdir, "ckpt3"),
-                         trigger_seconds=1, cascade_1d=True)
+    ckpt = os.path.join(workdir, "ckpt3")
     cols = ["doc_id", "day_idx", "n_hours", "n_obs", "sum_tok",
             "min_tok", "max_tok"]
-    try:
-        q.processAllAvailable()
-        raw.where(F.col("slot") >= 15).write.parquet(os.path.join(src, "s=1"))
-        q.processAllAvailable()
-        got = {tuple(r) for r in store.read(spark, "rollup_1d_stream")
-               .select(*cols).collect()}
-    finally:
-        q.stop()
+    _drain(spark, src + "/s=*", schema, store, ckpt, max_files=1)
+    raw.where(F.col("slot") >= 15).write.parquet(os.path.join(src, "s=1"))
+    _drain(spark, src + "/s=*", schema, store, ckpt, max_files=1)
+    got = {tuple(r) for r in store.read(spark, "rollup_1d_stream")
+           .select(*cols).collect()}
     from miaplpy_spark.operators.rollup import rollup_1d, rollup_1h
     obs = prepare_observations(raw, CFG)
     exp = {tuple(r) for r in rollup_1d(rollup_1h(obs, CFG), CFG)
@@ -106,25 +104,19 @@ def test_staging_partitioned_and_pruned(spark, workdir):
     os.makedirs(src)
     raw.where(F.col("slot") < 20).write.parquet(os.path.join(src, "s=0"))
     store = TierStore(os.path.join(workdir, "tiers_prune"))
-    stream = (spark.readStream.schema(raw.schema)
-              .option("pathGlobFilter", "*.parquet")
-              .parquet(src + "/s=*"))
-    q = stream_rollup_1h(prepare_observations(stream, CFG), store, CFG,
-                         checkpoint_dir=os.path.join(workdir, "ck_prune"),
-                         trigger_seconds=1, staging_keep_hours=1)
-    try:
-        q.processAllAvailable()
-        raw.where(F.col("slot") >= 20).write.parquet(os.path.join(src, "s=1"))
-        q.processAllAvailable()
-        staging = store.path("stream_staging")
-        parts = sorted(p for p in os.listdir(staging)
-                       if p.startswith("stage_hour="))
-        # after hours 2,3 arrive with keep=1, hours < 2 are gone
-        assert parts == ["stage_hour=2", "stage_hour=3"], parts
-        out = store.read(spark, "rollup_1h_stream")
-        assert out.count() == 3 * 4   # tier still complete and exact
-    finally:
-        q.stop()
+    ckpt = os.path.join(workdir, "ck_prune")
+    _drain(spark, src + "/s=*", raw.schema, store, ckpt,
+           staging_keep_hours=1)
+    raw.where(F.col("slot") >= 20).write.parquet(os.path.join(src, "s=1"))
+    _drain(spark, src + "/s=*", raw.schema, store, ckpt,
+           staging_keep_hours=1)
+    staging = store.path("stream_staging")
+    parts = sorted(p for p in os.listdir(staging)
+                   if p.startswith("stage_hour="))
+    # after hours 2,3 arrive with keep=1, hours < 2 are gone
+    assert parts == ["stage_hour=2", "stage_hour=3"], parts
+    out = store.read(spark, "rollup_1h_stream")
+    assert out.count() == 3 * 4   # tier still complete and exact
     raw.unpersist()
 
 
@@ -139,21 +131,15 @@ def test_late_arrival_below_prune_boundary_raises(spark, workdir):
     os.makedirs(src)
     raw.where(F.col("slot") >= 20).write.parquet(os.path.join(src, "s=0"))
     store = TierStore(os.path.join(workdir, "tiers_late"))
-    stream = (spark.readStream.schema(raw.schema)
-              .option("pathGlobFilter", "*.parquet")
-              .parquet(src + "/s=*"))
-    q = stream_rollup_1h(prepare_observations(stream, CFG), store, CFG,
-                         checkpoint_dir=os.path.join(workdir, "ck_late"),
-                         trigger_seconds=1, staging_keep_hours=0)
-    try:
-        q.processAllAvailable()   # hours 2,3 processed, boundary -> 3
-        raw.where(F.col("slot") < 10).write.parquet(os.path.join(src, "s=1"))
-        with pytest.raises(StreamingQueryException,
-                           match="below the pruned staging boundary"):
-            q.processAllAvailable()
-            q.awaitTermination(30)
-    finally:
-        q.stop()
+    ckpt = os.path.join(workdir, "ck_late")
+    # hours 2,3 processed, boundary -> 3
+    _drain(spark, src + "/s=*", raw.schema, store, ckpt,
+           staging_keep_hours=0)
+    raw.where(F.col("slot") < 10).write.parquet(os.path.join(src, "s=1"))
+    with pytest.raises(StreamingQueryException,
+                       match="below the pruned staging boundary"):
+        _drain(spark, src + "/s=*", raw.schema, store, ckpt,
+               staging_keep_hours=0)
     raw.unpersist()
 
 
@@ -168,22 +154,13 @@ def test_stream_rollup_hour_spanning_micro_batches(spark, workdir):
     raw.where(F.col("slot") < 15).write.parquet(os.path.join(src, "s=0"))
     schema = raw.schema
     store = TierStore(os.path.join(workdir, "tiers2"))
-    stream = (spark.readStream.schema(schema)
-              .option("pathGlobFilter", "*.parquet")
-              .option("maxFilesPerTrigger", "1")
-              .parquet(src + "/s=*"))
-    q = stream_rollup_1h(prepare_observations(stream, CFG), store, CFG,
-                         checkpoint_dir=os.path.join(workdir, "ckpt2"),
-                         trigger_seconds=1)
-    try:
-        q.processAllAvailable()
-        raw.where(F.col("slot") >= 15).write.parquet(os.path.join(src, "s=1"))
-        q.processAllAvailable()
-        got = {(r["doc_id"], r["hour_idx"]): (r["n_obs"], r["sum_tok"])
-               for r in store.read(spark, "rollup_1h_stream")
-               .select("doc_id", "hour_idx", "n_obs", "sum_tok").collect()}
-    finally:
-        q.stop()
+    ckpt = os.path.join(workdir, "ckpt2")
+    _drain(spark, src + "/s=*", schema, store, ckpt, max_files=1)
+    raw.where(F.col("slot") >= 15).write.parquet(os.path.join(src, "s=1"))
+    _drain(spark, src + "/s=*", schema, store, ckpt, max_files=1)
+    got = {(r["doc_id"], r["hour_idx"]): (r["n_obs"], r["sum_tok"])
+           for r in store.read(spark, "rollup_1h_stream")
+           .select("doc_id", "hour_idx", "n_obs", "sum_tok").collect()}
     from miaplpy_spark.operators.rollup import rollup_1h
     exp = {(r["doc_id"], r["hour_idx"]): (r["n_obs"], r["sum_tok"])
            for r in rollup_1h(prepare_observations(raw, CFG), CFG)
