@@ -15,6 +15,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+# the phase-linking estimators _link_batch dispatches on; the
+# sequential_* names take the same branch as their plain forms
+PHASE_LINKING_METHODS = ("EVD", "EMI", "sequential_EMI", "PTA",
+                         "sequential_PTA", "SBW")
+
 
 @dataclass(frozen=True)
 class EngineConfig:
@@ -27,7 +32,8 @@ class EngineConfig:
     # kernel
     n_samples: int = 32                # S: ensemble width per slot (complex)
     vocab_size: int = 50257
-    method: str = "sequential_EMI"     # EVD | EMI | sequential_EMI | SBW
+    method: str = "sequential_EMI"     # EVD | EMI | sequential_EMI |
+    # PTA | sequential_PTA | SBW (PHASE_LINKING_METHODS)
     sbw_lag: int = 10
     shp_alpha: float = 0.05
     shp_test: str = "KS"               # KS | TTEST | AD (N2/N4/N5 dispatch)
@@ -61,6 +67,12 @@ class EngineConfig:
     sources: tuple = ("web", "code", "books", "wiki",
                       "chat", "forums", "papers", "news")
     zipf_alpha: float = 1.5
+
+    def __post_init__(self):
+        # an unknown name would otherwise fall through to EVD unnoticed
+        if self.method not in PHASE_LINKING_METHODS:
+            raise ValueError(f"unknown phase-linking method {self.method!r}; "
+                             f"expected one of {PHASE_LINKING_METHODS}")
 
     @property
     def hour_seconds(self) -> int:

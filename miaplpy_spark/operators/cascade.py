@@ -10,7 +10,11 @@ Per tier:
 3. run the rollup kernel on the remaining buckets only
 4. MERGE the output per bucket (dynamic partition overwrite /
    Iceberg overwritePartitions)
-5. append checkpoint rows (bucket, rows_processed, lineage) — only
+5. count the committed rows of every attempted bucket from the table
+   just written (a grouped count of its ``bucket`` partition column;
+   no column data is read), so a retried task can never be counted
+   twice
+6. append checkpoint rows (bucket, rows_processed, lineage) — only
    after the write commits (flag-written-last, lib/utils.pyx:1195)
 """
 
@@ -21,7 +25,6 @@ import json
 from dataclasses import asdict
 
 import pyspark.sql.functions as F
-from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import EngineConfig
@@ -30,22 +33,6 @@ from .checkpoint import CheckpointLog
 from .rollup import _key_cols, doc_bucket, rollup_1d, rollup_1h, with_doc_keys
 
 TIER_1H, TIER_1D = "rollup_1h", "rollup_1d"
-
-
-class _BucketCountParam(AccumulatorParam):
-    """dict[bucket -> rows] accumulator: per-bucket rows-processed
-    metrics collected DURING the tier write job, replacing the previous
-    post-write re-scan of the whole committed tier (which doubled tier
-    I/O at scale). Metrics only — a retried task may double-count; the
-    Iceberg deployment reads snapshot summary metrics instead."""
-
-    def zero(self, value):
-        return {}
-
-    def addInPlace(self, a, b):
-        for k, v in b.items():
-            a[k] = a.get(k, 0) + v
-        return a
 
 
 def lineage_hash(cfg: EngineConfig, tier: str, input_id: str) -> str:
@@ -61,9 +48,11 @@ def _checkpointed_step(spark: SparkSession, store: TierStore,
     """The one resume protocol of every checkpointed step: build the
     input with ``inp()`` (only when some bucket remains, so a no-op
     rerun reads nothing), cull its rows whose ``bucket`` is already
-    completed for (tier, lineage), run ``write(remaining, done_buckets)
-    -> {bucket: rows}`` and only then log every attempted bucket.
-    ``extra`` items ride in the returned metrics after the lineage."""
+    completed for (tier, lineage), run ``write(remaining,
+    done_buckets)``, which commits ``tier``, then count each attempted
+    bucket's rows in the committed table and only then log them. This
+    is the only place rows_processed is computed. ``extra`` items ride
+    in the returned metrics after the lineage."""
     ckpt = CheckpointLog(store)
     done_set = set()
     if resume:
@@ -85,7 +74,16 @@ def _checkpointed_step(spark: SparkSession, store: TierStore,
         # the set is already on the driver: cull with it rather than
         # aggregating the log a second time for a join
         rest = rest.where(~bucket.isin(sorted(done_set)))
-    rows = write(rest, done_set)
+    write(rest, done_set)
+    # count what the commit holds, not what the tasks emitted: a
+    # retried task's rows land once. The read's only schema field is
+    # the partition column, so the scan plans as partition values
+    # plus footer row counts and reads no column data (an empty
+    # first write leaves a bare directory, which reads as 0 rows)
+    written = store.read(spark, tier, schema="bucket int")
+    if done_set:
+        written = written.where(~F.col("bucket").isin(sorted(done_set)))
+    rows = dict(written.groupBy("bucket").count().collect())
     # EVERY attempted bucket is checkpointed, including buckets the
     # input left empty (rows=0): a permanently-empty bucket would
     # otherwise never reach the full-skip short-circuit, and on
@@ -100,23 +98,6 @@ def _checkpointed_step(spark: SparkSession, store: TierStore,
             "rows_written": int(sum(c for _, c in counts))}
 
 
-def _run_tier(spark: SparkSession, tier: str, inp, rollup_fn,
-              store: TierStore, cfg: EngineConfig, input_id: str,
-              resume: bool) -> dict:
-    def write(rest, done_set):
-        # rows-processed metrics per bucket come from the accumulator
-        # the write job itself populates — no second scan of the
-        # committed tier
-        acc = spark.sparkContext.accumulator({}, _BucketCountParam())
-        store.merge_partitions(rollup_fn(rest, cfg, counts_acc=acc), tier,
-                               partition_col="bucket")
-        return acc.value
-
-    return _checkpointed_step(spark, store, cfg, tier,
-                              lineage_hash(cfg, tier, input_id), resume,
-                              inp, F.col("bucket"), write)
-
-
 def run_cascade(
     spark: SparkSession,
     raw_obs: DataFrame,
@@ -129,8 +110,10 @@ def run_cascade(
     output of datagen.prepare_observations (already JVM-side compact).
     Resumable: a rerun after partial failure recomputes only buckets
     missing from the checkpoint log."""
-    m1 = _run_tier(spark, TIER_1H, lambda: raw_obs, rollup_1h, store, cfg,
-                   input_id, resume)
+    m1 = _checkpointed_step(
+        spark, store, cfg, TIER_1H, lineage_hash(cfg, TIER_1H, input_id),
+        resume, lambda: raw_obs, F.col("bucket"),
+        lambda rest, _: store.merge_partitions(rollup_1h(rest, cfg), TIER_1H))
     # lineage contract (round-4 ADVICE, resolved by SCOPING): both
     # tier lineages key on the caller's input_id, NOT the store's
     # content token. Within run_cascade the 1h content is a pure
@@ -145,9 +128,11 @@ def run_cascade(
     # restamp contract. Out-of-band edits to the 1h tier are outside
     # run_cascade's input_id contract by design — route them through a
     # new input_id or the incremental path.
-    m2 = _run_tier(spark, TIER_1D, lambda: store.read(spark, TIER_1H),
-                   rollup_1d, store, cfg, input_id + ">" + m1["lineage"],
-                   resume)
+    m2 = _checkpointed_step(
+        spark, store, cfg, TIER_1D,
+        lineage_hash(cfg, TIER_1D, input_id + ">" + m1["lineage"]), resume,
+        lambda: store.read(spark, TIER_1H), F.col("bucket"),
+        lambda rest, _: store.merge_partitions(rollup_1d(rest, cfg), TIER_1D))
     return {"raw->1h": m1, "1h->1d": m2}
 
 
@@ -282,14 +267,7 @@ def run_inversion_step(
                     old = old.where(
                         ~F.col("bucket").isin([int(b) for b in done_set]))
                 inv = merge_timeseries_history(old, inv, cfg)
-        # materialized once: the per-bucket count and the MERGE below
-        # both read it
-        inv = inv.localCheckpoint(eager=True)
-        rows = {int(r["bucket"]): int(r["n"]) for r in
-                inv.groupBy("bucket").agg(F.count("*").alias("n")).collect()}
-        if rows:   # never commit an empty merge snapshot
-            store.merge_partitions(inv, TIER_TS, partition_col="bucket")
-        return rows
+        store.merge_partitions(inv, TIER_TS)
 
     # cull on the DOC-PURE derived bucket (the timeseries table's
     # partition key — invert_network re-derives it from the doc hash),

@@ -176,12 +176,8 @@ class CheckpointLog:
 
     def metrics(self, spark: SparkSession) -> DataFrame:
         """Per-(tier, bucket) lineage + rows-processed view (north_rule
-        'every partition emits lineage + rows-processed metrics')."""
-        df = self._read(spark)
-        if df is None:
-            return spark.createDataFrame([], _SCHEMA)
-        return (df.groupBy("tier", "partition_key")
-                  .agg(F.max_by("rows_processed", "updated_at").alias("rows_processed"),
-                       F.max_by("lineage", "updated_at").alias("lineage"),
-                       F.max("updated_at").alias("updated_at"),
-                       F.count("*").alias("n_runs")))
+        'every partition emits lineage + rows-processed metrics'): the
+        latest completion row of each bucket, through ``_latest``.
+        Watermark rows are not tiers and are left out."""
+        df = self._latest(spark, ~F.col("tier").startswith(_WATERMARK))
+        return spark.createDataFrame([], _SCHEMA) if df is None else df

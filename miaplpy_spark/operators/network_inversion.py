@@ -52,8 +52,7 @@ def sequential_pairs_idx(n: int, conn: int = 3) -> list[tuple[int, int]]:
 
 def invert_network(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
                    conn: int = 3, num_partitions: int | None = None,
-                   method: str = "L2", weight_func: str = "var",
-                   l1_alpha: float = 0.01) -> DataFrame:
+                   method: str = "L2", l1_alpha: float = 0.01) -> DataFrame:
     """hourly tier -> per-doc inverted time series + network temporal
     coherence. One exchange (by bucket); per-doc phase series assembled
     in the kernel; docs sharing a window count solve in one batch.
@@ -121,7 +120,7 @@ def invert_network(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
             if method == "WLS":
                 qs = np.clip(q[pos], 0.0, 1.0)
                 gamma = np.sqrt(qs[:, I] * qs[:, J]).T   # (pairs, D)
-                Wsqrt = coherence2weight_sqrt(gamma, weight_func)
+                Wsqrt = coherence2weight_sqrt(gamma, "var")
                 ts = estimate_timeseries_wls_batch(A, Y, Wsqrt)
             elif method == "L1":
                 X = invert_l1_batch(A, Y, alpha=l1_alpha)

@@ -367,17 +367,6 @@ def _emit(cols: dict, schema: pa.Schema) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
-def _acc_bucket_counts(acc, buckets: np.ndarray) -> None:
-    """Fold this output batch's per-bucket row counts into a dict
-    accumulator (rows-processed metrics without a post-write re-scan;
-    task retries can double-count — metrics only, never correctness;
-    the Iceberg deployment reads snapshot summaries instead)."""
-    if acc is None:
-        return
-    vals, cnts = np.unique(buckets, return_counts=True)
-    acc.add({int(b): int(c) for b, c in zip(vals, cnts)})
-
-
 def _shp_present(phi_dense: np.ndarray, present: np.ndarray,
                  test: str, alpha: float) -> np.ndarray:
     """SHP membership inside the window (N1, get_shp_row_col_c
@@ -574,8 +563,8 @@ def day_windows(hr: dict, cfg: EngineConfig) -> tuple[np.ndarray, dict]:
     return starts, dy
 
 
-def make_rollup_1h_kernel(cfg: EngineConfig, counts_acc=None,
-                          tok_col: str = "zphi", with_strings: bool = True):
+def make_rollup_1h_kernel(cfg: EngineConfig, tok_col: str = "zphi",
+                          with_strings: bool = True):
     out_schema = _pa_schema(_tier_ddl(ROLLUP_1H_SCHEMA, cfg, with_strings))
     key_cols = _key_cols(cfg)
     list_cols = {tok_col: (cfg.n_samples,
@@ -588,7 +577,6 @@ def make_rollup_1h_kernel(cfg: EngineConfig, counts_acc=None,
             num = _extract(region, key_cols + ["slot"], list_cols)
             _unpack_zstat(num, _ZSTAT_1H)
             starts, hr = hour_windows(num, cfg)
-            _acc_bucket_counts(counts_acc, hr["bucket"])
             yield _emit({**hr, **_strings(region, starts)}, out_schema)
 
     return kernel
@@ -602,8 +590,7 @@ def attach_doc_dim(df_core: DataFrame, doc_dim: DataFrame) -> DataFrame:
 
     LEFT join: a tier row whose doc_key is missing from the supplied
     dimension surfaces with null doc_id/source instead of silently
-    vanishing (an inner join would also desynchronize the checkpoint
-    rows_written metric, which counts pre-join kernel output)."""
+    vanishing, so the output keeps one row per kernel output row."""
     if ("doc_key2" in df_core.columns
             and "doc_key2" not in doc_dim.columns):
         # a narrow dim under a wide tier would quietly degrade the
@@ -622,8 +609,7 @@ def attach_doc_dim(df_core: DataFrame, doc_dim: DataFrame) -> DataFrame:
 
 
 def rollup_1h(obs: DataFrame, cfg: EngineConfig = EngineConfig(),
-              num_partitions: int | None = None,
-              counts_acc=None) -> DataFrame:
+              num_partitions: int | None = None) -> DataFrame:
     """raw observations -> 1h tier. One shuffle (by bucket), then the
     kernel runs map-side; output stays partitioned by bucket for the
     1d tier and the MERGE write (partitioning reuse, no second
@@ -653,7 +639,7 @@ def rollup_1h(obs: DataFrame, cfg: EngineConfig = EngineConfig(),
     part = part.select(*strs, *key_cols, "slot", tok_col,
                        _pack_zstat(_ZSTAT_1H))
     out = part.mapInArrow(
-        make_rollup_1h_kernel(cfg, counts_acc, tok_col, with_strings),
+        make_rollup_1h_kernel(cfg, tok_col, with_strings),
         _tier_ddl(ROLLUP_1H_SCHEMA, cfg, with_strings))
     return out.withColumn(
         "hour_ts",
@@ -661,8 +647,7 @@ def rollup_1h(obs: DataFrame, cfg: EngineConfig = EngineConfig(),
                             + F.col("hour_idx").cast("long") * cfg.hour_seconds))
 
 
-def make_rollup_1d_kernel(cfg: EngineConfig, counts_acc=None,
-                          with_strings: bool = True):
+def make_rollup_1d_kernel(cfg: EngineConfig, with_strings: bool = True):
     out_schema = _pa_schema(_tier_ddl(ROLLUP_1D_SCHEMA, cfg, with_strings))
     key_cols = _key_cols(cfg)
     list_cols = {"linked_phase": (cfg.slots_per_hour, np.float32),
@@ -675,7 +660,6 @@ def make_rollup_1d_kernel(cfg: EngineConfig, counts_acc=None,
             num = _extract(region, key_cols + ["hour_idx"], list_cols)
             _unpack_zstat(num, _ZSTAT_1D)
             starts, dy = day_windows(num, cfg)
-            _acc_bucket_counts(counts_acc, dy["bucket"])
             yield _emit({**dy, **_strings(region, starts)}, out_schema)
 
     return kernel
@@ -683,8 +667,7 @@ def make_rollup_1d_kernel(cfg: EngineConfig, counts_acc=None,
 
 def rollup_1d(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
               num_partitions: int | None = None,
-              assume_partitioned: bool = False,
-              counts_acc=None) -> DataFrame:
+              assume_partitioned: bool = False) -> DataFrame:
     """1h tier -> 1d tier.
 
     ``assume_partitioned=True`` is the in-pipeline fast path: a
@@ -715,7 +698,7 @@ def rollup_1d(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
     part = part.select(*strs, *key_cols, "hour_idx", "linked_phase",
                        "squeezed", _pack_zstat(_ZSTAT_1D))
     out = part.mapInArrow(
-        make_rollup_1d_kernel(cfg, counts_acc, with_strings),
+        make_rollup_1d_kernel(cfg, with_strings),
         _tier_ddl(ROLLUP_1D_SCHEMA, cfg, with_strings))
     return out.withColumn(
         "day_ts",

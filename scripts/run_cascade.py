@@ -47,7 +47,10 @@ This script applies the codegen cache size itself, from
 ``miaplpy_spark.session.CODEGEN_CACHE_MAX_ENTRIES`` (see that module's
 tuning list); the ``--conf`` line names it for launches that build the
 session elsewhere. The printed JSON's ``codegen_compiles`` is the
-number of classes Spark compiled during the run.
+number of classes Spark compiled during the run; its ``checkpoints``
+list holds one row per (tier, bucket): the latest completion's
+rows_processed (the rows the bucket's committed partition held after
+its write) and lineage.
 
 With no --input, a deterministic synthetic sequences table at --scale
 is generated (sandbox mode). On a cluster, --warehouse is an Iceberg
@@ -74,6 +77,7 @@ from miaplpy_spark.operators.cascade import (
     run_cascade_incremental,
     run_inversion_step,
 )
+from miaplpy_spark.operators.checkpoint import CheckpointLog
 from miaplpy_spark.operators.compress import apply_retention_1h
 from miaplpy_spark.session import CODEGEN_CACHE_MAX_ENTRIES
 from miaplpy_spark.sources.catalog import TierStore
@@ -231,9 +235,15 @@ def main(argv=None) -> int:
                     spark, store, cfg, pre_lin,
                     method=args.invert_method, input_id=input_id)
 
+    ckpt = CheckpointLog(store)
     if args.compact_checkpoints:
-        from miaplpy_spark.operators.checkpoint import CheckpointLog
-        metrics["compact"] = CheckpointLog(store).compact(spark)
+        metrics["compact"] = ckpt.compact(spark)
+    # the per-(tier, bucket) run report: each bucket's latest completion
+    metrics["checkpoints"] = [
+        {"tier": r["tier"], "bucket": r["partition_key"],
+         "rows_processed": r["rows_processed"], "lineage": r["lineage"]}
+        for r in ckpt.metrics(spark).orderBy("tier", "partition_key")
+                     .collect()]
 
     metrics["wall_s"] = round(time.time() - t0, 2)
     metrics["codegen_compiles"] = int(

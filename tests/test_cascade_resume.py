@@ -121,6 +121,18 @@ def test_metrics_view(spark, obs, workdir):
     assert met["lineage"].notna().all()
 
 
+def test_metrics_view_lists_completions_not_watermarks(spark, workdir):
+    """Watermark rows share the log but are not tiers: the metrics view
+    keeps only the latest completion row of each (tier, bucket)."""
+    ckpt = CheckpointLog(TierStore(workdir))
+    ckpt.log_completion(spark, "rollup_1h", "old", [(0, 3)])
+    ckpt.log_completion(spark, "rollup_1h", "lin", [(0, 5)])
+    ckpt.set_watermark(spark, "rollup_1h", 7)
+    rows = [r.asDict() for r in ckpt.metrics(spark).collect()]
+    assert [(r["tier"], r["partition_key"], r["rows_processed"],
+             r["lineage"]) for r in rows] == [("rollup_1h", 0, 5, "lin")]
+
+
 def test_checkpoint_compaction_preserves_resume(spark, obs, workdir):
     """compact() collapses the append-only log to one row per (tier,
     bucket) without changing what completed_keys / latest_completions

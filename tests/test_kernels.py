@@ -367,6 +367,19 @@ def test_pta_refines_emi(sim):
                                atol=1e-6)
 
 
+def test_engine_config_rejects_unknown_method():
+    """Every name the phase-linking dispatch knows constructs; any
+    other name raises at construction instead of running EVD."""
+    from miaplpy_spark.config import EngineConfig
+
+    for name in ("EVD", "EMI", "sequential_EMI", "PTA", "sequential_PTA",
+                 "SBW"):
+        assert EngineConfig(method=name).method == name
+    for name in ("EMl", "emi", "sequential_EVD", ""):
+        with pytest.raises(ValueError, match="unknown phase-linking method"):
+            EngineConfig(method=name)
+
+
 def test_timeseries_cov_propagation():
     """A18: ts_cov = G+ diag(std^2) G+T; identity-weight sanity via a
     fully-determined chain network where propagation is exact."""

@@ -52,8 +52,23 @@ def test_full_lifecycle_then_noop_rerun(spark, workdir, capsys):
     # the run report counts the classes Spark compiled during the run
     assert isinstance(m1["codegen_compiles"], int)
     assert m1["codegen_compiles"] >= 0
+    # ... and one checkpoint row per (tier, bucket): the rows each
+    # bucket's committed partition held, summing to the step's metric
+    cps = m1["checkpoints"]
+    assert [(c["tier"], c["bucket"]) for c in cps] == [
+        (t, b) for t in ("rollup_1d", "rollup_1h", "timeseries")
+        for b in range(4)]
+    assert all(c["rows_processed"] > 0 for c in cps)
+    for tier, step in (("rollup_1h", m1["cascade"]["raw->1h"]),
+                       ("rollup_1d", m1["cascade"]["1h->1d"]),
+                       ("timeseries", m1["invert"])):
+        assert sum(c["rows_processed"] for c in cps
+                   if c["tier"] == tier) == step["rows_written"], tier
+    assert {c["lineage"] for c in cps if c["tier"] == "rollup_1h"} == {
+        m1["cascade"]["raw->1h"]["lineage"]}
 
     m2 = _run(capsys, args)
+    assert m2["checkpoints"] == cps
     assert m2["cascade"]["raw->1h"]["buckets_processed"] == 0
     assert m2["cascade"]["1h->1d"]["buckets_processed"] == 0
     assert m2["retention"]["n_blobs"] == 0

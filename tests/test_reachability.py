@@ -131,9 +131,6 @@ MATERIALIZATIONS = {
     "sources.catalog::TierStore.overwrite":
         "a static parquet overwrite deletes the table before its input, "
         "which may read that table, is read",
-    "operators.cascade::run_inversion_step":
-        "the per-bucket row count and the timeseries MERGE both read "
-        "the inversion output",
     "operators.compress::apply_retention_1h":
         "the blob metrics and the cold-tier MERGE both read the "
         "compressed blobs",
