@@ -401,9 +401,9 @@ def _shp_present(phi_dense: np.ndarray, present: np.ndarray,
 # column's width is nearly free (8-col ingress 5.4 s vs 3-col-with-
 # list 3.3 s, measured with a count-only kernel) — so five scalar
 # columns ride one list. Values are exact in the lane type (int64 at
-# 1h; float64 at 1d, where every packed int is far below 2^53 and
-# float32 round-trips exactly), so kernels unpack bit-identical
-# arrays and outputs are unchanged.
+# 1h; float64 at 1d, where every packed int is far below 2^53 --
+# _unpack_zstat raises otherwise -- and float32 round-trips exactly),
+# so kernels unpack bit-identical arrays and outputs are unchanged.
 class _Lanes(NamedTuple):
     type: str          # Spark lane type, declared with its lanes
     names: tuple
@@ -428,6 +428,10 @@ def _zstat_list(lanes: _Lanes) -> tuple:
 
 def _unpack_zstat(num: dict, lanes: _Lanes) -> None:
     zs = num.pop("zstat")
+    if lanes.type == "double" and (np.abs(zs) >= 2.0**53).any():
+        # the JVM-side cast may already have rounded such an integer
+        raise ValueError("a double zstat lane holds a value of magnitude "
+                         f">= 2^53, where {lanes.names} are not exact")
     for i, name in enumerate(lanes.names):
         num[name] = zs[:, i]
 

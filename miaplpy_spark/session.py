@@ -17,6 +17,13 @@ Tuning rationale (SURVEY.md §4):
   Python task otherwise repeats for each package imported from
   pyspark.zip — about 0.2 CPU-s per task on a 4-core host, close to
   half of a small cascade's CPU.
+- The same daemon imports the UDF modules (``worker_daemon.PRELOAD``)
+  and runs ``gc.freeze()`` before it forks. The stock daemon's full
+  ``gc.collect()`` after every task of a reused worker walked the
+  ~73k objects those imports leave: 27-28 CPU-ms per task, and an
+  engine round runs 76 Python tasks. Frozen, the collect walks ~200
+  objects (0.02 ms), and no worker re-imports the modules (0.35 CPU-s
+  each). The daemon pays 0.35 CPU-s and ~51 MB of RSS once.
 - Codegen cache = CODEGEN_CACHE_MAX_ENTRIES (256) generated classes;
   Spark's default is 100. One lifecycle round (cold cascade -> invert
   -> retention -> restamp, then its resumed rerun) plus the q52

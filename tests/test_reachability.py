@@ -278,3 +278,40 @@ def test_warehouse_tables_match_the_ledger():
     tables = _written_tables()
     assert "tier_watermarks" not in tables
     assert tables == set(WAREHOUSE_TABLES)
+
+
+# The DataFrame methods that ship a package function to the Python
+# workers.
+_UDF_CALLS = {"mapInArrow", "mapInPandas"}
+
+
+def _udf_modules() -> set:
+    """Package modules with a ``.mapInArrow(`` or ``.mapInPandas(``
+    call."""
+    found = set()
+    for module, path in _package_modules().items():
+        for node in ast.walk(ast.parse(open(path).read(), path)):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in _UDF_CALLS):
+                found.add(module)
+    return found
+
+
+def _preload() -> tuple:
+    path = os.path.join(REPO, PACKAGE, "worker_daemon.py")
+    node = next(n for n in ast.parse(open(path).read(), path).body
+                if isinstance(n, ast.Assign)
+                and any(isinstance(t, ast.Name) and t.id == "PRELOAD"
+                        for t in n.targets))
+    return ast.literal_eval(node.value)
+
+
+def test_worker_preload_matches_the_udf_sites():
+    """The worker daemon imports ``PRELOAD`` before it freezes its heap
+    and forks. A UDF module missing from it is imported by every worker
+    and walked by every per-task collect; an entry with no UDF call is
+    memory every run pays for nothing."""
+    preload = _preload()
+    assert len(set(preload)) == len(preload)
+    assert set(preload) == _udf_modules()

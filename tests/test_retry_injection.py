@@ -8,11 +8,13 @@ happen in a child process with its own ``local[2,2]`` session (two
 attempts per task).
 
 The failure is injected from outside the package: the child wraps
-``cascade.rollup_1h`` and ``network_inversion.invert_network`` with a
-pass-through ``mapInArrow`` stage. In the first task attempt that
-reaches it, the stage yields its first Arrow batch, drops a marker file
-and raises; every other task, and the retry, passes its batches
-through untouched."""
+``cascade.rollup_1h``, ``network_inversion.invert_network`` and
+``compress.compress_1h`` (the blobs retention ages into the cold tier)
+with a pass-through ``mapInArrow`` stage. In the first task attempt
+that reaches it, the stage yields its first Arrow batch, drops a marker
+file and raises; every other task, and the retry, passes its batches
+through untouched. A failed task ends its Python worker, so each retry
+runs in a worker freshly forked from the engine daemon."""
 
 import json
 import os
@@ -22,8 +24,9 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = {"rollup_1h": ["doc_id", "hour_idx"],
           "rollup_1d": ["doc_id", "day_idx"],
-          "timeseries": ["doc_id"]}
-INJECTED = ("rollup_1h", "invert_network")
+          "timeseries": ["doc_id"],
+          "rollup_1h_cold": ["doc_id", "day_idx"]}
+INJECTED = ("rollup_1h", "invert_network", "compress_1h")
 
 
 def _fail_once(fn, marker):
@@ -66,11 +69,11 @@ def _table_hash(spark, store, table) -> str:
 
 
 def _child(root: str) -> dict:
-    """Run the cascade and the inversion once plainly and once with the
-    injected failures, each into its own warehouse."""
+    """Run the cascade, the inversion and retention once plainly and
+    once with the injected failures, each into its own warehouse."""
     from miaplpy_spark.config import EngineConfig, ScaleSpec
     from miaplpy_spark.datagen import generate_sequences, prepare_observations
-    from miaplpy_spark.operators import cascade, network_inversion
+    from miaplpy_spark.operators import cascade, compress, network_inversion
     from miaplpy_spark.operators.checkpoint import CheckpointLog
     from miaplpy_spark.session import get_spark
     from miaplpy_spark.sources.catalog import TierStore
@@ -90,6 +93,9 @@ def _child(root: str) -> dict:
         # the inversion lineage hashes the 1h tier's file listing, so it
         # differs between warehouses; every other field must match
         metrics["invert"] = {k: v for k, v in inv.items() if k != "lineage"}
+        # day 0 of the two ages into the cold tier
+        metrics["retention"] = compress.apply_retention_1h(spark, store, 1,
+                                                           cfg)
         ckpt = CheckpointLog(store)
         return {
             "metrics": metrics,
@@ -110,6 +116,8 @@ def _child(root: str) -> dict:
     network_inversion.invert_network = _fail_once(
         network_inversion.invert_network,
         os.path.join(root, "invert_network"))
+    compress.compress_1h = _fail_once(compress.compress_1h,
+                                      os.path.join(root, "compress_1h"))
     out["injected"] = run("injected")
     spark.stop()
     return out
@@ -126,11 +134,12 @@ def test_retried_tasks_leave_outputs_and_checkpoints_unchanged(workdir):
     res = json.loads(proc.stdout.strip().splitlines()[-1])
     plain, injected = res["plain"], res["injected"]
     assert plain["markers"] == []
-    assert injected["markers"] == sorted(INJECTED)   # both stages failed once
+    assert injected["markers"] == sorted(INJECTED)   # each stage failed once
     assert injected["hashes"] == plain["hashes"]
     assert injected["completions"] == plain["completions"]
     assert injected["metrics"] == plain["metrics"]
     assert all(rows for rows in plain["completions"].values())
+    assert plain["metrics"]["retention"]["n_blobs"] > 0
 
 
 if __name__ == "__main__":

@@ -383,3 +383,21 @@ def test_string_free_core_path_matches(spark):
     np.testing.assert_array_equal(
         np.stack(full_1d["adjusted_phase"].to_numpy()),
         np.stack(core_1d["adjusted_phase"].to_numpy()))
+
+
+def test_double_zstat_lane_rejects_inexact_integers():
+    """The 1d tier packs its integer stats into float64 lanes, exact
+    only below 2^53; a larger value may have been rounded by the
+    JVM-side cast already, so unpacking it raises. Sparkless."""
+    from miaplpy_spark.operators.rollup import _ZSTAT_1D, _unpack_zstat
+
+    names = _ZSTAT_1D.names
+    row = np.arange(1, len(names) + 1, dtype=np.float64)
+    row[names.index("sum_tok")] = 2.0**53 - 1
+    num = {"zstat": row[None, :].copy()}
+    _unpack_zstat(num, _ZSTAT_1D)
+    assert num["sum_tok"][0] == 2**53 - 1
+
+    row[names.index("sum_tok")] = 2.0**53 + 2
+    with pytest.raises(ValueError, match="2\\^53"):
+        _unpack_zstat({"zstat": row[None, :].copy()}, _ZSTAT_1D)

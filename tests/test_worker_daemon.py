@@ -71,3 +71,30 @@ def test_python_tasks_run_under_the_engine_daemon(spark):
 
     rows = spark.range(1).coalesce(1).mapInArrow(probe, "wrapped boolean").collect()
     assert rows == [Row(wrapped=True)]
+
+
+def test_workers_fork_from_a_frozen_preloaded_heap(spark):
+    """The daemon imports ``PRELOAD`` and freezes its heap before it
+    forks, so a worker starts with those modules imported and its
+    per-task ``gc.collect()`` walks only the unfrozen rest."""
+    def probe(batches):
+        import gc
+        import sys
+
+        import pyarrow as pa
+
+        from miaplpy_spark import worker_daemon
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({
+            "frozen": [gc.get_freeze_count()],
+            "unfrozen": [len(gc.get_objects())],
+            "preloaded": [all(m in sys.modules
+                              for m in worker_daemon.PRELOAD)]})
+
+    row, = spark.range(1).coalesce(1).mapInArrow(
+        probe, "frozen long, unfrozen long, preloaded boolean").collect()
+    assert row["frozen"] > 0
+    assert row["unfrozen"] < row["frozen"]
+    assert row["preloaded"]
