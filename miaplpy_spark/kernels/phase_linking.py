@@ -157,15 +157,13 @@ def evd_phase(coh: np.ndarray) -> np.ndarray:
 def evd_phase_batch(coh: np.ndarray) -> np.ndarray:
     """Batched EVD over complex64 (B, N, N) -> (B, N), bit-identical to
     np.linalg.eigh per member. A member whose eigh does not converge
-    (np.linalg.eigh would raise for the whole batch) is retried alone
-    with np.linalg.eigh; if that raises too, its vec is all ones, so it
-    keeps its raw phase and gam_pta_batch reports its quality."""
+    (np.linalg.eigh would raise for the whole batch) gets vec = ones,
+    so it keeps its raw phase and gam_pta_batch reports its quality.
+    Retrying it alone would not help: _eigh_vecs_batch_status already
+    solves each member on its own, with the gufunc np.linalg.eigh runs
+    or, without it, by a per-member np.linalg.eigh."""
     vecs, ok = _eigh_vecs_batch_status(coh)
-    for b in np.flatnonzero(~ok):
-        try:
-            vecs[b] = np.linalg.eigh(coh[b])[1]
-        except np.linalg.LinAlgError:
-            vecs[b] = 1
+    vecs[~ok] = 1
     return _rotate_to_ref(vecs[..., :, -1])
 
 

@@ -407,13 +407,14 @@ def _shp_present(phi_dense: np.ndarray, present: np.ndarray,
 class _Lanes(NamedTuple):
     type: str          # Spark lane type, declared with its lanes
     names: tuple
+    n_int: int         # how many leading lanes hold integers
 
 
 _ZSTAT_1H = _Lanes("long", ("bucket", "n_tok", "sum_tok", "min_tok",
-                            "max_tok"))
+                            "max_tok"), 5)
 _ZSTAT_1D = _Lanes("double", ("bucket", "n_obs", "n_filled", "sum_tok",
                               "min_tok", "max_tok", "mean_ntok",
-                              "quality"))
+                              "quality"), 6)
 
 
 def _pack_zstat(lanes: _Lanes) -> F.Column:
@@ -428,10 +429,12 @@ def _zstat_list(lanes: _Lanes) -> tuple:
 
 def _unpack_zstat(num: dict, lanes: _Lanes) -> None:
     zs = num.pop("zstat")
-    if lanes.type == "double" and (np.abs(zs) >= 2.0**53).any():
+    ints = zs[:, :lanes.n_int]
+    if lanes.type == "double" and (np.abs(ints) >= 2.0**53).any():
         # the JVM-side cast may already have rounded such an integer
-        raise ValueError("a double zstat lane holds a value of magnitude "
-                         f">= 2^53, where {lanes.names} are not exact")
+        raise ValueError("an integer zstat lane holds a value of magnitude "
+                         f">= 2^53, where {lanes.names[:lanes.n_int]} are "
+                         "not exact in a double")
     for i, name in enumerate(lanes.names):
         num[name] = zs[:, i]
 

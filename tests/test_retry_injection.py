@@ -24,8 +24,10 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = {"rollup_1h": ["doc_id", "hour_idx"],
           "rollup_1d": ["doc_id", "day_idx"],
-          "timeseries": ["doc_id"],
-          "rollup_1h_cold": ["doc_id", "day_idx"]}
+          "timeseries": ["doc_id"]}
+# what retention rewrites: the cold tier it writes, the hot rows it keeps
+RETAINED = {"rollup_1h_cold": ["doc_id", "day_idx"],
+            "rollup_1h": TABLES["rollup_1h"]}
 INJECTED = ("rollup_1h", "invert_network", "compress_1h")
 
 
@@ -54,14 +56,14 @@ def _fail_once(fn, marker):
     return wrapped
 
 
-def _table_hash(spark, store, table) -> str:
+def _table_hash(spark, store, table, keys) -> str:
     import hashlib
     import io
 
     import pyarrow as pa
 
     tbl = store.read(spark, table).toArrow().sort_by(
-        [(k, "ascending") for k in TABLES[table]])
+        [(k, "ascending") for k in keys])
     sink = io.BytesIO()
     with pa.ipc.new_stream(sink, tbl.schema) as w:
         w.write_table(tbl)
@@ -93,13 +95,17 @@ def _child(root: str) -> dict:
         # the inversion lineage hashes the 1h tier's file listing, so it
         # differs between warehouses; every other field must match
         metrics["invert"] = {k: v for k, v in inv.items() if k != "lineage"}
+        hashes = {t: _table_hash(spark, store, t, k)
+                  for t, k in TABLES.items()}
         # day 0 of the two ages into the cold tier
         metrics["retention"] = compress.apply_retention_1h(spark, store, 1,
                                                            cfg)
         ckpt = CheckpointLog(store)
         return {
             "metrics": metrics,
-            "hashes": {t: _table_hash(spark, store, t) for t in TABLES},
+            "hashes": hashes,
+            "retained": {t: _table_hash(spark, store, t, k)
+                         for t, k in RETAINED.items()},
             "completions": {
                 tier: ckpt.latest_completions(spark, tier, lin)
                 for tier, lin in (
@@ -136,6 +142,7 @@ def test_retried_tasks_leave_outputs_and_checkpoints_unchanged(workdir):
     assert plain["markers"] == []
     assert injected["markers"] == sorted(INJECTED)   # each stage failed once
     assert injected["hashes"] == plain["hashes"]
+    assert injected["retained"] == plain["retained"]
     assert injected["completions"] == plain["completions"]
     assert injected["metrics"] == plain["metrics"]
     assert all(rows for rows in plain["completions"].values())

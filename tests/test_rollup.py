@@ -398,6 +398,9 @@ def test_double_zstat_lane_rejects_inexact_integers():
     _unpack_zstat(num, _ZSTAT_1D)
     assert num["sum_tok"][0] == 2**53 - 1
 
+    row[names.index("quality")] = np.inf   # a float lane: not bounded
+    _unpack_zstat({"zstat": row[None, :].copy()}, _ZSTAT_1D)
+
     row[names.index("sum_tok")] = 2.0**53 + 2
     with pytest.raises(ValueError, match="2\\^53"):
         _unpack_zstat({"zstat": row[None, :].copy()}, _ZSTAT_1D)
