@@ -15,10 +15,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-# the phase-linking estimators _link_batch dispatches on; the
-# sequential_* names take the same branch as their plain forms
-PHASE_LINKING_METHODS = ("EVD", "EMI", "sequential_EMI", "PTA",
-                         "sequential_PTA", "SBW")
+# the phase-linking estimators _link_batch dispatches on
+PHASE_LINKING_METHODS = ("EVD", "EMI", "PTA", "SBW")
 
 
 @dataclass(frozen=True)
@@ -32,8 +30,8 @@ class EngineConfig:
     # kernel
     n_samples: int = 32                # S: ensemble width per slot (complex)
     vocab_size: int = 50257
-    method: str = "sequential_EMI"     # EVD | EMI | sequential_EMI |
-    # PTA | sequential_PTA | SBW (PHASE_LINKING_METHODS)
+    method: str = "EMI"                # EVD | EMI | PTA | SBW
+    # (PHASE_LINKING_METHODS)
     sbw_lag: int = 10
     shp_alpha: float = 0.05
     shp_test: str = "KS"               # KS | TTEST | AD (N2/N4/N5 dispatch)
@@ -54,12 +52,6 @@ class EngineConfig:
     # (doc_id, day) instead of doc_id alone, so a single giant doc
     # spreads across partitions while every 1h/1d window's rows stay
     # co-located (windows never span a day boundary)
-    wide_doc_key: bool = False         # 128-bit doc key: group/sort/
-    # join on (doc_key, doc_key2) = two xxhash64 salts. A single
-    # 64-bit key expects ~3e4 birthday collisions at 10^12 docs (each
-    # silently merging two docs' windows); the joint key makes that
-    # ~2^-64. Off by default — the second long costs ~8 B/row through
-    # the shuffle and sandbox scales sit at ~1e-11 collision odds.
 
     # datagen (FIXTURES.md F1)
     seed: int = 42

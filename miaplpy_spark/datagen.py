@@ -17,7 +17,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .config import SCALES, EngineConfig, ScaleSpec
-from .operators.rollup import _key_cols, doc_bucket, with_doc_keys
+from .operators.rollup import doc_bucket, with_doc_keys
 
 
 def _u(seed_tag: str, *cols):
@@ -193,8 +193,8 @@ def generate_doc_dim(spark: SparkSession, scale: str | ScaleSpec = "tiny",
     src = F.lit(cfg.sources[-1])
     for name, thr in reversed(list(zip(cfg.sources[:-1], thresholds[:-1]))):
         src = F.when(u < thr, F.lit(name)).otherwise(src)
-    dim = with_doc_keys(df.select("doc_id", src.alias("source")), cfg)
-    return dim.select(*_key_cols(cfg), "doc_id", "source")
+    dim = with_doc_keys(df.select("doc_id", src.alias("source")))
+    return dim.select("doc_key", "doc_id", "source")
 
 
 def generate_documents(spark: SparkSession, n_docs: int,

@@ -11,11 +11,10 @@ bounded component loop over the pair graph, which is orders of
 magnitude smaller than the corpus); the final assembly is left joins
 of doc-keyed side outputs back onto the doc spine — each side is a
 per-doc aggregate (same cardinality). The assembly joins shuffle on
-``doc_key = xxhash64(doc_id)`` (plus ``doc_key2`` under
-``EngineConfig.wide_doc_key`` — the engine's collision doctrine,
-operators/rollup.py:23-29) rather than the variable-length doc_id
-string: fixed 8/16-byte shuffle keys through three doc-cardinality
-exchanges, the same reason the tier kernels are string-free. Reasons
+``doc_key = xxhash64(doc_id)`` (the engine's one doc key,
+operators/rollup.py) rather than the variable-length doc_id string:
+a fixed 8-byte shuffle key through three doc-cardinality exchanges,
+the same reason the tier kernels are string-free. Reasons
 are evaluated in priority order so a doc dropped for multiple causes
 reports the most fundamental one."""
 
@@ -24,8 +23,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..config import EngineConfig
-from ..operators.rollup import _key_cols, with_doc_keys
+from ..operators.rollup import with_doc_keys
 from .dedup import (connected_components, dedup_keep_list,
                     incremental_minhash_pairs, minhash_lsh_pairs_df)
 from .text import _docs, exact_fingerprint, word_gate_exprs
@@ -57,8 +55,7 @@ def curate_corpus(spark: SparkSession, sf_dir: str,
                   near_dup_threshold: float = 0.35,
                   max_dup_word_frac: float = 0.7,
                   max_top_word_frac: float = 0.2,
-                  max_top_ngram_frac: float = 0.2,
-                  cfg: EngineConfig = EngineConfig()) -> DataFrame:
+                  max_top_ngram_frac: float = 0.2) -> DataFrame:
     """Per-document curation decision (doc_id, lang, n_words, keep,
     reason). Reasons, in priority order:
 
@@ -85,8 +82,8 @@ def curate_corpus(spark: SparkSession, sf_dir: str,
     (dedup_keep_list(doc_spine=...)): every doc gets exactly one
     labeled row (singletons keep=true), so the assembly is a plain
     per-doc column rather than a loser-set semi-join."""
-    # the spine KEEPS doc_id (the output needs it); the key columns
-    # ride alongside and are what the assembly joins shuffle on.
+    # the spine KEEPS doc_id (the output needs it); the key column
+    # rides alongside and is what the assembly joins shuffle on.
     # The quality + repetition gate scalars are computed INLINE on the
     # spine (word_gate_exprs — pure array expressions over the in-row
     # word list): they used to be a separate explode + 4-exchange leg
@@ -99,8 +96,7 @@ def curate_corpus(spark: SparkSession, sf_dir: str,
     # job.
     d = _docs(spark, sf_dir)
     spine = with_doc_keys(d.select(
-        "doc_id", "lang", *word_gate_exprs(F.split("text", " "))), cfg)
-    keys = _key_cols(cfg)
+        "doc_id", "lang", *word_gate_exprs(F.split("text", " "))))
 
     losers = (exact_dup_losers(d)
               .withColumn("is_exact", F.lit(True))
@@ -110,27 +106,26 @@ def curate_corpus(spark: SparkSession, sf_dir: str,
                  .select("doc_id", F.col("keep").alias("near_keep")))
     # side outputs join back onto the spine by key alone, so doc_id
     # never rides through the assembly shuffles
-    exact = with_doc_keys(losers, cfg).drop("doc_id")
-    near = with_doc_keys(near_rows, cfg).drop("doc_id")
+    exact = with_doc_keys(losers).drop("doc_id")
+    near = with_doc_keys(near_rows).drop("doc_id")
 
     return _assemble_decision(
-        spine, exact, near, keys, min_words, max_stopword_ratio,
-        min_ttr, max_dup_word_frac, max_top_word_frac,
-        max_top_ngram_frac)
+        spine, exact, near, min_words, max_stopword_ratio, min_ttr,
+        max_dup_word_frac, max_top_word_frac, max_top_ngram_frac)
 
 
-def _assemble_decision(spine, exact, near, keys, min_words,
-                       max_stopword_ratio, min_ttr, max_dup_word_frac,
-                       max_top_word_frac, max_top_ngram_frac) -> DataFrame:
+def _assemble_decision(spine, exact, near, min_words, max_stopword_ratio,
+                       min_ttr, max_dup_word_frac, max_top_word_frac,
+                       max_top_ngram_frac) -> DataFrame:
     """The shared assembly + priority CASE of curate_corpus and
     curate_batch — ONE definition so the full-corpus and incremental
     decisions can never diverge on reason semantics. ``spine`` already
     carries the inline gate scalars (word_gate_exprs); ``exact``
     carries is_exact, ``near`` carries near_keep, both keyed by
-    ``keys``."""
+    doc_key."""
     out = (spine
-           .join(exact, keys, "left")
-           .join(near, keys, "left"))
+           .join(exact, "doc_key", "left")
+           .join(near, "doc_key", "left"))
     reason = (
         F.when(F.col("is_exact"), F.lit("exact_dup"))
          .when(~F.col("near_keep"), F.lit("near_dup"))
@@ -156,8 +151,7 @@ def curate_batch(spark: SparkSession, batch_dir: str, index_dir: str,
                  near_dup_threshold: float = 0.35,
                  max_dup_word_frac: float = 0.7,
                  max_top_word_frac: float = 0.2,
-                 max_top_ngram_frac: float = 0.2,
-                 cfg: EngineConfig = EngineConfig()) -> DataFrame:
+                 max_top_ngram_frac: float = 0.2) -> DataFrame:
     """INCREMENTAL curation: the per-batch decision a continuously-
     growing corpus actually runs — curate an ARRIVING batch against a
     ``dedup.build_minhash_index`` store without rescanning or
@@ -196,8 +190,7 @@ def curate_batch(spark: SparkSession, batch_dir: str, index_dir: str,
     # gate scalars inline on the spine (word_gate_exprs) — same
     # no-leg, no-join shape as curate_corpus
     spine = with_doc_keys(d.select(
-        "doc_id", "lang", *word_gate_exprs(F.split("text", " "))), cfg)
-    keys = _key_cols(cfg)
+        "doc_id", "lang", *word_gate_exprs(F.split("text", " "))))
 
     # exact leg: batch fingerprints vs the stored sidecar + in-batch
     # keep-first. The store side streams (broadcast probe, no store
@@ -217,7 +210,7 @@ def curate_batch(spark: SparkSession, batch_dir: str, index_dir: str,
               .where(F.col("in_store").isNotNull()
                      | (F.col("doc_id") != F.col("keeper")))
               .select("doc_id", F.lit(True).alias("is_exact")))
-    exact = with_doc_keys(losers, cfg).drop("doc_id")
+    exact = with_doc_keys(losers).drop("doc_id")
 
     # near leg: components over the pairs touching this batch; a
     # component is store-tainted iff any member is NOT a batch doc.
@@ -241,9 +234,8 @@ def curate_batch(spark: SparkSession, batch_dir: str, index_dir: str,
                          .alias("near_keep")))
     # batch docs in no pair never appear here: the CASE's null
     # fallthrough keeps them, matching the spine-total singleton rule
-    near = with_doc_keys(near_rows, cfg).drop("doc_id")
+    near = with_doc_keys(near_rows).drop("doc_id")
 
     return _assemble_decision(
-        spine, exact, near, keys, min_words, max_stopword_ratio,
-        min_ttr, max_dup_word_frac, max_top_word_frac,
-        max_top_ngram_frac)
+        spine, exact, near, min_words, max_stopword_ratio, min_ttr,
+        max_dup_word_frac, max_top_word_frac, max_top_ngram_frac)

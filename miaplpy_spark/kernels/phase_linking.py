@@ -103,21 +103,6 @@ def cov2corr(cov: np.ndarray) -> np.ndarray:
     return corr.astype(C64)
 
 
-def est_cov(ccg: np.ndarray) -> np.ndarray:
-    """Unnormalized sample covariance C = Z Z^H / S — the reference's
-    ``est_cov_py`` twin of est_corr (normalization-free path used by
-    its simulation harness, lib/utils.pyx:374-383)."""
-    return ((ccg @ ccg.conj().T) / ccg.shape[1]).astype(C64)
-
-
-def est_cov_batch(Z: np.ndarray) -> np.ndarray:
-    """Batched covariance (B, N, S) -> (B, N, N): est_corr_batch
-    without the correlation normalization (est_cov_py,
-    lib/utils.pyx:374-383)."""
-    S = Z.shape[2]
-    return ((Z @ Z.conj().transpose(0, 2, 1)) / S).astype(C64)
-
-
 def est_corr_batch(Z: np.ndarray) -> np.ndarray:
     """Batched correlation: Z is (B, N, S) complex -> (B, N, N).
 
@@ -465,10 +450,9 @@ def phase_linking_process(ccg_sample: np.ndarray, step: int, method: str,
     if method == "SBW":
         coh_mat = mask_diag(coh_mat, lag)
 
-    if method in ("EMI", "sequential_EMI", "PTA", "sequential_PTA", "SBW"):
+    if method in ("EMI", "PTA", "SBW"):
         status, abscoh = regularize_matrix(np.abs(coh_mat))
-        est = (pta_phase if method in ("PTA", "sequential_PTA")
-               else emi_phase)
+        est = pta_phase if method == "PTA" else emi_phase
         if status == 0:
             try:
                 vec = est(coh_mat, abscoh)

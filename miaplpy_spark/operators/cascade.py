@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..config import EngineConfig
 from ..sources.catalog import TierStore
 from .checkpoint import CheckpointLog
-from .rollup import _key_cols, doc_bucket, rollup_1d, rollup_1h, with_doc_keys
+from .rollup import doc_bucket, rollup_1d, rollup_1h, with_doc_keys
 
 TIER_1H, TIER_1D = "rollup_1h", "rollup_1d"
 
@@ -139,8 +139,7 @@ def run_cascade(
 TIER_TS = "timeseries"
 
 
-def merge_timeseries_history(old: DataFrame, new: DataFrame,
-                             cfg: EngineConfig = EngineConfig()) -> DataFrame:
+def merge_timeseries_history(old: DataFrame, new: DataFrame) -> DataFrame:
     """Splice a hot-window inversion re-solve onto checkpointed
     full-history series (round-4 ADVICE, medium): in the steady-state
     lifecycle (retention ages days away, then new data arrives and
@@ -167,22 +166,20 @@ def merge_timeseries_history(old: DataFrame, new: DataFrame,
     All array work is built-in expressions (zip/filter/transform/
     concat) — no Python in the plan; the one shuffle is the full-outer
     join of two doc-cardinality tables, keyed on xxhash64 doc_key
-    (doc_key2 under ``cfg.wide_doc_key`` — the engine's join-key
-    doctrine), never the doc_id string."""
-    join_keys = _key_cols(cfg)
+    (the engine's one join key), never the doc_id string."""
     cols = ["doc_id", "source", "bucket", "hours", "ts_series",
             "inv_quality"]
 
     def keyed(df, *names):
-        out = with_doc_keys(df.select(*cols), cfg)
-        return out.select(*join_keys, *(F.col(c).alias(n)
+        out = with_doc_keys(df.select(*cols))
+        return out.select("doc_key", *(F.col(c).alias(n)
                                         for c, n in zip(cols, names)))
 
     o = keyed(old, "o_doc", "o_source", "o_bucket", "o_hours", "o_ts",
               "o_q")
     n = keyed(new, "n_doc", "n_source", "n_bucket", "n_hours_arr",
               "n_ts", "n_q")
-    j = (o.join(n, join_keys, "full_outer")
+    j = (o.join(n, "doc_key", "full_outer")
          .withColumn("doc_id", F.coalesce("n_doc", "o_doc")))
     anchor = F.array_min(F.array_intersect("n_hours_arr", "o_hours"))
     off = (F.element_at(
@@ -266,7 +263,7 @@ def run_inversion_step(
                     # buckets' partitions are untouched by the MERGE
                     old = old.where(
                         ~F.col("bucket").isin([int(b) for b in done_set]))
-                inv = merge_timeseries_history(old, inv, cfg)
+                inv = merge_timeseries_history(old, inv)
         store.merge_partitions(inv, TIER_TS)
 
     # cull on the DOC-PURE derived bucket (the timeseries table's

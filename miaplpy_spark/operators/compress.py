@@ -44,8 +44,8 @@ DECOMPRESSED_SCHEMA = (
 )
 
 
-def compress_1h(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
-                num_partitions: int | None = None) -> DataFrame:
+def compress_1h(df_1h: DataFrame,
+                cfg: EngineConfig = EngineConfig()) -> DataFrame:
     H = cfg.hours_per_day
     out_schema = _pa_schema(COMPRESSED_SCHEMA)
 
@@ -83,12 +83,11 @@ def compress_1h(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
                 batches, _window_change(["doc_id"], "hour_idx", H)):
             yield process(region)
 
-    p = num_partitions or cfg.n_buckets
     # project before the exchange: mapInArrow ships whole rows, and the
     # 1h tier's linked_phase/squeezed lists are never read here
     return (df_1h.select("doc_id", "source", "bucket", "hour_idx",
                          "hour_ts", "quality", "mean_ntok")
-                 .repartition(p, "bucket")
+                 .repartition(cfg.n_buckets, "bucket")
                  .sortWithinPartitions("doc_id", "hour_idx")
                  .mapInArrow(kernel, COMPRESSED_SCHEMA))
 

@@ -30,9 +30,8 @@ from ..kernels.lstsq import (
     invert_l1_batch,
     network_temporal_coherence,
 )
-from .rollup import (_emit, _extract, _group_change, _key_cols, _pa_schema,
-                     _strings, _window_change, carry_groups, doc_bucket,
-                     with_doc_keys)
+from .rollup import (_emit, _extract, _group_change, _pa_schema, _strings,
+                     _window_change, carry_groups, doc_bucket, with_doc_keys)
 
 INVERSION_SCHEMA = (
     "doc_id string, source string, bucket int, n_hours int, "
@@ -73,8 +72,7 @@ def invert_network(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
                     F.lit(0.0), lambda a, x: a + x))
     q_col = (F.col("quality") if "quality" in df_1h.columns
              else F.lit(1.0))  # unweighted when the tier carries no quality
-    keyed = with_doc_keys(df_1h, cfg)
-    key_cols = _key_cols(cfg)
+    keyed = with_doc_keys(df_1h)
     # the OUTPUT bucket is re-derived doc-pure (hash of doc_id, the
     # un-salted bucketing) rather than passed through from the input:
     # under salt_by_day a doc's hourly rows span (doc, day) buckets,
@@ -83,13 +81,13 @@ def invert_network(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
     # checkpoint resume. With salting off this is identical to the
     # input bucket by construction.
     slim = keyed.select(
-        "doc_id", *key_cols,
-        "source", doc_bucket(cfg).alias("bucket"), "hour_idx",
+        "doc_id", "doc_key", "source", doc_bucket(cfg).alias("bucket"),
+        "hour_idx",
         theta.cast("double").alias("theta"),
         q_col.cast("double").alias("q"))
 
     out_schema = _pa_schema(INVERSION_SCHEMA)
-    num_cols = key_cols + ["hour_idx", "bucket", "theta", "q"]
+    num_cols = ["doc_key", "hour_idx", "bucket", "theta", "q"]
 
     def process(region: pa.RecordBatch) -> pa.RecordBatch | None:
         num = _extract(region, num_cols, {})
@@ -97,7 +95,7 @@ def invert_network(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
         hr = num["hour_idx"]
         t = num["theta"]
         q = num["q"]
-        starts = np.flatnonzero(_group_change(dk, num.get("doc_key2")))
+        starts = np.flatnonzero(_group_change(dk))
         ends = np.append(starts[1:], dk.shape[0])
 
         by_n: dict[int, list[int]] = {}
@@ -160,7 +158,7 @@ def invert_network(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
         # + one doc series), NOT O(partition): with few buckets and
         # many docs the old accumulate-the-partition shape was the one
         # kernel that could OOM a worker at 100x scale.
-        for region in carry_groups(batches, _window_change(key_cols)):
+        for region in carry_groups(batches, _window_change(["doc_key"])):
             out = process(region)
             if out is not None:
                 yield out
@@ -183,5 +181,5 @@ def invert_network(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
     sc = df_1h.sparkSession.sparkContext
     p = num_partitions or sc.defaultParallelism
     return (slim.repartition(p, "doc_key")
-                .sortWithinPartitions(*key_cols, "hour_idx")
+                .sortWithinPartitions("doc_key", "hour_idx")
                 .mapInArrow(kernel, INVERSION_SCHEMA))

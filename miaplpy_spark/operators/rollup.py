@@ -20,13 +20,9 @@ Three deliberate choices, each measured in this sandbox:
    overhead on 9M rows, and it does not parallelize well); the Arrow
    kernel reshapes the list column's flat value buffer zero-copy.
 3. sort key is ``doc_key`` (xxhash64 of doc_id), not the string —
-   long sorts are ~3x cheaper through the shuffle sorter. Collision
-   odds at sandbox scale ~1e-11; a 10^12-doc deployment sets
-   ``EngineConfig.wide_doc_key`` to group/sort/join on a 128-bit
-   (doc_key, doc_key2) pair — two xxhash64 salts, wired through both
-   tier kernels, attach_doc_dim, and the inversion
-   (tests/test_wide_doc_key.py proves narrow-equality and planted-
-   collision separation).
+   long sorts are ~3x cheaper through the shuffle sorter. It is the
+   one key every doc-keyed group, sort and join in the package uses;
+   the odds that two docs share it are ~1e-11 at sandbox scale.
 
 Every kernel (both tiers here, the network inversion and
 compress_1h) streams its sorted partition through ONE
@@ -88,43 +84,24 @@ ROLLUP_1D_SCHEMA = (
 )
 
 
-# second xxhash64 salt for wide (128-bit) doc-key mode: xxhash64 over
-# (salt, doc_id) is an independent hash family member, so P(joint
-# collision) ~ 2^-128 — negligible at 10^12 docs
-_KEY2_SALT = 0x61C8864680B583EB  # fits signed int64 (F.lit)
-
-
-def _tier_ddl(ddl: str, cfg: EngineConfig, with_strings: bool) -> str:
+def _tier_ddl(ddl: str, with_strings: bool) -> str:
     """A tier DDL as the kernel emits it: string-free inputs get the
     core variant (doc_key only; doc_id/source come back via
-    attach_doc_dim), and wide mode inserts doc_key2 after doc_key."""
+    attach_doc_dim)."""
     if not with_strings:
         ddl = ", ".join(p for p in ddl.split(", ")
                         if not p.startswith(("doc_id ", "source ")))
-    if cfg.wide_doc_key:
-        ddl = ddl.replace("doc_key long", "doc_key long, doc_key2 long", 1)
     return ddl
 
 
-def _key_cols(cfg: EngineConfig) -> list[str]:
-    return ["doc_key"] + (["doc_key2"] if cfg.wide_doc_key else [])
-
-
-def with_doc_keys(df: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Attach the hashed doc key column(s) every doc-keyed shuffle,
-    sort and join in the package uses: doc_key = xxhash64(doc_id),
-    plus doc_key2 = xxhash64(salt, doc_id) in wide mode, appended in
-    that order. String-free inputs must already carry them."""
+def with_doc_keys(df: DataFrame) -> DataFrame:
+    """Attach the hashed doc key every doc-keyed shuffle, sort and join
+    in the package uses: doc_key = xxhash64(doc_id). String-free inputs
+    must already carry it."""
     if "doc_key" not in df.columns:
         if "doc_id" not in df.columns:
             raise ValueError("string-free input must carry doc_key")
         df = df.withColumn("doc_key", F.xxhash64("doc_id"))
-    if cfg.wide_doc_key and "doc_key2" not in df.columns:
-        if "doc_id" not in df.columns:
-            raise ValueError("wide_doc_key string-free input must carry "
-                             "doc_key2")
-        df = df.withColumn(
-            "doc_key2", F.xxhash64(F.lit(_KEY2_SALT), F.col("doc_id")))
     return df
 
 
@@ -184,18 +161,13 @@ def _ensemble_phases(num: dict, vocab_size: int) -> np.ndarray:
     return num["zphi"]
 
 
-def _group_change(*cols: np.ndarray | None) -> np.ndarray:
+def _group_change(*cols: np.ndarray) -> np.ndarray:
     """Boolean new-group markers over sorted rows: a group is a run of
-    equal values in every column (None entries are skipped). Wide
-    (128-bit) doc-key mode (EngineConfig.wide_doc_key) passes doc_key2
-    too: a 10^12-doc corpus expects ~3e4 birthday collisions in a
-    single 64-bit space, so group identity there is (doc_key,
-    doc_key2) — two xxhash64 salts."""
+    equal values in every column."""
     chg = np.zeros(cols[0].shape[0], dtype=bool)
     chg[0] = True
     for c in cols:
-        if c is not None:
-            chg[1:] |= c[1:] != c[:-1]
+        chg[1:] |= c[1:] != c[:-1]
     return chg
 
 
@@ -236,11 +208,11 @@ def _link_batch(Z: np.ndarray, method: str, lag: int = 0,
     link = np.flatnonzero(~is_ps)
     cohL = coh[link] if is_ps.any() else coh
     vecL = np.empty((cohL.shape[0], T), dtype=np.complex64)
-    if method in ("EMI", "sequential_EMI", "PTA", "sequential_PTA", "SBW"):
+    if method in ("EMI", "PTA", "SBW"):
         status, abscoh = pl.regularize_matrix_batch(np.abs(cohL).astype(np.float32))
         ok = status == 0
         if ok.any():
-            if method in ("PTA", "sequential_PTA"):
+            if method == "PTA":
                 try:
                     vecL[ok] = pl.pta_phase_batch(cohL[ok], abscoh[ok])
                 except np.linalg.LinAlgError:
@@ -444,16 +416,16 @@ def hour_windows(num: dict, cfg: EngineConfig) -> tuple[np.ndarray, dict]:
     group: the mini-stack is phase-linked on its own and emits its
     squeezed carry (squeeze_images, lib/utils.pyx:470-487).
 
-    ``num`` holds per-row NumPy columns (doc_key[, doc_key2], slot,
+    ``num`` holds per-row NumPy columns (doc_key, slot,
     bucket, n_tok, sum_tok, min_tok, max_tok, and the ztok|zphi
     ensemble as (n, S)). Returns the group start rows and the
     per-group columns, named as in ROLLUP_1H_SCHEMA — exactly what
     ``day_windows`` consumes."""
     T, S = cfg.slots_per_hour, cfg.n_samples
-    doc_key, key2, slot = num["doc_key"], num.get("doc_key2"), num["slot"]
+    doc_key, slot = num["doc_key"], num["slot"]
     hour = slot // T
     sih = slot % T
-    chg = _group_change(doc_key, hour, key2)
+    chg = _group_change(doc_key, hour)
     starts = np.flatnonzero(chg)
     G = starts.shape[0]
     gid = np.cumsum(chg) - 1
@@ -503,8 +475,6 @@ def hour_windows(num: dict, cfg: EngineConfig) -> tuple[np.ndarray, dict]:
         "squeezed": np.concatenate([squeezed.real, squeezed.imag], axis=1),
         "quality": quality,
     }
-    if key2 is not None:
-        hr["doc_key2"] = key2[starts]
     return starts, hr
 
 
@@ -518,10 +488,10 @@ def day_windows(hr: dict, cfg: EngineConfig) -> tuple[np.ndarray, dict]:
     lanes, which hold them exactly). Returns the group start rows and
     the per-group columns, named as in ROLLUP_1D_SCHEMA."""
     H, S, T = cfg.hours_per_day, cfg.n_samples, cfg.slots_per_hour
-    doc_key, key2, hour_idx = hr["doc_key"], hr.get("doc_key2"), hr["hour_idx"]
+    doc_key, hour_idx = hr["doc_key"], hr["hour_idx"]
     day = hour_idx // H
     hid = hour_idx % H
-    chg = _group_change(doc_key, day, key2)
+    chg = _group_change(doc_key, day)
     starts = np.flatnonzero(chg)
     G = starts.shape[0]
     gid = np.cumsum(chg) - 1
@@ -565,23 +535,20 @@ def day_windows(hr: dict, cfg: EngineConfig) -> tuple[np.ndarray, dict]:
         "squeezed": np.concatenate([day_squeezed.real, day_squeezed.imag],
                                    axis=1),
     }
-    if key2 is not None:
-        dy["doc_key2"] = key2[starts]
     return starts, dy
 
 
 def make_rollup_1h_kernel(cfg: EngineConfig, tok_col: str = "zphi",
                           with_strings: bool = True):
-    out_schema = _pa_schema(_tier_ddl(ROLLUP_1H_SCHEMA, cfg, with_strings))
-    key_cols = _key_cols(cfg)
+    out_schema = _pa_schema(_tier_ddl(ROLLUP_1H_SCHEMA, with_strings))
     list_cols = {tok_col: (cfg.n_samples,
                            np.int16 if tok_col == "ztok" else np.float32),
                  "zstat": _zstat_list(_ZSTAT_1H)}
-    change = _window_change(key_cols, "slot", cfg.slots_per_hour)
+    change = _window_change(["doc_key"], "slot", cfg.slots_per_hour)
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for region in carry_groups(batches, change):
-            num = _extract(region, key_cols + ["slot"], list_cols)
+            num = _extract(region, ["doc_key", "slot"], list_cols)
             _unpack_zstat(num, _ZSTAT_1H)
             starts, hr = hour_windows(num, cfg)
             yield _emit({**hr, **_strings(region, starts)}, out_schema)
@@ -598,25 +565,13 @@ def attach_doc_dim(df_core: DataFrame, doc_dim: DataFrame) -> DataFrame:
     LEFT join: a tier row whose doc_key is missing from the supplied
     dimension surfaces with null doc_id/source instead of silently
     vanishing, so the output keeps one row per kernel output row."""
-    if ("doc_key2" in df_core.columns
-            and "doc_key2" not in doc_dim.columns):
-        # a narrow dim under a wide tier would quietly degrade the
-        # join to doc_key alone — the collision fan-out wide mode
-        # exists to prevent. Fail loudly; widen the dim with
-        # with_doc_keys(dim, cfg) instead.
-        raise ValueError("tier output is wide (doc_key2) but doc_dim "
-                         "is narrow; build the dimension with "
-                         "with_doc_keys so join keys match")
-    keys = ["doc_key"] + (["doc_key2"]
-                          if "doc_key2" in df_core.columns else [])
-    dim = F.broadcast(doc_dim.select(*keys, "doc_id", "source"))
-    rest = [c for c in df_core.columns if c not in keys]
-    return (df_core.join(dim, keys, "left")
-            .select("doc_id", *keys, "source", *rest))
+    dim = F.broadcast(doc_dim.select("doc_key", "doc_id", "source"))
+    rest = [c for c in df_core.columns if c != "doc_key"]
+    return (df_core.join(dim, "doc_key", "left")
+            .select("doc_id", "doc_key", "source", *rest))
 
 
-def rollup_1h(obs: DataFrame, cfg: EngineConfig = EngineConfig(),
-              num_partitions: int | None = None) -> DataFrame:
+def rollup_1h(obs: DataFrame, cfg: EngineConfig = EngineConfig()) -> DataFrame:
     """raw observations -> 1h tier. One shuffle (by bucket), then the
     kernel runs map-side; output stays partitioned by bucket for the
     1d tier and the MERGE write (partitioning reuse, no second
@@ -629,25 +584,23 @@ def rollup_1h(obs: DataFrame, cfg: EngineConfig = EngineConfig(),
     (string-free mode), the kernel emits the CORE schema (doc_key
     only) — use attach_doc_dim to restore the strings on the G-row
     output instead of streaming them per raw row."""
-    p = num_partitions or cfg.n_buckets
     with_strings = "doc_id" in obs.columns
     strs = ["doc_id", "source"] if with_strings else []
-    obs = with_doc_keys(obs, cfg)
+    obs = with_doc_keys(obs)
     tok_col = "ztok" if "ztok" in obs.columns else "zphi"
-    key_cols = _key_cols(cfg)
-    obs = obs.select(*strs, *key_cols, "slot", "bucket", "n_tok", "sum_tok",
+    obs = obs.select(*strs, "doc_key", "slot", "bucket", "n_tok", "sum_tok",
                      "min_tok", "max_tok", tok_col)
-    part = (obs.repartition(p, "bucket")
-            .sortWithinPartitions(*key_cols, "slot"))
+    part = (obs.repartition(cfg.n_buckets, "bucket")
+            .sortWithinPartitions("doc_key", "slot"))
     # pack the scalar stats AFTER the bucket exchange (the shuffle
     # still keys on the plain bucket column); the packing projection
     # is narrow, so partitioning and sort order are preserved and the
     # worker channel sees 4 columns instead of 8
-    part = part.select(*strs, *key_cols, "slot", tok_col,
+    part = part.select(*strs, "doc_key", "slot", tok_col,
                        _pack_zstat(_ZSTAT_1H))
     out = part.mapInArrow(
         make_rollup_1h_kernel(cfg, tok_col, with_strings),
-        _tier_ddl(ROLLUP_1H_SCHEMA, cfg, with_strings))
+        _tier_ddl(ROLLUP_1H_SCHEMA, with_strings))
     return out.withColumn(
         "hour_ts",
         F.timestamp_seconds(F.lit(cfg.epoch0)
@@ -655,16 +608,15 @@ def rollup_1h(obs: DataFrame, cfg: EngineConfig = EngineConfig(),
 
 
 def make_rollup_1d_kernel(cfg: EngineConfig, with_strings: bool = True):
-    out_schema = _pa_schema(_tier_ddl(ROLLUP_1D_SCHEMA, cfg, with_strings))
-    key_cols = _key_cols(cfg)
+    out_schema = _pa_schema(_tier_ddl(ROLLUP_1D_SCHEMA, with_strings))
     list_cols = {"linked_phase": (cfg.slots_per_hour, np.float32),
                  "squeezed": (2 * cfg.n_samples, np.float32),
                  "zstat": _zstat_list(_ZSTAT_1D)}
-    change = _window_change(key_cols, "hour_idx", cfg.hours_per_day)
+    change = _window_change(["doc_key"], "hour_idx", cfg.hours_per_day)
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for region in carry_groups(batches, change):
-            num = _extract(region, key_cols + ["hour_idx"], list_cols)
+            num = _extract(region, ["doc_key", "hour_idx"], list_cols)
             _unpack_zstat(num, _ZSTAT_1D)
             starts, dy = day_windows(num, cfg)
             yield _emit({**dy, **_strings(region, starts)}, out_schema)
@@ -673,7 +625,6 @@ def make_rollup_1d_kernel(cfg: EngineConfig, with_strings: bool = True):
 
 
 def rollup_1d(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
-              num_partitions: int | None = None,
               assume_partitioned: bool = False) -> DataFrame:
     """1h tier -> 1d tier.
 
@@ -688,25 +639,23 @@ def rollup_1d(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
     A string-free 1h input (CORE schema) stays string-free: both tier
     kernels then never see a doc_id/source byte — attach_doc_dim joins
     the strings onto the G-row outputs."""
-    p = num_partitions or cfg.n_buckets
     with_strings = "doc_id" in df_1h.columns
     strs = ["doc_id", "source"] if with_strings else []
-    df_1h = with_doc_keys(df_1h, cfg)
-    key_cols = _key_cols(cfg)
-    part = df_1h.select(*strs, *key_cols, "bucket", "hour_idx", "n_obs",
+    df_1h = with_doc_keys(df_1h)
+    part = df_1h.select(*strs, "doc_key", "bucket", "hour_idx", "n_obs",
                         "n_filled", "sum_tok", "min_tok", "max_tok",
                         "mean_ntok", "linked_phase", "squeezed", "quality")
     if not assume_partitioned:
-        part = (part.repartition(p, "bucket")
-                    .sortWithinPartitions(*key_cols, "hour_idx"))
+        part = (part.repartition(cfg.n_buckets, "bucket")
+                    .sortWithinPartitions("doc_key", "hour_idx"))
     # pack scalar stats after the exchange — same narrow projection
     # trade as rollup_1h (5 columns through the worker channel
     # instead of 12)
-    part = part.select(*strs, *key_cols, "hour_idx", "linked_phase",
+    part = part.select(*strs, "doc_key", "hour_idx", "linked_phase",
                        "squeezed", _pack_zstat(_ZSTAT_1D))
     out = part.mapInArrow(
         make_rollup_1d_kernel(cfg, with_strings),
-        _tier_ddl(ROLLUP_1D_SCHEMA, cfg, with_strings))
+        _tier_ddl(ROLLUP_1D_SCHEMA, with_strings))
     return out.withColumn(
         "day_ts",
         F.timestamp_seconds(F.lit(cfg.epoch0)

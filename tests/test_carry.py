@@ -116,11 +116,9 @@ SPEC = ScaleSpec(n_docs=3, n_slots=480, tok_lo=16, tok_hi=48,
 
 
 OPS = {
-    "rollup_1h": lambda obs, hourly: rollup_1h(obs, CFG, num_partitions=1),
-    "rollup_1d": lambda obs, hourly: rollup_1d(hourly, CFG,
-                                               num_partitions=1),
-    "compress_1h": lambda obs, hourly: compress_1h(hourly, CFG,
-                                                   num_partitions=1),
+    "rollup_1h": lambda obs, hourly: rollup_1h(obs, CFG),
+    "rollup_1d": lambda obs, hourly: rollup_1d(hourly, CFG),
+    "compress_1h": lambda obs, hourly: compress_1h(hourly, CFG),
     "invert_network": lambda obs, hourly: invert_network(
         hourly, CFG, num_partitions=1),
 }
@@ -135,8 +133,7 @@ def inputs(spark):
     never run at the small batch size."""
     obs = prepare_observations(generate_sequences(spark, SPEC, CFG),
                                CFG).cache()
-    hourly = rollup_1h(obs, CFG, num_partitions=1).localCheckpoint(
-        eager=True)
+    hourly = rollup_1h(obs, CFG).localCheckpoint(eager=True)
     groups = {w: obs.select("doc_id", F.floor(F.col("slot") / w))
               .distinct().count()
               for w in (CFG.slots_per_hour, CFG.slots_per_day)}

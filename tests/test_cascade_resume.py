@@ -3,13 +3,14 @@ completed buckets; lost checkpoints trigger recompute of exactly the
 lost partitions; results are identical either way."""
 
 import os
+from dataclasses import fields, replace
 
 import pyspark.sql.functions as F
 import pytest
 
 from miaplpy_spark.config import EngineConfig, ScaleSpec
 from miaplpy_spark.datagen import generate_sequences, prepare_observations
-from miaplpy_spark.operators.cascade import run_cascade
+from miaplpy_spark.operators.cascade import lineage_hash, run_cascade
 from miaplpy_spark.operators.checkpoint import CheckpointLog
 from miaplpy_spark.sources.catalog import TierStore
 
@@ -110,6 +111,27 @@ def test_config_change_invalidates_checkpoints(spark, obs, workdir):
     cfg2 = EngineConfig(n_buckets=4, n_samples=8, method="EVD")
     m = run_cascade(spark, obs, store, cfg2)
     assert m["raw->1h"]["buckets_processed"] > 0  # new lineage -> recompute
+
+
+@pytest.mark.parametrize("field", [f.name for f in fields(EngineConfig)])
+def test_every_config_field_reaches_the_lineage(field):
+    """Each EngineConfig field is in lineage_hash's payload: another
+    valid value of any one field gives another lineage, so no bucket
+    checkpointed under one config is skipped under another. Sparkless."""
+    cfg = EngineConfig()
+    old = getattr(cfg, field)
+    new = {"method": "EVD", "shp_test": "AD"}.get(field)
+    if new is None:
+        if isinstance(old, bool):
+            new = not old
+        elif isinstance(old, (int, float)):
+            new = old * 2
+        elif isinstance(old, tuple):
+            new = old[:-1]
+    assert new is not None and new != old, f"no other value for {field}"
+    other = replace(cfg, **{field: new})
+    assert (lineage_hash(other, "rollup_1h", "x")
+            != lineage_hash(cfg, "rollup_1h", "x"))
 
 
 def test_metrics_view(spark, obs, workdir):

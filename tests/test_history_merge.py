@@ -96,24 +96,6 @@ def test_splice_randomized_against_python_model(spark):
         assert got[doc]["n_hours"] == len(hours), doc
 
 
-def test_splice_under_wide_doc_key(spark):
-    """The splice join honors the 128-bit key doctrine: identical
-    results with wide_doc_key on (doc_key + doc_key2 join keys)."""
-    old = _df(spark, [
-        ("a", "web", 0, 4, [0, 1, 2, 3], [0., 1., 2., 3.], 0.9),
-        ("b", "web", 0, 2, [0, 1], [5., 6.], 0.8),
-    ])
-    new = _df(spark, [
-        ("a", "web", 0, 4, [2, 3, 4, 5], [0., 1., 2., 3.], 0.95),
-    ])
-    wide = EngineConfig(wide_doc_key=True)
-    out = {r["doc_id"]: r for r in
-           merge_timeseries_history(old, new, wide).collect()}
-    assert out["a"]["hours"] == [0, 1, 2, 3, 4, 5]
-    assert out["a"]["ts_series"] == pytest.approx([0, 1, 2, 3, 4, 5])
-    assert out["b"]["ts_series"] == pytest.approx([5., 6.])
-
-
 def test_steady_state_lifecycle_keeps_history(spark, tmp_path):
     """retention ages hours 0..23 away; hours 48..71 arrive; the
     re-solve over the hot window [24, 72) splices onto the stored

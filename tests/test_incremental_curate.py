@@ -10,7 +10,6 @@ import tempfile
 import pyspark.sql.functions as F
 import pytest
 
-from miaplpy_spark.config import EngineConfig
 from miaplpy_spark.datagen import generate_documents
 from miaplpy_spark.functions.curate import curate_batch, curate_corpus
 from miaplpy_spark.functions.dedup import build_minhash_index
@@ -84,10 +83,3 @@ def test_batch_internal_twins_keep_first(spark, dirs):
            for r in curate_batch(spark, batch, dirs["index"]).collect()}
     assert got[900001]["reason"] == "kept" and got[900001]["keep"]
     assert got[900002]["reason"] == "exact_dup" and not got[900002]["keep"]
-
-
-def test_wide_doc_key_same_decision(spark, dirs):
-    cfg = EngineConfig(wide_doc_key=True)
-    wide = curate_batch(spark, dirs["b"], dirs["index"], cfg=cfg)
-    narrow = curate_batch(spark, dirs["b"], dirs["index"])
-    assert _rows(wide) == _rows(narrow)

@@ -160,7 +160,7 @@ def test_sequential_plus_datum_matches_full(sim):
     truth, _, Z = sim
     ms = 10
     k = N_IMG // ms
-    vec_seq, squeezed, q = pl.sequential_phase_linking(Z, "sequential_EMI", ms, k)
+    vec_seq, squeezed, q = pl.sequential_phase_linking(Z, "EMI", ms, k)
     assert squeezed.shape == (k, Z.shape[1])
     vec_adj = pl.datum_connect(squeezed, vec_seq, ms)
     err = _phase_err(vec_adj, truth)
@@ -172,7 +172,7 @@ def test_sequential_last_window_absorbs_remainder(sim):
     _, _, Z = sim
     ms = 12  # 40 = 12+12+16: last chunk absorbs remainder
     k = N_IMG // ms
-    vec, squeezed, _ = pl.sequential_phase_linking(Z, "sequential_EMI", ms, k)
+    vec, squeezed, _ = pl.sequential_phase_linking(Z, "EMI", ms, k)
     assert squeezed.shape[0] == k
     assert np.all(vec[ms * (k - 1):] != 0)  # remainder rows were filled
 
@@ -406,10 +406,10 @@ def test_engine_config_rejects_unknown_method():
     other name raises at construction instead of running EVD."""
     from miaplpy_spark.config import EngineConfig
 
-    for name in ("EVD", "EMI", "sequential_EMI", "PTA", "sequential_PTA",
-                 "SBW"):
+    for name in ("EVD", "EMI", "PTA", "SBW"):
         assert EngineConfig(method=name).method == name
-    for name in ("EMl", "emi", "sequential_EVD", ""):
+    for name in ("EMl", "emi", "sequential_EMI", "sequential_PTA",
+                 "sequential_EVD", ""):
         with pytest.raises(ValueError, match="unknown phase-linking method"):
             EngineConfig(method=name)
 
@@ -435,23 +435,6 @@ def test_timeseries_cov_propagation():
     G2 = G.copy()
     G2[:, 0] = 0.0
     assert not estimate_timeseries_cov(G2, std).any()
-
-
-def test_est_cov_matches_direct(sim):
-    """est_cov (est_cov_py, lib/utils.pyx:374-383): unnormalized
-    covariance; scalar == batched == direct Z Z^H / S, and
-    cov2corr(est_cov) == est_corr."""
-    rng = np.random.default_rng(12)
-    Z = (rng.normal(size=(6, 10, 32)) + 1j * rng.normal(size=(6, 10, 32))
-         ).astype(np.complex64)
-    direct = np.stack([(z @ z.conj().T) / z.shape[1] for z in Z])
-    batched = pl.est_cov_batch(Z)
-    np.testing.assert_allclose(batched, direct.astype(np.complex64),
-                               atol=1e-5)
-    one = pl.est_cov(Z[0])
-    np.testing.assert_allclose(one, batched[0], atol=1e-6)
-    np.testing.assert_allclose(pl.cov2corr(one), pl.est_corr(Z[0]),
-                               atol=1e-6)
 
 
 def _spd_batch_with_singular(B, N, singular, dtype, seed):

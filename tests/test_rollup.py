@@ -385,6 +385,36 @@ def test_string_free_core_path_matches(spark):
         np.stack(core_1d["adjusted_phase"].to_numpy()))
 
 
+def test_attach_doc_dim_keeps_rows_missing_from_the_dimension(spark):
+    """attach_doc_dim is a LEFT join: a core tier row whose doc_key the
+    dimension lacks surfaces with null doc_id/source, and the output
+    keeps exactly one row per kernel output row."""
+    import pyspark.sql.functions as F
+
+    from miaplpy_spark.datagen import generate_doc_dim
+    from miaplpy_spark.operators.rollup import attach_doc_dim
+
+    cfg = EngineConfig(n_buckets=2, n_samples=8)
+    spec = ScaleSpec(n_docs=3, n_slots=120, tok_lo=8, tok_hi=16,
+                     tok_heavy_lo=24, tok_heavy_hi=32)
+    obs = prepare_observations(generate_sequences(spark, spec, cfg), cfg)
+    core = rollup_1h(obs.withColumn("doc_key", F.xxhash64("doc_id"))
+                        .drop("doc_id", "source"), cfg)
+    dim = generate_doc_dim(spark, spec, cfg)
+    gone = dim.orderBy("doc_id").first()["doc_key"]
+
+    key = ["doc_key", "hour_idx"]
+    want = core.toPandas().sort_values(key).reset_index(drop=True)
+    got = (attach_doc_dim(core, dim.where(F.col("doc_key") != gone))
+           .toPandas().sort_values(key).reset_index(drop=True))
+    assert len(got) == len(want)
+    assert (got[key] == want[key]).all(axis=None)
+    lost = got["doc_key"] == gone
+    assert lost.any() and not lost.all()
+    assert got.loc[lost, ["doc_id", "source"]].isna().all(axis=None)
+    assert got.loc[~lost, ["doc_id", "source"]].notna().all(axis=None)
+
+
 def test_double_zstat_lane_rejects_inexact_integers():
     """The 1d tier packs its integer stats into float64 lanes, exact
     only below 2^53; a larger value may have been rounded by the
