@@ -34,7 +34,7 @@ def solve_batch_status(A: np.ndarray, b: np.ndarray):
     (x (B, N), ok (B,)). Exactly-singular members (where
     np.linalg.solve would raise) come back NaN-filled with ok=False;
     the rest are bit-identical to np.linalg.solve."""
-    if _ul is None:  # pragma: no cover
+    if _ul is None:
         try:
             return np.linalg.solve(A, b), np.ones(A.shape[0], bool)
         except np.linalg.LinAlgError:
@@ -255,21 +255,6 @@ def invert_l1(R: np.ndarray, y: np.ndarray, alpha: float = 0.01,
             break
         prev_res = res
     return x
-
-
-def estimate_timeseries_cov(G: np.ndarray, y_std: np.ndarray,
-                            min_redundancy: float = 1.0) -> np.ndarray:
-    """Timeseries covariance via linear error propagation (A18,
-    estimate_timeseries_cov dev/ifgram_inversion_L1L2.py:615-650):
-    ts_cov = G⁺ · diag(y_std²) · G⁺ᵀ; zeros when the network lacks
-    redundancy (same gate as the reference)."""
-    G = np.asarray(G, dtype=np.float64)
-    out = np.zeros((G.shape[1], G.shape[1]), dtype=np.float32)
-    if np.min(np.sum(G != 0.0, axis=0)) < min_redundancy:
-        return out
-    Gp = np.linalg.pinv(G)
-    std = np.asarray(y_std, dtype=np.float64).reshape(-1)
-    return ((Gp * (std ** 2)[None, :]) @ Gp.T).astype(np.float32)
 
 
 def network_temporal_coherence(A: np.ndarray, ts_incr: np.ndarray,

@@ -141,15 +141,22 @@ def evd_phase(coh: np.ndarray) -> np.ndarray:
 
 def evd_phase_batch(coh: np.ndarray) -> np.ndarray:
     """Batched EVD over complex64 (B, N, N) -> (B, N), bit-identical to
-    np.linalg.eigh per member. A member whose eigh does not converge
-    (np.linalg.eigh would raise for the whole batch) gets vec = ones,
-    so it keeps its raw phase and gam_pta_batch reports its quality.
-    Retrying it alone would not help: _eigh_vecs_batch_status already
-    solves each member on its own, with the gufunc np.linalg.eigh runs
-    or, without it, by a per-member np.linalg.eigh."""
+    the scalar evd_phase per member. A member whose eigh does not
+    converge (np.linalg.eigh would raise for the whole batch) gets
+    vec = ones, so it keeps its raw phase and gam_pta_batch reports its
+    quality. Retrying it alone would not help: _eigh_vecs_batch_status
+    already solves each member on its own, with the gufunc
+    np.linalg.eigh runs or, without it, by a per-member np.linalg.eigh.
+
+    The rotation follows evd_phase's precision, not _rotate_to_ref's
+    complex64 batch arithmetic: there NumPy promotes the 0-d reference
+    phasor to complex128, so the float32 angle is exponentiated and
+    applied in complex128 before the one cast back."""
     vecs, ok = _eigh_vecs_batch_status(coh)
     vecs[~ok] = 1
-    return _rotate_to_ref(vecs[..., :, -1])
+    v = vecs[..., :, -1]
+    x0 = np.exp(1j * np.angle(v[..., 0]).astype(np.float64))
+    return (v * np.conj(x0)[..., None]).astype(C64)
 
 
 def emi_phase(coh: np.ndarray, abscoh: np.ndarray) -> np.ndarray:
@@ -158,14 +165,6 @@ def emi_phase(coh: np.ndarray, abscoh: np.ndarray) -> np.ndarray:
     M = (inv_abs * coh).astype(C64)
     _, vecs = np.linalg.eigh(M)
     return _rotate_to_ref(vecs[:, 0])
-
-
-def emi_phase_batch(coh: np.ndarray, abscoh: np.ndarray) -> np.ndarray:
-    """Batched EMI over (B, N, N) -> (B, N)."""
-    inv_abs = np.linalg.inv(abscoh.astype(np.float64))
-    M = (inv_abs * coh).astype(C64)
-    _, vecs = np.linalg.eigh(M)
-    return _rotate_to_ref(vecs[..., :, 0])
 
 
 def _eigh_vecs_batch_status(M: np.ndarray):
@@ -196,12 +195,13 @@ def _eigh_vecs_batch_status(M: np.ndarray):
 
 def emi_phase_batch_status(coh: np.ndarray, abscoh: np.ndarray):
     """Batched EMI with PER-MATRIX status: (vec (B, N), ok (B,)).
-    Members whose |Γ| is exactly singular or whose eigh does not
-    converge (where emi_phase_batch would raise for the WHOLE batch)
-    come back with ok=False and undefined vec — route exactly those
-    through the scalar EMI→EVD fallback chain; everything else is
-    bit-identical to emi_phase_batch (same inv, same eigh per
-    matrix)."""
+    Members whose |Γ| is singular to the float64 inverse or whose eigh
+    does not converge (where np.linalg would raise for the WHOLE batch)
+    come back with ok=False and undefined vec; the caller sends exactly
+    those to evd_phase_batch (the reference's EVD fallback,
+    lib/utils.pyx:538-551). Every other member gets the inverse and
+    eigenvectors the scalar emi_phase computes (the same LAPACK calls
+    per matrix)."""
     inv_abs, ok = inv_batch_status(abscoh.astype(np.float64))
     B, N = coh.shape[0], coh.shape[1]
     vec = np.empty((B, N), dtype=C64)
@@ -231,19 +231,20 @@ def _pta_objective_grad(theta: np.ndarray, M: np.ndarray):
 
 
 def pta_phase_batch(coh: np.ndarray, abscoh: np.ndarray,
-                    gtol: float = 1e-6, max_iter: int = 200) -> np.ndarray:
+                    gtol: float = 1e-6, max_iter: int = 200):
     """PTA estimator (A5, PTA_L_BFGS_cy lib/utils.pyx:288-309): start
     from the EMI solution and refine the phases by minimizing
     |log(v^H M v)| with M = inv(|Γ|)∘Γ — here a batched gradient
     descent with backtracking line search instead of scipy's L-BFGS-B
     (scipy is unavailable; the objective/gradient are identical).
-    coh (B, N, N); returns (B, N) complex64 unit phasors."""
-    vec0 = emi_phase_batch(coh, abscoh)
-    theta = np.angle(vec0).astype(np.float64)
-    inv_abs = np.linalg.inv(abscoh.astype(np.float64))
-    M = (inv_abs * coh).astype(np.complex128)
-    B = theta.shape[0]
-    step = np.full(B, 0.1)
+    coh (B, N, N); returns (vec (B, N) complex64 unit phasors, ok (B,)).
+    Only the members emi_phase_batch_status solved are refined; the
+    rest keep its ok=False and go to EVD like an EMI failure."""
+    vec, ok = emi_phase_batch_status(coh, abscoh)
+    theta = np.angle(vec[ok]).astype(np.float64)
+    inv_abs, _ = inv_batch_status(abscoh[ok].astype(np.float64))
+    M = (inv_abs * coh[ok]).astype(np.complex128)
+    step = np.full(theta.shape[0], 0.1)
     f, g = _pta_objective_grad(theta, M)
     for _ in range(max_iter):
         gn = np.linalg.norm(g, axis=1)
@@ -259,12 +260,17 @@ def pta_phase_batch(coh: np.ndarray, abscoh: np.ndarray,
         step = np.where(better, step * 1.2, np.where(active, step * 0.5, step))
         if np.all(step < 1e-12):
             break
-    return _rotate_to_ref(np.exp(1j * theta).astype(C64))
+    vec[ok] = _rotate_to_ref(np.exp(1j * theta).astype(C64))
+    return vec, ok
 
 
 def pta_phase(coh: np.ndarray, abscoh: np.ndarray, **kw) -> np.ndarray:
-    """Scalar convenience wrapper over the batched PTA."""
-    return pta_phase_batch(coh[None], abscoh[None], **kw)[0]
+    """Scalar convenience wrapper over the batched PTA; raises
+    LinAlgError where the batch reports the member failed."""
+    vec, ok = pta_phase_batch(coh[None], abscoh[None], **kw)
+    if not ok[0]:
+        raise np.linalg.LinAlgError("PTA: EMI start failed")
+    return vec[0]
 
 
 def regularize_matrix(M: np.ndarray, max_tries: int = 100):
@@ -303,10 +309,6 @@ def regularize_matrix_batch(M: np.ndarray, max_tries: int = 100):
     B = M.shape[0]
     out = np.array(M, dtype=F32, copy=True)
     status = np.zeros(B, dtype=np.int32)
-    if _ul is None:  # pragma: no cover - no raw gufuncs: scalar path
-        for b in range(B):
-            status[b], out[b] = regularize_matrix(out[b], max_tries)
-        return status, out
     pend = np.arange(B)
     diag = np.arange(M.shape[1])
     en = np.full(B, 1e-6, dtype=np.float64)
@@ -442,9 +444,9 @@ def phase_linking_process(ccg_sample: np.ndarray, step: int, method: str,
     """Dispatch est_corr -> (SBW band) -> {PTA|EMI|EVD with
     regularize-or-fallback} -> gam_pta quality -> optional squeeze.
 
-    Returns (vec, squeezed_or_None, quality). PTA degrades to EMI here
-    (no scipy in this environment; the reference itself falls back to
-    EVD when regularization fails, lib/utils.pyx:538-551).
+    Returns (vec, squeezed_or_None, quality). EMI, PTA and SBW fall
+    back to EVD when regularization fails or the estimator raises, as
+    the reference does (lib/utils.pyx:538-551).
     """
     coh_mat = est_corr(ccg_sample)
     if method == "SBW":

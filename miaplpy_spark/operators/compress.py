@@ -29,7 +29,7 @@ from ..kernels.codecs import (
     encode_gorilla,
 )
 from .rollup import (_emit, _group_change, _pa_schema, _strings,
-                     _window_change, carry_groups, doc_bucket)
+                     _window_change, carry_groups, doc_bucket, with_doc_keys)
 
 
 COMPRESSED_SCHEMA = (
@@ -52,7 +52,7 @@ def compress_1h(df_1h: DataFrame,
     def process(region: pa.RecordBatch) -> pa.RecordBatch:
         day = region.column("hour_idx").to_numpy() // H
         starts = np.flatnonzero(_group_change(
-            region.column("doc_id").to_numpy(zero_copy_only=False), day))
+            region.column("doc_key").to_numpy(), day))
         ends = np.append(starts[1:], region.num_rows)
         # Arrow hands timestamps over as epoch microseconds (UTC: the
         # engine session pins spark.sql.session.timeZone)
@@ -80,16 +80,17 @@ def compress_1h(df_1h: DataFrame,
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for region in carry_groups(
-                batches, _window_change(["doc_id"], "hour_idx", H)):
+                batches, _window_change(["doc_key"], "hour_idx", H)):
             yield process(region)
 
     # project before the exchange: mapInArrow ships whole rows, and the
     # 1h tier's linked_phase/squeezed lists are never read here
-    return (df_1h.select("doc_id", "source", "bucket", "hour_idx",
-                         "hour_ts", "quality", "mean_ntok")
-                 .repartition(cfg.n_buckets, "bucket")
-                 .sortWithinPartitions("doc_id", "hour_idx")
-                 .mapInArrow(kernel, COMPRESSED_SCHEMA))
+    return (with_doc_keys(df_1h)
+            .select("doc_id", "source", "doc_key", "bucket", "hour_idx",
+                    "hour_ts", "quality", "mean_ntok")
+            .repartition(cfg.n_buckets, "bucket")
+            .sortWithinPartitions("doc_key", "hour_idx")
+            .mapInArrow(kernel, COMPRESSED_SCHEMA))
 
 
 COLD_TIER = "rollup_1h_cold"

@@ -50,8 +50,8 @@ def sequential_pairs_idx(n: int, conn: int = 3) -> list[tuple[int, int]]:
 
 
 def invert_network(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
-                   conn: int = 3, num_partitions: int | None = None,
-                   method: str = "L2", l1_alpha: float = 0.01) -> DataFrame:
+                   conn: int = 3, method: str = "L2",
+                   l1_alpha: float = 0.01) -> DataFrame:
     """hourly tier -> per-doc inverted time series + network temporal
     coherence. One exchange (by bucket); per-doc phase series assembled
     in the kernel; docs sharing a window count solve in one batch.
@@ -168,7 +168,7 @@ def invert_network(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
     # The in-partition sort moves the ordering work into the shuffle
     # sorter so the kernel can stream with a bounded carry.
     #
-    # Partition COUNT defaults to the cluster's parallelism, not the
+    # Partition COUNT is the cluster's parallelism, not the
     # tier-layout constant n_buckets: this stage is a streaming map
     # with O(arrow-batch) worker memory (batch-carry), so larger
     # partitions cost nothing, while every extra partition pays a
@@ -176,10 +176,8 @@ def invert_network(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
     # of 7.5k rows spent more on per-task setup than on the solve
     # (L2 ingress 1.97 -> 0.85 s at 32 = defaultParallelism). Fewer,
     # larger shuffle blocks is also the scale-out direction (guide
-    # §2.2); doc_key hashing spreads docs uniformly, and callers with
-    # skewed docs pass num_partitions (or salt_by_day upstream).
+    # §2.2); doc_key hashing spreads docs uniformly.
     sc = df_1h.sparkSession.sparkContext
-    p = num_partitions or sc.defaultParallelism
-    return (slim.repartition(p, "doc_key")
+    return (slim.repartition(sc.defaultParallelism, "doc_key")
                 .sortWithinPartitions("doc_key", "hour_idx")
                 .mapInArrow(kernel, INVERSION_SCHEMA))

@@ -175,24 +175,27 @@ def _link_batch(Z: np.ndarray, method: str, lag: int = 0,
                 ps_test: bool = False):
     """(G, T, S) ensemble -> (vec (G,T), quality (G,), squeezed (G,S)).
 
-    Batched correlation + regularization + EMI-with-EVD-fallback; the
-    squeeze is one einsum over the whole batch.
+    Batched correlation + regularization + one estimator with
+    per-member status (emi_phase_batch_status, or pta_phase_batch
+    under PTA); the squeeze is one batched GEMV.
+
+    There is one failure path, the reference's per-pixel EVD fallback
+    (lib/utils.pyx:538-551): every member that regularization, the
+    float64 inverse or the eigensolver rejects goes to one
+    evd_phase_batch call, which gives each the bits the scalar
+    evd_phase would.
 
     ``ps_test=True`` mirrors the reference's per-pixel dispatch in the
     patch loop (lib/utils.pyx:1110-1187 invoking test_PS_cy,
     lib/utils.pyx:420-459): groups whose top eigenvalue carries >95% of
     the spectrum norm with amplitude dispersion <0.42 are persistent
     scatterers — they bypass the eigen linking and keep their raw phase
-    (vec = ones, quality = 1). The split is the same clean/dirty
-    common-case pattern used for regularization: the expensive EMI/EVD
-    runs only on the non-PS subset.
+    (vec = ones, quality = 1). The expensive linking runs only on the
+    non-PS subset.
     """
     coh = pl.est_corr_batch(Z)
     if method == "SBW":
-        n = coh.shape[-1]
-        i = np.arange(n)
-        band = np.abs(i[:, None] - i[None, :]) < lag
-        coh = np.where(band[None], coh, 0).astype(np.complex64)
+        coh = pl.mask_diag(coh, lag)
 
     G, T = coh.shape[0], coh.shape[1]
     if ps_test:
@@ -208,43 +211,13 @@ def _link_batch(Z: np.ndarray, method: str, lag: int = 0,
     link = np.flatnonzero(~is_ps)
     cohL = coh[link] if is_ps.any() else coh
     vecL = np.empty((cohL.shape[0], T), dtype=np.complex64)
-    if method in ("EMI", "PTA", "SBW"):
+    ok = np.zeros(cohL.shape[0], dtype=bool)
+    if method != "EVD":
         status, abscoh = pl.regularize_matrix_batch(np.abs(cohL).astype(np.float32))
-        ok = status == 0
-        if ok.any():
-            if method == "PTA":
-                try:
-                    vecL[ok] = pl.pta_phase_batch(cohL[ok], abscoh[ok])
-                except np.linalg.LinAlgError:
-                    for b in np.flatnonzero(ok):
-                        try:
-                            vecL[b] = pl.emi_phase(cohL[b], abscoh[b])
-                        except np.linalg.LinAlgError:
-                            vecL[b] = pl.evd_phase(cohL[b])
-            else:
-                # per-matrix inversion status keeps the fallback
-                # BATCHED: a matrix can pass the float32 Cholesky
-                # probe yet be singular to float64 inv (e.g.
-                # duplicate rows from edge-extended gap-fill), and
-                # the old whole-batch except clause downgraded every
-                # group of the batch to scalar EMI/EVD calls — ~40%
-                # of kernel CPU at bench scale, since real batches
-                # almost always contain one such matrix. Now only the
-                # genuinely singular few take the scalar chain (the
-                # reference's fallback, lib/utils.pyx:538-551).
-                vec_ok, good = pl.emi_phase_batch_status(
-                    cohL[ok], abscoh[ok])
-                okidx = np.flatnonzero(ok)
-                vecL[okidx[good]] = vec_ok[good]
-                for b in okidx[~good]:
-                    try:
-                        vecL[b] = pl.emi_phase(cohL[b], abscoh[b])
-                    except np.linalg.LinAlgError:
-                        vecL[b] = pl.evd_phase(cohL[b])
-        if (~ok).any():
-            vecL[~ok] = pl.evd_phase_batch(cohL[~ok])
-    else:
-        vecL = pl.evd_phase_batch(cohL)
+        reg = np.flatnonzero(status == 0)
+        est = pl.pta_phase_batch if method == "PTA" else pl.emi_phase_batch_status
+        vecL[reg], ok[reg] = est(cohL[reg], abscoh[reg])
+    vecL[~ok] = pl.evd_phase_batch(cohL[~ok])
 
     qualityL = pl.gam_pta_batch(np.angle(cohL), vecL)
     if ps_test:

@@ -119,8 +119,7 @@ OPS = {
     "rollup_1h": lambda obs, hourly: rollup_1h(obs, CFG),
     "rollup_1d": lambda obs, hourly: rollup_1d(hourly, CFG),
     "compress_1h": lambda obs, hourly: compress_1h(hourly, CFG),
-    "invert_network": lambda obs, hourly: invert_network(
-        hourly, CFG, num_partitions=1),
+    "invert_network": lambda obs, hourly: invert_network(hourly, CFG),
 }
 
 
@@ -161,9 +160,10 @@ def _assert_close(a, b, col):
 
 @pytest.mark.parametrize("op", sorted(OPS))
 def test_carry_across_arrow_batches(spark, spark_conf, inputs, op):
-    """One partition, 7-row Arrow batches: every (doc, hour), (doc,
-    day) and doc group spans several batches, yet each kernel emits the
-    same rows as with the default batch size. Floats get an absolute
+    """7-row Arrow batches (one bucket partition for the tier kernels,
+    the default parallelism for the inversion): every (doc, hour),
+    (doc, day) and doc group spans several batches, yet each kernel
+    emits the same rows as with the default batch size. Floats get an absolute
     tolerance: batch shape moves float32 BLAS rounding."""
     obs, hourly, expected = inputs
     baseline = _sorted(OPS[op](obs, hourly))

@@ -73,22 +73,24 @@ def test_batched_evd_emi_match_scalar(sim):
     assert np.allclose(v_b[0], pl.evd_phase(coh), atol=1e-5)
     status, abscoh = pl.regularize_matrix_batch(np.abs(batch))
     assert status.tolist() == [0, 0]
-    e_b = pl.emi_phase_batch(batch, abscoh)
+    e_b, ok = pl.emi_phase_batch_status(batch, abscoh)
+    assert ok.all()
     assert np.allclose(e_b[0], pl.emi_phase(coh, np.abs(coh)), atol=1e-4)
 
 
 def test_evd_eigh_failure_stays_with_its_member(monkeypatch):
     """A member whose batched eigh does not converge (the raw gufunc
     NaN-fills it) must not fail the batch: every other member is bit-
-    identical to np.linalg.eigh over the whole batch, and the failed
-    one's vec is all ones, whose quality gam_pta_batch still reports."""
+    identical to the scalar evd_phase (np.linalg.eigh per member), and
+    the failed one's vec is all ones, whose quality gam_pta_batch still
+    reports."""
     if pl._ul is None:
         pytest.skip("NumPy build without _umath_linalg")
     rng = np.random.default_rng(7)
     Z = (rng.standard_normal((5, 8, 24))
          + 1j * rng.standard_normal((5, 8, 24))).astype(np.complex64)
     coh = pl.est_corr_batch(Z)
-    parent = pl._rotate_to_ref(np.linalg.eigh(coh)[1][..., :, -1])
+    scalar = np.stack([pl.evd_phase(c) for c in coh])
     bad = 3
     stock_ul = pl._ul
 
@@ -105,8 +107,8 @@ def test_evd_eigh_failure_stays_with_its_member(monkeypatch):
     vec = pl.evd_phase_batch(coh)
 
     keep = np.arange(5) != bad
-    assert vec.dtype == parent.dtype
-    assert vec[keep].tobytes() == parent[keep].tobytes()
+    assert vec.dtype == scalar.dtype
+    assert vec[keep].tobytes() == scalar[keep].tobytes()
     assert (vec[bad] == 1).all()
     assert np.isfinite(pl.gam_pta_batch(np.angle(coh), vec)).all()
 
@@ -414,29 +416,6 @@ def test_engine_config_rejects_unknown_method():
             EngineConfig(method=name)
 
 
-def test_timeseries_cov_propagation():
-    """A18: ts_cov = G+ diag(std^2) G+T; identity-weight sanity via a
-    fully-determined chain network where propagation is exact."""
-    from miaplpy_spark.kernels.lstsq import (
-        design_matrices, estimate_timeseries_cov)
-
-    # chain pairs (i, i+1): G is lower-triangular-ish, G+ recovers
-    # increments directly, so var(ts_k) = std_k^2
-    n = 6
-    pairs = [(i, i + 1) for i in range(n - 1)]
-    G, _ = design_matrices(pairs, np.arange(n, dtype=float))
-    std = np.array([0.1, 0.2, 0.3, 0.4, 0.5])
-    cov = estimate_timeseries_cov(G, std)
-    assert cov.shape == (n - 1, n - 1)
-    # chain network: increment k depends only on obs 0..k
-    np.testing.assert_allclose(np.diag(cov),
-                               np.cumsum(std ** 2), rtol=1e-5)
-    # under-redundant network -> zeros (the reference's gate)
-    G2 = G.copy()
-    G2[:, 0] = 0.0
-    assert not estimate_timeseries_cov(G2, std).any()
-
-
 def _spd_batch_with_singular(B, N, singular, dtype, seed):
     X = np.random.default_rng(seed).standard_normal((B, N, 2 * N))
     A = (X @ X.transpose(0, 2, 1)).astype(dtype)
@@ -447,38 +426,64 @@ def _spd_batch_with_singular(B, N, singular, dtype, seed):
 def test_linalg_status_fallback_without_umath_linalg(monkeypatch):
     """A NumPy build without the private _umath_linalg module takes a
     per-matrix np.linalg loop with the same (result, ok) contract,
-    bit-identical to the gufunc path (ADVICE r06)."""
+    bit-identical to the gufunc path (ADVICE r06). The batched loading
+    loop then probes through np.linalg.cholesky, the float64 potrf the
+    scalar regularize_matrix runs, so it equals the scalar loop byte
+    for byte, members that need diagonal loads included; the lstsq
+    solve matches the gufunc and flags the singular member."""
+    from miaplpy_spark.kernels import lstsq
+
     A = _spd_batch_with_singular(6, 5, 3, np.float64, seed=7)
     A32 = _spd_batch_with_singular(6, 5, 3, np.float32, seed=8)
     coh = pl.est_corr_batch(
         (np.random.default_rng(9).standard_normal((6, 5, 16))
          + 1j * np.random.default_rng(10).standard_normal((6, 5, 16))
          ).astype(np.complex64))
+    rng = np.random.default_rng(11)
+    Z = (rng.standard_normal((60, 8, 12))
+         + 1j * rng.standard_normal((60, 8, 12))).astype(np.complex64)
+    Z[::7, 1] = Z[::7, 0]          # equal rows: |Γ| singular, needs loads
+    absc = np.abs(pl.est_corr_batch(Z)).astype(np.float32)
+    rhs = np.random.default_rng(4).standard_normal((6, 5))
     gufunc = (pl.inv_batch_status(A), pl._cholesky_ok_batch(A32),
-              pl.emi_phase_batch_status(coh, A))
+              pl.emi_phase_batch_status(coh, A),
+              lstsq.solve_batch_status(A, rhs))
     monkeypatch.setattr(pl, "_ul", None)
+    monkeypatch.setattr(lstsq, "_ul", None)
     loop = (pl.inv_batch_status(A), pl._cholesky_ok_batch(A32),
-            pl.emi_phase_batch_status(coh, A))
+            pl.emi_phase_batch_status(coh, A),
+            lstsq.solve_batch_status(A, rhs))
 
-    (I_g, ok_g), chol_g, (v_g, vok_g) = gufunc
-    (I_l, ok_l), chol_l, (v_l, vok_l) = loop
+    (I_g, ok_g), chol_g, (v_g, vok_g), (x_g, xok_g) = gufunc
+    (I_l, ok_l), chol_l, (v_l, vok_l), (x_l, xok_l) = loop
     expect = [True, True, True, False, True, True]
     assert ok_g.tolist() == ok_l.tolist() == expect
     assert chol_g.tolist() == chol_l.tolist() == expect
     assert vok_g.tolist() == vok_l.tolist() == expect
+    assert xok_g.tolist() == xok_l.tolist() == expect
     assert I_l.dtype == I_g.dtype and I_l.shape == I_g.shape
     assert I_l[ok_l].tobytes() == I_g[ok_g].tobytes()
     assert np.isnan(I_l[3]).all() and np.isnan(I_g[3]).all()
     assert v_l[vok_l].tobytes() == v_g[vok_g].tobytes()
+    np.testing.assert_allclose(x_l[xok_l], x_g[xok_g], rtol=1e-12)
+    assert np.isnan(x_l[3]).all() and np.isnan(x_g[3]).all()
+
+    status, out = pl.regularize_matrix_batch(absc)
+    scalar = [pl.regularize_matrix(m) for m in absc]
+    assert status.tolist() == [s for s, _ in scalar]
+    assert out.tobytes() == np.stack([m for _, m in scalar]).tobytes()
+    assert (out != absc).any(axis=(1, 2)).sum() >= len(Z[::7])
 
 
+@pytest.mark.parametrize("method", ["EMI", "PTA"])
 @pytest.mark.parametrize("gufuncs", [True, False])
-def test_emi_eigh_failure_takes_the_scalar_chain(monkeypatch, gufuncs):
+def test_failed_member_takes_the_batched_evd(monkeypatch, gufuncs, method):
     """One member whose eigh does not converge must not fail the Arrow
-    batch: it alone is marked ok=False and takes the scalar EMI→EVD
-    chain; every other member is unchanged bit for bit. With the raw
-    gufuncs LAPACK non-convergence comes back NaN-filled; without them
-    np.linalg.eigh raises for the batch."""
+    batch: the estimator marks it alone ok=False and it takes the one
+    batched EVD call, byte for byte what evd_phase_batch gives it; the
+    other members are what the estimator gives them without it. With
+    the raw gufuncs LAPACK non-convergence comes back NaN-filled;
+    without them np.linalg.eigh raises for the batch."""
     from miaplpy_spark.operators.rollup import _link_batch
 
     if not gufuncs:
@@ -486,14 +491,16 @@ def test_emi_eigh_failure_takes_the_scalar_chain(monkeypatch, gufuncs):
     rng = np.random.default_rng(21)
     Z = (rng.standard_normal((5, 8, 24))
          + 1j * rng.standard_normal((5, 8, 24))).astype(np.complex64)
-    vec0, q0, sq0 = _link_batch(Z, "EMI")
+    vec0, q0, sq0 = _link_batch(Z, method)
 
     bad = 2
+    keep = np.arange(5) != bad
     coh = pl.est_corr_batch(Z)
     status, abscoh = pl.regularize_matrix_batch(np.abs(coh).astype(np.float32))
     assert (status == 0).all()
     inv_abs, _ = pl.inv_batch_status(abscoh.astype(np.float64))
     target = (inv_abs[bad] * coh[bad]).astype(np.complex64)
+    pta_keep = pl.pta_phase_batch(coh[keep], abscoh[keep])[0]
 
     def hits(a):
         a = np.asarray(a)
@@ -523,12 +530,21 @@ def test_emi_eigh_failure_takes_the_scalar_chain(monkeypatch, gufuncs):
 
         monkeypatch.setattr(pl, "_ul", NonConverging())
 
-    _, ok = pl.emi_phase_batch_status(coh, abscoh)
+    est = pl.pta_phase_batch if method == "PTA" else pl.emi_phase_batch_status
+    _, ok = est(coh, abscoh)
     assert ok.tolist() == [True, True, False, True, True]
+    with pytest.raises(np.linalg.LinAlgError):
+        (pl.pta_phase if method == "PTA" else pl.emi_phase)(coh[bad], abscoh[bad])
 
-    vec, q, sq = _link_batch(Z, "EMI")
-    keep = np.arange(5) != bad
-    assert vec[keep].tobytes() == vec0[keep].tobytes()
-    assert q[keep].tobytes() == q0[keep].tobytes()
-    assert sq[keep].tobytes() == sq0[keep].tobytes()
-    assert vec[bad].tobytes() == pl.evd_phase(coh[bad]).tobytes()
+    vec, q, sq = _link_batch(Z, method)
+    assert (vec[bad].tobytes()
+            == pl.evd_phase_batch(coh[bad:bad + 1])[0].tobytes()
+            == pl.evd_phase(coh[bad]).tobytes())
+    if method == "PTA":
+        # the refinement runs over the members EMI solved, as if the
+        # failed one had never been in the batch
+        assert vec[keep].tobytes() == pta_keep.tobytes()
+    else:
+        assert vec[keep].tobytes() == vec0[keep].tobytes()
+        assert q[keep].tobytes() == q0[keep].tobytes()
+        assert sq[keep].tobytes() == sq0[keep].tobytes()
