@@ -1,7 +1,7 @@
 """Engine configuration.
 
 One frozen dataclass passed into UDF closures (the reference's
-kernel-config pattern U4: method/test enums from
+kernel-config pattern U4: the method enum and the test switches from
 defaults/miaplpyApp_auto.cfg become plain fields here, captured once —
 not per-row parameters).
 
@@ -33,13 +33,12 @@ class EngineConfig:
     method: str = "EMI"                # EVD | EMI | PTA | SBW
     # (PHASE_LINKING_METHODS)
     sbw_lag: int = 10
-    shp_alpha: float = 0.05
-    shp_test: str = "KS"               # KS | TTEST | AD (N2/N4/N5 dispatch)
     shp_filter: bool = False           # apply the SHP membership test
     # inside the 1h rollup: slots whose token-sample distribution fails
-    # the test against the window's center slot are excluded from the
-    # eigen ensemble (interpolated like gaps); aggregates still cover
-    # all present rows (get_shp_row_col_c, lib/utils.pyx:903-998)
+    # the two-sample KS test (alpha = 0.05) against the window's center
+    # slot are excluded from the eigen ensemble (interpolated like
+    # gaps); aggregates still cover all present rows
+    # (get_shp_row_col_c, lib/utils.pyx:903-998)
     ps_test: bool = True               # PS shortcut inside the 1h rollup:
     # groups whose coherence is rank-1-dominant (top eig >95% of the
     # spectrum norm) with amplitude dispersion <0.42 keep raw phase

@@ -489,15 +489,14 @@ def connected_components(pairs: DataFrame,
     and B~C must collapse into ONE keep-group even when A~C was never
     surfaced. The label is the component's minimum node.
 
-    The deduplicated edge set is materialized once and probed: at or
-    below DRIVER_MAX_EDGES it is labeled by one exact driver-side
-    union-find — for the common case where LSH verification leaves a
-    pair graph orders of magnitude smaller than the corpus, this
-    replaces 6-10 distributed rounds of fixed job latency with
-    microseconds — and above it by the star rounds
-    (_star_components), O(log n) rounds at any diameter: curation runs
-    over arbitrary corpora, where near-dup chain diameter is
-    unbounded. ``max_iter`` bounds the star rounds; the operator
+    The deduplicated edge set is probed: at or below DRIVER_MAX_EDGES
+    it is labeled by one exact driver-side union-find — for the common
+    case where LSH verification leaves a pair graph orders of magnitude
+    smaller than the corpus, this replaces 6-10 distributed rounds of
+    fixed job latency with microseconds — and above it by the star
+    rounds (_star_components), O(log n) rounds at any diameter:
+    curation runs over arbitrary corpora, where near-dup chain diameter
+    is unbounded. ``max_iter`` bounds the star rounds; the operator
     raises rather than returning a half-propagated labeling.
 
     At 100 TB: the edge list is the (bounded) output of the LSH/
@@ -507,15 +506,18 @@ def connected_components(pairs: DataFrame,
     ``doc_spine`` joins them back as their own component when a total
     labeling is needed). The per-round localCheckpoint truncates the
     lineage so the plan does not grow with the rounds."""
-    e = _canonical_edges(pairs).localCheckpoint(eager=True)
+    e = _canonical_edges(pairs)
     # size probe and edge fetch fused into ONE job: limit(max+1)
     # returns every edge when the graph is under the threshold
     # (the common LSH-verified case), so the driver path pays a
-    # single action instead of count-then-collect
+    # single action instead of count-then-collect, and computes the
+    # edges once. The star rounds read the edges twice more (both
+    # halves of the first round's neighborhoods), so only they get a
+    # materialized copy.
     rows = e.limit(DRIVER_MAX_EDGES + 1).collect()
     if len(rows) <= DRIVER_MAX_EDGES:
         return _driver_components(e, rows)
-    return _star_components(e, max_iter)
+    return _star_components(e.localCheckpoint(eager=True), max_iter)
 
 
 def dedup_keep_list(pairs: DataFrame,

@@ -312,12 +312,12 @@ def _emit(cols: dict, schema: pa.Schema) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
-def _shp_present(phi_dense: np.ndarray, present: np.ndarray,
-                 test: str, alpha: float) -> np.ndarray:
+def _shp_present(phi_dense: np.ndarray, present: np.ndarray) -> np.ndarray:
     """SHP membership inside the window (N1, get_shp_row_col_c
     lib/utils.pyx:903-998 grafted to the token axis): each slot's
     token-sample distribution (phase = affine in token id) is tested
-    against the window's center-most present slot; failing slots are
+    against the window's center-most present slot with the two-sample
+    KS test at alpha = 0.05 (ks_lut's critical distance); failing slots are
     excluded from the eigen ensemble (they fall back to interpolation,
     like gaps). Groups left with <2 member slots keep all present
     slots (the reference's min-SHP fallback). Fully vectorized."""
@@ -330,8 +330,8 @@ def _shp_present(phi_dense: np.ndarray, present: np.ndarray,
     ref = np.ascontiguousarray(
         np.broadcast_to(srt[g, ref_t][:, None, :], (G, T, S))
     ).reshape(G * T, S)
-    keep = shp_kernels.shp_keep_pairs(
-        test, ref, srt.reshape(G * T, S), alpha).reshape(G, T)
+    keep = (shp_kernels.ecdf_distance_pairs(ref, srt.reshape(G * T, S))
+            <= shp_kernels.ks_lut(S, S)).reshape(G, T)
     keep[g, ref_t] = True
     keep &= present
     too_few = keep.sum(axis=1) < 2
@@ -419,8 +419,7 @@ def hour_windows(num: dict, cfg: EngineConfig) -> tuple[np.ndarray, dict]:
     if cfg.shp_filter:
         phi_dense = np.zeros((G, T, S), dtype=np.float32)
         phi_dense[gid, sih] = phi
-        ens_present = _shp_present(phi_dense, present, cfg.shp_test,
-                                   cfg.shp_alpha)
+        ens_present = _shp_present(phi_dense, present)
     # float32 fill + preallocated complex64 assembly: the f64
     # round-trip and the complex128 intermediate of (re + 1j*im)
     # were ~25% of the fill cost at zero accuracy benefit (interp
@@ -479,7 +478,8 @@ def day_windows(hr: dict, cfg: EngineConfig) -> tuple[np.ndarray, dict]:
     SQ.imag = fill_dense_batch(dense.imag, present)
 
     # datum pass: re-link the squeezed carries (datum_connect A11)
-    vec, quality_1d, day_squeezed = _link_batch(SQ, cfg.method)
+    vec, quality_1d, day_squeezed = _link_batch(SQ, cfg.method,
+                                                cfg.sbw_lag)
     datum = np.angle(vec).astype(np.float32)  # (G, H)
 
     lp_dense = np.zeros((G, H, T), dtype=np.float32)

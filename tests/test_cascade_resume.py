@@ -120,7 +120,7 @@ def test_every_config_field_reaches_the_lineage(field):
     checkpointed under one config is skipped under another. Sparkless."""
     cfg = EngineConfig()
     old = getattr(cfg, field)
-    new = {"method": "EVD", "shp_test": "AD"}.get(field)
+    new = {"method": "EVD"}.get(field)
     if new is None:
         if isinstance(old, bool):
             new = not old

@@ -136,6 +136,33 @@ def test_auto_small_graph_uses_driver_union_find(spark, monkeypatch):
     assert small == exp and big == exp
 
 
+def test_only_the_star_path_materializes_the_edges(spark, monkeypatch):
+    """The driver path reads the edge set once (the size probe is its
+    collect), so it makes no localCheckpoint; the star rounds read it
+    again each round and do. Both label like the union-find oracle."""
+    rng = np.random.RandomState(29)
+    edges = [(f"m{min(a, b):04d}", f"m{max(a, b):04d}")
+             for a, b in rng.randint(0, 100, size=(80, 2)) if a != b]
+    pairs = spark.createDataFrame(edges, "doc1 string, doc2 string")
+    exp = _uf_components(edges)
+    # the session's concrete DataFrame class, which defines the method
+    frame = type(pairs)
+    checkpoint = frame.localCheckpoint
+    calls = []
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", counting)
+    driver = connected_components(pairs)
+    assert len(calls) == 0
+    assert {r["node"]: r["comp"] for r in driver.collect()} == exp
+    monkeypatch.setattr(dedup, "DRIVER_MAX_EDGES", 0)
+    star = connected_components(pairs)
+    assert len(calls) >= 1
+    assert {r["node"]: r["comp"] for r in star.collect()} == exp
+
 def test_auto_long_path_converges(spark, star):
     """Above the edge threshold the labeling stays diameter-safe."""
     edges = [(f"z{i:02d}", f"z{i + 1:02d}") for i in range(40)]

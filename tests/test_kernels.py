@@ -233,150 +233,10 @@ def test_ks_lut_and_distance():
     d = shp.ecdf_distance_batch(a, np.stack([b, c]))
     assert abs(d[0] - shp.ecdf_distance(a, b)) < 1e-12
     assert abs(d[1] - shp.ecdf_distance(a, c)) < 1e-12
-
-
-def test_betainc_reg_closed_forms():
-    x = np.linspace(0.01, 0.99, 23)
-    # I_x(1,1) = x
-    np.testing.assert_allclose(shp.betainc_reg(1.0, 1.0, x), x, atol=1e-10)
-    # I_x(1/2,1/2) = (2/pi) asin(sqrt(x))
-    np.testing.assert_allclose(
-        shp.betainc_reg(0.5, 0.5, x), (2 / np.pi) * np.arcsin(np.sqrt(x)),
-        atol=1e-9)
-    assert shp.betainc_reg(2.0, 3.0, 0.0) == 0.0
-    assert shp.betainc_reg(2.0, 3.0, 1.0) == 1.0
-
-
-def test_welch_pvalue_hand_computed():
-    """Welch t on [1,2,3,4] vs [2,3,4,5]: t = -1.095445, Welch-
-    Satterthwaite df = 6, two-sided p = 0.315323 (public t tables /
-    scipy.stats.ttest_ind(equal_var=False) reference value)."""
-    s1 = np.array([1.0, 2.0, 3.0, 4.0])
-    s2 = np.array([2.0, 3.0, 4.0, 5.0])
-    p = float(shp.welch_pvalue(s1, s2))
-    assert abs(p - 0.315323) < 1e-4
-    # symmetry + identical samples
-    assert abs(p - float(shp.welch_pvalue(s2, s1))) < 1e-12
-    assert float(shp.welch_pvalue(s1, s1)) == 1.0
-    # z = 1.96 at huge df -> p ~ 0.05
-    rng = np.random.RandomState(0)
-    n = 200_000
-    a = rng.normal(0, 1, n)
-    a = (a - a.mean()) / a.std(ddof=1)
-    b = a + 1.96 * np.sqrt(2.0 / n)
-    assert abs(float(shp.welch_pvalue(a, b)) - 0.05) < 2e-3
-    # monotone in shift
-    ps = [float(shp.welch_pvalue(s1, s1 + d)) for d in (0.5, 1.0, 2.0)]
-    assert ps[0] > ps[1] > ps[2]
-
-
-def test_welch_pvalue_batched():
-    rng = np.random.RandomState(1)
-    ref = rng.normal(0, 1, 30)
-    tests = np.stack([ref + d for d in (0.0, 0.1, 1.0, 5.0)])
-    p = shp.welch_pvalue(np.broadcast_to(ref, tests.shape), tests)
-    assert p.shape == (4,)
-    for i in range(4):
-        assert abs(p[i] - float(shp.welch_pvalue(ref, tests[i]))) < 1e-12
-    assert p[0] == 1.0 and p[3] < 1e-6
-
-
-def test_shp_gate_dispatch():
-    """KS | TTEST | AD dispatch (EngineConfig.shp_test, reference
-    shp_test enum get_shp_row_col_c)."""
-    rng = np.random.RandomState(2)
-    n = 40
-    ref = np.sort(rng.normal(0, 1, n))
-    same = np.sort(rng.normal(0, 1, n))
-    far = np.sort(rng.normal(4, 1, n))
-    tests = np.stack([same, far])
-    refs = np.ascontiguousarray(np.broadcast_to(ref, tests.shape))
-    for name in ("KS", "TTEST", "AD"):
-        keep = shp.shp_keep_pairs(name, refs, tests, alpha=0.05)
-        assert keep[0] and not keep[1], name
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        shp.shp_keep_pairs("nope", refs, tests)
-
-
-def _ad_midrank_scalar(s1, s2):
-    """Independent scalar transcription of the Scholz-Stephens (1987)
-    midrank A2akN + Tk normalization (k=2), searchsorted style — the
-    oracle for the vectorized merge-based kernel."""
-    s1 = np.sort(np.asarray(s1, float))
-    s2 = np.sort(np.asarray(s2, float))
-    n = [len(s1), len(s2)]
-    Z = np.sort(np.concatenate([s1, s2]))
-    Zstar = np.unique(Z)
-    N = len(Z)
-    lj = (Z.searchsorted(Zstar, "right")
-          - Z.searchsorted(Zstar, "left")).astype(float)
-    Bj = Z.searchsorted(Zstar, "left") + lj / 2.0
-    A2 = 0.0
-    for i, s in enumerate((s1, s2)):
-        Mij = s.searchsorted(Zstar, "right").astype(float)
-        fij = Mij - s.searchsorted(Zstar, "left")
-        Maij = Mij - fij / 2.0
-        inner = lj / N * (N * Maij - n[i] * Bj) ** 2 / (
-            Bj * (N - Bj) - N * lj / 4.0)
-        A2 += inner.sum() / n[i]
-    A2 *= (N - 1.0) / N
-    H = sum(1.0 / ni for ni in n)
-    h = sum(1.0 / i for i in range(1, N))
-    g = sum(1.0 / ((N - i) * j)
-            for i in range(1, N - 1) for j in range(i + 1, N))
-    k = 2
-    a = (4 * g - 6) * (k - 1) + (10 - 6 * g) * H
-    b = (2 * g - 4) * k**2 + 8 * h * k + (2 * g - 14 * h - 4) * H \
-        - 8 * h + 4 * g - 6
-    c = (6 * h + 2 * g - 2) * k**2 + (4 * h - 4 * g + 6) * k \
-        + (2 * h - 6) * H + 4 * h
-    d = (2 * h + 6) * k**2 - 4 * h * k
-    sigma2 = (a * N**3 + b * N**2 + c * N + d) / (
-        (N - 1.0) * (N - 2.0) * (N - 3.0))
-    return (A2 - (k - 1)) / np.sqrt(sigma2)
-
-
-def test_ad_statistic_matches_scalar_oracle():
-    """Vectorized AD Tk == independent searchsorted transcription of
-    the published formulas, with and without ties."""
-    rng = np.random.RandomState(7)
-    n = 25
-    pairs = [
-        (rng.normal(0, 1, n), rng.normal(0, 1, n)),
-        (rng.normal(0, 1, n), rng.normal(2, 1, n)),
-        (rng.randint(0, 6, n).astype(float),          # heavy ties
-         rng.randint(0, 6, n).astype(float)),
-        (np.repeat([1.0, 2.0], [10, 15]),             # cross-sample ties
-         np.repeat([1.0, 3.0], [12, 13])),
-    ]
-    a = np.sort(np.stack([p[0] for p in pairs]), axis=1)
-    b = np.sort(np.stack([p[1] for p in pairs]), axis=1)
-    tk = shp.ad_2samp_statistic(a, b)
-    for i, (s1, s2) in enumerate(pairs):
-        np.testing.assert_allclose(tk[i], _ad_midrank_scalar(s1, s2),
-                                   rtol=1e-10)
-    # symmetry
-    np.testing.assert_allclose(shp.ad_2samp_statistic(b, a), tk, rtol=1e-10)
-
-
-def test_ad_pvalue_behaviour():
-    """Significance behaves like the reference's anderson_ksamp use:
-    capped to [0.001, 0.25], monotone in separation, keeps identical
-    samples and rejects disjoint ones at alpha=0.05."""
-    rng = np.random.RandomState(11)
-    n = 40
-    ref = np.sort(rng.normal(0, 1, n))
-    shifts = [0.0, 0.5, 1.0, 4.0]
-    tests = np.stack([np.sort(ref + s) for s in shifts])
-    p = shp.ad_2samp_pvalue(
-        np.broadcast_to(ref, tests.shape).copy(), tests)
-    assert p[0] == 0.25                 # identical -> table ceiling
-    assert p[-1] == 0.001               # disjoint -> table floor
-    assert all(p[i] >= p[i + 1] for i in range(len(p) - 1))
-    keep = shp.shp_keep_pairs("AD", np.broadcast_to(ref, tests.shape).copy(),
-                              tests, alpha=0.05)
-    assert keep[0] and not keep[-1]
+    # the rollup's SHP gate: keep the same-distribution pair, reject
+    # the shifted one
+    keep = shp.ecdf_distance_pairs(np.stack([a, a]), np.stack([b, c])) <= thr
+    assert keep.tolist() == [True, False]
 
 
 def test_pta_refines_emi(sim):

@@ -71,12 +71,17 @@ def _referenced(path: str, module: str | None, mods: dict) -> set:
     return closed & set(mods)
 
 
-def _reached(mods: dict) -> set:
-    todo = [(os.path.join(REPO, f), None) for f in ENTRY_FILES]
+def _entry_paths() -> list:
+    paths = [os.path.join(REPO, f) for f in ENTRY_FILES]
     for d in ENTRY_DIRS:
-        todo += [(os.path.join(REPO, d, f), None)
-                 for f in sorted(os.listdir(os.path.join(REPO, d)))
-                 if f.endswith(".py")]
+        paths += [os.path.join(REPO, d, f)
+                  for f in sorted(os.listdir(os.path.join(REPO, d)))
+                  if f.endswith(".py")]
+    return paths
+
+
+def _reached(mods: dict) -> set:
+    todo = [(path, None) for path in _entry_paths()]
     seen = set()
     while todo:
         path, module = todo.pop()
@@ -123,6 +128,70 @@ def test_every_engine_config_field_is_read():
     assert not unread, f"EngineConfig fields nothing reads: {unread}"
 
 
+# EngineConfig fields that no entry point sets, each with the reason it
+# stays a field. Any other field an entry point does not set is a knob
+# only tests turn.
+UNSET_FIELDS = {
+    "slot_seconds": "time grid: the raw cadence of the data",
+    "slots_per_hour": "time grid: the mini-stack size of the data",
+    "hours_per_day": "time grid: hourly windows per daily window",
+    "epoch0": "time grid: the fixed anchor of slot numbers",
+    "vocab_size": "data property: the token-id range the phases span",
+    "gap_modulus": "datagen: the fixture's gap rate",
+    "sources": "datagen: the fixture's source labels",
+    "zipf_alpha": "datagen: the fixture's doc-size skew",
+    "method": "phase-linking estimator, kept for the simulated-truth "
+              "gate of ROADMAP item 5",
+    "sbw_lag": "the SBW estimator's band, kept for the same gate",
+    "ps_test": "the PS shortcut, which the same gate runs off and on",
+}
+
+
+def _entry_config_keys() -> set:
+    """Names an entry point sets on an EngineConfig: keywords of an
+    ``EngineConfig(...)`` or ``replace(...)`` call, and the string keys
+    of a dict that such a call unpacks with ``**`` (a literal assigned
+    to that name, or a ``name["key"] = ...`` store)."""
+    keys = set()
+    for path in _entry_paths():
+        tree = ast.parse(open(path).read(), path)
+        unpacked = set()
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Call)
+                    and getattr(node.func, "id", getattr(node.func, "attr",
+                                                         None))
+                    in ("EngineConfig", "replace")):
+                for k in node.keywords:
+                    if k.arg:
+                        keys.add(k.arg)
+                    elif isinstance(k.value, ast.Name):
+                        unpacked.add(k.value.id)
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Assign)
+                    and isinstance(node.value, ast.Dict)
+                    and any(getattr(t, "id", None) in unpacked
+                            for t in node.targets)):
+                keys.update(k.value for k in node.value.keys
+                            if isinstance(k, ast.Constant))
+            elif (isinstance(node, ast.Subscript)
+                  and isinstance(node.ctx, ast.Store)
+                  and getattr(node.value, "id", None) in unpacked
+                  and isinstance(node.slice, ast.Constant)):
+                keys.add(node.slice.value)
+    return keys
+
+
+def test_every_engine_config_field_is_set_by_an_entry_point():
+    fields = _engine_config_fields()
+    keys = _entry_config_keys()
+    unset = [f for f in fields if f not in keys and f not in UNSET_FIELDS]
+    assert not unset, (
+        "EngineConfig fields no entry point sets (delete them, or list "
+        f"them in UNSET_FIELDS with the reason they stay): {unset}")
+    stale = sorted(f for f in UNSET_FIELDS if f in keys or f not in fields)
+    assert not stale, f"set by an entry point or gone, drop them: {stale}"
+
+
 # Every eager materialization in the package, one per function, with
 # the reason it exists. A localCheckpoint pins executor-local blocks
 # that cannot be recomputed if the executor is lost, so a new one
@@ -142,7 +211,8 @@ MATERIALIZATIONS = {
         "the id-set broadcast and the verify join both read the "
         "candidates (q52 reuse)",
     "functions.dedup::connected_components":
-        "the size probe and both component paths read the edge set",
+        "the star rounds read the edge set the size probe computed; "
+        "the driver path reads it once and does not materialize it",
     "functions.dedup::_star_components":
         "truncates the lineage each star round",
     "functions.text::shingle_jaccard_pairs_df":
