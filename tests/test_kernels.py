@@ -233,10 +233,25 @@ def test_ks_lut_and_distance():
     d = shp.ecdf_distance_batch(a, np.stack([b, c]))
     assert abs(d[0] - shp.ecdf_distance(a, b)) < 1e-12
     assert abs(d[1] - shp.ecdf_distance(a, c)) < 1e-12
-    # the rollup's SHP gate: keep the same-distribution pair, reject
-    # the shifted one
-    keep = shp.ecdf_distance_pairs(np.stack([a, a]), np.stack([b, c])) <= thr
+
+
+def test_shp_gate_dispatch():
+    """The rollup's SHP gate (reference get_shp_row_col_c, shp_test KS):
+    ecdf_distance_pairs <= ks_lut keeps the same-distribution pair and
+    rejects the shifted one, row by row over a batch of pairs."""
+    rng = np.random.RandomState(2)
+    n = 40
+    ref = np.sort(rng.normal(0, 1, n))
+    same = np.sort(rng.normal(0, 1, n))
+    far = np.sort(rng.normal(4, 1, n))
+    tests = np.stack([same, far])
+    refs = np.ascontiguousarray(np.broadcast_to(ref, tests.shape))
+    keep = shp.ecdf_distance_pairs(refs, tests) <= shp.ks_lut(n, n)
     assert keep.tolist() == [True, False]
+    # the pairwise distances are the scalar KS distances
+    d = shp.ecdf_distance_pairs(refs, tests)
+    for i in range(2):
+        assert abs(d[i] - shp.ecdf_distance(ref, tests[i])) < 1e-12
 
 
 def test_pta_refines_emi(sim):
