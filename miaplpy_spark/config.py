@@ -15,8 +15,9 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-# the phase-linking estimators _link_batch dispatches on
-PHASE_LINKING_METHODS = ("EVD", "EMI", "PTA", "SBW")
+# the phase-linking estimators _link_batch dispatches on; the
+# reference's PTA and SBW are not ported (COVERAGE.md A5, A7)
+PHASE_LINKING_METHODS = ("EVD", "EMI")
 
 
 @dataclass(frozen=True)
@@ -30,9 +31,8 @@ class EngineConfig:
     # kernel
     n_samples: int = 32                # S: ensemble width per slot (complex)
     vocab_size: int = 50257
-    method: str = "EMI"                # EVD | EMI | PTA | SBW
+    method: str = "EMI"                # EVD | EMI
     # (PHASE_LINKING_METHODS)
-    sbw_lag: int = 10
     shp_filter: bool = False           # apply the SHP membership test
     # inside the 1h rollup: slots whose token-sample distribution fails
     # the two-sample KS test (alpha = 0.05) against the window's center

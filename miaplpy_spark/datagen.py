@@ -38,6 +38,17 @@ def zipf_thresholds(n: int, alpha: float) -> list[float]:
     return out
 
 
+def _source_label(cfg: EngineConfig) -> F.Column:
+    """A doc's source: Zipf(zipf_alpha) over ``cfg.sources``, drawn per
+    doc_id (not per row), so every generator labels a doc alike."""
+    thresholds = zipf_thresholds(len(cfg.sources), cfg.zipf_alpha)
+    u = _u("src" + str(cfg.seed), "doc_id")
+    src = F.lit(cfg.sources[-1])
+    for name, thr in reversed(list(zip(cfg.sources[:-1], thresholds[:-1]))):
+        src = F.when(u < thr, F.lit(name)).otherwise(src)
+    return src
+
+
 def generate_sequences(
     spark: SparkSession,
     scale: str | ScaleSpec = "tiny",
@@ -80,12 +91,7 @@ def generate_sequences(
     df = df.withColumn("n_tok", F.when(heavy, heavy_n).otherwise(light_n))
 
     # source: Zipf(alpha) over the category list (hot-key driver)
-    thresholds = zipf_thresholds(len(cfg.sources), cfg.zipf_alpha)
-    u = _u("src" + seed, "doc_id")  # per-doc, not per-row
-    src = F.lit(cfg.sources[-1])
-    for name, thr in reversed(list(zip(cfg.sources[:-1], thresholds[:-1]))):
-        src = F.when(u < thr, F.lit(name)).otherwise(src)
-    df = df.withColumn("source", src)
+    df = df.withColumn("source", _source_label(cfg))
 
     if with_tokens:
         df = df.withColumn(
@@ -185,15 +191,9 @@ def generate_doc_dim(spark: SparkSession, scale: str | ScaleSpec = "tiny",
     runs string-free (doc_key only) and joins this dimension back onto
     the G-row tier outputs (attach_doc_dim), a broadcast join."""
     spec = SCALES[scale] if isinstance(scale, str) else scale
-    seed = str(cfg.seed)
     df = spark.range(0, spec.n_docs).select(
         F.format_string("doc%08d", F.col("id")).alias("doc_id"))
-    thresholds = zipf_thresholds(len(cfg.sources), cfg.zipf_alpha)
-    u = _u("src" + seed, "doc_id")
-    src = F.lit(cfg.sources[-1])
-    for name, thr in reversed(list(zip(cfg.sources[:-1], thresholds[:-1]))):
-        src = F.when(u < thr, F.lit(name)).otherwise(src)
-    dim = with_doc_keys(df.select("doc_id", src.alias("source")))
+    dim = with_doc_keys(df.select("doc_id", _source_label(cfg).alias("source")))
     return dim.select("doc_key", "doc_id", "source")
 
 
@@ -310,13 +310,8 @@ def generate_documents(spark: SparkSession, n_docs: int,
     for name, thr in reversed(lang_cuts):
         lang = F.when(ul < thr, F.lit(name)).otherwise(lang)
 
-    thresholds = zipf_thresholds(len(cfg.sources), cfg.zipf_alpha)
-    us = _u("src" + seed, "doc_id")
-    src = F.lit(cfg.sources[-1])
-    for name, thr in reversed(list(zip(cfg.sources[:-1], thresholds[:-1]))):
-        src = F.when(us < thr, F.lit(name)).otherwise(src)
-
-    cols = ["doc_id", "text", lang.alias("lang"), src.alias("source"),
+    cols = ["doc_id", "text", lang.alias("lang"),
+            _source_label(cfg).alias("source"),
             F.length("text").cast("long").alias("n_chars")]
     if with_families:
         cols += ["kind", "content_seed"]

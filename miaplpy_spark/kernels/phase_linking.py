@@ -14,7 +14,6 @@ NumPy):
 - ``datum_connect``       <- datum_connect_cy, lib/utils.pyx:732-796
 - ``gam_pta``             <- gam_pta_c, lib/utils.pyx:1012-1029
 - ``test_ps``             <- test_PS_cy, lib/utils.pyx:420-459
-- ``mask_diag``           <- mask_diag, lib/utils.pyx:195-205
 
 All hot paths also have ``*_batch`` variants operating on stacked
 (B, N, ...) arrays — one LAPACK call per Arrow batch instead of one per
@@ -213,66 +212,6 @@ def emi_phase_batch_status(coh: np.ndarray, abscoh: np.ndarray):
     return vec, ok
 
 
-def _pta_objective_grad(theta: np.ndarray, M: np.ndarray):
-    """PTA objective |log(v^H M v)| with v = exp(iθ) rotated to ref 0,
-    and its analytic gradient (optphase_cy, lib/utils.pyx:246-261).
-    Batched: theta (B, N), M (B, N, N) Hermitian -> (f (B,), g (B, N))."""
-    th = theta - theta[..., :1]
-    v = np.exp(1j * th)
-    Mv = np.einsum("bij,bj->bi", M, v, optimize=True)
-    u = np.einsum("bi,bi->b", v.conj(), Mv, optimize=True).real
-    u = np.maximum(u, 1e-12)
-    f = np.abs(np.log(u))
-    # du/dθ_k = 2 Im(v_k* (Mv)_k); df = sign(log u) du / u
-    du = 2.0 * (v.conj() * Mv).imag
-    g = np.sign(np.log(u))[:, None] * du / u[:, None]
-    g[:, 0] = 0.0  # reference phase pinned
-    return f, g
-
-
-def pta_phase_batch(coh: np.ndarray, abscoh: np.ndarray,
-                    gtol: float = 1e-6, max_iter: int = 200):
-    """PTA estimator (A5, PTA_L_BFGS_cy lib/utils.pyx:288-309): start
-    from the EMI solution and refine the phases by minimizing
-    |log(v^H M v)| with M = inv(|Γ|)∘Γ — here a batched gradient
-    descent with backtracking line search instead of scipy's L-BFGS-B
-    (scipy is unavailable; the objective/gradient are identical).
-    coh (B, N, N); returns (vec (B, N) complex64 unit phasors, ok (B,)).
-    Only the members emi_phase_batch_status solved are refined; the
-    rest keep its ok=False and go to EVD like an EMI failure."""
-    vec, ok = emi_phase_batch_status(coh, abscoh)
-    theta = np.angle(vec[ok]).astype(np.float64)
-    inv_abs, _ = inv_batch_status(abscoh[ok].astype(np.float64))
-    M = (inv_abs * coh[ok]).astype(np.complex128)
-    step = np.full(theta.shape[0], 0.1)
-    f, g = _pta_objective_grad(theta, M)
-    for _ in range(max_iter):
-        gn = np.linalg.norm(g, axis=1)
-        active = gn > gtol
-        if not active.any():
-            break
-        cand = theta - step[:, None] * g
-        f_new, g_new = _pta_objective_grad(cand, M)
-        better = (f_new < f) & active
-        theta = np.where(better[:, None], cand, theta)
-        f = np.where(better, f_new, f)
-        g = np.where(better[:, None], g_new, g)
-        step = np.where(better, step * 1.2, np.where(active, step * 0.5, step))
-        if np.all(step < 1e-12):
-            break
-    vec[ok] = _rotate_to_ref(np.exp(1j * theta).astype(C64))
-    return vec, ok
-
-
-def pta_phase(coh: np.ndarray, abscoh: np.ndarray, **kw) -> np.ndarray:
-    """Scalar convenience wrapper over the batched PTA; raises
-    LinAlgError where the batch reports the member failed."""
-    vec, ok = pta_phase_batch(coh[None], abscoh[None], **kw)
-    if not ok[0]:
-        raise np.linalg.LinAlgError("PTA: EMI start failed")
-    return vec[0]
-
-
 def regularize_matrix(M: np.ndarray, max_tries: int = 100):
     """Diagonal loading until Cholesky succeeds: add 1e-6, 2e-6, 4e-6...
     cumulatively (<=100 tries). Returns (status, N): status 0 = PD.
@@ -323,15 +262,6 @@ def regularize_matrix_batch(M: np.ndarray, max_tries: int = 100):
         en *= 2
     status[pend] = 1
     return status, out
-
-
-def mask_diag(coh: np.ndarray, lag: int) -> np.ndarray:
-    """Keep only the ±lag band of the matrix (SBW method); entries
-    outside the band are zeroed."""
-    n = coh.shape[-1]
-    i = np.arange(n)
-    band = np.abs(i[:, None] - i[None, :]) < lag
-    return np.where(band, coh, 0).astype(C64)
 
 
 # --------------------------------------------------------------------------
@@ -440,24 +370,20 @@ def test_ps_batch(coh: np.ndarray, amplitude: np.ndarray):
 
 
 def phase_linking_process(ccg_sample: np.ndarray, step: int, method: str,
-                          squeeze: bool, lag: int = 0):
-    """Dispatch est_corr -> (SBW band) -> {PTA|EMI|EVD with
-    regularize-or-fallback} -> gam_pta quality -> optional squeeze.
+                          squeeze: bool):
+    """Dispatch est_corr -> {EMI|EVD with regularize-or-fallback} ->
+    gam_pta quality -> optional squeeze.
 
-    Returns (vec, squeezed_or_None, quality). EMI, PTA and SBW fall
-    back to EVD when regularization fails or the estimator raises, as
-    the reference does (lib/utils.pyx:538-551).
+    Returns (vec, squeezed_or_None, quality). EMI falls back to EVD
+    when regularization fails or the estimator raises, as the reference
+    does (lib/utils.pyx:538-551).
     """
     coh_mat = est_corr(ccg_sample)
-    if method == "SBW":
-        coh_mat = mask_diag(coh_mat, lag)
-
-    if method in ("EMI", "PTA", "SBW"):
+    if method == "EMI":
         status, abscoh = regularize_matrix(np.abs(coh_mat))
-        est = pta_phase if method == "PTA" else emi_phase
         if status == 0:
             try:
-                vec = est(coh_mat, abscoh)
+                vec = emi_phase(coh_mat, abscoh)
             except np.linalg.LinAlgError:
                 # passed the Cholesky probe but singular to float64
                 # inv — same EVD downgrade as the reference's fallback
@@ -492,7 +418,7 @@ def sequential_phase_linking(samples: np.ndarray, method: str,
             mini = samples[first:last]
         else:
             mini = np.concatenate([squeezed[:sstep], samples[first:last]], axis=0)
-        res, sq, q = phase_linking_process(mini.astype(C64), sstep, method, True, 0)
+        res, sq, q = phase_linking_process(mini.astype(C64), sstep, method, True)
         quality += q
         vec_refined[first:last] = res[sstep:]
         squeezed[sstep] = sq
@@ -504,7 +430,7 @@ def datum_connect(squeezed_images: np.ndarray, vector_refined: np.ndarray,
     """Final adjustment: phase-link the squeezed-image matrix itself
     (EMI) and multiply each mini-stack segment by its datum phasor."""
     datum_shift = np.angle(
-        phase_linking_process(squeezed_images, 0, "EMI", False, 0)[0]
+        phase_linking_process(squeezed_images, 0, "EMI", False)[0]
     )
     out = np.array(vector_refined, dtype=C64, copy=True)
     n = vector_refined.shape[0]

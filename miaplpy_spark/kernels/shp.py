@@ -6,17 +6,20 @@ of amplitude distributions against a precomputed critical distance
 (get_shp_row_col_c, src/miaplpy/lib/utils.pyx:903-998;
 ks_lut_cy, lib/utils.pyx:859-877). Here the distance is vectorized over
 whole (B, N) batches of sorted sample pairs (ecdf_distance_pairs). The
-critical distance ``ks_lut(N, N)`` is not hoisted: the 1h kernel calls
-it once per batch of windows, about 0.9 ms at N = 32 on one core of a
-Xeon host. The reference's Anderson-Darling and Welch t variants are
-not ported.
+critical distance ``ks_lut(N, N)`` is cached per sample width, so a
+worker builds its 990 x 100 table once (about 0.9 ms at N = 32 on one
+core of a Xeon host), not once per batch of windows. The reference's
+Anderson-Darling and Welch t variants are not ported.
 """
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 
 
+@functools.lru_cache(maxsize=None)
 def ks_lut(n1: int, n2: int, alpha: float = 0.05) -> float:
     """Critical KS distance: smallest d in [0.01, 1) step 0.001 whose
     asymptotic p-value (2·Σ_{t=1..100}(−1)^{t−1}exp(−2v²t²) with

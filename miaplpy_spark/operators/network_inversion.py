@@ -70,8 +70,6 @@ def invert_network(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
                     F.lit(0.0), lambda a, x: a + x),
         F.aggregate(F.transform("linked_phase", lambda x: F.cos(x)),
                     F.lit(0.0), lambda a, x: a + x))
-    q_col = (F.col("quality") if "quality" in df_1h.columns
-             else F.lit(1.0))  # unweighted when the tier carries no quality
     keyed = with_doc_keys(df_1h)
     # the OUTPUT bucket is re-derived doc-pure (hash of doc_id, the
     # un-salted bucketing) rather than passed through from the input:
@@ -84,7 +82,7 @@ def invert_network(df_1h: DataFrame, cfg: EngineConfig = EngineConfig(),
         "doc_id", "doc_key", "source", doc_bucket(cfg).alias("bucket"),
         "hour_idx",
         theta.cast("double").alias("theta"),
-        q_col.cast("double").alias("q"))
+        F.col("quality").cast("double").alias("q"))
 
     out_schema = _pa_schema(INVERSION_SCHEMA)
     num_cols = ["doc_key", "hour_idx", "bucket", "theta", "q"]

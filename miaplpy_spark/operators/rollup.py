@@ -171,13 +171,13 @@ def _group_change(*cols: np.ndarray) -> np.ndarray:
     return chg
 
 
-def _link_batch(Z: np.ndarray, method: str, lag: int = 0,
-                ps_test: bool = False):
+def _link_batch(Z: np.ndarray, method: str, ps_test: bool = False):
     """(G, T, S) ensemble -> (vec (G,T), quality (G,), squeezed (G,S)).
 
-    Batched correlation + regularization + one estimator with
-    per-member status (emi_phase_batch_status, or pta_phase_batch
-    under PTA); the squeeze is one batched GEMV.
+    Batched correlation, then under EMI batched regularization and
+    emi_phase_batch_status, the estimator with per-member status; EVD
+    links every member with evd_phase_batch. The squeeze is one
+    batched GEMV.
 
     There is one failure path, the reference's per-pixel EVD fallback
     (lib/utils.pyx:538-551): every member that regularization, the
@@ -194,9 +194,6 @@ def _link_batch(Z: np.ndarray, method: str, lag: int = 0,
     non-PS subset.
     """
     coh = pl.est_corr_batch(Z)
-    if method == "SBW":
-        coh = pl.mask_diag(coh, lag)
-
     G, T = coh.shape[0], coh.shape[1]
     if ps_test:
         is_ps, _, _ = pl.test_ps_batch(coh, np.abs(Z))
@@ -212,11 +209,10 @@ def _link_batch(Z: np.ndarray, method: str, lag: int = 0,
     cohL = coh[link] if is_ps.any() else coh
     vecL = np.empty((cohL.shape[0], T), dtype=np.complex64)
     ok = np.zeros(cohL.shape[0], dtype=bool)
-    if method != "EVD":
+    if method == "EMI":
         status, abscoh = pl.regularize_matrix_batch(np.abs(cohL).astype(np.float32))
         reg = np.flatnonzero(status == 0)
-        est = pl.pta_phase_batch if method == "PTA" else pl.emi_phase_batch_status
-        vecL[reg], ok[reg] = est(cohL[reg], abscoh[reg])
+        vecL[reg], ok[reg] = pl.emi_phase_batch_status(cohL[reg], abscoh[reg])
     vecL[~ok] = pl.evd_phase_batch(cohL[~ok])
 
     qualityL = pl.gam_pta_batch(np.angle(cohL), vecL)
@@ -428,8 +424,7 @@ def hour_windows(num: dict, cfg: EngineConfig) -> tuple[np.ndarray, dict]:
     Z.real = fill_dense_batch(dense.real, ens_present)
     Z.imag = fill_dense_batch(dense.imag, ens_present)
 
-    vec, quality, squeezed = _link_batch(Z, cfg.method, cfg.sbw_lag,
-                                         ps_test=cfg.ps_test)
+    vec, quality, squeezed = _link_batch(Z, cfg.method, ps_test=cfg.ps_test)
 
     n_obs = np.diff(starts, append=slot.shape[0]).astype(np.int32)
     hr = {
@@ -478,8 +473,7 @@ def day_windows(hr: dict, cfg: EngineConfig) -> tuple[np.ndarray, dict]:
     SQ.imag = fill_dense_batch(dense.imag, present)
 
     # datum pass: re-link the squeezed carries (datum_connect A11)
-    vec, quality_1d, day_squeezed = _link_batch(SQ, cfg.method,
-                                                cfg.sbw_lag)
+    vec, quality_1d, day_squeezed = _link_batch(SQ, cfg.method)
     datum = np.angle(vec).astype(np.float32)  # (G, H)
 
     lp_dense = np.zeros((G, H, T), dtype=np.float32)

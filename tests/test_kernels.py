@@ -214,12 +214,6 @@ def test_test_ps_branches():
     assert q2 < 1.0
 
 
-def test_mask_diag_band():
-    coh = np.ones((6, 6), dtype=np.complex64)
-    m = pl.mask_diag(coh, 2)
-    assert m[0, 0] == 1 and m[0, 1] == 1 and m[0, 2] == 0
-
-
 def test_ks_lut_and_distance():
     thr = shp.ks_lut(40, 40, alpha=0.05)
     assert 0.2 < thr < 0.4
@@ -254,39 +248,15 @@ def test_shp_gate_dispatch():
         assert abs(d[i] - shp.ecdf_distance(ref, tests[i])) < 1e-12
 
 
-def test_pta_refines_emi(sim):
-    """A5: PTA starts at EMI and must not worsen the |log(v^H M v)|
-    objective; on the simulated ensemble it recovers truth."""
-    truth, _, Z = sim
-    coh = pl.est_corr(Z)
-    status, abscoh = pl.regularize_matrix(np.abs(coh))
-    assert status == 0
-    vec_pta = pl.pta_phase(coh, abscoh)
-    vec_emi = pl.emi_phase(coh, abscoh)
-    M = (np.linalg.inv(abscoh.astype(np.float64)) * coh)
-
-    def obj(v):
-        v = np.exp(1j * (np.angle(v) - np.angle(v[0])))
-        return abs(np.log(max((v.conj() @ M @ v).real, 1e-12)))
-
-    assert obj(vec_pta) <= obj(vec_emi) + 1e-9
-    # phase recovery quality comparable to EMI
-    assert np.sqrt(np.mean(_phase_err(vec_pta, truth) ** 2)) < 0.25
-    # dispatch: method='PTA' reaches the PTA estimator
-    vec_disp, _, _ = pl.phase_linking_process(Z, 0, "PTA", False, 0)
-    np.testing.assert_allclose(np.angle(vec_disp), np.angle(vec_pta),
-                               atol=1e-6)
-
-
 def test_engine_config_rejects_unknown_method():
     """Every name the phase-linking dispatch knows constructs; any
     other name raises at construction instead of running EVD."""
     from miaplpy_spark.config import EngineConfig
 
-    for name in ("EVD", "EMI", "PTA", "SBW"):
+    for name in ("EVD", "EMI"):
         assert EngineConfig(method=name).method == name
-    for name in ("EMl", "emi", "sequential_EMI", "sequential_PTA",
-                 "sequential_EVD", ""):
+    for name in ("PTA", "SBW", "EMl", "emi", "sequential_EMI",
+                 "sequential_PTA", "sequential_EVD", ""):
         with pytest.raises(ValueError, match="unknown phase-linking method"):
             EngineConfig(method=name)
 
@@ -350,15 +320,15 @@ def test_linalg_status_fallback_without_umath_linalg(monkeypatch):
     assert (out != absc).any(axis=(1, 2)).sum() >= len(Z[::7])
 
 
-@pytest.mark.parametrize("method", ["EMI", "PTA"])
+@pytest.mark.parametrize("method", ["EMI"])
 @pytest.mark.parametrize("gufuncs", [True, False])
 def test_failed_member_takes_the_batched_evd(monkeypatch, gufuncs, method):
     """One member whose eigh does not converge must not fail the Arrow
-    batch: the estimator marks it alone ok=False and it takes the one
-    batched EVD call, byte for byte what evd_phase_batch gives it; the
-    other members are what the estimator gives them without it. With
-    the raw gufuncs LAPACK non-convergence comes back NaN-filled;
-    without them np.linalg.eigh raises for the batch."""
+    batch: EMI marks it alone ok=False and it takes the one batched EVD
+    call, byte for byte what evd_phase_batch gives it; the other
+    members are what EMI gives them without it. With the raw gufuncs
+    LAPACK non-convergence comes back NaN-filled; without them
+    np.linalg.eigh raises for the batch."""
     from miaplpy_spark.operators.rollup import _link_batch
 
     if not gufuncs:
@@ -375,7 +345,6 @@ def test_failed_member_takes_the_batched_evd(monkeypatch, gufuncs, method):
     assert (status == 0).all()
     inv_abs, _ = pl.inv_batch_status(abscoh.astype(np.float64))
     target = (inv_abs[bad] * coh[bad]).astype(np.complex64)
-    pta_keep = pl.pta_phase_batch(coh[keep], abscoh[keep])[0]
 
     def hits(a):
         a = np.asarray(a)
@@ -405,21 +374,15 @@ def test_failed_member_takes_the_batched_evd(monkeypatch, gufuncs, method):
 
         monkeypatch.setattr(pl, "_ul", NonConverging())
 
-    est = pl.pta_phase_batch if method == "PTA" else pl.emi_phase_batch_status
-    _, ok = est(coh, abscoh)
+    _, ok = pl.emi_phase_batch_status(coh, abscoh)
     assert ok.tolist() == [True, True, False, True, True]
     with pytest.raises(np.linalg.LinAlgError):
-        (pl.pta_phase if method == "PTA" else pl.emi_phase)(coh[bad], abscoh[bad])
+        pl.emi_phase(coh[bad], abscoh[bad])
 
     vec, q, sq = _link_batch(Z, method)
     assert (vec[bad].tobytes()
             == pl.evd_phase_batch(coh[bad:bad + 1])[0].tobytes()
             == pl.evd_phase(coh[bad]).tobytes())
-    if method == "PTA":
-        # the refinement runs over the members EMI solved, as if the
-        # failed one had never been in the batch
-        assert vec[keep].tobytes() == pta_keep.tobytes()
-    else:
-        assert vec[keep].tobytes() == vec0[keep].tobytes()
-        assert q[keep].tobytes() == q0[keep].tobytes()
-        assert sq[keep].tobytes() == sq0[keep].tobytes()
+    assert vec[keep].tobytes() == vec0[keep].tobytes()
+    assert q[keep].tobytes() == q0[keep].tobytes()
+    assert sq[keep].tobytes() == sq0[keep].tobytes()

@@ -20,10 +20,10 @@ def test_exact_recovery_from_fake_tier(spark):
         truths[f"doc{d}"] = truth
         for h in range(n_hours):
             rows.append((f"doc{d}", "web", d % 2, h,
-                         [float(truth[h])] * 10))
+                         [float(truth[h])] * 10, 1.0))
     df = spark.createDataFrame(
         rows, "doc_id string, source string, bucket int, hour_idx int, "
-              "linked_phase array<float>")
+              "linked_phase array<float>, quality float")
     out = invert_network(df, CFG).toPandas()
     assert len(out) == 6
     for _, r in out.iterrows():
@@ -41,10 +41,10 @@ def test_quality_degrades_with_noise(spark):
         # incoherent phases: network residuals large -> low quality
         for h in range(24):
             rows.append((f"noisy{d}", "web", 0, h,
-                         [float(rng.uniform(-np.pi, np.pi))] * 10))
+                         [float(rng.uniform(-np.pi, np.pi))] * 10, 1.0))
     df = spark.createDataFrame(
         rows, "doc_id string, source string, bucket int, hour_idx int, "
-              "linked_phase array<float>")
+              "linked_phase array<float>, quality float")
     out = invert_network(df, CFG).toPandas()
     assert (out["inv_quality"] < 0.9).all()
 

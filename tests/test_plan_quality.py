@@ -136,9 +136,9 @@ def test_invert_network_single_exchange(spark):
     from miaplpy_spark.operators.network_inversion import invert_network
 
     df = spark.createDataFrame(
-        [("d0", "web", 0, h, [0.1] * 4) for h in range(6)],
+        [("d0", "web", 0, h, [0.1] * 4, 1.0) for h in range(6)],
         "doc_id string, source string, bucket int, hour_idx int, "
-        "linked_phase array<float>")
+        "linked_phase array<float>, quality float")
     q = invert_network(df, EngineConfig(n_buckets=2, n_samples=4))
     assert count_exchanges(q) == 1
 

@@ -140,9 +140,7 @@ UNSET_FIELDS = {
     "gap_modulus": "datagen: the fixture's gap rate",
     "sources": "datagen: the fixture's source labels",
     "zipf_alpha": "datagen: the fixture's doc-size skew",
-    "method": "phase-linking estimator, kept for the simulated-truth "
-              "gate of ROADMAP item 5",
-    "sbw_lag": "the SBW estimator's band, kept for the same gate",
+    "method": "EVD/EMI, which the simulated-truth gate tells apart",
     "ps_test": "the PS shortcut, which the same gate runs off and on",
 }
 

@@ -55,7 +55,7 @@ def _oracle_window(g, cfg):
         if q_ps == 1.0:  # PS: keep raw phase
             sq = pl.squeeze_images(vec_ps, Z, 0)
             return np.angle(vec_ps), sq, 1.0
-    vec, sq, q = pl.phase_linking_process(Z, 0, cfg.method, True, cfg.sbw_lag)
+    vec, sq, q = pl.phase_linking_process(Z, 0, cfg.method, True)
     return np.angle(vec), sq / 1.0, q
 
 
@@ -146,7 +146,7 @@ def test_datum_semantics_match_kernel(spark, tier1h):
     packed = np.stack(one["squeezed"].to_numpy()).astype(np.float32)
     S = cfg.n_samples
     sq = (packed[:, :S] + 1j * packed[:, S:]).astype(np.complex64)
-    vec, _, q = pl.phase_linking_process(sq, 0, "EMI", False, 0)
+    vec, _, q = pl.phase_linking_process(sq, 0, "EMI", False)
     datum_oracle = np.angle(vec)
 
     out = rollup_1d(spark.createDataFrame(tier1h), cfg).toPandas()
@@ -235,7 +235,7 @@ def test_ps_branch_in_rollup(spark):
             np.testing.assert_allclose(got, 0.0, atol=1e-6)
         else:
             assert q_ps != 1.0
-            vec, _, q = pl.phase_linking_process(z, 0, cfg.method, True, 0)
+            vec, _, q = pl.phase_linking_process(z, 0, cfg.method, True)
             np.testing.assert_allclose(
                 np.exp(1j * got), np.exp(1j * np.angle(vec)), atol=2e-3)
             assert abs(row["quality"] - q) < 2e-3
@@ -258,33 +258,6 @@ def test_ps_batch_matches_scalar():
         assert is_ps[b] == (q == 1.0), f"batch/scalar disagree at {b}"
     assert is_ps[::2].all() and not is_ps[1::2].any()
 
-
-def test_sbw_day_windows_use_the_lag():
-    """Under SBW the 1d datum pass masks the day coherence with
-    ``cfg.sbw_lag``, like the 1h pass. A lag of 0 masks the whole
-    matrix, and every day vec comes back as e_0 with quality 1.
-    Sparkless: day_windows on a random (4 docs x 24 hours) ensemble."""
-    from miaplpy_spark.operators.rollup import day_windows
-
-    cfg = EngineConfig(method="SBW", n_samples=8)
-    D, H, S, T = 4, cfg.hours_per_day, cfg.n_samples, cfg.slots_per_hour
-    n = D * H
-    rng = np.random.RandomState(13)
-    z = np.exp(1j * rng.uniform(0, 2 * np.pi, (n, S)))
-    ones = np.ones(n, dtype=np.int64)
-    hr = {"doc_key": np.repeat(np.arange(D, dtype=np.int64), H),
-          "hour_idx": np.tile(np.arange(H, dtype=np.int64), D),
-          "bucket": 0 * ones,
-          "squeezed": np.concatenate([z.real, z.imag],
-                                     axis=1).astype(np.float32),
-          "linked_phase": np.zeros((n, T), dtype=np.float32),
-          "n_obs": T * ones, "n_filled": 0 * ones, "sum_tok": ones,
-          "min_tok": ones, "max_tok": ones, "mean_ntok": np.ones(n),
-          "quality": np.ones(n, dtype=np.float32)}
-    starts, dy = day_windows(hr, cfg)
-    assert len(starts) == D
-    assert (dy["quality_1d"] < 1).all()
-    assert (np.abs(dy["datum_shift"]).max(axis=1) > 0).all()
 
 def test_shp_filter_excludes_outlier_slot(spark):
     """N1 predicate inside the rollup: a slot whose token-sample
@@ -319,7 +292,7 @@ def test_shp_filter_excludes_outlier_slot(spark):
     re = fill_dense_batch(dense.real.astype(np.float64), keep)
     im = fill_dense_batch(dense.imag.astype(np.float64), keep)
     Z = (re + 1j * im).astype(np.complex64)[0]
-    vec, _, q = pl.phase_linking_process(Z, 0, cfg.method, True, 0)
+    vec, _, q = pl.phase_linking_process(Z, 0, cfg.method, True)
     got = np.asarray(out.iloc[0]["linked_phase"], dtype=np.float32)
     np.testing.assert_allclose(np.exp(1j * got), np.exp(1j * np.angle(vec)),
                                atol=2e-3)
