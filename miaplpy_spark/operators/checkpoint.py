@@ -102,13 +102,17 @@ class CheckpointLog:
         under one snapshot id (epoch ns) and the same instant as a UTC
         timestamp. The timestamp goes into row DATA: a per-call
         timestamp literal is inlined into the generated Java, so every
-        append would compile (and JIT) a fresh class."""
+        append would compile (and JIT) a fresh class. One partition,
+        so one file per append: createDataFrame spreads the rows over
+        the default parallelism, and every later read lists and opens
+        each file until ``compact`` runs."""
         snap = time.time_ns()
         now = _EPOCH + timedelta(microseconds=snap // 1000)
         self.store.append(spark.createDataFrame(
             [Row(tier=t, partition_key=int(k), snapshot_id=snap,
                  rows_processed=int(c), lineage=lin, updated_at=now)
-             for t, k, c, lin in rows], _SCHEMA), CHECKPOINT_TABLE)
+             for t, k, c, lin in rows], _SCHEMA).coalesce(1),
+            CHECKPOINT_TABLE)
 
     def log_completion(self, spark: SparkSession, tier: str, lineage: str,
                        bucket_counts: list[tuple[int, int]]) -> None:

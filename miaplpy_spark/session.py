@@ -41,6 +41,32 @@ Tuning rationale (SURVEY.md §4):
   same reason: Spark inlines a numeric literal into the Java source,
   so a fresh timestamp is a fresh class (operators/checkpoint.py:
   CheckpointLog._append).
+- C2 thresholds = JIT_OPTIONS: HotSpot's tier-4 (C2) invocation,
+  minimum-invocation, compile and back-edge thresholds at 10x the
+  JDK 17 defaults (5000, 600, 15000, 40000). Each entry point starts
+  a fresh JVM and runs for seconds to minutes, and its C1/C2 compiler
+  threads used about a third of a perfbench round's CPU
+  (scripts/cpu_split.py, seed 1, median of 5 rounds after warmup:
+  engine 3.1 of 9.0 CPU-s, lifecycle 5.3 of 13.7 CPU-s; at 10x, 1.8
+  and 2.7 CPU-s). The biggest C2 compiles were per-job and per-task
+  driver code, not row loops: the ClosureCleaner's ASM class reader,
+  task (de)serialization, py4j class lookups, call-site capture,
+  SizeEstimator. At 10x that code stays at C1, while a per-row loop
+  that runs millions of times still reaches C2. Grid on perfbench
+  (--seconds 5, 4 cores, seeds 11-13, medians), round_cpu_s engine /
+  lifecycle and lifecycle setup_s: x1 13.2 / 21.6 s, 33.8 s; x3
+  11.8 / 18.4 s, 35.1 s; x10 9.7 / 16.6 s, 34.4 s; x30 9.8 / 18.4 s,
+  38.0 s. x10 is the smallest with most of the gain; x30 delays
+  warm-up. Rejected: -XX:TieredStopAtLevel=1 (C1 only) slowed the
+  3,000-doc cascade to 6.3-6.8 s a round against 4.3-6.1 s;
+  -XX:CompileThresholdScaling=10 also delays C1, so warm-up runs
+  interpreted (engine setup_s 22.5-25.5 s against 20.0-20.8 s).
+  The flags go in spark.{driver,executor}.defaultJavaOptions: callers
+  pass their own extraJavaOptions (perfbench does), and the JVM gets
+  both. A builder conf overrides spark-defaults.conf, so get_spark
+  replaces a deployment's own defaultJavaOptions: such a deployment
+  must append JIT_OPTIONS to its value and pass the result through
+  extra_conf. Launch flags act on a fresh JVM only.
 """
 
 from __future__ import annotations
@@ -55,6 +81,13 @@ for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
 
 # spark.sql.codegen.cache.maxEntries (a static conf; see the tuning list)
 CODEGEN_CACHE_MAX_ENTRIES = 256
+
+# HotSpot tier-4 (C2) thresholds, 10x the JDK 17 defaults (see the
+# tuning list); JVM launch flags, so they apply to a fresh JVM only
+JIT_OPTIONS = ("-XX:Tier4InvocationThreshold=50000 "
+               "-XX:Tier4MinInvocationThreshold=6000 "
+               "-XX:Tier4CompileThreshold=150000 "
+               "-XX:Tier4BackEdgeThreshold=400000")
 
 
 def get_spark(
@@ -96,6 +129,11 @@ def get_spark(
         .config("spark.python.daemon.module", "miaplpy_spark.worker_daemon")
         .config("spark.sql.codegen.cache.maxEntries",
                 str(CODEGEN_CACHE_MAX_ENTRIES))
+        # defaultJavaOptions, not extraJavaOptions: callers pass their
+        # own extraJavaOptions through extra_conf, which would replace
+        # ours; the JVM gets default + extra
+        .config("spark.driver.defaultJavaOptions", JIT_OPTIONS)
+        .config("spark.executor.defaultJavaOptions", JIT_OPTIONS)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

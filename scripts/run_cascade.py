@@ -38,16 +38,23 @@ Cluster launch (north_rule):
         --conf spark.sql.shuffle.partitions=<2-3x total cores> \
         --conf spark.executorEnv.OMP_NUM_THREADS=1 \
         --conf spark.sql.codegen.cache.maxEntries=<CODEGEN_CACHE_MAX_ENTRIES> \
+        --conf "spark.driver.defaultJavaOptions=<JIT_OPTIONS>" \
+        --conf "spark.executor.defaultJavaOptions=<JIT_OPTIONS>" \
         scripts/run_cascade.py \
         --input <sequences table/path> --warehouse <tier warehouse> \
         --steps cascade,retention,invert [--incremental] \
         [--scale tiny|small|bench] [--buckets N]
 
-This script applies the codegen cache size itself, from
-``miaplpy_spark.session.CODEGEN_CACHE_MAX_ENTRIES`` (see that module's
-tuning list); the ``--conf`` line names it for launches that build the
-session elsewhere. The printed JSON's ``codegen_compiles`` is the
-number of classes Spark compiled during the run; its ``checkpoints``
+This script applies the codegen cache size and the JIT policy itself,
+from ``miaplpy_spark.session.CODEGEN_CACHE_MAX_ENTRIES`` and
+``JIT_OPTIONS`` (see that module's tuning list); the ``--conf`` lines
+name them for launches that build the session elsewhere. The JIT
+options are JVM launch flags: under spark-submit the driver JVM is
+already running when this script builds its session, so they only
+take effect when passed with ``--conf``. The printed JSON's
+``codegen_compiles`` is the number of classes Spark compiled during
+the run, ``jit_compile_s`` the HotSpot JIT compile time it added
+(the JVM's CompilationMXBean); its ``checkpoints``
 list holds one row per (tier, bucket): the latest completion's
 rows_processed (the rows the bucket's committed partition held after
 its write) and lineage.
@@ -79,7 +86,7 @@ from miaplpy_spark.operators.cascade import (
 )
 from miaplpy_spark.operators.checkpoint import CheckpointLog
 from miaplpy_spark.operators.compress import apply_retention_1h
-from miaplpy_spark.session import CODEGEN_CACHE_MAX_ENTRIES
+from miaplpy_spark.session import CODEGEN_CACHE_MAX_ENTRIES, JIT_OPTIONS
 from miaplpy_spark.sources.catalog import TierStore
 
 STEP_LIST = ["cascade", "invert", "retention"]
@@ -153,9 +160,14 @@ def main(argv=None) -> int:
     spark = (SparkSession.builder.appName("miaplpy_spark.cascade")
              .config("spark.sql.codegen.cache.maxEntries",
                      str(CODEGEN_CACHE_MAX_ENTRIES))
+             .config("spark.driver.defaultJavaOptions", JIT_OPTIONS)
+             .config("spark.executor.defaultJavaOptions", JIT_OPTIONS)
              .getOrCreate())
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
+    jit = spark._jvm.java.lang.management.ManagementFactory \
+        .getCompilationMXBean()
+    jit_ms0 = jit.getTotalCompilationTime()
     kw = {"salt_by_day": args.salt_by_day}
     if args.buckets:
         kw["n_buckets"] = args.buckets
@@ -248,6 +260,8 @@ def main(argv=None) -> int:
     metrics["wall_s"] = round(time.time() - t0, 2)
     metrics["codegen_compiles"] = int(
         codegen.METRIC_COMPILATION_TIME().getCount() - compiles0)
+    metrics["jit_compile_s"] = round(
+        (jit.getTotalCompilationTime() - jit_ms0) / 1000, 2)
     print(json.dumps(metrics))
     return 0
 

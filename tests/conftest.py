@@ -11,7 +11,11 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
 def spark():
     from miaplpy_spark.session import get_spark
 
-    s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
+    # a caller's own JVM options, as perfbench passes them: they must go
+    # in beside session.JIT_OPTIONS (tests/test_jit_policy.py)
+    s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4,
+                  extra_conf={"spark.driver.extraJavaOptions":
+                              "-XX:-UsePerfData"})
     yield s
     s.stop()
 

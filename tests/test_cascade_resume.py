@@ -155,6 +155,30 @@ def test_metrics_view_lists_completions_not_watermarks(spark, workdir):
              r["lineage"]) for r in rows] == [("rollup_1h", 0, 5, "lin")]
 
 
+def test_checkpoint_append_writes_one_file(spark, workdir):
+    """Each append is one data file whatever the session's parallelism:
+    every later read of the log lists and opens all of them."""
+    assert spark.sparkContext.defaultParallelism >= 4
+    store = TierStore(workdir)
+    ckpt = CheckpointLog(store)
+
+    def data_files():
+        return [n for n in os.listdir(store.path("checkpoints"))
+                if not n.startswith((".", "_"))]
+
+    counts = [(b, 100 + b) for b in range(16)]
+    ckpt.log_completion(spark, "rollup_1h", "lin-a", counts)
+    assert len(data_files()) == 1
+    ckpt.log_completion(spark, "rollup_1d", "lin-b", counts)
+    assert len(data_files()) == 2
+    rows = store.read(spark, "checkpoints").select(
+        "tier", "partition_key", "rows_processed", "lineage").collect()
+    assert sorted(tuple(r) for r in rows) == sorted(
+        [(t, b, c, lin) for t, lin in (("rollup_1h", "lin-a"),
+                                       ("rollup_1d", "lin-b"))
+         for b, c in counts])
+
+
 def test_checkpoint_compaction_preserves_resume(spark, obs, workdir):
     """compact() collapses the append-only log to one row per (tier,
     bucket) without changing what completed_keys / latest_completions

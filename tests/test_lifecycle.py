@@ -52,6 +52,9 @@ def test_full_lifecycle_then_noop_rerun(spark, workdir, capsys):
     # the run report counts the classes Spark compiled during the run
     assert isinstance(m1["codegen_compiles"], int)
     assert m1["codegen_compiles"] >= 0
+    # ... and the HotSpot JIT compile time the run added
+    assert isinstance(m1["jit_compile_s"], float)
+    assert m1["jit_compile_s"] >= 0
     # ... and one checkpoint row per (tier, bucket): the rows each
     # bucket's committed partition held, summing to the step's metric
     cps = m1["checkpoints"]
