@@ -89,6 +89,15 @@ JIT_OPTIONS = ("-XX:Tier4InvocationThreshold=50000 "
                "-XX:Tier4CompileThreshold=150000 "
                "-XX:Tier4BackEdgeThreshold=400000")
 
+# Static confs every engine session sets, in get_spark and in the
+# lifecycle CLI's own builder (scripts/run_cascade.py). The JIT flags
+# go in defaultJavaOptions: see the tuning list
+STATIC_CONF = {
+    "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_MAX_ENTRIES),
+    "spark.driver.defaultJavaOptions": JIT_OPTIONS,
+    "spark.executor.defaultJavaOptions": JIT_OPTIONS,
+}
+
 
 def get_spark(
     app_name: str = "miaplpy_spark",
@@ -127,13 +136,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "miaplpy_spark.worker_daemon")
-        .config("spark.sql.codegen.cache.maxEntries",
-                str(CODEGEN_CACHE_MAX_ENTRIES))
-        # defaultJavaOptions, not extraJavaOptions: callers pass their
-        # own extraJavaOptions through extra_conf, which would replace
-        # ours; the JVM gets default + extra
-        .config("spark.driver.defaultJavaOptions", JIT_OPTIONS)
-        .config("spark.executor.defaultJavaOptions", JIT_OPTIONS)
+        .config(map=STATIC_CONF)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

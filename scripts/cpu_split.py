@@ -19,11 +19,11 @@ Only the ops' own calls are counted, as perfbench's round_cpu_s counts
 them; the untimed checks after each op are not. The last line is the
 split as JSON: every round, and the median of the rounds after warmup.
 
-The session is perfbench's (get_spark at local[<cores>], 2 GB driver
-heap) plus -XX:-UseDynamicNumberOfCompilerThreads, which keeps every
-compiler thread alive so its CPU stays in its own class instead of
-"exited". Inputs are read from, or built into, perfbench's input cache
-(.perfbench/cache). Each op's output is checked as perfbench checks it;
+The session is perfbench's own (its start_session), and the JVM also
+gets -XX:-UseDynamicNumberOfCompilerThreads through JAVA_TOOL_OPTIONS,
+which keeps every compiler thread alive so its CPU stays in its own
+class instead of "exited". Inputs are read from, or built into,
+perfbench's input cache (.perfbench/cache). Each op's output is checked as perfbench checks it;
 a failed check is counted and printed, and the round is still measured.
 """
 
@@ -108,29 +108,15 @@ def split(a: dict, b: dict) -> dict[str, float]:
     return out
 
 
-def start_session(ncores: int, tmp: str):
-    from miaplpy_spark.session import get_spark
-
-    conf = {"spark.driver.memory": "2g",
-            "spark.driver.extraJavaOptions":
-                f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData "
-                "-XX:-UseDynamicNumberOfCompilerThreads",
-            "spark.sql.warehouse.dir": os.path.join(tmp, "spark-warehouse"),
-            "spark.ui.showConsoleProgress": "false"}
-    spark = get_spark(app_name="cpu_split", master=f"local[{ncores}]",
-                      extra_conf=conf)
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
-
-
 def run(args, tmp: str) -> list[dict]:
     from probes import Tracer
+    from run import start_session
     from workloads import WORKLOADS
 
     ncores = len(os.sched_getaffinity(0))
     wl = WORKLOADS[args.workload](STATE, args.seed, args.scale, Tracer(False))
     wl.work_dir = os.path.join(tmp, "work")
-    spark = start_session(ncores, tmp)
+    spark = start_session(ncores, tmp, None)
     try:
         wl.prepare(spark)
         jvm = spark._jvm
@@ -203,6 +189,7 @@ def main(argv=None) -> int:
     os.makedirs(os.path.join(STATE, "cache"), exist_ok=True)
     os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(tmp, "spark-local")
+    os.environ["JAVA_TOOL_OPTIONS"] = "-XX:-UseDynamicNumberOfCompilerThreads"
     os.environ["PYTHONPATH"] = os.pathsep.join(
         [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
                   if p])

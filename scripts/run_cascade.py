@@ -46,9 +46,9 @@ Cluster launch (north_rule):
         [--scale tiny|small|bench] [--buckets N]
 
 This script applies the codegen cache size and the JIT policy itself,
-from ``miaplpy_spark.session.CODEGEN_CACHE_MAX_ENTRIES`` and
-``JIT_OPTIONS`` (see that module's tuning list); the ``--conf`` lines
-name them for launches that build the session elsewhere. The JIT
+from ``miaplpy_spark.session.STATIC_CONF`` (``CODEGEN_CACHE_MAX_ENTRIES``
+and ``JIT_OPTIONS``; see that module's tuning list); the ``--conf``
+lines name them for launches that build the session elsewhere. The JIT
 options are JVM launch flags: under spark-submit the driver JVM is
 already running when this script builds its session, so they only
 take effect when passed with ``--conf``. The printed JSON's
@@ -86,7 +86,7 @@ from miaplpy_spark.operators.cascade import (
 )
 from miaplpy_spark.operators.checkpoint import CheckpointLog
 from miaplpy_spark.operators.compress import apply_retention_1h
-from miaplpy_spark.session import CODEGEN_CACHE_MAX_ENTRIES, JIT_OPTIONS
+from miaplpy_spark.session import STATIC_CONF
 from miaplpy_spark.sources.catalog import TierStore
 
 STEP_LIST = ["cascade", "invert", "retention"]
@@ -158,10 +158,7 @@ def main(argv=None) -> int:
 
     steps = select_steps(args.steps, args.start, args.dostep)
     spark = (SparkSession.builder.appName("miaplpy_spark.cascade")
-             .config("spark.sql.codegen.cache.maxEntries",
-                     str(CODEGEN_CACHE_MAX_ENTRIES))
-             .config("spark.driver.defaultJavaOptions", JIT_OPTIONS)
-             .config("spark.executor.defaultJavaOptions", JIT_OPTIONS)
+             .config(map=STATIC_CONF)
              .getOrCreate())
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
